@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_tiki_webscraping_spark.session import spread
+
 
 def ngrams_of_tokens(tok: Column, n: int) -> Column:
     """Space-joined ``n``-grams of an already-tokenized array column.
@@ -83,16 +85,13 @@ def repetition_report(
     distinct-gram count and ``SUM`` the total — the shape that also
     survives 100 TB, where a per-row array materialization would not.
     """
-    # one id-keyed exchange of raw text (r16): hashpartitioning(id)
+    # one id-keyed exchange of raw text on a small input (r16; a large
+    # one keeps its partitions, see spread): hashpartitioning(id)
     # satisfies the clustering of BOTH aggregates and the final join,
     # so the per-gram exchange (n-gram strings, heavier than the text)
     # disappears and the gram construction parallelizes past however
     # few splits the scan produced (guide §2.3/§2.4)
-    # explicit count: AQE would coalesce the tiny exchange to one
-    # partition and serialize the gram build (r16)
-    df = df.select(F.col(id_col), F.col(text_col)).repartition(
-        df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    )
+    df = spread(df.select(F.col(id_col), F.col(text_col)), F.col(id_col))
     ids = df.select(id_col)
     # tokenize in its OWN projection (the ngrams_of_tokens contract):
     # passing word_ngrams(text) straight to the explode inlines the

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from etl_tiki_webscraping_spark.functions.text import tokenize_ws
+from etl_tiki_webscraping_spark.session import spread
 
 # ASCII whitespace split for Python kernels — the explicit RE2-\s class
 # the DuckDB oracles use; str.split() would split on U+3000/NBSP and
@@ -184,20 +185,6 @@ def shingles(col: Column | str, n: int = 3, segment_cjk: bool = False) -> Column
     return shingles_of_tokens(toks, n)
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature via per-seed xxhash64 minimum — pure built-in
-    expression form.  Correct but interpreted (higher-order functions
-    bypass codegen) and re-hashes every shingle ``num_hashes`` times;
-    prefer :func:`minhash_signatures_udf` on big corpora.
-    """
-    return F.array(
-        *[
-            F.array_min(F.transform(shingle_col, lambda s, i=i: F.xxhash64(s, F.lit(i))))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 MINHASH_PRIME = (1 << 31) - 1  # Mersenne prime 2^31-1
 
 
@@ -296,7 +283,6 @@ def minhash_analysis(
     id_col: str,
     num_hashes: int = 64,
     shingle_n: int = 3,
-    target_partitions: int | None = None,
     segment_cjk: bool = False,
 ) -> DataFrame:
     """(id, sig, hset) per document — the shared input of candidate
@@ -304,30 +290,11 @@ def minhash_analysis(
     parquet once and feed both consumers from the checkpoint instead of
     recomputing the narrow scan.
 
-    ``target_partitions`` repartitions before the kernel for corpora
-    whose scan yields fewer splits than cores.  Default (None): the
-    input is repartitioned BY ID exactly when the scan produced fewer
-    splits than ``defaultParallelism`` (guide §2.5 input-skew — a
-    single-file corpus otherwise runs the whole kernel on ONE core;
-    workers are pre-forked by session warm-up, so the old
-    fork-cost argument no longer binds).  Keying the exchange by id
-    additionally makes every downstream id-keyed join/groupBy over
-    the analysis exchange-free.  At real scale the scan yields more
-    splits than cores and this is a no-op."""
-    if target_partitions:
-        df = df.repartition(target_partitions)
-    else:
-        # AQE caveat (r16 ADVICE): .rdd on a plan CONTAINING EXCHANGES
-        # eagerly materializes query stages whose work the real query
-        # then repeats.  Every catalog caller passes a narrow
-        # scan+projection (no exchange), where .rdd only plans the scan
-        # splits; callers with exchange-bearing inputs should pass
-        # target_partitions explicitly instead.
-        sc = df.sparkSession.sparkContext
-        if df.rdd.getNumPartitions() < sc.defaultParallelism:
-            # explicit count — AQE would coalesce the tiny exchange
-            # back to one partition and serialize the kernel (r16)
-            df = df.repartition(sc.defaultParallelism, F.col(id_col))
+    A small input is spread by id first (:func:`spread`, guide §2.5
+    input-skew — a single-file corpus otherwise runs the whole kernel
+    on ONE core).  Keying the exchange by id additionally makes every
+    downstream id-keyed join/groupBy over the analysis exchange-free."""
+    df = spread(df, F.col(id_col))
     udf = minhash_analysis_udf(num_hashes, shingle_n, segment_cjk)
     return df.select(
         F.col(id_col).alias("id"), udf(F.col(text_col)).alias("a")
@@ -475,17 +442,16 @@ def jaccard_on_pairs(
     corpus-sized cache (all shingle arrays) plus a serializing cache-
     materialization stage — measured net-slower at fixture scale, and
     at 100 TB the disk round-trip of the cache costs more than
-    re-deriving shingles from the scan.  Instead, an UNDER-SPLIT scan
-    gets the conditional id-keyed spread (guide §2.5, the
-    minhash_analysis guard): both legs' shingle builds then
-    parallelize past the single scan split, and because the two legs'
+    re-deriving shingles from the scan.  Instead, a small input's text
+    is spread by id (:func:`spread`, guide §2.5): both legs' shingle
+    builds parallelize past however few splits the scan produced, the
+    id-keyed joins reuse that partitioning, and because the two legs'
     repartition subtrees are identical, ReuseExchange ships the text
-    once.  No-op at real scale where the scan out-splits the cores.
+    once.
     """
-    base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        base = base.repartition(sc.defaultParallelism, "id")
+    base = spread(
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t")), "id"
+    )
     sh = base.select("id", shingles("__t", shingle_n).alias("sh"))
     return (
         pairs.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), on="id_a")
@@ -743,69 +709,15 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
 # simhash
 # --------------------------------------------------------------------------
 
-def _bit_vote(h: Column, i: int) -> Column:
-    """+1/-1 vote for bit i of a 64-bit hash (bit 63 via sign test —
-    1 << 63 is not a valid signed-long literal)."""
-    if i == 63:
-        is_set = h < 0
-    else:
-        is_set = h.bitwiseAND(F.lit(1 << i)) != 0
-    return F.when(is_set, F.lit(1).cast("bigint")).otherwise(F.lit(-1).cast("bigint"))
-
-
-def _md5_hash64(t: Column) -> Column:
-    """Stable 64-bit token hash as the first 8 md5 bytes (big-endian),
-    built JVM-side from two 32-bit halves (``conv`` hands back decimal
-    STRINGS, and a full 16-hex value overflows the signed cast — the
-    hi half lands in the sign bit via the wrap of ``shiftleft``).
-    Byte-identical to the Arrow kernel's
-    ``int.from_bytes(md5(s)[:8], "big")`` and replayable in DuckDB as
-    ``('0x' || substr(md5(t), 1, 16))::UBIGINT``."""
-    hx = F.md5(t)
-    hi = F.conv(F.substring(hx, 1, 8), 16, 10).cast("bigint")
-    lo = F.conv(F.substring(hx, 9, 8), 16, 10).cast("bigint")
-    return F.shiftleft(hi, 32).bitwiseOR(lo)
-
-
-def simhash64(col: Column | str) -> Column:
-    """64-bit SimHash over whitespace tokens, entirely JVM-side:
-    per-token md5-prefix hash (:func:`_md5_hash64` — same hash as the
-    Arrow kernel, so both forms produce identical signatures) ->
-    per-bit +/-1 votes (bit masks unrolled in Python — column-indexed
-    shifts aren't expressible) -> sign -> bit pack.
-    """
-    toks = tokenize_ws(F.lower(F.col(col) if isinstance(col, str) else col))
-    zero64 = F.array_repeat(F.lit(0).cast("bigint"), 64)
-    votes = F.aggregate(
-        toks,
-        zero64,
-        lambda acc, t: F.zip_with(
-            acc,
-            F.array(*[_bit_vote(_md5_hash64(t), i) for i in range(64)]),
-            lambda a, b: a + b,
-        ),
-    )
-    bit_lits = [F.lit(1 << i).cast("bigint") for i in range(63)] + [
-        F.lit(-(1 << 63)).cast("bigint")  # sign bit as min-long
-    ]
-    packed = F.lit(0).cast("bigint")
-    for i in range(64):
-        packed = packed.bitwiseOR(
-            F.when(F.element_at(votes, i + 1) > 0, bit_lits[i]).otherwise(F.lit(0).cast("bigint"))
-        )
-    return packed
-
-
 def simhash64_udf():
     """Arrow-vectorized SimHash kernel: stable 64-bit token hashes
     (first 8 md5 bytes big-endian — node-independent AND replayable in
     ANSI SQL as ``('0x' || substr(md5(tok), 1, 16))::UBIGINT``, which
     is what upgraded dedup_simhash from rows-only to a full DuckDB
     oracle in round 11; was blake2b before the upgrade), numpy
-    bit-matrix votes, sign-packed into one signed int64.  Same
-    banding/verify contract as the expression form (identical hash, so
-    identical signatures) but one batch kernel per Arrow chunk instead
-    of an interpreted 64-wide fold per token."""
+    bit-matrix votes, sign-packed into one signed int64 — one batch
+    kernel per Arrow chunk instead of an interpreted 64-wide fold per
+    token."""
     from hashlib import md5 as _md5
 
     shifts = np.arange(64, dtype=np.uint64)
@@ -952,21 +864,20 @@ def setsim_prefix_join(
     # id-keyed exchange of every token just to recover what the
     # shingle transform already produced.  Keeping the array form as
     # the persisted root gives sizes (F.size) and both verify legs
-    # with NO exchange at all; only dfreq/ranked explode it.  The
-    # raw-text repartition up front (a) parallelizes the shingle
-    # transform past however few splits the scan produced and (b)
-    # pre-satisfies every id-keyed clustering downstream (guide
-    # §2.3/§2.4).  Tokens materialize in their own projection so the
-    # tokenizer isn't re-inlined into every interpreted gram slice
+    # with NO exchange at all; only dfreq/ranked explode it.  On a
+    # small input the id-keyed raw-text spread up front (a)
+    # parallelizes the shingle transform past however few splits the
+    # scan produced and (b) pre-satisfies every id-keyed clustering
+    # downstream (guide §2.3/§2.4).  Tokens materialize in their own
+    # projection so the tokenizer isn't re-inlined into every
+    # interpreted gram slice
     # (shingles_of_tokens contract — measured 7x on word_ngrams).
     # shingles emit array_distinct arrays, so the exploded (id, token)
     # stream is already unique per doc — no distinct shuffle needed.
     sh = (
-        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-        # explicit count: AQE would coalesce the tiny exchange to one
-        # partition and serialize the shingle transform (r16)
-        .repartition(
-            docs.sparkSession.sparkContext.defaultParallelism, F.col("id")
+        spread(
+            docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")),
+            "id",
         )
         .select("id", tokenize_ws(F.lower(F.col("__text"))).alias("__tok"))
         .select(
@@ -1103,6 +1014,7 @@ def winnow_fingerprints(
         # — doc_chunking — or raise _WINNOW_BASE)
         & (F.length("t") < _WINNOW_BASE)
     )
+    # on a small input (spread leaves a large one as it arrives), an
     # id-keyed exchange of RAW TEXT (~1 byte/char), placed BEFORE the
     # gram explode: the winnow window below requires clustering by id
     # anyway, and without this the exchange lands AFTER the explode —
@@ -1112,12 +1024,7 @@ def winnow_fingerprints(
     # guide §2.5 input-skew, §2.3 project-before-the-exchange).  Any
     # hashpartitioning(id, n) satisfies the window's ClusteredDistri-
     # bution(id), so no second exchange appears (r16, plan-audited).
-    # The count is EXPLICIT: AQE's byte-based coalescing folds a tiny
-    # keyless-size exchange to ONE partition, serializing the md5
-    # chain — a compute-bound stage must pin its parallelism.
-    norm = norm.repartition(
-        norm.sparkSession.sparkContext.defaultParallelism, F.col("id")
-    )
+    norm = spread(norm, "id")
     grams = norm.select(
         "id",
         (F.length("t") - (k - 1)).alias("n_grams"),

@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_tiki_webscraping_spark.session import spread
+
 
 def _md5_prefix_long(key_col: str) -> Column:
     """The cross-engine hash-to-integer recipe every deterministic
@@ -76,21 +78,17 @@ def key_space_union(*key_dfs: DataFrame) -> DataFrame:
     return reduce(DataFrame.unionByName, key_dfs).distinct()
 
 
-def fk_semi_join(fact: DataFrame, dim_keys: DataFrame, on: Sequence[str] | str, *, broadcast_keys: bool = True) -> DataFrame:
+def fk_semi_join(fact: DataFrame, dim_keys: DataFrame, on: Sequence[str] | str) -> DataFrame:
     """FK-enforcement filter (SURVEY §2.3 J1): keep fact rows whose key
     exists in ``dim_keys`` — the distributed form of the reference's
     ``products[products.shop_id.isin(all_shop_id)]`` (dags/etl.py:251).
 
-    Never collects the key set to the driver (100-TB rule).  With
-    ``broadcast_keys`` (default) the key side ships to every executor
-    — right whenever the dimension key set fits in memory; otherwise a
-    shuffled semi join (AQE may still convert it back to broadcast at
-    runtime).
+    Never collects the key set to the driver (100-TB rule).  The key
+    side ships to every executor — right whenever the dimension key set
+    fits in memory.
     """
     on = [on] if isinstance(on, str) else list(on)
-    keys = dim_keys.select(*on).distinct()
-    if broadcast_keys:
-        keys = F.broadcast(keys)
+    keys = F.broadcast(dim_keys.select(*on).distinct())
     # USING-joins move key columns to the front; restore the fact's
     # column order so downstream table schemas stay stable
     return fact.join(keys, on=on, how="left_semi").select(*fact.columns)
@@ -385,51 +383,6 @@ def deterministic_stratified_sample(
     return df.filter(pred)
 
 
-def bloom_prefilter_semi_join(
-    fact: DataFrame,
-    dim_keys: DataFrame,
-    on: Sequence[str] | str,
-    n_bits: int = 1 << 20,
-) -> DataFrame:
-    """Semi join with a Bloom-style bitmap prefilter — the runtime-filter
-    pattern (Spark's own DPP/bloom runtime filters, Trino dynamic
-    filtering) expressed in plain DataFrame algebra so the pruning is
-    explicit and testable.
-
-    Build side: hash every dim key into an ``n_bits`` bitmap stored as
-    a (word_idx, word) table of at most ``n_bits/64`` longs — built by
-    one partial-aggregated groupBy(bit_or), always tiny, always
-    broadcastable even when the dim itself is not.  Probe side: each
-    fact row equi-joins its word and tests its bit; rows whose bucket
-    is empty drop BEFORE the exact semi join, so the expensive shuffle
-    moves only probable matches.  One hash function: false-positive
-    rate ~= fill ratio, and false positives are removed by the exact
-    semi join that follows — the result is exactly ``fact ⋉ dim_keys``.
-
-    At 100 TB this is the difference between shuffling the whole fact
-    table into the semi join and shuffling only the (say) 3% of rows
-    that can match a selective dimension.
-    """
-    on = [on] if isinstance(on, str) else list(on)
-    bucket = F.pmod(F.xxhash64(*on), F.lit(n_bits))
-    bitmap = (
-        dim_keys.select(
-            (bucket / 64).cast("bigint").alias("__word_idx"),
-            F.shiftleft(F.lit(1).cast("bigint"), (bucket % 64).cast("int")).alias("__mask"),
-        )
-        .groupBy("__word_idx")
-        .agg(F.bit_or("__mask").alias("__word"))
-    )
-    probed = (
-        fact.withColumn("__word_idx", (bucket / 64).cast("bigint"))
-        .withColumn("__probe", F.shiftleft(F.lit(1).cast("bigint"), (bucket % 64).cast("int")))
-        .join(F.broadcast(bitmap), on="__word_idx", how="inner")
-        .filter(F.col("__word").bitwiseAND(F.col("__probe")) != 0)
-        .select(*fact.columns)
-    )
-    return fk_semi_join(probed, dim_keys, on, broadcast_keys=False)
-
-
 def table_diff(
     old: DataFrame,
     new: DataFrame,
@@ -709,11 +662,13 @@ def _deletion_variant_rows(
             "deletion neighborhoods support max_distance in {1, 2}; "
             f"got {max_distance} (C(L, k) variants per row explodes past 2)"
         )
-    fields = (
-        df.schema.fields
-        if keep_cols is None
-        else [f for f in df.schema.fields if f.name in set(keep_cols)]
-    )
+    if keep_cols is None:
+        fields = df.schema.fields
+    else:
+        missing = [c for c in keep_cols if c not in df.columns]
+        if missing:
+            raise ValueError(f"keep_cols not in the input: {missing}")
+        fields = [f for f in df.schema.fields if f.name in set(keep_cols)]
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in fields
     ) + ", _variant string"
@@ -781,11 +736,10 @@ def deletion_neighborhood_pairs(
         F.col(name_col).alias("name"),
         *[F.col(c).alias(f"_bk{i}") for i, c in enumerate(block_cols)],
     )
-    # spread the pre-explode rows across the cluster: the input is
-    # often a handful of scan partitions (one parquet file at small
-    # SF), which would serialize the ~170x variant explode; the rows
-    # being repartitioned are the CHEAP side (pre-explosion)
-    base = base.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    # spread the pre-explode rows: an under-split input (one parquet
+    # file at small SF) would serialize the ~170x variant explode; the
+    # rows being spread are the CHEAP side (pre-explosion)
+    base = spread(base)
     bk = [f"_bk{i}" for i in range(len(block_cols))]
     # keep_cols: the variant stream never needs the name — names are
     # re-joined onto the DEDUPED pairs from `base` below, so shipping

@@ -49,6 +49,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_tiki_webscraping_spark.session import spread
+
 #: (n-gram size -> (numerator, denominator)) of the max allowed
 #: character fraction for the TOP n-gram — Gopher table A1.
 TOP_NGRAM_LIMITS: dict[int, tuple[int, int]] = {
@@ -119,7 +121,8 @@ def repetition_signals(
     documents).  See the module docstring for the exact variant
     definitions and the plan shape.
     """
-    # ONE id-keyed exchange of raw text up front (r16): every keyed
+    # on a small input (spread leaves a large one as it arrives), ONE
+    # id-keyed exchange of raw text up front (r16): every keyed
     # step below — the (doc_id, n, g) gram aggregate, the per-(doc_id,
     # n) rollup, the per-doc pivot, and the final doc_id join — has a
     # required clustering that hashpartitioning(doc_id) already
@@ -129,12 +132,9 @@ def repetition_signals(
     # construction run in however few tasks the scan produced (one on
     # a single-file input) — guide §2.3/§2.4: project before the
     # exchange, share one exchange across same-keyed operations.
-    # explicit count: AQE's byte-based coalescing would fold the tiny
-    # exchange to ONE partition and serialize the gram build (r16)
-    docs_part = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text")
-    ).repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, F.col("doc_id")
+    docs_part = spread(
+        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text")),
+        "doc_id",
     )
     base = (
         docs_part.select(

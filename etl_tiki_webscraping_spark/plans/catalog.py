@@ -21,6 +21,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_tiki_webscraping_spark.io import load_table
+from etl_tiki_webscraping_spark.session import spread
+from etl_tiki_webscraping_spark.streaming.events import (
+    PURCHASE_VIEW_HORIZON_SECONDS,
+    WATERMARK_DELAY_SECONDS,
+)
 from etl_tiki_webscraping_spark.operators.relational import (
     anti_join,
     dedup_deterministic,
@@ -33,28 +38,6 @@ from etl_tiki_webscraping_spark.operators.relational import (
 )
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
-
-
-def _par_ids(ids: DataFrame) -> DataFrame:
-    """Spread a small id table across ``defaultParallelism`` partitions
-    before a synthesis/decode Arrow kernel (r16, guide §2.5): the id
-    tables these fixtures derive from a single parquet file arrive as
-    ONE split, so the per-blob encode/decode kernels otherwise run on
-    one core.  The exchange carries BARE IDS only — blobs still never
-    cross an exchange (the plan-audited contract).  The partition
-    count is EXPLICIT because AQE's byte-based coalescing folds a tiny
-    keyless-size exchange back to one partition, which is exactly
-    wrong for a compute-bound kernel stage; defaultParallelism scales
-    with the cluster.
-
-    Applied SELECTIVELY (r16 measurement): the exchange + extra task
-    wave costs ~0.25 s fixed at fixture scale, so only fixtures whose
-    serial synthesis/decode kernel measured >= ~1 s keep it (FLAC
-    encode+decode 3.2 s -> 0.75 s, full-pixel webp/jpeg/png decodes,
-    MP3 frame UDTF); header-triage tiers whose kernel is a cheap
-    byte-walk stay on the plain single-split scan."""
-    sc = ids.sparkSession.sparkContext
-    return ids.repartition(sc.defaultParallelism, *ids.columns[:1])
 
 
 @dataclass
@@ -219,7 +202,7 @@ _LOJ_MULTIBATCH_KW = dict(
     n_batches=3,
     cache_tag="outer-spacer",
     spacer_batches=2,
-    spacer_margin_seconds=3600 + 600 + 120,
+    spacer_margin_seconds=PURCHASE_VIEW_HORIZON_SECONDS + WATERMARK_DELAY_SECONDS + 120,
 )
 
 _EAGER_STAGING_QUERIES = (
@@ -10123,15 +10106,11 @@ def q_image_dedup_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r16/r17: the synthetic blobs here ARE the fixture text (bytes
     # come straight off the scan); spreading them parallelizes the
-    # decode + aHash kernels past a single scan split (explicit count:
-    # AQE would coalesce it back to one).  CONDITIONAL on an
-    # under-split scan (r17, VERDICT r16 #2): nothing downstream needs
-    # media_id clustering (near-dup pairs band on hash), so on a
-    # multi-split input at real scale this is a no-op — never an
-    # unconditional input-sized exchange of all image bytes.
-    sc = spark.sparkContext
-    if media.rdd.getNumPartitions() < sc.defaultParallelism:
-        media = media.repartition(sc.defaultParallelism, "media_id")
+    # decode + aHash kernels past a single scan split.  KEYLESS (VERDICT
+    # r16 #2): nothing downstream needs media_id clustering (near-dup
+    # pairs band on hash), so a large input is left as scanned — never
+    # an input-sized exchange of all image bytes.
+    media = spread(media)
     hashes = image_ahash(extract_image_features(media))
     return image_neardup_pairs(hashes, max_hamming=6)
 
@@ -12525,15 +12504,12 @@ def q_doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    # r16: one explicit-count id-keyed exchange of raw text BEFORE the
-    # token explode — the lag window and the final per-doc rollup then
-    # reuse the partitioning (no exploded-token exchange), and the
-    # tokenizer parallelizes past the single scan split (explicit
-    # count because AQE would coalesce the tiny exchange to one
-    # partition and serialize it)
-    docs = docs.select("doc_id", "text").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    # r16: on a small input, one id-keyed exchange of raw text BEFORE
+    # the token explode —
+    # the lag window and the final per-doc rollup then reuse the
+    # partitioning (no exploded-token exchange), and the tokenizer
+    # parallelizes past the single scan split
+    docs = spread(docs.select("doc_id", "text"), "doc_id")
     # persisted (r17): the token stream has TWO independent consumers —
     # the bigram build and the vocabulary-size count.  Unpinned, the
     # vsize leg re-scans and re-tokenizes the whole corpus through its
@@ -12968,15 +12944,12 @@ def _kn_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    # r16: one explicit-count id-keyed exchange of raw text BEFORE the
-    # token explode — the lag window and the final per-doc rollup then
-    # reuse the partitioning (no exploded-token exchange), and the
-    # tokenizer parallelizes past the single scan split (explicit
-    # count because AQE would coalesce the tiny exchange to one
-    # partition and serialize it)
-    docs = docs.select("doc_id", "text").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    # r16: on a small input, one id-keyed exchange of raw text BEFORE
+    # the token explode —
+    # the lag window and the final per-doc rollup then reuse the
+    # partitioning (no exploded-token exchange), and the tokenizer
+    # parallelizes past the single scan split
+    docs = spread(docs.select("doc_id", "text"), "doc_id")
     toks = docs.select(
         "doc_id",
         F.posexplode(
@@ -13484,7 +13457,8 @@ def q_jpeg_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    blobs = _par_ids(ids).mapInPandas(gen, blob_schema)
+    # only bare ids cross the spread; the blobs are built after it
+    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
     feats = extract_image_features(blobs)
     return feats.select(
         "media_id",
@@ -13575,7 +13549,8 @@ def q_jpeg_progressive_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    blobs = _par_ids(ids).mapInPandas(gen, blob_schema)
+    # only bare ids cross the spread; the blobs are built after it
+    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
     feats = extract_image_features(blobs)
     return feats.select(
         "media_id",
@@ -13661,7 +13636,8 @@ def q_png_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    blobs = _par_ids(ids).mapInPandas(gen, blob_schema)
+    # only bare ids cross the spread; the blobs are built after it
+    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
     feats = extract_image_features(blobs)
     return feats.select(
         "media_id",
@@ -13839,7 +13815,8 @@ def q_mjpeg_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    blobs = _par_ids(ids).mapInPandas(gen, blob_schema)
+    # only bare ids cross the spread; the blobs are built after it
+    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
     return sample_video_frames(blobs, every_n=2).select(
         "media_id", "frame_index", "height", "width", "luma_units"
     )
@@ -13897,7 +13874,8 @@ def q_audio_spectral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    blobs = _par_ids(ids).mapInPandas(gen, blob_schema)
+    # only bare ids cross the spread; the blobs are built after it
+    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
     return extract_audio_spectral_features(blobs)
 
 
@@ -14463,7 +14441,8 @@ def q_webp_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    blobs = _par_ids(ids).mapInPandas(gen, blob_schema)
+    # only bare ids cross the spread; the blobs are built after it
+    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
     feats = extract_image_features(blobs)
     return feats.select(
         "media_id",
@@ -14581,7 +14560,8 @@ def q_flac_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    blobs = _par_ids(ids).mapInPandas(gen, blob_schema)
+    # only bare ids cross the spread; the blobs are built after it
+    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
     return extract_audio_pcm_features(blobs)
 
 
@@ -14895,7 +14875,8 @@ def q_udtf_mp3_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    blobs = _par_ids(ids).mapInPandas(gen, blob_schema)
+    # only bare ids cross the spread; the blobs are built after it
+    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
     return mp3_frames(spark, blobs)
 
 
@@ -15325,7 +15306,8 @@ def q_webp_variants_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    blobs = _par_ids(ids).mapInPandas(gen, blob_schema)
+    # only bare ids cross the spread; the blobs are built after it
+    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
     feats = extract_image_features(blobs)
     return feats.select(
         "media_id",

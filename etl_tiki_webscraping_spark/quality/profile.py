@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_tiki_webscraping_spark.session import spread
+
 
 def profile_table(
     df: DataFrame,
@@ -44,14 +46,10 @@ def profile_table(
     # once per distinct column BEFORE its exchange, so a scan that
     # produced fewer splits than cores runs the whole Expand + partial
     # aggregation serially.  Spread the PROJECTED columns (narrow —
-    # only what the profile reads) across defaultParallelism first;
-    # no-op at real scale where the scan already yields enough splits.
-    # Exact results are partitioning-independent (count/min/max/
-    # decimal sums, distinct via the expand group-by).
-    df = df.select(*cols)
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        df = df.repartition(sc.defaultParallelism)
+    # only what the profile reads) first.  Exact results are
+    # partitioning-independent (count/min/max/decimal sums, distinct
+    # via the expand group-by).
+    df = spread(df.select(*cols))
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
         aggs.append(F.count(F.col(c)).alias(f"__cnt_{c}"))

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -59,6 +59,39 @@ def get_spark(app_name: str = "etl-tiki-webscraping-spark", shuffle_partitions: 
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     return builder.getOrCreate()
+
+
+def spread(df: DataFrame, *keys: str | Column) -> DataFrame:
+    """Spread a small ``df`` across the cores ahead of compute-bound work
+    (an Arrow kernel, a shingle/gram explode, a multi-distinct
+    aggregate).
+
+    The one partition-spread policy.  It decides from the optimizer's
+    size estimate of ``df``, which is taken on the projected and
+    filtered plan, not on the bytes scanned, and never from ``df.rdd``:
+    on a plan that already contains an exchange, ``.rdd`` makes AQE run
+    that exchange's jobs while the query is still being planned.
+
+    - Small input (estimate below ``defaultParallelism`` x
+      ``spark.sql.files.maxPartitionBytes``, a size cut-off):
+      ``repartition(defaultParallelism, *keys)``, always, even when
+      ``df`` already has that many partitions.  The count stays
+      explicit because AQE's byte-based coalescing would fold a tiny
+      exchange back to ONE partition and serialize the work that
+      follows.
+    - Large input: ``df`` unchanged, with whatever partitions it
+      arrives in; ``keys`` are ignored.  An input-sized exchange
+      pinned to the core count is what this avoids at scale.
+
+    An input whose size the optimizer cannot estimate (an RDD-backed
+    frame) counts as large.
+    """
+    spark = df.sparkSession
+    cores = spark.sparkContext.defaultParallelism
+    split_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    if df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() < cores * split_bytes:
+        return df.repartition(cores, *keys)
+    return df
 
 
 def stop_spark() -> None:

@@ -40,6 +40,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
+# stream_stream_purchase_views defaults.  A left-outer flush needs the
+# watermark past view_ts + horizon, and the watermark trails the data
+# by the delay — so heartbeat spacers must land more than horizon +
+# delay past the data (the catalog's LOJ spacer margin derives from
+# these, tests/test_streaming.py guards it).
+PURCHASE_VIEW_HORIZON_SECONDS = 3600
+WATERMARK_DELAY_SECONDS = 600
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source streaming read of the ``events`` fixture.
@@ -623,8 +631,8 @@ def foreach_batch_portable_hll(
 def stream_stream_purchase_views(
     views: DataFrame,
     purchases: DataFrame,
-    horizon: str = "1 hour",
-    watermark_delay: str = "10 minutes",
+    horizon: str = f"{PURCHASE_VIEW_HORIZON_SECONDS} seconds",
+    watermark_delay: str = f"{WATERMARK_DELAY_SECONDS} seconds",
     how: str = "inner",
 ) -> DataFrame:
     """Stream-stream INNER join with watermarks on BOTH sides and a

@@ -170,6 +170,16 @@ def test_variant_kernel_keep_cols_trims_payload(spark, max_d):
     assert got == want
 
 
+def test_variant_kernel_rejects_unknown_keep_cols(spark):
+    from etl_tiki_webscraping_spark.operators.relational import (
+        _deletion_variant_rows,
+    )
+
+    df = spark.createDataFrame(ROWS, SCHEMA)
+    with pytest.raises(ValueError, match="nope"):
+        _deletion_variant_rows(df, "name", 1, keep_cols=["id", "nope"])
+
+
 def test_rejects_unsupported_distance_and_policy(spark):
     df = spark.createDataFrame(ROWS, SCHEMA)
     with pytest.raises(ValueError):

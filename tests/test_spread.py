@@ -1,0 +1,59 @@
+"""session.spread — the one partition-spread policy.  It decides from
+the optimizer's size estimate, so it never runs a Spark job while a
+query is being planned (``df.rdd`` on a plan with an exchange does)."""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.sql import functions as F
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("op", ["minhash_analysis", "jaccard_on_pairs"])
+def test_exchange_input_starts_no_job_at_plan_time(spark, op):
+    from etl_tiki_webscraping_spark.operators.dedup import (
+        jaccard_on_pairs,
+        minhash_analysis,
+    )
+
+    docs = spark.range(64).select(
+        "id",
+        F.concat_ws(
+            " ", *[F.concat(F.lit(f"t{m}_"), F.col("id") % m) for m in (3, 5, 7, 11)]
+        ).alias("text"),
+    ).repartition(8)
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    sc = spark.sparkContext
+    group = f"spread-probe-{op}"
+    sc.setJobGroup(group, "plan-time probe")
+    try:
+        if op == "minhash_analysis":
+            minhash_analysis(docs, "text", "id")
+        else:
+            jaccard_on_pairs(pairs, docs, "text", "id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_small_input_pins_default_parallelism(spark):
+    from etl_tiki_webscraping_spark.session import spread
+
+    n = spark.sparkContext.defaultParallelism
+    df = spark.range(1000)
+    keyed = _plan(spread(df, "id"))
+    assert "hashpartitioning(id#" in keyed
+    assert f", {n}), REPARTITION_BY_NUM" in keyed
+    assert f"RoundRobinPartitioning({n}), REPARTITION_BY_NUM" in _plan(spread(df))
+
+
+def test_large_input_is_left_unchanged(spark):
+    from etl_tiki_webscraping_spark.session import spread
+
+    big = spark.range(10**12)  # ~8 TB estimated
+    assert spread(big) is big
+    assert spread(big, "id") is big

@@ -675,6 +675,30 @@ def test_stream_stream_left_outer_emits_nulls_only_after_watermark(spark, tmp_pa
     assert run(base + spacers, "flush") == {("v1", "p1"), ("v2", None)}
 
 
+def test_loj_spacer_margin_covers_horizon_and_delay(spark):
+    """The catalog LOJ's heartbeat spacers flush the null-extended tail
+    only if they land more than horizon + watermark delay past the
+    data; the margin must cover the join's actual defaults."""
+    import inspect
+
+    from etl_tiki_webscraping_spark.plans.catalog import _LOJ_MULTIBATCH_KW
+    from etl_tiki_webscraping_spark.streaming.events import (
+        stream_stream_purchase_views,
+    )
+
+    params = inspect.signature(stream_stream_purchase_views).parameters
+    horizon_s, delay_s = (
+        spark.range(1).select(
+            F.expr(
+                "unix_seconds(TIMESTAMP'1970-01-01 00:00:00 UTC' + "
+                f"INTERVAL {params[p].default})"
+            )
+        ).first()[0]
+        for p in ("horizon", "watermark_delay")
+    )
+    assert _LOJ_MULTIBATCH_KW["spacer_margin_seconds"] > horizon_s + delay_s
+
+
 def test_stream_stream_join_rejects_unknown_how(spark):
     import pytest
 

@@ -403,17 +403,18 @@ def main() -> int:
 
 
     def _bare_id_repartition_only(plan: str) -> bool:
-        # r16: fixture id tables are spread across defaultParallelism
-        # partitions BEFORE the synthesis/decode kernel (_par_ids in
-        # plans/catalog.py) so the per-blob work parallelizes past the
-        # single scan split.  Scope of the check (r16 ADVICE): explain
-        # Exchange lines show only PARTITIONING EXPRESSIONS, so this
-        # enforces "every exchange is the explicit REPARTITION_BY_NUM
+        # r16: fixture id tables are spread (session.spread, which
+        # pins defaultParallelism partitions on a small input) BEFORE
+        # the synthesis/decode kernel so the per-blob work
+        # parallelizes past the single scan split.  Scope of the check
+        # (r16 ADVICE): explain Exchange lines show only PARTITIONING
+        # EXPRESSIONS, so this enforces "every exchange is the explicit
+        # REPARTITION_BY_NUM
         # and content is never a PARTITION KEY" — it cannot see columns
         # riding through the shuffle, and is vacuously true on a plan
         # with no Exchange at all.  The riding-through half of the
-        # blobs-never-shuffle contract is structural: _par_ids tables
-        # carry ONLY the id column by construction (the blob is
+        # blobs-never-shuffle contract is structural: the spread id
+        # tables carry ONLY the id column by construction (the blob is
         # synthesized/decoded downstream of the exchange), which the
         # per-tier kernel position checks below pin.
         ex = [seg for seg in plan.split("\n") if "Exchange" in seg]
