@@ -1096,8 +1096,10 @@ def ordered_budget_select(
         else df.join(F.broadcast(lo_hi))
     )
     width = (F.col("__hi") - F.col("__lo")) / F.lit(n_buckets)
+    # a range narrower than n_buckets ulps (e.g. [0, 5e-324]) underflows
+    # to a zero width even though hi > lo: one bucket, not a division
     bucket = (
-        F.when(F.col("__hi") <= F.col("__lo"), F.lit(0))
+        F.when(width <= F.lit(0.0), F.lit(0))
         .otherwise(
             F.least(
                 F.lit(n_buckets - 1),

@@ -230,27 +230,43 @@ def _current_snapshot(target_path: str) -> str | None:
     return None
 
 
-def _read_snapshot(spark: SparkSession, target_path: str, snap_name: str) -> DataFrame:
-    """Read one committed snapshot.  If its manifest records a table
-    schema (written by partitioned commits), apply it explicitly: after
-    additive schema evolution the pool holds files written under OLDER
-    schemas, and an explicit read schema makes parquet null-fill their
-    missing columns — the Delta approach, no footer-merging pass."""
+def _load_manifest(target_path: str, snap_name: str) -> dict:
+    """The ``<snap_name>.json`` manifest, or ``{}`` when the snapshot
+    has none (legacy layout)."""
     import json
     import os
 
+    mpath = os.path.join(target_path, snap_name + ".json")
+    if not os.path.exists(mpath):
+        return {}
+    with open(mpath) as fh:
+        return json.load(fh)
+
+
+def _manifest_schema(manifest: dict) -> "T.StructType | None":
+    import json
+
+    schema_json = manifest.get("schema")
+    return T.StructType.fromJson(json.loads(schema_json)) if schema_json else None
+
+
+def _snapshot_reader(spark: SparkSession, manifest: dict):
+    """Parquet reader for a snapshot's files.  If the manifest records a
+    table schema, apply it explicitly: after additive schema evolution
+    the pool holds files written under OLDER schemas, and an explicit
+    read schema makes parquet null-fill their missing columns — the
+    Delta approach, no footer-merging pass."""
+    schema = _manifest_schema(manifest)
+    return spark.read.schema(schema) if schema is not None else spark.read
+
+
+def _read_snapshot(spark: SparkSession, target_path: str, snap_name: str) -> DataFrame:
+    """Read one committed snapshot under its manifest schema, with its
+    deletion vectors applied."""
+    import os
+
     snap_dir = os.path.join(target_path, snap_name)
-    mpath = snap_dir + ".json"
-    df = None
-    if os.path.exists(mpath):
-        with open(mpath) as fh:
-            manifest = json.load(fh)
-        schema_json = manifest.get("schema")
-        if schema_json:
-            schema = T.StructType.fromJson(json.loads(schema_json))
-            df = spark.read.schema(schema).parquet(snap_dir)
-    if df is None:
-        df = spark.read.parquet(snap_dir)
+    df = _snapshot_reader(spark, _load_manifest(target_path, snap_name)).parquet(snap_dir)
     return _maybe_apply_dv(spark, snap_dir, df)
 
 
@@ -316,7 +332,6 @@ def table_history(spark: SparkSession, target_path: str) -> DataFrame:
     rows until a rewriting commit folds them out (same caveat as
     Delta's numRecords under DVs).
     """
-    import json
     import os
 
     import pyarrow.parquet as pq
@@ -342,11 +357,7 @@ def table_history(spark: SparkSession, target_path: str) -> DataFrame:
                 if f.endswith(".parquet") and not f.startswith((".", "_"))
             ]
         n_rows = sum(pq.read_metadata(f).num_rows for f in files)
-        partition_by: list[str] = []
-        mpath = snap_dir + ".json"
-        if os.path.exists(mpath):
-            with open(mpath) as fh:
-                partition_by = json.load(fh).get("partition_by") or []
+        partition_by = _load_manifest(target_path, entry).get("partition_by") or []
         rows.append(
             (
                 int(entry.lstrip("v")),
@@ -487,9 +498,7 @@ def restore_table(
     both versions.  Without it the restored commit has no ``_changes``
     entry and feed reads spanning it refuse (the documented gap
     behavior).  Returns the new version number."""
-    import json
     import os
-    import shutil
 
     if version is None and as_of is None:
         raise ValueError("restore_table requires version or as_of")
@@ -498,50 +507,37 @@ def restore_table(
         raise FileNotFoundError(f"no committed snapshot table at {target_path}")
     src_name = _resolve_snapshot_name(target_path, version, as_of)
     next_version = int(cur.lstrip("v")) + 1
-    stage = _stage_base(next_version)
-    stage_dir = os.path.join(target_path, stage)
-    committed = False
-    try:
-        _link_snapshot_tree(
-            os.path.join(target_path, src_name), stage_dir, resolve_links=False
+    manifest = _load_manifest(target_path, src_name)
+    manifest["restored_from"] = int(src_name.lstrip("v"))
+
+    def restore_feed(_staged) -> DataFrame:
+        # the restored snapshot's content IS the source snapshot's (same
+        # files, same vectors), so the feed reads it from there
+        restored = _read_snapshot(spark, target_path, src_name)
+        current = _read_snapshot(spark, target_path, cur)
+        # align the pre-restore state to the restored (= post-commit
+        # table) schema; columns added after the restore point
+        # vanish with the restore, columns it lacks null-fill
+        aligned = current.select(
+            [
+                F.col(f.name).cast(f.dataType)
+                if f.name in current.columns
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in restored.schema.fields
+            ]
         )
-        with open(os.path.join(target_path, src_name + ".json")) as fh:
-            manifest = json.load(fh)
-        manifest["version"] = next_version
-        manifest["attempt"] = stage  # ownership check at publish
-        manifest["restored_from"] = int(src_name.lstrip("v"))
-        mpath = os.path.join(target_path, stage + ".json")
-        with open(mpath + ".tmp", "w") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
-        os.replace(mpath + ".tmp", mpath)
-        if change_feed:
-            restored = _read_snapshot(spark, target_path, stage)
-            current = _read_snapshot(spark, target_path, cur)
-            # align the pre-restore state to the restored (= post-commit
-            # table) schema; columns added after the restore point
-            # vanish with the restore, columns it lacks null-fill
-            aligned = current.select(
-                [
-                    F.col(f.name).cast(f.dataType)
-                    if f.name in current.columns
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in restored.schema.fields
-                ]
-            )
-            feed = _tag_changes(
-                restored.exceptAll(aligned), "insert", next_version
-            ).unionByName(_tag_changes(aligned.exceptAll(restored), "delete", next_version))
-            feed.write.mode("overwrite").parquet(os.path.join(stage_dir, "_changes"))
-        _publish_staged(target_path, next_version, stage, keep_snapshots)
-        committed = True
-        return next_version
-    finally:
-        if not committed:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            try:
-                os.remove(os.path.join(target_path, stage + ".json"))
-            except OSError:
-                pass
+        return _tag_changes(
+            restored.exceptAll(aligned), "insert", next_version
+        ).unionByName(_tag_changes(aligned.exceptAll(restored), "delete", next_version))
+
+    _commit(
+        target_path,
+        next_version,
+        keep_snapshots,
+        carry=(os.path.join(target_path, src_name), manifest),
+        changes_builder=restore_feed if change_feed else None,
+    )
+    return next_version
 
 
 def vacuum_table(
@@ -633,9 +629,7 @@ def clone_table(
     way): VACUUM on a partitioned SOURCE can reclaim pool dirs a clone
     still references — see :func:`vacuum_table`.  ``version``/``as_of``
     clone a retained older snapshot instead of the current one."""
-    import json
     import os
-    import shutil
 
     if os.path.isdir(dest_path) and os.listdir(dest_path):
         raise FileExistsError(f"clone destination {dest_path} is not empty")
@@ -648,40 +642,20 @@ def clone_table(
         else cur
     )
     os.makedirs(dest_path, exist_ok=True)
-    stage = _stage_base(1)
-    stage_dir = os.path.join(dest_path, stage)
-    committed = False
-    try:
-        _link_snapshot_tree(
-            os.path.join(source_path, src_name), stage_dir, resolve_links=True
-        )
-        with open(os.path.join(source_path, src_name + ".json")) as fh:
-            manifest = json.load(fh)
-        manifest["version"] = 1
-        manifest["attempt"] = stage
-        manifest["cloned_from"] = {
-            "path": os.path.realpath(source_path),
-            "version": int(src_name.lstrip("v")),
+    manifest = _load_manifest(source_path, src_name)
+    manifest["cloned_from"] = {
+        "path": os.path.realpath(source_path),
+        "version": int(src_name.lstrip("v")),
+    }
+    if manifest.get("partitions"):
+        # authoritative references now live outside this table dir
+        manifest["partitions"] = {
+            rel: os.path.realpath(os.path.join(source_path, d))
+            for rel, d in manifest["partitions"].items()
         }
-        if manifest.get("partitions"):
-            # authoritative references now live outside this table dir
-            manifest["partitions"] = {
-                rel: os.path.realpath(os.path.join(source_path, d))
-                for rel, d in manifest["partitions"].items()
-            }
-        mpath = os.path.join(dest_path, stage + ".json")
-        with open(mpath + ".tmp", "w") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
-        os.replace(mpath + ".tmp", mpath)
-        _publish_staged(dest_path, 1, stage, keep_snapshots)
-        committed = True
-    finally:
-        if not committed:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            try:
-                os.remove(os.path.join(dest_path, stage + ".json"))
-            except OSError:
-                pass
+    _commit(
+        dest_path, 1, keep_snapshots, carry=(os.path.join(source_path, src_name), manifest)
+    )
 
 
 def repartition_table(
@@ -707,16 +681,12 @@ def repartition_table(
         raise FileNotFoundError(f"no committed snapshot table at {target_path}")
     df = _read_snapshot(spark, target_path, cur)
     next_version = int(cur.lstrip("v")) + 1
-    if partition_by:
-        pcols = list(partition_by)
-        missing = [c for c in pcols if c not in df.columns]
-        if missing:
-            raise ValueError(f"partition columns {missing} not in table schema")
-        # prior_entries={}: every partition of the new layout is freshly
-        # written — nothing carries forward across a layout change
-        _commit_partitioned(df, target_path, next_version, pcols, {}, keep_snapshots)
-    else:
-        _commit_unpartitioned(df, target_path, next_version, keep_snapshots)
+    missing = [c for c in partition_by or () if c not in df.columns]
+    if missing:
+        raise ValueError(f"partition columns {missing} not in table schema")
+    # no prior entries: every partition of the new layout is freshly
+    # written — nothing carries forward across a layout change
+    _commit(target_path, next_version, keep_snapshots, df, partition_by)
     return next_version
 
 
@@ -851,19 +821,13 @@ def _bloom_pruned_read(
         if words is None or any(may_contain(words, ps) for ps in value_positions):
             kept.append(path)
     pred = F.col(col).isin(*[F.lit(v) for v in values])
-    manifest_path = os.path.join(target_path, snap_name + ".json")
-    schema = None
-    if os.path.exists(manifest_path):
-        with open(manifest_path) as fh:
-            sj = json.load(fh).get("schema")
-        if sj:
-            schema = T.StructType.fromJson(json.loads(sj))
+    manifest = _load_manifest(target_path, snap_name)
     if not kept:
+        schema = _manifest_schema(manifest)
         if schema is None:
             return None
         return spark.createDataFrame([], schema).filter(pred)
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    df = reader.option("basePath", snap_dir).parquet(*kept)
+    df = _snapshot_reader(spark, manifest).option("basePath", snap_dir).parquet(*kept)
     return _maybe_apply_dv(spark, snap_dir, df).filter(pred)
 
 
@@ -960,8 +924,6 @@ def read_parquet_table(
     cannot — a high-cardinality key on a table clustered by a different
     column.  Mutually exclusive with ``range_filter``.
     """
-    import os
-
     if version is not None and as_of is not None:
         raise ValueError("version and as_of are mutually exclusive")
     if eq_filter is not None and range_filter is not None:
@@ -1016,15 +978,10 @@ def _stats_pruned_read(
     """File-skipping read of one snapshot under a range predicate, or
     None when the manifest offers nothing to skip (caller falls back to
     the ordinary full read + filter)."""
-    import json
     import os
 
     conjuncts = _range_conjuncts(range_filter)
-    mpath = os.path.join(target_path, snap_name + ".json")
-    if not os.path.exists(mpath):
-        return None
-    with open(mpath) as fh:
-        manifest = json.load(fh)
+    manifest = _load_manifest(target_path, snap_name)
     stats = manifest.get("file_stats") or {}
     if not stats:
         return None
@@ -1063,14 +1020,12 @@ def _stats_pruned_read(
     kept = [f for f in all_files if survives(f)]
     if len(kept) == len(all_files):
         return None  # nothing skippable; use the standard read path
-    schema_json = manifest.get("schema")
-    schema = T.StructType.fromJson(json.loads(schema_json)) if schema_json else None
     if not kept:
+        schema = _manifest_schema(manifest)
         if schema is None:
             return None
         return _apply_range(spark.createDataFrame([], schema), range_filter)
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    df = reader.option("basePath", snap_dir).parquet(
+    df = _snapshot_reader(spark, manifest).option("basePath", snap_dir).parquet(
         *[os.path.join(snap_dir, f) for f in kept]
     )
     return _apply_range(_maybe_apply_dv(spark, snap_dir, df), range_filter)
@@ -1126,7 +1081,7 @@ class ConcurrentWriteError(RuntimeError):
     its publish attempt; re-run the operation against the new version."""
 
 
-def _write_pointer(target_path: str, snap_name: str, expected_cur: str | None = ...) -> None:
+def _write_pointer(target_path: str, snap_name: str, expected_cur: str | None) -> None:
     """Commit = atomic pointer swap (object-store analog: single PUT,
     or a conditional PUT for multi-writer safety).
 
@@ -1141,26 +1096,17 @@ def _write_pointer(target_path: str, snap_name: str, expected_cur: str | None = 
     """
     import os
 
-    if expected_cur is not ...:
-        now = _current_snapshot(target_path)
-        if now != expected_cur:
-            raise ConcurrentWriteError(
-                f"{target_path}: expected committed version {expected_cur!r} "
-                f"but found {now!r}; a concurrent writer published first"
-            )
+    now = _current_snapshot(target_path)
+    if now != expected_cur:
+        raise ConcurrentWriteError(
+            f"{target_path}: expected committed version {expected_cur!r} "
+            f"but found {now!r}; a concurrent writer published first"
+        )
     pointer = os.path.join(target_path, SNAPSHOT_POINTER)
     tmp = pointer + ".tmp"
     with open(tmp, "w") as fh:
         fh.write(snap_name)
     os.replace(tmp, pointer)
-
-
-def _publish(target_path: str, next_version: int, keep_snapshots: int) -> None:
-    """Publish snapshot ``next_version``: optimistic-concurrency check
-    against the version the merge was based on, pointer swap, prune."""
-    expected = f"v{next_version - 1:08d}" if next_version > 1 else None
-    _write_pointer(target_path, f"v{next_version:08d}", expected)
-    _prune_snapshots(target_path, next_version, keep_snapshots)
 
 
 def _stage_base(next_version: int) -> str:
@@ -1333,62 +1279,13 @@ def _publish_staged(
                 f"{target_path}: {snap_name} manifest belongs to attempt "
                 f"{owner!r}, not {stage_base!r}; claim was reclaimed — rebase"
             )
-        _publish(target_path, next_version, keep_snapshots)
+        _write_pointer(target_path, snap_name, expected)
+        _prune_snapshots(target_path, next_version, keep_snapshots)
     finally:
         try:
             os.remove(claim)
         except OSError:
             pass
-
-
-def _commit_unpartitioned(
-    df: DataFrame,
-    target_path: str,
-    next_version: int,
-    keep_snapshots: int,
-    audit: "object | None" = None,
-    changes_builder: "object | None" = None,
-) -> None:
-    """Stage + publish an UNPARTITIONED snapshot: full result written
-    under an attempt-unique name, manifest (schema + per-file min/max),
-    optional write-audit-publish gate, then the claim + pointer swap.
-
-    ``changes_builder`` (change data feed): a callable receiving the
-    JUST-STAGED snapshot as a DataFrame and returning the commit's
-    change rows.  Building from the staged files means the merge
-    lineage is never executed twice — the feed costs one read of the
-    bytes this commit just wrote (plus the builder's own pruned reads),
-    not a second full merge."""
-    import os
-    import shutil
-
-    stage = _stage_base(next_version)
-    stage_dir = os.path.join(target_path, stage)
-    committed = False
-    try:
-        df.write.mode("overwrite").parquet(stage_dir)
-        _write_snapshot_manifest(target_path, stage, df.schema.json())
-        if changes_builder is not None:
-            staged = df.sparkSession.read.schema(df.schema).parquet(stage_dir)
-            # inside the staged snapshot dir: rides the same claim +
-            # pointer swap; '_' prefix hides it from ordinary table reads
-            changes_builder(staged).write.mode("overwrite").parquet(
-                os.path.join(stage_dir, "_changes")
-            )
-        if audit is not None:
-            # write-audit-publish: validate the written-but-uncommitted
-            # snapshot; raising aborts before the claim
-            audit(df.sparkSession.read.parquet(stage_dir))
-        _publish_staged(target_path, next_version, stage, keep_snapshots)
-        committed = True
-    finally:
-        if not committed:
-            # attempt-scoped staging is exclusively ours — reclaim now
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            try:
-                os.remove(stage_dir + ".json")
-            except OSError:
-                pass
 
 
 def _prune_snapshots(target_path: str, next_version: int, keep_snapshots: int) -> None:
@@ -1413,7 +1310,7 @@ def _prune_snapshots(target_path: str, next_version: int, keep_snapshots: int) -
 
     now = time.time()
 
-    def _maybe_live(path: str, artifact_version: int | None) -> bool:
+    def _maybe_live(path: str) -> bool:
         # NO version-based shortcut: a slow loser that read base vN-2 can
         # still be staging toward a long-superseded version while winners
         # commit past it — reclaiming its dir mid-write surfaces as a
@@ -1427,7 +1324,6 @@ def _prune_snapshots(target_path: str, next_version: int, keep_snapshots: int) -
         # retry).  The walk is bounded: staging/pool dirs hold one
         # attempt's files.  Superseded leftovers age out of the grace
         # window and reclaim on a later prune.
-        del artifact_version
         try:
             newest = os.stat(path).st_mtime
             if os.path.isdir(path):
@@ -1443,10 +1339,6 @@ def _prune_snapshots(target_path: str, next_version: int, keep_snapshots: int) -
             return now - newest < _CLAIM_GRACE_SECONDS
         except OSError:
             return True  # vanished mid-check: someone owns it, leave it
-
-    def _version_prefix(name: str) -> int | None:
-        head = name.lstrip("v").split(".", 1)[0].split("-", 1)[0]
-        return int(head) if head.isdigit() else None
 
     keep_versions = {
         f"v{v:08d}" for v in range(max(1, next_version - keep_snapshots + 1), next_version + 1)
@@ -1479,16 +1371,14 @@ def _prune_snapshots(target_path: str, next_version: int, keep_snapshots: int) -
         if entry == "data":
             for sub in os.listdir(full):
                 pool = os.path.join(full, sub)
-                if sub in referenced or _maybe_live(pool, _version_prefix(sub)):
+                if sub in referenced or _maybe_live(pool):
                     continue
                 try:
                     shutil.rmtree(pool)
                 except OSError:
                     pass
             continue
-        if (".stage-" in entry or entry.endswith(".claim")) and _maybe_live(
-            full, _version_prefix(entry)
-        ):
+        if (".stage-" in entry or entry.endswith(".claim")) and _maybe_live(full):
             continue  # live concurrent attempt's staging/claim
         stem = entry[:-5] if entry.endswith(".json") else entry
         if stem in keep_versions:
@@ -1526,51 +1416,6 @@ def _normalize_value(v: object) -> str | None:
     return str(v)
 
 
-def _commit_partitioned(
-    merged: DataFrame,
-    target_path: str,
-    next_version: int,
-    pcols: Sequence[str],
-    prior_entries: dict[str, str],
-    keep_snapshots: int,
-    drop_values: "set[tuple] | None" = None,
-    audit: "object | None" = None,
-    changes_builder: "object | None" = None,
-) -> None:
-    """Staging-lifecycle wrapper around :func:`_commit_partitioned_staged`:
-    generates the attempt-unique staging name and, if the commit does
-    not land (audit rejection, concurrent-writer loss, crash-path
-    exception), reclaims this attempt's farm/manifest/pool immediately
-    — they are exclusively ours, so no other writer can be affected."""
-    import os
-    import shutil
-
-    stage = _stage_base(next_version)
-    committed = False
-    try:
-        _commit_partitioned_staged(
-            merged,
-            target_path,
-            next_version,
-            pcols,
-            prior_entries,
-            keep_snapshots,
-            drop_values,
-            audit,
-            stage,
-            changes_builder,
-        )
-        committed = True
-    finally:
-        if not committed:
-            shutil.rmtree(os.path.join(target_path, stage), ignore_errors=True)
-            try:
-                os.remove(os.path.join(target_path, stage + ".json"))
-            except OSError:
-                pass
-            shutil.rmtree(os.path.join(target_path, "data", _pool_name(stage)), ignore_errors=True)
-
-
 def _pool_name(stage: str) -> str:
     """data/ pool dir name for an attempt's staging name — permanently
     attempt-unique (the manifest records the mapping, so the name never
@@ -1578,42 +1423,165 @@ def _pool_name(stage: str) -> str:
     return stage.lstrip("v").replace(".stage-", "-")
 
 
-def _commit_partitioned_staged(
+def _commit(
+    target_path: str,
+    next_version: int,
+    keep_snapshots: int,
+    df: "DataFrame | None" = None,
+    partition_by: Sequence[str] | None = None,
+    prior_entries: "dict[str, str] | None" = None,
+    drop_values: "set[tuple] | None" = None,
+    carry: "tuple[str, dict] | None" = None,
+    deletion_vectors: "DataFrame | None" = None,
+    audit: "object | None" = None,
+    changes_builder: "object | None" = None,
+) -> None:
+    """Commit snapshot ``next_version`` of ``target_path`` — the one
+    commit path every table writer goes through.  Everything is staged
+    under an attempt-unique name (:func:`_stage_base`), then the
+    manifest is written, the change feed and audit run, and
+    :func:`_publish_staged` claims the version and swaps the pointer.
+    If the commit does not land (audit rejection, concurrent-writer
+    loss, crash-path exception), this attempt's stage dir, stage
+    manifest and pool dir are reclaimed immediately — they are
+    exclusively ours, so no other writer can be affected.
+
+    What the stage holds:
+
+    - ``carry=(snapshot dir, manifest)``: that snapshot recreated at
+      zero data copy (:func:`_link_snapshot_tree`; links resolve to
+      absolute targets only when the snapshot belongs to another table
+      — shallow clone).  The manifest is the carried one with this
+      commit's version and attempt.  ``deletion_vectors`` replaces the
+      carried vectors, and ``df`` appends as additional part files
+      next to the links (merge-on-read update post-images).
+    - ``partition_by``: ``df`` written into a new ``data/`` pool dir
+      and referenced from a hive-layout farm (:func:`_stage_farm`),
+      carrying ``prior_entries`` forward minus the partitions in
+      ``drop_values``.
+    - otherwise: ``df`` written as a plain unpartitioned snapshot dir.
+
+    ``changes_builder`` (change data feed): a callable receiving the
+    rows this commit just wrote, read back from their staged files
+    (None for ``carry`` commits, whose callers build the feed from the
+    source snapshot), and returning the commit's change rows.  Building
+    from the staged files means the merge lineage is never executed
+    twice — the feed costs one read of the bytes this commit just
+    wrote (plus the builder's own pruned reads), not a second full
+    merge.
+
+    ``audit`` (write-audit-publish, Iceberg WAP): validates the
+    fully-written, not-yet-committed snapshot, read via its staged
+    name; raising aborts BEFORE the claim, so readers keep the previous
+    version."""
+    import os
+    import shutil
+
+    stage = _stage_base(next_version)
+    stage_dir = os.path.join(target_path, stage)
+    # attempt-unique pool name: two writers racing toward the same
+    # next_version cannot overwrite each other's data files
+    pool_dir = os.path.join(target_path, "data", _pool_name(stage))
+    committed = False
+    try:
+        if carry is not None:
+            src_dir, manifest = carry
+            foreign = os.path.realpath(os.path.dirname(src_dir)) != os.path.realpath(
+                target_path
+            )
+            # vectors are table content and carry with the links, unless
+            # this commit rewrites them as a new union
+            _link_snapshot_tree(
+                src_dir,
+                stage_dir,
+                resolve_links=foreign,
+                keep=(_DV_DIR,) if deletion_vectors is None else (),
+            )
+            manifest = dict(manifest)
+            if deletion_vectors is not None:
+                deletion_vectors.write.mode("overwrite").parquet(
+                    os.path.join(stage_dir, _DV_DIR)
+                )
+                manifest["deletion_vectors"] = True
+            if df is not None:
+                df.write.mode("append").parquet(stage_dir)
+        elif partition_by:
+            manifest = _stage_farm(
+                df,
+                target_path,
+                next_version,
+                list(partition_by),
+                prior_entries or {},
+                drop_values,
+                stage_dir,
+                pool_dir,
+            )
+        else:
+            df.write.mode("overwrite").parquet(stage_dir)
+            # authoritative schema + per-file min/max stats, so
+            # read_parquet_table can skip whole files under a range
+            # predicate (the metadata half of compact_table's clustering)
+            manifest = {"schema": df.schema.json(), "file_stats": _dir_file_stats(stage_dir, "")}
+        manifest["version"] = next_version
+        manifest["attempt"] = stage  # ownership check at publish (_publish_staged)
+        _write_manifest(target_path, stage, manifest)
+        if changes_builder is not None:
+            staged = None
+            if carry is None:
+                # the explicit schema stops hive re-inference of
+                # partition columns when reading back the pool
+                written = pool_dir if partition_by else stage_dir
+                staged = df.sparkSession.read.schema(df.schema).parquet(written)
+            # inside the staged snapshot dir: rides the same claim +
+            # pointer swap; the '_' prefix hides it from table reads,
+            # partition discovery and manifest file stats
+            changes_builder(staged).write.mode("overwrite").parquet(
+                os.path.join(stage_dir, "_changes")
+            )
+        if audit is not None:
+            audit(_read_snapshot(df.sparkSession, target_path, stage))
+        _publish_staged(target_path, next_version, stage, keep_snapshots)
+        committed = True
+    finally:
+        if not committed:
+            shutil.rmtree(stage_dir, ignore_errors=True)
+            try:
+                os.remove(stage_dir + ".json")
+            except OSError:
+                pass
+            shutil.rmtree(pool_dir, ignore_errors=True)
+
+
+def _stage_farm(
     merged: DataFrame,
     target_path: str,
     next_version: int,
     pcols: Sequence[str],
     prior_entries: dict[str, str],
-    keep_snapshots: int,
     drop_values: "set[tuple] | None",
-    audit: "object | None",
-    stage: str,
-    changes_builder: "object | None" = None,
-) -> None:
-    """Write ``merged`` (the touched partitions only) into a new
-    ``data/`` pool dir, then build snapshot ``vN`` as a hive-layout farm
-    of per-partition references: freshly-written partitions point at the
-    new pool dir, untouched ones at the same pool dirs the previous
-    snapshot referenced (zero copy).  Locally the references are
-    symlinks so Spark's ordinary hive partition discovery — and
-    therefore PartitionFilters pruning — works unchanged; the
-    authoritative commit metadata is ``vN.json`` (partition -> pool
-    path), which is what an object-store port would read instead of
-    symlinks.  Commit order: pool write -> farm build -> manifest ->
-    audit -> claim (rename farm into the version path) -> pointer swap;
-    every crash point leaves the previous snapshot fully readable, and
-    all pre-claim artifacts live under attempt-unique names so a losing
-    concurrent writer never touches a winner's committed files."""
-    import json
+    farm_stage: str,
+    pool_dir: str,
+) -> dict:
+    """Write ``merged`` (the touched partitions only) into the attempt's
+    new ``data/`` pool dir, then build the staged snapshot as a
+    hive-layout farm of per-partition references: freshly-written
+    partitions point at the new pool dir, untouched ones at the same
+    pool dirs the previous snapshot referenced (zero copy).  Locally the
+    references are symlinks so Spark's ordinary hive partition
+    discovery — and therefore PartitionFilters pruning — works
+    unchanged; the authoritative commit metadata is ``vN.json``
+    (partition -> pool path), which is what an object-store port would
+    read instead of symlinks.  Every crash point leaves the previous
+    snapshot fully readable.  Returns the layout's manifest fields."""
     import os
     import shutil
 
-    # attempt-unique pool name: two writers racing toward the same
-    # next_version cannot overwrite each other's data files; an
-    # abandoned pool dir is never referenced by any manifest and is
-    # reclaimed by the wrapper (or pruning, after a crash)
-    pool_dir = os.path.join(target_path, "data", _pool_name(stage))
     merged.write.mode("overwrite").partitionBy(*pcols).parquet(pool_dir)
+    pool_real = os.path.realpath(pool_dir)
+
+    def fresh(data_dir: str) -> bool:
+        real = os.path.realpath(data_dir)
+        return real == pool_real or real.startswith(pool_real + os.sep)
 
     entries = dict(prior_entries)
     if drop_values:
@@ -1629,8 +1597,6 @@ def _commit_partitioned_staged(
     for rel in _leaf_partition_dirs(pool_dir, len(pcols)):
         entries[rel] = os.path.realpath(os.path.join(pool_dir, rel))
 
-    farm_stage = os.path.join(target_path, stage)
-    shutil.rmtree(farm_stage, ignore_errors=True)
     os.makedirs(farm_stage)
     for rel, data_dir in entries.items():
         link = os.path.join(farm_stage, rel)
@@ -1643,75 +1609,31 @@ def _commit_partitioned_staged(
     # REWRITTEN files go stale harmlessly (new pool basenames never
     # match).  A full rewrite (no carried references — compaction,
     # layout evolution) purges the vectors instead.
-    prev_dv = os.path.join(target_path, f"v{next_version - 1:08d}", _DV_DIR)
-    if next_version > 1 and os.path.isdir(prev_dv):
-        pool_real_now = os.path.realpath(pool_dir)
-        carried = any(
-            os.path.realpath(d) != pool_real_now
-            and not os.path.realpath(d).startswith(pool_real_now + os.sep)
-            for d in entries.values()
-        )
-        if carried:
-            shutil.copytree(
-                prev_dv, os.path.join(farm_stage, _DV_DIR), copy_function=os.link
-            )
-
-    if changes_builder is not None:
-        # feed rows derive from the JUST-WRITTEN pool files (the merged
-        # touched partitions) — the merge lineage never runs twice; the
-        # explicit schema stops hive re-inference of partition columns.
-        # Real dir among the symlinked partition dirs: '_' prefix keeps it
-        # out of partition discovery, farm scans, and manifest file stats;
-        # it renames into the version path with the farm at claim time
-        staged = merged.sparkSession.read.schema(merged.schema).parquet(pool_dir)
-        changes_builder(staged).write.mode("overwrite").parquet(
-            os.path.join(farm_stage, "_changes")
-        )
+    prev = f"v{next_version - 1:08d}"
+    prev_dv = os.path.join(target_path, prev, _DV_DIR)
+    if os.path.isdir(prev_dv) and not all(fresh(d) for d in entries.values()):
+        shutil.copytree(prev_dv, os.path.join(farm_stage, _DV_DIR), copy_function=os.link)
 
     # per-file min/max for data skipping: freshly-written pool files get
     # their footer stats read now (driver-side, bounded by the batch's
     # file count — the same metadata a Delta commit collects); files
     # carried forward by reference keep their PRIOR manifest stats
     # verbatim (the bytes didn't change, so neither did the ranges)
-    prior_stats: dict[str, dict] = {}
-    prev_mpath = os.path.join(target_path, f"v{next_version - 1:08d}.json")
-    if next_version > 1 and os.path.exists(prev_mpath):
-        with open(prev_mpath) as fh:
-            prior_stats = json.load(fh).get("file_stats", {}) or {}
-    pool_real = os.path.realpath(pool_dir)
+    prior_stats = _load_manifest(target_path, prev).get("file_stats") or {}
     file_stats: dict[str, dict] = {}
     for rel, data_dir in entries.items():
-        if os.path.realpath(data_dir).startswith(pool_real + os.sep) or (
-            os.path.realpath(data_dir) == pool_real
-        ):
+        if fresh(data_dir):
             file_stats.update(_dir_file_stats(data_dir, rel))
         else:
             pref = rel + os.sep
-            file_stats.update(
-                {k: v for k, v in prior_stats.items() if k.startswith(pref)}
-            )
+            file_stats.update({k: v for k, v in prior_stats.items() if k.startswith(pref)})
 
-    manifest = {
-        "version": next_version,
-        "attempt": stage,  # ownership check at publish (_publish_staged)
+    return {
         "partition_by": list(pcols),
         "schema": merged.schema.json(),  # authoritative table schema (evolution-safe reads)
         "partitions": {rel: os.path.relpath(d, target_path) for rel, d in entries.items()},
         "file_stats": file_stats,
     }
-    mpath = os.path.join(target_path, stage + ".json")
-    with open(mpath + ".tmp", "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
-    os.replace(mpath + ".tmp", mpath)
-
-    if audit is not None:
-        # write-audit-publish (Iceberg WAP): validate the fully-written,
-        # not-yet-committed snapshot (read via its STAGED name); a
-        # raising audit aborts BEFORE the claim, so readers keep the
-        # previous version and the staging is reclaimed immediately
-        audit(_read_snapshot(merged.sparkSession, target_path, stage))
-
-    _publish_staged(target_path, next_version, stage, keep_snapshots)
 
 
 def _parquet_file_stats(path: str) -> dict[str, list]:
@@ -1773,24 +1695,11 @@ def _dir_file_stats(data_dir: str, rel_prefix: str) -> dict[str, dict]:
     return out
 
 
-def _write_snapshot_manifest(target_path: str, snap_name: str, schema_json: str) -> None:
-    """Manifest for an UNPARTITIONED snapshot commit: authoritative
-    schema + per-file min/max stats, so :func:`read_parquet_table` can
-    skip whole files under a range predicate (``compact_table``'s
-    ``sort_by`` clustering produces disjoint per-file ranges — this is
-    the metadata half of that optimization)."""
+def _write_manifest(target_path: str, snap_name: str, manifest: dict) -> None:
+    """Write ``<snap_name>.json`` atomically (tmp + rename)."""
     import json
     import os
 
-    snap_dir = os.path.join(target_path, snap_name)
-    # snap_name may be an attempt-staged name ("vNNNNNNNN.stage-…");
-    # the recorded version is always the numeric prefix
-    manifest = {
-        "version": int(snap_name.lstrip("v").split(".", 1)[0]),
-        "attempt": snap_name,  # ownership check at publish (_publish_staged)
-        "schema": schema_json,
-        "file_stats": _dir_file_stats(snap_dir, ""),
-    }
     mpath = os.path.join(target_path, snap_name + ".json")
     with open(mpath + ".tmp", "w") as fh:
         json.dump(manifest, fh, indent=1, sort_keys=True)
@@ -1831,6 +1740,29 @@ def _rows_in_partitions(
     for pc in pcols:
         cond = cond & F.col(pc).eqNullSafe(F.col(f"__t_{pc}"))
     return snapshot.join(F.broadcast(t), on=cond, how="left_semi")
+
+
+def _touched_rows(
+    snapshot: DataFrame,
+    touched_vals: DataFrame,
+    pcols: Sequence[str],
+    cast_to: "T.StructType | None" = None,
+) -> "tuple[DataFrame, set[tuple]]":
+    """Collect the partition values a commit touches — bounded by the
+    number of touched partitions, the same cardinality a Delta/Iceberg
+    commit carries as metadata — and return the snapshot's rows in
+    those partitions plus the normalized value set whose prior farm
+    entries the commit supersedes (``drop_values`` of :func:`_commit`).
+    ``cast_to`` realigns the partition columns to a batch's schema:
+    hive reads append partition columns last and may re-infer their
+    type."""
+    touched_rows = touched_vals.collect()
+    drop_values = {tuple(_normalize_value(r[pc]) for pc in pcols) for r in touched_rows}
+    touched = _rows_in_partitions(snapshot, touched_rows, touched_vals.schema, pcols)
+    if cast_to is not None:
+        for pc in pcols:
+            touched = touched.withColumn(pc, F.col(pc).cast(cast_to[pc].dataType))
+    return touched, drop_values
 
 
 def _touched_partitions(
@@ -1994,150 +1926,82 @@ def _upsert_parquet_attempt(
     audit: "object | None",
     change_feed: bool = False,
 ) -> None:
+    """One read-merge-commit attempt of :func:`upsert_parquet`.  When
+    the current snapshot is a farm on ``partition_by``, the batch merges
+    against ONLY the partitions it touches and every other partition
+    carries forward by reference; otherwise (unpartitioned, a legacy
+    plain-parquet dir, or a snapshot laid out on other columns) the
+    whole table is merged and rewritten once."""
     import os
 
-    if partition_by:
-        _upsert_parquet_partitioned(
-            spark,
-            updates,
-            target_path,
-            keys,
-            order_by,
-            list(partition_by),
-            keep_snapshots,
-            stable_partitions,
-            evolve_schema,
-            audit,
-            change_feed,
-        )
-        return
-
     cur = _current_snapshot(target_path)
+    prior_entries: dict[str, str] | None = None
+    drop_values: set[tuple] | None = None
+    if cur is not None and partition_by:
+        prior_entries = _farm_entries(os.path.join(target_path, cur), partition_by)
+    # pre-merge rows the batch can touch: the merge input and the
+    # change feed's preimages
     target: "DataFrame | None" = None
-    if cur is not None:
+    if prior_entries is not None:
+        pcols = list(partition_by)
+        # manifest-schema read: pool files written before an additive
+        # evolution lack the newer columns and must null-fill them
+        snap = _read_snapshot(spark, target_path, cur)
+        target, drop_values = _touched_rows(
+            snap,
+            _touched_partitions(snap, updates, keys, pcols, stable_partitions),
+            pcols,
+            updates.schema,
+        )
+        if not evolve_schema:
+            # align the BATCH to the table, never the table to the
+            # batch: a narrower batch raises here (missing column)
+            # exactly like the full merge's updates.select(*target.columns)
+            # — silently narrowing `target` instead would commit the
+            # touched partitions without the column AND record the
+            # narrowed schema as the manifest's authoritative one,
+            # losing the column for the whole table on every later read
+            updates = updates.select(*target.columns)
+    elif cur is not None:
         target = _read_snapshot(spark, target_path, cur)
-        merged = upsert_dataframes(target, updates, keys, order_by, evolve_schema)
-        next_version = int(cur.lstrip("v")) + 1
     elif os.path.exists(target_path) and any(
         not e.startswith((".", "_")) for e in os.listdir(target_path)
     ):
         # legacy plain-parquet dir: upgrade in place to the snapshot layout
         target = spark.read.parquet(target_path)
-        merged = upsert_dataframes(target, updates, keys, order_by, evolve_schema)
-        next_version = 1
-    else:
+    next_version = int(cur.lstrip("v")) + 1 if cur is not None else 1
+    if target is None:
         merged = _dedup_updates(updates, keys, order_by)
-        next_version = 1
+    else:
+        merged = upsert_dataframes(target, updates, keys, order_by, evolve_schema)
 
     builder = (
         (lambda staged: _change_rows(target, staged, updates, keys, next_version))
         if change_feed
         else None
     )
-    _commit_unpartitioned(merged, target_path, next_version, keep_snapshots, audit, builder)
-
-
-def _upsert_parquet_partitioned(
-    spark: SparkSession,
-    updates: DataFrame,
-    target_path: str,
-    keys: list[str],
-    order_by: Sequence[Column | str] | None,
-    pcols: list[str],
-    keep_snapshots: int,
-    stable_partitions: bool,
-    evolve_schema: bool = False,
-    audit: "object | None" = None,
-    change_feed: bool = False,
-) -> None:
-    """Partition-pruned upsert: merge the update batch against ONLY the
-    partitions it touches; carry every other partition forward by
-    reference (see :func:`_commit_partitioned`)."""
-    import os
-
-    cur = _current_snapshot(target_path)
-    prior_entries: dict[str, str] = {}
-    drop_values: set[tuple] | None = None
-    prior: "DataFrame | None" = None  # pre-merge touched rows, for change_feed
-    if cur is not None:
-        cur_dir = os.path.join(target_path, cur)
-        entries = _farm_entries(cur_dir, pcols)
-        next_version = int(cur.lstrip("v")) + 1
-        if entries is None:
-            # legacy unpartitioned / re-partitioned snapshot: one-time full rewrite
-            target = _read_snapshot(spark, target_path, cur)
-            prior = target
-            merged = upsert_dataframes(
-                target,
-                updates if evolve_schema else updates.select(*target.columns),
-                keys,
-                order_by,
-                evolve_schema,
-            )
-        else:
-            prior_entries = entries
-            # manifest-schema read: pool files written before an additive
-            # evolution lack the newer columns and must null-fill them
-            snap = _read_snapshot(spark, target_path, cur)
-            touched_vals = _touched_partitions(
-                snap, updates, keys, pcols, stable_partitions
-            )
-            # bounded by the number of touched partitions — the same
-            # cardinality a Delta/Iceberg commit carries as metadata
-            touched_rows = touched_vals.collect()
-            drop_values = {
-                tuple(_normalize_value(r[pc]) for pc in pcols) for r in touched_rows
-            }
-            touched = _rows_in_partitions(snap, touched_rows, touched_vals.schema, pcols)
-            # hive reads append partition cols last and may re-infer their
-            # type; realign to the incoming batch's schema before merging
-            for pc in pcols:
-                touched = touched.withColumn(pc, F.col(pc).cast(updates.schema[pc].dataType))
-            if not evolve_schema:
-                # align the BATCH to the table, never the table to the
-                # batch: a narrower batch raises here (missing column)
-                # exactly like the unpartitioned path's
-                # updates.select(*target.columns) — silently narrowing
-                # `touched` instead would commit the touched partitions
-                # without the column AND record the narrowed schema as
-                # the manifest's authoritative one, losing the column
-                # for the whole table on every later read
-                updates = updates.select(*touched.columns)
-            prior = touched
-            merged = upsert_dataframes(touched, updates, keys, order_by, evolve_schema)
-    elif os.path.exists(target_path) and any(
-        not e.startswith((".", "_")) for e in os.listdir(target_path)
-    ):
-        target = spark.read.parquet(target_path)
-        prior = target
-        merged = upsert_dataframes(
-            target,
-            updates if evolve_schema else updates.select(*target.columns),
-            keys,
-            order_by,
-            evolve_schema,
-        )
-        next_version = 1
-    else:
-        merged = _dedup_updates(updates, keys, order_by)
-        next_version = 1
-
-    builder = (
-        (lambda staged: _change_rows(prior, staged, updates, keys, next_version))
-        if change_feed
-        else None
-    )
-    _commit_partitioned(
-        merged,
+    _commit(
         target_path,
         next_version,
-        pcols,
-        prior_entries,
         keep_snapshots,
+        merged,
+        partition_by,
+        prior_entries,
         drop_values,
-        audit,
-        builder,
+        audit=audit,
+        changes_builder=builder,
     )
+
+
+def _require_farm(target_path: str, cur: str, pcols: Sequence[str]) -> dict[str, str]:
+    """Farm entries of snapshot ``cur`` for a writer that requires the
+    table to be partitioned on ``pcols``."""
+    import os
+
+    entries = _farm_entries(os.path.join(target_path, cur), pcols)
+    if entries is None:
+        raise ValueError(f"{target_path} is not a {list(pcols)}-partitioned snapshot table")
+    return entries
 
 
 def delete_where(
@@ -2173,62 +2037,34 @@ def delete_where(
     ``compact_table``) purges the vectors by rewriting.  Works on both
     layouts; ``partition_by`` is ignored (nothing is rewritten).
     """
-    import os
-
     cur = _current_snapshot(target_path)
     if cur is None:
         raise FileNotFoundError(f"no committed table at {target_path}")
     next_version = int(cur.lstrip("v")) + 1
+    cond = F.coalesce(condition, F.lit(False))
 
     if deletion_vectors:
-        _delete_where_dv(
-            spark, target_path, cur, next_version, condition, keep_snapshots,
-            change_feed,
-        )
+        _commit_dv(spark, target_path, cur, next_version, cond, keep_snapshots, change_feed)
         return
-    snap = _read_snapshot(spark, target_path, cur)
-
-    if not partition_by:
-        merged = snap.filter(~F.coalesce(condition, F.lit(False)))
-        # delete feed rows are by definition NOT in the staged result;
-        # deriving them is one more filtered scan of the prior snapshot
-        deletes = _tag_changes(
-            snap.filter(F.coalesce(condition, F.lit(False))), "delete", next_version
+    rows = _read_snapshot(spark, target_path, cur)
+    entries: dict[str, str] = {}
+    drop_values: set[tuple] | None = None
+    if partition_by:
+        pcols = list(partition_by)
+        entries = _require_farm(target_path, cur, pcols)
+        rows, drop_values = _touched_rows(
+            rows, rows.filter(cond).select(*pcols).distinct(), pcols
         )
-        _commit_unpartitioned(
-            merged,
-            target_path,
-            next_version,
-            keep_snapshots,
-            changes_builder=(lambda staged: deletes) if change_feed else None,
-        )
-        return
-
-    pcols = list(partition_by)
-    entries = _farm_entries(os.path.join(target_path, cur), pcols)
-    if entries is None:
-        raise ValueError(
-            f"{target_path} is not a {pcols}-partitioned snapshot table"
-        )
-    touched_vals = (
-        snap.filter(F.coalesce(condition, F.lit(False))).select(*pcols).distinct()
-    )
-    touched_rows = touched_vals.collect()  # bounded by matching partitions
-    drop_values = {
-        tuple(_normalize_value(r[pc]) for pc in pcols) for r in touched_rows
-    }
-    touched = _rows_in_partitions(snap, touched_rows, touched_vals.schema, pcols)
-    merged = touched.filter(~F.coalesce(condition, F.lit(False)))
-    deletes = _tag_changes(
-        touched.filter(F.coalesce(condition, F.lit(False))), "delete", next_version
-    )
-    _commit_partitioned(
-        merged,
+    # delete feed rows are by definition NOT in the staged result;
+    # deriving them is one more filtered scan of the prior snapshot
+    deletes = _tag_changes(rows.filter(cond), "delete", next_version)
+    _commit(
         target_path,
         next_version,
-        pcols,
-        entries,
         keep_snapshots,
+        rows.filter(~cond),
+        partition_by,
+        entries,
         drop_values,
         changes_builder=(lambda staged: deletes) if change_feed else None,
     )
@@ -2272,8 +2108,6 @@ def update_where(
     would commit a snapshot whose appended (MOR) or rewritten (CoW
     partitioned) files disagree with the manifest schema / the
     carried-forward files' physical type — unreadable at scan time."""
-    import os
-
     cur = _current_snapshot(target_path)
     if cur is None:
         raise FileNotFoundError(f"no committed table at {target_path}")
@@ -2281,67 +2115,53 @@ def update_where(
     cond = F.coalesce(condition, F.lit(False))
 
     if merge_on_read:
-        if partition_by:
+        # decided by the COMMITTED layout, not only the caller's
+        # argument: a post-image appended at the root of a hive farm is
+        # invisible to partition discovery, so the update would commit
+        # and silently drop every matched row
+        if partition_by or _load_manifest(target_path, cur).get("partition_by"):
             raise ValueError(
                 "merge_on_read updates support the unpartitioned layout "
                 "(a partition leaf is one reference; appending into a "
                 "carried partition needs per-file references)"
             )
-        _update_where_mor(
-            spark, target_path, cur, next_version, cond, assignments,
-            keep_snapshots, change_feed,
+        _commit_dv(
+            spark, target_path, cur, next_version, cond, keep_snapshots,
+            change_feed, assignments,
         )
         return
 
-    snap = _read_snapshot(spark, target_path, cur)
-    assigned = _schema_preserving_assigned(assignments, cond, snap.schema)
-
-    def feed_builder(next_v: int):
-        pre = _tag_changes(snap.filter(cond), "update_preimage", next_v)
-        post = _tag_changes(assigned(snap.filter(cond)), "update_postimage", next_v)
-        return lambda staged: pre.unionByName(post)
-
-    if not partition_by:
-        _commit_unpartitioned(
-            assigned(snap),
-            target_path,
-            next_version,
-            keep_snapshots,
-            changes_builder=feed_builder(next_version) if change_feed else None,
+    rows = _read_snapshot(spark, target_path, cur)
+    assigned = _schema_preserving_assigned(assignments, cond, rows.schema)
+    entries: dict[str, str] = {}
+    drop_values: set[tuple] | None = None
+    if partition_by:
+        pcols = list(partition_by)
+        hit = [c for c in assignments if c in pcols]
+        if hit:
+            raise ValueError(
+                f"update_where cannot assign partition columns {hit}; rows would "
+                "migrate partitions — use upsert_parquet for keyed moves"
+            )
+        entries = _require_farm(target_path, cur, pcols)
+        rows, drop_values = _touched_rows(
+            rows, rows.filter(cond).select(*pcols).distinct(), pcols
         )
-        return
 
-    pcols = list(partition_by)
-    hit = [c for c in assignments if c in pcols]
-    if hit:
-        raise ValueError(
-            f"update_where cannot assign partition columns {hit}; rows would "
-            "migrate partitions — use upsert_parquet for keyed moves"
-        )
-    entries = _farm_entries(os.path.join(target_path, cur), pcols)
-    if entries is None:
-        raise ValueError(f"{target_path} is not a {pcols}-partitioned snapshot table")
-    touched_vals = snap.filter(cond).select(*pcols).distinct()
-    touched_rows = touched_vals.collect()  # bounded by matching partitions
-    drop_values = {
-        tuple(_normalize_value(r[pc]) for pc in pcols) for r in touched_rows
-    }
-    touched = _rows_in_partitions(snap, touched_rows, touched_vals.schema, pcols)
+    def feed(_staged) -> DataFrame:
+        pre = _tag_changes(rows.filter(cond), "update_preimage", next_version)
+        post = _tag_changes(assigned(rows.filter(cond)), "update_postimage", next_version)
+        return pre.unionByName(post)
 
-    def feed_builder_part(next_v: int):
-        pre = _tag_changes(touched.filter(cond), "update_preimage", next_v)
-        post = _tag_changes(assigned(touched.filter(cond)), "update_postimage", next_v)
-        return lambda staged: pre.unionByName(post)
-
-    _commit_partitioned(
-        assigned(touched),
+    _commit(
         target_path,
         next_version,
-        pcols,
-        entries,
         keep_snapshots,
+        assigned(rows),
+        partition_by,
+        entries,
         drop_values,
-        changes_builder=feed_builder_part(next_version) if change_feed else None,
+        changes_builder=feed if change_feed else None,
     )
 
 
@@ -2423,44 +2243,33 @@ def _schema_preserving_assigned(
     return assigned
 
 
-def _update_where_mor(
+def _commit_dv(
     spark: SparkSession,
     target_path: str,
     cur: str,
     next_version: int,
     cond: Column,
-    assignments: "dict[str, Column]",
     keep_snapshots: int,
     change_feed: bool,
+    assignments: "dict[str, Column] | None" = None,
 ) -> None:
-    """Merge-on-read leg of :func:`update_where`: one commit that (a)
-    deletion-vectors the matched rows out of their existing files and
-    (b) appends their updated images as a fresh data file — reads then
-    reconstruct exactly the post-update state with zero rewrite of
-    existing bytes."""
-    import json
+    """Merge-on-read leg of :func:`delete_where` and, with
+    ``assignments``, of :func:`update_where`: commit a new snapshot
+    whose DATA is the current snapshot's files (hardlinks / farm
+    references, zero rewrite) and whose ``_dv/`` dir is the union of
+    the existing vectors with the newly matched rows' (snapshot-relative
+    file path, row index) coordinates.  An update additionally appends
+    the matched rows' updated images as a fresh data file, so reads
+    reconstruct exactly the post-update state.  Matching runs against
+    the DV-APPLIED current state, so re-deleting already-deleted rows
+    is a no-op, and the ordinary claim + pointer swap makes the vector
+    flip atomic."""
     import os
-    import shutil
 
     snap_dir = os.path.join(target_path, cur)
-    manifest: dict = {}
-    df = None
-    mpath = snap_dir + ".json"
-    if os.path.exists(mpath):
-        with open(mpath) as fh:
-            manifest = json.load(fh)
-        sj = manifest.get("schema")
-        if sj:
-            df = spark.read.schema(T.StructType.fromJson(json.loads(sj))).parquet(snap_dir)
-    if df is None:
-        df = spark.read.parquet(snap_dir)
-        manifest.setdefault("schema", df.schema.json())
-    data_cols = df.columns
-    # pin assignments to the COMMITTED schema: the appended post-image
-    # file must be readable under the manifest schema the carried-
-    # forward files were written with (type widening would poison the
-    # snapshot at scan time)
-    assigned = _schema_preserving_assigned(assignments, cond, df.schema)
+    manifest = _load_manifest(target_path, cur)
+    df = _snapshot_reader(spark, manifest).parquet(snap_dir)
+    manifest.setdefault("schema", df.schema.json())
     meta = _file_meta_cols(df)
     dv_dir = os.path.join(snap_dir, _DV_DIR)
     existing = None
@@ -2479,123 +2288,29 @@ def _update_where_mor(
         F.col("__dv_file").alias("file"), F.col("__dv_idx").alias("row_index")
     )
     union_dv = new_rows if existing is None else existing.unionByName(new_rows)
-    pre_rows = matched.select(*data_cols)
-    post_rows = assigned(matched).select(*data_cols)
-
-    stage = _stage_base(next_version)
-    stage_dir = os.path.join(target_path, stage)
-    committed = False
-    try:
-        _link_snapshot_tree(snap_dir, stage_dir, resolve_links=False, keep=())
-        union_dv.write.mode("overwrite").parquet(os.path.join(stage_dir, _DV_DIR))
-        # updated images land as ADDITIONAL part files next to the links
-        post_rows.write.mode("append").parquet(stage_dir)
-        if change_feed:
-            _tag_changes(pre_rows, "update_preimage", next_version).unionByName(
-                _tag_changes(post_rows, "update_postimage", next_version)
-            ).write.mode("overwrite").parquet(os.path.join(stage_dir, "_changes"))
-        manifest = dict(manifest)
-        manifest["version"] = next_version
-        manifest["attempt"] = stage  # ownership check at publish
-        manifest["deletion_vectors"] = True
-        out = os.path.join(target_path, stage + ".json")
-        with open(out + ".tmp", "w") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
-        os.replace(out + ".tmp", out)
-        _publish_staged(target_path, next_version, stage, keep_snapshots)
-        committed = True
-    finally:
-        if not committed:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            try:
-                os.remove(os.path.join(target_path, stage + ".json"))
-            except OSError:
-                pass
-
-
-def _delete_where_dv(
-    spark: SparkSession,
-    target_path: str,
-    cur: str,
-    next_version: int,
-    condition: Column,
-    keep_snapshots: int,
-    change_feed: bool,
-) -> None:
-    """Merge-on-read leg of :func:`delete_where`: commit a new snapshot
-    whose DATA is the current snapshot's files (hardlinks / farm
-    references, zero rewrite) and whose ``_dv/`` dir is the union of
-    the existing vectors with the newly matched rows' (snapshot-relative
-    file path, row index) coordinates.  Matching runs against the DV-APPLIED
-    current state, so re-deleting already-deleted rows is a no-op, and
-    the ordinary claim + pointer swap makes the vector flip atomic."""
-    import json
-    import os
-    import shutil
-
-    snap_dir = os.path.join(target_path, cur)
-    mpath = snap_dir + ".json"
-    manifest: dict = {}
-    df = None
-    if os.path.exists(mpath):
-        with open(mpath) as fh:
-            manifest = json.load(fh)
-        sj = manifest.get("schema")
-        if sj:
-            df = spark.read.schema(
-                T.StructType.fromJson(json.loads(sj))
-            ).parquet(snap_dir)
-    if df is None:
-        df = spark.read.parquet(snap_dir)
-        manifest.setdefault("schema", df.schema.json())
-    meta = _file_meta_cols(df)
-    dv_dir = os.path.join(snap_dir, _DV_DIR)
-    existing = None
-    if os.path.isdir(dv_dir):
-        existing = spark.read.parquet(dv_dir).select("file", "row_index")
-        meta = meta.join(
-            existing.select(
-                F.col("file").alias("__dv_file"),
-                F.col("row_index").alias("__dv_idx"),
-            ),
-            on=["__dv_file", "__dv_idx"],
-            how="left_anti",
+    pre_rows = matched.select(*df.columns)
+    post_rows = None
+    if assignments is None:
+        feed = _tag_changes(pre_rows, "delete", next_version)
+    else:
+        # pin assignments to the COMMITTED schema: the appended post-image
+        # file must be readable under the manifest schema the carried-
+        # forward files were written with (type widening would poison the
+        # snapshot at scan time)
+        assigned = _schema_preserving_assigned(assignments, cond, df.schema)
+        post_rows = assigned(matched).select(*df.columns)
+        feed = _tag_changes(pre_rows, "update_preimage", next_version).unionByName(
+            _tag_changes(post_rows, "update_postimage", next_version)
         )
-    matched = meta.filter(F.coalesce(condition, F.lit(False)))
-    new_rows = matched.select(
-        F.col("__dv_file").alias("file"), F.col("__dv_idx").alias("row_index")
+    _commit(
+        target_path,
+        next_version,
+        keep_snapshots,
+        post_rows,
+        carry=(snap_dir, manifest),
+        deletion_vectors=union_dv,
+        changes_builder=(lambda staged: feed) if change_feed else None,
     )
-    union_dv = new_rows if existing is None else existing.unionByName(new_rows)
-
-    stage = _stage_base(next_version)
-    stage_dir = os.path.join(target_path, stage)
-    committed = False
-    try:
-        # data carries forward by link; vectors are REWRITTEN as the
-        # union (so skip linking the old _dv)
-        _link_snapshot_tree(snap_dir, stage_dir, resolve_links=False, keep=())
-        union_dv.write.mode("overwrite").parquet(os.path.join(stage_dir, _DV_DIR))
-        if change_feed:
-            _tag_changes(
-                matched.drop("__dv_file", "__dv_idx"), "delete", next_version
-            ).write.mode("overwrite").parquet(os.path.join(stage_dir, "_changes"))
-        manifest = dict(manifest)
-        manifest["version"] = next_version
-        manifest["attempt"] = stage  # ownership check at publish
-        manifest["deletion_vectors"] = True
-        out = os.path.join(target_path, stage + ".json")
-        with open(out + ".tmp", "w") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
-        os.replace(out + ".tmp", out)
-        _publish_staged(target_path, next_version, stage, keep_snapshots)
-        committed = True
-    finally:
-        if not committed:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            try:
-                os.remove(os.path.join(target_path, stage + ".json"))
-            except OSError:
-                pass
 
 
 def _zorder_column(df: DataFrame, cols: Sequence[str], bits: int = 16) -> Column:
@@ -2713,20 +2428,9 @@ def compact_table(
     else:
         df = df.repartition(n_files)
 
-    if partition_by:
-        # stay in the referenced-partition layout: every partition is
-        # freshly written (no carried-forward entries), farm + manifest
-        _commit_partitioned(
-            df,
-            target_path,
-            next_version,
-            list(partition_by),
-            {},
-            keep_snapshots,
-        )
-        return n_files
-
-    _commit_unpartitioned(df, target_path, next_version, keep_snapshots)
+    # a partitioned rewrite stays in the referenced-partition layout:
+    # every partition is freshly written, nothing carries forward
+    _commit(target_path, next_version, keep_snapshots, df, partition_by)
     return n_files
 
 
@@ -3159,60 +2863,42 @@ def apply_changes_parquet(
     collection happens.  Idempotent per batch: replaying a batch
     converges (apply_changes is last-writer-wins on (seq, op)).
     """
-    import os
-
     keys = list(keys)
     data_cols = [c for c in changes.columns if c not in (op_col, seq_col)]
     cur = _current_snapshot(target_path)
 
-    def _require_feed_covers(table_cols: "list[str]") -> None:
+    entries: dict[str, str] = {}
+    drop_values: set[tuple] | None = None
+    if cur is None:
+        rows, next_version = changes.select(*data_cols).limit(0), 1
+    else:
+        next_version = int(cur.lstrip("v")) + 1
+        snap = _read_snapshot(spark, target_path, cur)
         # a feed narrower than the table would make snap.select(
         # *data_cols) silently drop the missing columns from the
         # committed result — column loss, not replication
-        missing = [c for c in table_cols if c not in data_cols]
+        missing = [c for c in snap.columns if c not in data_cols]
         if missing:
             raise ValueError(
                 "apply_changes_parquet: change feed lacks table "
                 f"column(s) {missing}; a replication feed must carry "
                 "every target column"
             )
-    if cur is None:
-        merged = apply_changes(
-            changes.select(*data_cols).limit(0), changes, keys, op_col, seq_col
-        )
+        rows = snap.select(*data_cols)
         if partition_by:
-            _commit_partitioned(merged, target_path, 1, list(partition_by), {}, keep_snapshots)
-        else:
-            _commit_unpartitioned(merged, target_path, 1, keep_snapshots)
-        return
-    next_version = int(cur.lstrip("v")) + 1
-    snap = _read_snapshot(spark, target_path, cur)
-    _require_feed_covers(snap.columns)
-    if not partition_by:
-        merged = apply_changes(snap.select(*data_cols), changes, keys, op_col, seq_col)
-        _commit_unpartitioned(merged, target_path, next_version, keep_snapshots)
-        return
-    pcols = list(partition_by)
-    entries = _farm_entries(os.path.join(target_path, cur), pcols)
-    if entries is None:
-        raise ValueError(f"{target_path} is not a {pcols}-partitioned snapshot table")
-    batch_rows = changes.select(*data_cols)
-    touched_vals = _touched_partitions(snap, batch_rows, keys, pcols, False)
-    touched_rows = touched_vals.collect()  # bounded by touched partitions
-    drop_values = {tuple(_normalize_value(r[pc]) for pc in pcols) for r in touched_rows}
-    touched = _rows_in_partitions(snap, touched_rows, touched_vals.schema, pcols)
-    for pc in pcols:
-        touched = touched.withColumn(pc, F.col(pc).cast(batch_rows.schema[pc].dataType))
-    touched = touched.select(*data_cols)
-    merged = apply_changes(touched, changes, keys, op_col, seq_col)
-    _commit_partitioned(
-        merged,
-        target_path,
-        next_version,
-        pcols,
-        entries,
-        keep_snapshots,
-        drop_values,
+            pcols = list(partition_by)
+            entries = _require_farm(target_path, cur, pcols)
+            batch_rows = changes.select(*data_cols)
+            touched, drop_values = _touched_rows(
+                snap,
+                _touched_partitions(snap, batch_rows, keys, pcols, False),
+                pcols,
+                batch_rows.schema,
+            )
+            rows = touched.select(*data_cols)
+    merged = apply_changes(rows, changes, keys, op_col, seq_col)
+    _commit(
+        target_path, next_version, keep_snapshots, merged, partition_by, entries, drop_values
     )
 
 
