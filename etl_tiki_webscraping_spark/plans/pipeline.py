@@ -18,6 +18,16 @@ Reference shape, restated dataflow-first:
     -> every load is a PK upsert (W2), so re-running the whole
        pipeline converges to the same warehouse.     [O5 idempotency]
 
+Where each ``PipelineResult`` count comes from — none is a Spark
+action of its own:
+
+- ``products`` / ``shops`` / ``ratings``: the parquet footers of each
+  table's committed snapshot (``sinks.upsert.table_row_count``,
+  driver-side metadata; a snapshot with deletion vectors is scanned);
+- ``products_dropped_by_fk``: two ``Observation`` row counts riding on
+  writes that consume those rows anyway — the raw extract on its
+  checkpoint write, the FK-gated products on their upsert's input.
+
 HTTP is injected (see sources/http.py): production passes real
 requests-backed fetchers with UA rotation + backoff (S7/O4); tests and
 CI pass deterministic fakes.  The Spark plumbing is identical either
@@ -29,7 +39,8 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from etl_tiki_webscraping_spark.functions.scalar import parse_day_first_date
 from etl_tiki_webscraping_spark.operators.relational import (
@@ -42,7 +53,11 @@ from etl_tiki_webscraping_spark.schemas import (
     PRODUCT_DETAIL,
     SHOP_INFO,
 )
-from etl_tiki_webscraping_spark.sinks.upsert import read_parquet_table, upsert_parquet
+from etl_tiki_webscraping_spark.sinks.upsert import (
+    read_parquet_table,
+    table_row_count,
+    upsert_parquet,
+)
 from etl_tiki_webscraping_spark.sources.http import (
     FetchConfig,
     PageFetcher,
@@ -106,13 +121,20 @@ def run_pipeline(
     def checkpoint(df: DataFrame, name: str) -> DataFrame:
         path = os.path.join(staging_dir, name)
         df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        # the schema is known: no footer-inference job on read-back
+        return spark.read.schema(df.schema).parquet(path)
+
+    def observed_rows(df: DataFrame) -> "tuple[DataFrame, Observation]":
+        # a row count carried by the write that consumes df: no extra job
+        obs = Observation()
+        return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
     pairs = sitemap_to_pairs(spark, fetchers.sitemap())
 
-    products = checkpoint(
-        paginated_source(pairs, fetchers.product_page, PRODUCT_DETAIL, cfg), "products"
+    products_raw, raw_obs = observed_rows(
+        paginated_source(pairs, fetchers.product_page, PRODUCT_DETAIL, cfg)
     )
+    products = checkpoint(products_raw, "products")
 
     shop_keys = dedup_first(products.select("shop_id"), ["shop_id"])
     shops = checkpoint(
@@ -142,16 +164,16 @@ def run_pipeline(
         warehouse_table(spark, warehouse_dir, "shop_info").select("shop_id"),
         shops.select("shop_id"),
     )
-    n_products_raw = products.count()
-    products_fk = fk_semi_join(products, known_shop_keys, "shop_id")  # J1 (:251)
+    products_fk, fk_obs = observed_rows(
+        fk_semi_join(products, known_shop_keys, "shop_id")  # J1 (:251)
+    )
     upsert_parquet(spark, products_fk, product_path, PRIMARY_KEYS["product_detail"])
 
     upsert_parquet(spark, ratings, rating_path, PRIMARY_KEYS["rating"])
 
-    n_products = warehouse_table(spark, warehouse_dir, "product_detail").count()
     return PipelineResult(
-        products=n_products,
-        shops=warehouse_table(spark, warehouse_dir, "shop_info").count(),
-        ratings=warehouse_table(spark, warehouse_dir, "rating").count(),
-        products_dropped_by_fk=n_products_raw - products_fk.count(),
+        products=table_row_count(spark, product_path),
+        shops=table_row_count(spark, shop_path),
+        ratings=table_row_count(spark, rating_path),
+        products_dropped_by_fk=raw_obs.get["n"] - fk_obs.get["n"],
     )

@@ -314,6 +314,42 @@ def _maybe_apply_dv(spark: SparkSession, snap_dir: str, df: DataFrame) -> DataFr
     )
 
 
+def _parquet_files(snap_dir: str) -> list[str]:
+    """Paths of a snapshot's data files, following partition references
+    into the pool.  Metadata dirs (``_changes``, ``_dv``, ``_bloom``) and
+    hidden files are skipped, the contract of Spark's own reader: a
+    change-feed or deletion-vector parquet listed here would read junk
+    rows into the table under the table schema."""
+    import os
+
+    out: list[str] = []
+    for root, dirs, files in os.walk(snap_dir, followlinks=True):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        out += [
+            os.path.join(root, f)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        ]
+    return out
+
+
+def table_row_count(spark: SparkSession, target_path: str) -> int:
+    """Row count of a table's committed snapshot from its parquet
+    footers — driver-side metadata like :func:`table_history`, no Spark
+    job.  A snapshot with deletion vectors (whose footers still count
+    the deleted rows) or a table without a snapshot pointer is counted
+    by a scan instead."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    cur = _current_snapshot(target_path)
+    if cur is None or os.path.isdir(os.path.join(target_path, cur, _DV_DIR)):
+        return read_parquet_table(spark, target_path).count()
+    files = _parquet_files(os.path.join(target_path, cur))
+    return sum(pq.read_metadata(f).num_rows for f in files)
+
+
 def table_history(spark: SparkSession, target_path: str) -> DataFrame:
     """DESCRIBE HISTORY analog for the snapshot table layout: one row
     per RETAINED version with its file count, exact row count, layout,
@@ -348,14 +384,7 @@ def table_history(spark: SparkSession, target_path: str) -> DataFrame:
             or not os.path.isdir(snap_dir)
         ):
             continue
-        files: list[str] = []
-        for root, dirs, fs in os.walk(snap_dir, followlinks=True):
-            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-            files += [
-                os.path.join(root, f)
-                for f in fs
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            ]
+        files = _parquet_files(snap_dir)
         n_rows = sum(pq.read_metadata(f).num_rows for f in files)
         partition_by = _load_manifest(target_path, entry).get("partition_by") or []
         rows.append(
@@ -405,26 +434,15 @@ def table_files(
     snap_dir = os.path.join(target_path, name)
     pcols = list(partition_cols or [])
     rows = []
-    for root, dirs, files in os.walk(snap_dir, followlinks=True):
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        for f in files:
-            if not f.endswith(".parquet") or f.startswith((".", "_")):
-                continue
-            full = os.path.join(root, f)
-            rel_dir = os.path.relpath(root, snap_dir)
-            row = [
-                os.path.join("" if rel_dir == "." else rel_dir, f),
-                None if rel_dir == "." else rel_dir,
-                pq.read_metadata(full).num_rows,
-                os.path.getsize(full),
-            ]
-            if pcols:
-                # decode hive dir values with the engine's own decoder so
-                # escaping/null-sentinel handling matches the write path
-                row += list(_dir_to_values(rel_dir, pcols)) if rel_dir != "." else [
-                    None
-                ] * len(pcols)
-            rows.append(tuple(row))
+    for full in _parquet_files(snap_dir):
+        rel = os.path.relpath(full, snap_dir)
+        rel_dir = os.path.dirname(rel) or None
+        row = [rel, rel_dir, pq.read_metadata(full).num_rows, os.path.getsize(full)]
+        if pcols:
+            # decode hive dir values with the engine's own decoder so
+            # escaping/null-sentinel handling matches the write path
+            row += list(_dir_to_values(rel_dir, pcols)) if rel_dir else [None] * len(pcols)
+        rows.append(tuple(row))
     schema = "file string, partition string, n_rows bigint, size_bytes bigint"
     for c in pcols:
         schema += f", {c} string"
@@ -806,14 +824,7 @@ def _bloom_pruned_read(
         return all(words[p // 64] & (1 << (p % 64)) != 0 for p in positions)
 
     snap_dir = os.path.join(target_path, snap_name)
-    all_files: list[str] = []
-    for root, dirs, files in os.walk(snap_dir, followlinks=True):
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        all_files += [
-            os.path.join(root, f)
-            for f in files
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        ]
+    all_files = _parquet_files(snap_dir)
     findex = index["files"]
     kept = []
     for path in all_files:
@@ -986,17 +997,7 @@ def _stats_pruned_read(
     if not stats:
         return None
     snap_dir = os.path.join(target_path, snap_name)
-    all_files: list[str] = []
-    for root, dirs, files in os.walk(snap_dir, followlinks=True):
-        # never descend into metadata dirs (_changes, _dv, _bloom):
-        # Spark's own reader hides underscore-prefixed path segments,
-        # and the explicit file list must match that contract — a
-        # change-feed or deletion-vector parquet surfacing here would
-        # read junk rows into the table under the table schema
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        for f in files:
-            if f.endswith(".parquet") and not f.startswith((".", "_")):
-                all_files.append(os.path.relpath(os.path.join(root, f), snap_dir))
+    all_files = [os.path.relpath(f, snap_dir) for f in _parquet_files(snap_dir)]
 
     def survives(rel: str) -> bool:
         # a file is skipped when ANY conjunct proves it can't overlap
@@ -2399,18 +2400,9 @@ def compact_table(
 
     cur = _current_snapshot(target_path)
     snap_dir = os.path.join(target_path, cur) if cur else target_path
-    size = 0
-    for root, dirs, files in os.walk(snap_dir, followlinks=True):
-        # prune metadata subtrees (_changes/_dv/...): their parquet
-        # bytes are not data — counting a large change feed would
-        # overestimate n_files and emit more, smaller files than
-        # requested, the opposite of the compaction goal
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        size += sum(
-            os.path.getsize(os.path.join(root, f))
-            for f in files
-            if f.endswith(".parquet")
-        )
+    # metadata subtrees (_changes/_dv/...) are not data: counting a
+    # large change feed would emit more, smaller files than requested
+    size = sum(os.path.getsize(f) for f in _parquet_files(snap_dir))
     n_files = max(1, -(-size // target_file_bytes))  # ceil
     df = _read_snapshot(spark, target_path, cur) if cur else spark.read.parquet(snap_dir)
     next_version = int(cur.lstrip("v")) + 1 if cur else 1

@@ -12,7 +12,7 @@ Spark-first restatement: the unit of parallelism is the KEY (a
 sub-category, a shop_id), not a hand-built 5-way split.  We build a
 DataFrame of keys, repartition it so keys spread across executors, and
 run the per-key pagination loop inside ``mapInPandas`` — Arrow-batched,
-one HTTP session per partition, pagination sequential per key (the API
+one fetch loop per partition, pagination sequential per key (the API
 forces that) but parallel across keys.  The reference's tail-loss bug
 (dags/etl.py:115-120 covers only 5*(n//5) keys) cannot happen here:
 every key row is in some partition.
@@ -47,6 +47,11 @@ def _conform(pdf: pd.DataFrame, names: list[str]) -> pd.DataFrame:
         if n not in pdf.columns:
             pdf[n] = None
     return pdf[names]
+
+
+# rows buffered before a fetch loop builds a frame: Arrow's default
+# batch size (spark.sql.execution.arrow.maxRecordsPerBatch)
+_FLUSH_ROWS = 10_000
 
 # Default UA pool mirrors the reference's rotation concept (dags/etl.py:11-18);
 # strings are generic, not copied.
@@ -115,20 +120,22 @@ def paginated_source(
     out_names = _schema_names(schema)
 
     def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # tagged rows of every key in the partition, framed _FLUSH_ROWS
+        # at a time: a frame per small page is mostly pandas overhead
+        buf: list[dict] = []
         for batch in batches:
             for row in batch.to_dict("records"):
-                pages: list[pd.DataFrame] = []
+                tags = {k: row[k] for k in key_cols if k in out_names}  # provenance tag
                 for page in range(1, cfg.max_pages + 1):
                     data = _with_retries(lambda: fetch_page(row, page, cfg), cfg)
                     if not data:
                         break  # empty page terminates (dags/etl.py:58-59)
-                    pdf = pd.DataFrame.from_records(data)
-                    for k in key_cols:  # provenance tag
-                        if k in out_names:
-                            pdf[k] = row[k]
-                    pages.append(pdf)
-                if pages:
-                    yield _conform(pd.concat(pages, ignore_index=True), out_names)
+                    buf += [{**rec, **tags} for rec in data]
+                    if len(buf) >= _FLUSH_ROWS:
+                        yield _conform(pd.DataFrame.from_records(buf), out_names)
+                        buf = []
+        if buf:
+            yield _conform(pd.DataFrame.from_records(buf), out_names)
 
     # Spread keys across partitions: pagination depth per key is unknown,
     # so round-robin by key count keeps workers busy; AQE cannot help

@@ -4,14 +4,25 @@ on changed payloads (SURVEY.md §2.12 O1-O5)."""
 
 from __future__ import annotations
 
+import os
+import threading
 from decimal import Decimal
 
 import pytest
+from pyspark.sql import functions as F
 
 from etl_tiki_webscraping_spark.plans.pipeline import (
     PipelineFetchers,
+    PipelineResult,
     run_pipeline,
     warehouse_table,
+)
+from etl_tiki_webscraping_spark.sinks.upsert import (
+    delete_where,
+    read_parquet_table,
+    table_history,
+    table_row_count,
+    upsert_parquet,
 )
 from etl_tiki_webscraping_spark.sources.http import FetchConfig
 
@@ -145,3 +156,79 @@ def test_pipeline_upsert_refreshes_changed_rows(spark, warehouse):
     assert res.products == 11  # same key space, no growth
     names = [r["name"] for r in warehouse_table(spark, warehouse, "product_detail").collect()]
     assert all(n.startswith("v2-") for n in names)  # every non-key col refreshed
+
+
+# --- PipelineResult counts come from commit footers and write-time
+# observations, not from count() actions
+
+
+def _scanned_result(spark, warehouse):
+    """Every PipelineResult field recomputed by scanning: table counts,
+    and the raw extract minus its rows whose shop is in the warehouse."""
+    raw = spark.read.parquet(os.path.join(warehouse, "__extract_staging__", "products"))
+    shops = warehouse_table(spark, warehouse, "shop_info").select("shop_id")
+    return PipelineResult(
+        products=warehouse_table(spark, warehouse, "product_detail").count(),
+        shops=warehouse_table(spark, warehouse, "shop_info").count(),
+        ratings=warehouse_table(spark, warehouse, "rating").count(),
+        products_dropped_by_fk=raw.count() - raw.join(shops, "shop_id", "left_semi").count(),
+    )
+
+
+def test_pipeline_result_equals_scanned_counts(spark, warehouse):
+    for version in ("v1", "v2"):
+        res = run_pipeline(spark, fetchers(version), warehouse, FAST)
+        assert res == _scanned_result(spark, warehouse)
+
+
+def test_pipeline_returns_when_every_shop_lookup_fails(spark, warehouse):
+    """No shop resolves, so the FK gate passes no product: the observed
+    count of the product upsert's input is 0 rather than never arriving."""
+    f = fetchers()
+    f.shop_detail = lambda row, cfg: None
+    out: list = []
+    t = threading.Thread(target=lambda: out.append(run_pipeline(spark, f, warehouse, FAST)),
+                         daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "run_pipeline hung on an empty FK-gated product set"
+    assert out == [PipelineResult(products=0, shops=0, ratings=0, products_dropped_by_fk=12)]
+
+
+def test_table_row_count_applies_deletion_vectors_and_scans_legacy_dirs(spark, tmp_path):
+    path = str(tmp_path / "t")
+    upsert_parquet(spark, spark.range(40).withColumnRenamed("id", "k"), path, ["k"])
+    delete_where(spark, path, F.col("k") < 15, deletion_vectors=True)
+    # the footers still count the 15 vector-deleted rows
+    assert table_history(spark, path).filter("is_current").first()["n_rows"] == 40
+    assert table_row_count(spark, path) == read_parquet_table(spark, path).count() == 25
+
+    legacy = str(tmp_path / "legacy")
+    spark.range(17).write.parquet(legacy)
+    assert table_row_count(spark, legacy) == 17
+
+
+# one run_pipeline call on the fixture, measured with the footer counts
+# and write-time observations (the count()-based result took 30 jobs)
+PIPELINE_JOB_BUDGET = 15
+
+
+def test_pipeline_runs_no_count_actions_within_job_budget(spark, warehouse, monkeypatch):
+    """Bookkeeping must not come back as Spark actions: count() is
+    barred outright, and the jobs of one call stay within the budget."""
+
+    def no_count(self):
+        raise AssertionError("run_pipeline called DataFrame.count()")
+
+    monkeypatch.setattr(type(spark.range(1)), "count", no_count)
+    sc = spark.sparkContext
+    group = "pipeline-job-budget"
+    sc.setJobGroup(group, "one run_pipeline call")
+    try:
+        res = run_pipeline(spark, fetchers(), warehouse, FAST)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert res.products == 11 and res.products_dropped_by_fk == 1
+    assert 0 < n_jobs <= PIPELINE_JOB_BUDGET

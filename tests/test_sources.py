@@ -200,3 +200,90 @@ def test_gunzip_member_text(spark):
     assert out[1] == "<urlset>plain</urlset>"
     assert out[2] == "<urlset>gz</urlset>"
     assert out[3] is None and out[4] is None
+
+
+# --- paginated_source frame building: rows must equal the per-page
+# semantics (each page's records tagged with the key columns, columns
+# the page lacks null-filled), however the rows are batched into frames
+
+
+def _per_page_rows(key_rows, fetch, names, key_cols):
+    out = []
+    for row in key_rows:
+        page = 1
+        while data := fetch(row, page, FAST):
+            tags = {k: row[k] for k in key_cols if k in names}
+            out += [tuple({**rec, **tags}.get(n) for n in names) for rec in data]
+            page += 1
+    return sorted(out, key=repr)
+
+
+def _source_rows(spark, key_rows, fetch, schema, num_partitions=None):
+    keys = spark.createDataFrame(key_rows, "shop_id string")
+    out = paginated_source(keys, fetch, schema, cfg=FAST, num_partitions=num_partitions)
+    return sorted(map(tuple, out.collect()), key=repr)
+
+
+def test_paginated_source_null_fills_page_column_subsets(spark):
+    """Pages returning different column subsets (and a column the schema
+    lacks) come back null-filled to the declared schema."""
+    pages = {
+        1: [{"rating_id": "a", "star": 5}, {"rating_id": "b"}],
+        2: [{"comment": "ok", "star": 3}],
+        3: [{"rating_id": "c", "comment": "meh", "ignored": 1.5}],
+    }
+
+    def fetch(row, page, cfg):
+        return [dict(r, rating_id=f"{row['shop_id']}-{r['rating_id']}") if "rating_id" in r
+                else dict(r) for r in pages.get(page, [])]
+
+    key_rows = [{"shop_id": f"s{i}"} for i in range(3)]
+    schema = "rating_id string, star int, comment string, shop_id string"
+    names = ["rating_id", "star", "comment", "shop_id"]
+    got = _source_rows(spark, key_rows, fetch, schema, num_partitions=2)
+    assert got == _per_page_rows(key_rows, fetch, names, ["shop_id"])
+    assert ("s0-b", None, None, "s0") in got and (None, 3, "ok", "s1") in got
+
+
+def test_paginated_source_tag_overrides_fetched_key(spark):
+    """A fetched value in a key column is replaced by the provenance tag."""
+
+    def fetch(row, page, cfg):
+        if page > 2:
+            return None
+        return [{"rating_id": f"{row['shop_id']}-{page}", "shop_id": "WRONG"}]
+
+    key_rows = [{"shop_id": f"s{i}"} for i in range(4)]
+    got = _source_rows(spark, key_rows, fetch, "rating_id string, shop_id string")
+    assert got == _per_page_rows(key_rows, fetch, ["rating_id", "shop_id"], ["shop_id"])
+    assert all(rid.startswith(shop + "-") for rid, shop in got)
+
+
+def test_paginated_source_crosses_flush_boundary(spark):
+    """One key whose pages sum to 25,001 rows spans three frame flushes
+    and loses or duplicates no row; a second key in the same partition
+    continues the buffer."""
+
+    def fetch(row, page, cfg):
+        n = {"big": 25_001, "small": 7}[row["shop_id"]]
+        lo = (page - 1) * 1_000
+        return [{"rating_id": f"{row['shop_id']}-{i}", "star": i % 5}
+                for i in range(lo, min(lo + 1_000, n))]
+
+    key_rows = [{"shop_id": "big"}, {"shop_id": "small"}]
+    names = ["rating_id", "star", "shop_id"]
+    got = _source_rows(spark, key_rows, fetch, "rating_id string, star int, shop_id string",
+                       num_partitions=1)
+    assert len(got) == len(set(got)) == 25_008
+    assert got == _per_page_rows(key_rows, fetch, names, ["shop_id"])
+
+
+def test_paginated_source_no_rows_from_any_page(spark):
+    """A run where no page returns rows yields no rows, not an empty or
+    all-null frame per key."""
+    key_rows = [{"shop_id": f"s{i}"} for i in range(6)]
+
+    def fetch(row, page, cfg):
+        return [] if row["shop_id"] < "s3" else None
+
+    assert _source_rows(spark, key_rows, fetch, "x string, shop_id string", num_partitions=3) == []
