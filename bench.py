@@ -535,95 +535,7 @@ def main() -> None:
     # floor exists because sub-second queries jitter far past 1.5x on
     # this shared host (fk_semi_join spans 0.5-1.5 s across identical
     # code in bench_history.jsonl — VERDICT r6 #8), so only deltas big
-    # enough to matter at headline scale get flagged.  A query whose
-    # cost changed for a KNOWN, deliberate reason is still flagged but
-    # carries the explanation.
-    # r12 methodology change: the cache is CLEARED between timed
-    # queries (see run_pass), so pass 2 no longer reuses pass 1's
-    # persisted sub-plans via CacheManager plan-dedup.  Queries that
-    # persist their inputs (budget select, set-sim/winnowing indexes,
-    # LM gram tables, the corpus capstones) recorded artificially fast
-    # pass-2 bests under the old semantics; their first clean-cache
-    # rounds flag against those bests until best-of-last-5 rolls over.
-    _R12_CACHE_NOTE = (
-        "r12: bench now clears the cache between timed queries (the sf10 "
-        "probe isolated accumulated dead cache blocks turning late pass-2 "
-        "entries into 3-5x GC-thrash outliers); this query persists its "
-        "input, so its old pass-2 best was a cross-pass CacheManager "
-        "plan-dedup artifact, not steady-state plan cost"
-    )
-    _R12_PRUNE_NOTE = (
-        "r12: action fixed count -> hash; count() let Catalyst prune this "
-        "query's computed projections/windows entirely, so prior entries "
-        "timed a bare scan — the hash-fold number is the first honest one"
-    )
-    known_causes = {
-        name: _R12_PRUNE_NOTE
-        for name in (
-            "asof_join_events_orders", "json_extraction", "text_quality_score",
-            "doc_repetition_score", "pii_redact", "quality_model_score",
-            "range_frame_moving_avg", "window_rank_functions",
-            "gopher_repetition_stats", "gopher_repetition_cjk",
-            "deterministic_split", "html_text_extract", "url_canonicalize",
-        )
-    }
-    known_causes |= {
-        name: _R12_CACHE_NOTE
-        for name in (
-            "dedup_minhash_lsh", "cms_frequency_rollup", "setsim_prefix_join",
-            "substring_dup_spans", "token_bigram_pmi", "contamination_new_docs",
-            "token_budget_cutoff", "token_budget_per_lang", "doc_bigram_logprob",
-            "doc_kneser_ney_logprob", "retrieval_quality_metrics",
-            "perplexity_terciles", "tokenizer_fertility_by_lang",
-            "gopher_repetition_cjk", "corpus_pipeline_v2", "corpus_pipeline_v3",
-            "corpus_pipeline_e2e", "corpus_pipeline_neardup",
-            "incremental_postings_bm25", "hybrid_search_rrf", "bm25_search",
-        )
-    }
-    known_causes |= {
-        "html_text_extract": (
-            "r12: action fixed count -> hash (xxhash64 fold over all output "
-            "columns, O(1) driver transfer); count() let Catalyst prune the "
-            "pure-projection extraction entirely, so prior entries timed a "
-            "bare scan — the hash-fold number is the first honest one"
-        ),
-        "url_canonicalize": (
-            "r12: action fixed count -> hash (xxhash64 fold over all output "
-            "columns, O(1) driver transfer); count() let Catalyst prune the "
-            "pure-projection canonicalization entirely, so prior entries "
-            "timed a bare scan — the hash-fold number is the first honest one"
-        ),
-        "streaming_windowed_counts": (
-            "r3: runs as a REAL 3-micro-batch stream (time-range-split files, "
-            "maxFilesPerTrigger=1) instead of one batch — cross-batch state and "
-            "per-batch watermark advancement are now exercised; the extra trigger "
-            "rounds are the cost of that realism, not a plan regression"
-        ),
-        "hll_sketch_rollup": (
-            "r13: rewritten from the DataSketches built-in to the portable md5 "
-            "HLL (rows-only -> bit-strict oracle); the md5 hash family + "
-            "register fold costs ~0.3-0.4s more than hll_sketch_agg at sf0.1 — "
-            "an accepted trade for full cross-engine replayability (isolated "
-            "converged ~0.66s vs the built-in's 0.31s best)"
-        ),
-        "kll_quantile_rollup": (
-            "r13: rewritten from the DataSketches KLL built-in to the portable "
-            "md5-Bernoulli quantile sample (rows-only -> bit-strict oracle); "
-            "prior bests timed the built-in"
-        ),
-        "theta_sketch_set_ops": (
-            "r13: rewritten from the DataSketches theta built-ins to the "
-            "portable KMV sketch (rows-only -> bit-strict oracle); prior bests "
-            "timed the built-ins (isolated converged ~0.52s vs 0.26s)"
-        ),
-        "asof_join_events_orders": (
-            "flags intermittently vs r02's 0.41 s: isolated re-runs converge to "
-            "~0.45-0.50 s (measured r5, 4 consecutive runs: 2.15/0.81/0.46/0.50) "
-            "— position noise in a 35-query shared-JVM pass, not a plan change "
-            "(the query was untouched; the events NTZ->timestamp cast is a "
-            "zero-cost metadata projection)"
-        ),
-    }
+    # enough to matter at headline scale get flagged.
     regressions: dict[str, dict[str, object]] = {}
     prior_file = None
     here = os.path.dirname(os.path.abspath(__file__))
@@ -690,16 +602,14 @@ def main() -> None:
                         "now": now,
                         "ratio": round(now / was, 2),
                     }
-                    if name in known_causes:
-                        entry["note"] = known_causes[name]
                     regressions[name] = entry
             break
 
     # Auto-convergence re-run (r12 VERDICT "what's wrong" #1): a flag
     # with no note erodes the gate's signal — zscore_outlier_report
     # shipped a bare 4.05x flag in r12 whose same-run pass-1 sat at its
-    # historical band.  Every flagged query lacking a known-cause note
-    # now gets the asof-note methodology applied AUTOMATICALLY: three
+    # historical band.  Every flagged query now gets the evidence of
+    # THIS run, never a note from an earlier round's cause: three
     # isolated back-to-back runs (fresh lineage, cache cleared between,
     # no 180-query position pressure).  If the best isolated run falls
     # back inside the flag threshold vs prior, the flag is annotated as
@@ -712,10 +622,6 @@ def main() -> None:
     )
 
     for name, entry in regressions.items():
-        # a known-cause note explains the stale PRIOR, not today's
-        # number — a >=2x flag still gets isolated evidence attached
-        if "note" in entry and float(entry["ratio"]) < 2.0:  # type: ignore[arg-type]
-            continue
         # A memoized/eagerly-staged query re-executes against its
         # in-process memo here, so the three "isolated" runs would time
         # only the final read and trivially converge (ADVICE r13) —
@@ -727,7 +633,7 @@ def main() -> None:
                 "the final read, not the flagged work — investigate via a "
                 "fresh-process run if the flag recurs"
             )
-            entry["note"] = f"{entry['note']} | {skip}" if "note" in entry else skip
+            entry["note"] = skip
             continue
         runs: list[float] = []
         for _ in range(3):
@@ -754,7 +660,7 @@ def main() -> None:
                 f"{best}s vs prior {prior_t}s — the slowdown persists in "
                 "isolation; treat as a REAL regression candidate"
             )
-        entry["note"] = f"{entry['note']} | {auto}" if "note" in entry else auto
+        entry["note"] = auto
 
     # Persist the full result locally so future regression gates don't
     # depend on the driver artifact surviving tail truncation.

@@ -50,38 +50,9 @@ def cosine(a: Column, b: Column) -> Column:
     DIVIDE_BY_ZERO, so one zero-norm embedding (failed encode,
     padding row) would abort the whole query instead of being
     excluded.  NULL then drops through ``>=`` filters and sorts
-    NULLS LAST under desc — the same exclusion the Arrow path
-    implements."""
+    NULLS LAST under desc — the same exclusion the Arrow
+    ``ivf_assign`` scorer implements."""
     return F.try_divide(dot(a, b), norm(a) * norm(b))
-
-
-def cosine_udf():
-    """Arrow-vectorized pairwise cosine: one numpy batch op per Arrow
-    batch.  Used on candidate pairs in the approximate paths; the
-    oracle-checked brute-force keeps the exact JVM fold so results are
-    bit-identical with external SQL engines.
-
-    Zero-norm pairs return NULL (pandas nullable Float64 -> Arrow
-    null), NOT NaN: Spark's nan-safe comparison treats NaN as GREATER
-    than every double, so a NaN cosine would pass ``>= threshold``
-    filters and occupy the TOP of every desc-ordered top-k — false
-    near-dup pairs and garbage neighbors from exactly the degenerate
-    vectors that should be excluded.  NULL matches the JVM
-    :func:`cosine` exclusion semantics row-for-row.
-    """
-
-    @F.pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.stack([np.asarray(v, dtype=np.float64) for v in a])
-        mb = np.stack([np.asarray(v, dtype=np.float64) for v in b])
-        num = (ma * mb).sum(axis=1)
-        den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-        safe = num / np.where(den == 0.0, 1.0, den)
-        return pd.Series(
-            pd.array(safe, dtype="Float64")
-        ).mask(den == 0.0)
-
-    return cos
 
 
 def as_double_vec(a: Column | str) -> Column:

@@ -13277,6 +13277,51 @@ def q_retrieval_quality_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _blobs(ids: DataFrame, build: "Callable[[int], bytes]") -> DataFrame:
+    """Fixture blobs of the media and container queries: one
+    ``(<id>, content)`` row per row of the one-column bigint ``ids``,
+    with ``content = build(int(id))``, synthesized in one mapInPandas
+    kernel.  The kernel runs after whatever exchange the caller put on
+    ``ids`` (``spread`` or not is the caller's call), so only bare ids
+    ever cross a shuffle, never blobs."""
+    from pyspark.sql import types as T
+
+    (id_col,) = ids.columns
+    schema = T.StructType(
+        [
+            T.StructField(id_col, T.LongType(), False),
+            T.StructField("content", T.BinaryType(), False),
+        ]
+    )
+
+    def gen(batches):
+        import pandas as pd
+
+        for b in batches:
+            yield pd.DataFrame(
+                {id_col: b[id_col], "content": b[id_col].map(lambda d: build(int(d)))}
+            )
+
+    return ids.mapInPandas(gen, schema)
+
+
+def _luma_units(feats: DataFrame) -> DataFrame:
+    """(media_id, width, height, luma_units) of extract_image_features
+    output — luma_units the exact integer 1e-6-unit sum of the float
+    feature vector (the floor(x*1e6+0.5) recipe every image oracle
+    replays), folded JVM-side."""
+    return feats.select(
+        "media_id",
+        "width",
+        "height",
+        F.aggregate(
+            "feature",
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + F.floor(x * F.lit(1e6) + F.lit(0.5)).cast("long"),
+        ).alias("luma_units"),
+    )
+
+
 _GIF_PALETTE = [(0, 0, 0), (255, 255, 255), (64, 128, 192), (200, 100, 50)]
 
 
@@ -13331,8 +13376,6 @@ def _gif_luma_units() -> "list[int]":
         "frame_index=-1 quarantine rows, never vanish.",
 )
 def q_gif_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.multimodal import (
         encode_gif,
         sample_gif_frames,
@@ -13352,25 +13395,7 @@ def q_gif_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         return encode_gif(frames, pal, 4, 4)
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, build)
     return sample_gif_frames(blobs, every_n=2).select(
         "media_id", "frame_index", "height", "width", "luma_units"
     )
@@ -13414,8 +13439,6 @@ def q_gif_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(media_id, 3 ints).",
 )
 def q_jpeg_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.multimodal import (
         extract_image_features,
     )
@@ -13439,37 +13462,9 @@ def q_jpeg_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
         return encode_jpeg(img)
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
     # only bare ids cross the spread; the blobs are built after it
-    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
-    feats = extract_image_features(blobs)
-    return feats.select(
-        "media_id",
-        "width",
-        "height",
-        F.aggregate(
-            "feature",
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + F.floor(x * F.lit(1e6) + F.lit(0.5)).cast("long"),
-        ).alias("luma_units"),
-    )
+    blobs = _blobs(spread(ids, "media_id"), build)
+    return _luma_units(extract_image_features(blobs))
 
 
 @register(
@@ -13504,8 +13499,6 @@ def q_jpeg_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "never shuffle.",
 )
 def q_jpeg_progressive_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.multimodal import (
         extract_image_features,
     )
@@ -13531,37 +13524,9 @@ def q_jpeg_progressive_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
         return encode_jpeg_progressive(img)
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
     # only bare ids cross the spread; the blobs are built after it
-    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
-    feats = extract_image_features(blobs)
-    return feats.select(
-        "media_id",
-        "width",
-        "height",
-        F.aggregate(
-            "feature",
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + F.floor(x * F.lit(1e6) + F.lit(0.5)).cast("long"),
-        ).alias("luma_units"),
-    )
+    blobs = _blobs(spread(ids, "media_id"), build)
+    return _luma_units(extract_image_features(blobs))
 
 
 @register(
@@ -13598,8 +13563,6 @@ def q_jpeg_progressive_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "carries (media_id, 3 ints).",
 )
 def q_png_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.multimodal import (
         extract_image_features,
     )
@@ -13618,37 +13581,9 @@ def q_png_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         y, x = np.mgrid[0:16, 0:16]
         return encode_png(((d + 7 * y + 11 * x) % 256).astype(np.uint8))
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
     # only bare ids cross the spread; the blobs are built after it
-    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
-    feats = extract_image_features(blobs)
-    return feats.select(
-        "media_id",
-        "width",
-        "height",
-        F.aggregate(
-            "feature",
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + F.floor(x * F.lit(1e6) + F.lit(0.5)).cast("long"),
-        ).alias("luma_units"),
-    )
+    blobs = _blobs(spread(ids, "media_id"), build)
+    return _luma_units(extract_image_features(blobs))
 
 
 @register(
@@ -13678,8 +13613,6 @@ def q_png_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mapInPandas, blobs never shuffle.",
 )
 def q_png_interlaced_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.multimodal import (
         extract_image_features,
     )
@@ -13700,36 +13633,8 @@ def q_png_interlaced_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((d + 7 * y + 11 * x) % 256).astype(np.uint8), interlace=True
         )
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
-    feats = extract_image_features(blobs)
-    return feats.select(
-        "media_id",
-        "width",
-        "height",
-        F.aggregate(
-            "feature",
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + F.floor(x * F.lit(1e6) + F.lit(0.5)).cast("long"),
-        ).alias("luma_units"),
-    )
+    blobs = _blobs(ids, build)
+    return _luma_units(extract_image_features(blobs))
 
 
 @register(
@@ -13767,8 +13672,6 @@ def q_png_interlaced_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Scale shape: 1->N mapInPandas, blobs never shuffle.",
 )
 def q_mjpeg_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.multimodal import (
         sample_video_frames,
     )
@@ -13797,26 +13700,8 @@ def q_mjpeg_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             frames.append(img)
         return encode_mjpeg_avi(frames)
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
     # only bare ids cross the spread; the blobs are built after it
-    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
+    blobs = _blobs(spread(ids, "media_id"), build)
     return sample_video_frames(blobs, every_n=2).select(
         "media_id", "frame_index", "height", "width", "luma_units"
     )
@@ -13840,8 +13725,6 @@ def q_mjpeg_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "row (tools/gates_report.py + tests/test_multimodal.py).",
 )
 def q_audio_spectral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.multimodal import (
         encode_wav_tone,
         extract_audio_spectral_features,
@@ -13852,30 +13735,11 @@ def q_audio_spectral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 12 == 0)
         .select(F.col("doc_id").alias("media_id"))
     )
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(
-                        lambda d: encode_wav_tone(
-                            200.0 + (int(d) % 20) * 150.0
-                        )
-                    ),
-                }
-            )
-
     # only bare ids cross the spread; the blobs are built after it
-    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
+    blobs = _blobs(
+        spread(ids, "media_id"),
+        lambda d: encode_wav_tone(200.0 + (d % 20) * 150.0),
+    )
     return extract_audio_spectral_features(blobs)
 
 
@@ -14398,8 +14262,6 @@ def q_udtf_sliding_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exchange, the only shuffle carries (media_id, 3 ints).",
 )
 def q_webp_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.multimodal import (
         extract_image_features,
     )
@@ -14423,37 +14285,9 @@ def q_webp_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             subtract_green=True,
         )
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
     # only bare ids cross the spread; the blobs are built after it
-    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
-    feats = extract_image_features(blobs)
-    return feats.select(
-        "media_id",
-        "width",
-        "height",
-        F.aggregate(
-            "feature",
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + F.floor(x * F.lit(1e6) + F.lit(0.5)).cast("long"),
-        ).alias("luma_units"),
-    )
+    blobs = _blobs(spread(ids, "media_id"), build)
+    return _luma_units(extract_image_features(blobs))
 
 
 @register(
@@ -14510,8 +14344,6 @@ def q_webp_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "1->1 mapInPandas, blobs never shuffle.",
 )
 def q_flac_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.multimodal import (
         extract_audio_pcm_features,
     )
@@ -14542,26 +14374,8 @@ def q_flac_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return encode_flac(pcm)
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
     # only bare ids cross the spread; the blobs are built after it
-    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
+    blobs = _blobs(spread(ids, "media_id"), build)
     return extract_audio_pcm_features(blobs)
 
 
@@ -14635,8 +14449,6 @@ def _audio_quarantine_blob(d: int) -> bytes:
         "pass, blobs never shuffle.",
 )
 def q_audio_format_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.multimodal import (
         sniff_audio_formats,
     )
@@ -14647,27 +14459,7 @@ def q_audio_format_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("media_id"))
     )
 
-    build = _audio_quarantine_blob
-
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, _audio_quarantine_blob)
     return sniff_audio_formats(blobs)
 
 
@@ -14734,8 +14526,6 @@ def q_audio_format_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "one Arrow-batched mapInPandas pass, blobs never shuffle.",
 )
 def q_audio_stream_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.audiometa import (
         extract_audio_stream_metadata,
     )
@@ -14784,25 +14574,7 @@ def q_audio_stream_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return encode_mp3_frames([9] * 6, seed=d)[:-3]  # truncated
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, build)
     return extract_audio_stream_metadata(blobs)
 
 
@@ -14838,8 +14610,6 @@ def q_audio_stream_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         "distributed per-partition evaluation, no shuffle.",
 )
 def q_udtf_mp3_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.udtf import mp3_frames
 
     ids = (
@@ -14857,26 +14627,8 @@ def q_udtf_mp3_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
             [1 + (d + i) % 14 for i in range(6 + d % 5)], sr_idx=0, seed=d
         )
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
     # only bare ids cross the spread; the blobs are built after it
-    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
+    blobs = _blobs(spread(ids, "media_id"), build)
     return mp3_frames(spark, blobs)
 
 
@@ -14922,8 +14674,6 @@ def q_streaming_media_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     if out is None:
         import tempfile
 
-        from pyspark.sql import types as T
-
         from etl_tiki_webscraping_spark.operators.multimodal import (
             sniff_audio_formats,
         )
@@ -14937,30 +14687,9 @@ def q_streaming_media_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         ids.repartition(3).write.parquet(src)
 
-        blob_schema = T.StructType(
-            [
-                T.StructField("media_id", T.LongType(), False),
-                T.StructField("content", T.BinaryType(), False),
-            ]
-        )
-
         def triage(batch_df, _batch_id: int) -> None:
             # same deterministic fixture builder as audio_format_quarantine
-            def gen(batches):
-                import pandas as pd
-
-                build = _audio_quarantine_blob
-                for b in batches:
-                    yield pd.DataFrame(
-                        {
-                            "media_id": b["media_id"],
-                            "content": b["media_id"].map(
-                                lambda d: build(int(d))
-                            ),
-                        }
-                    )
-
-            blobs = batch_df.mapInPandas(gen, blob_schema)
+            blobs = _blobs(batch_df, _audio_quarantine_blob)
             sniff_audio_formats(blobs).write.mode("append").parquet(sink_dir)
 
         q = (
@@ -15021,8 +14750,6 @@ def q_streaming_media_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "1->1 mapInPandas, blobs never shuffle.",
 )
 def q_png_palette_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.multimodal import (
         extract_image_features,
     )
@@ -15043,36 +14770,8 @@ def q_png_palette_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx = ((y * 3 + x * 5 + d) % 16).astype(np.uint8)
         return encode_png(idx, palette=pal, bit_depth=4)
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
-    feats = extract_image_features(blobs)
-    return feats.select(
-        "media_id",
-        "width",
-        "height",
-        F.aggregate(
-            "feature",
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + F.floor(x * F.lit(1e6) + F.lit(0.5)).cast("long"),
-        ).alias("luma_units"),
-    )
+    blobs = _blobs(ids, build)
+    return _luma_units(extract_image_features(blobs))
 
 
 _CJK_HANG16 = "가나다라마바사아자차카타파하거너"
@@ -15253,8 +14952,6 @@ def q_langid_script_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shuffle.",
 )
 def q_webp_variants_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.multimodal import (
         extract_image_features,
     )
@@ -15288,37 +14985,9 @@ def q_webp_variants_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return encode_webp_lossless(img, subtract_green=True, meta_split=True)
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
     # only bare ids cross the spread; the blobs are built after it
-    blobs = spread(ids, "media_id").mapInPandas(gen, blob_schema)
-    feats = extract_image_features(blobs)
-    return feats.select(
-        "media_id",
-        "width",
-        "height",
-        F.aggregate(
-            "feature",
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + F.floor(x * F.lit(1e6) + F.lit(0.5)).cast("long"),
-        ).alias("luma_units"),
-    )
+    blobs = _blobs(spread(ids, "media_id"), build)
+    return _luma_units(extract_image_features(blobs))
 
 
 @register(
@@ -15371,8 +15040,6 @@ def q_webp_variants_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Arrow-batched 1->1 mapInPandas pass, blobs never shuffle.",
 )
 def q_webp_lossy_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.webp import extract_webp_meta
 
     ids = (
@@ -15409,25 +15076,7 @@ def q_webp_lossy_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         blob = encode_webp_lossy_stub(w, h, seed=d)
         return blob[:-3] if k == 3 else blob
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, build)
     return extract_webp_meta(blobs).select(
         "media_id", "variant", "width", "height",
         "has_alpha", "has_exif", "has_xmp", "n_chunks",
@@ -15485,8 +15134,6 @@ def q_webp_lossy_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Arrow-batched 1->1 mapInPandas pass, blobs never shuffle.",
 )
 def q_mp4_stream_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.mp4meta import (
         extract_mp4_metadata,
     )
@@ -15535,25 +15182,7 @@ def q_mp4_stream_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return encode_mp4_stub(seed=d)[:-7]  # truncated mdat tail
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, build)
     return extract_mp4_metadata(blobs)
 
 
@@ -15597,8 +15226,6 @@ def q_mp4_stream_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pass, blobs never shuffle.",
 )
 def q_image_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.jpeg import extract_jpeg_meta
 
     ids = (
@@ -15644,25 +15271,7 @@ def q_image_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         seg[vpos : vpos + 2] = b"\x00\x00"
         return insert_app_segments(encode_jpeg(img), bytes(seg))
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, build)
     return extract_jpeg_meta(blobs)
 
 
@@ -15940,8 +15549,6 @@ def q_webp_lossy_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "never shuffle.",
 )
 def q_warc_record_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.sources.warc import scan_warc_records
 
     ids = (
@@ -15961,25 +15568,7 @@ def q_warc_record_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             return encode_warc(d, n_pages, gzip_per_record=True, seed=d)
         return encode_warc(d, n_pages, seed=d, truncate=5)
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("file_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "file_id": b["file_id"],
-                    "content": b["file_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, build)
     return scan_warc_records(blobs)
 
 
@@ -16030,8 +15619,6 @@ def q_warc_record_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "never shuffle.",
 )
 def q_webm_stream_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.ebmlmeta import (
         extract_webm_metadata,
     )
@@ -16077,25 +15664,7 @@ def q_webm_stream_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return encode_webm_stub(seed=d)[:-5]  # truncated
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, build)
     return extract_webm_metadata(blobs)
 
 
@@ -16121,8 +15690,6 @@ def q_webm_stream_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         "expressions; no Python in the per-record hot path.",
 )
 def q_warc_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.functions.html import html_to_text
     from etl_tiki_webscraping_spark.functions.text import token_count
     from etl_tiki_webscraping_spark.sources.warc import scan_warc_responses
@@ -16141,25 +15708,7 @@ def q_warc_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             html_bodies=True, seed=d,
         )
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("file_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "file_id": b["file_id"],
-                    "content": b["file_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, build)
     responses = scan_warc_responses(blobs)
     kept = responses.filter(
         (F.col("http_status") == 200)
@@ -16212,8 +15761,6 @@ def q_warc_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "1->1 mapInPandas pass, blobs never shuffle.",
 )
 def q_avif_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.mp4meta import (
         extract_avif_metadata,
     )
@@ -16239,25 +15786,7 @@ def q_avif_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
             return encode_avif_stub("avis", w, h, n_items=2 + d % 3, seed=d)
         return encode_avif_stub("avif", w, h, seed=d)[:-6]
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, build)
     return extract_avif_metadata(blobs)
 
 
@@ -16313,8 +15842,6 @@ def q_avif_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shuffle.",
 )
 def q_zip_container_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.zipmeta import (
         extract_zip_metadata,
     )
@@ -16336,25 +15863,7 @@ def q_zip_container_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         blob = encode_zip_fixture(d, kind, n_docs=n_docs, seed=d)
         return blob[:-4] if k == 5 else blob
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("file_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "file_id": b["file_id"],
-                    "content": b["file_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, build)
     return extract_zip_metadata(blobs)
 
 
@@ -16464,8 +15973,6 @@ def q_sitemap_url_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mapInPandas pass, blobs never shuffle.",
 )
 def q_mp3_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.audiometa import (
         extract_mp3_id3_tags,
     )
@@ -16502,25 +16009,7 @@ def q_mp3_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
             return tag  # truncated tag, no stream: quarantine
         return tag + frames
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "content": b["media_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, build)
     return extract_mp3_id3_tags(blobs)
 
 
@@ -16657,8 +16146,6 @@ def q_robots_rules_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mapInPandas pass, blobs never shuffle.",
 )
 def q_warc_http_decoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.sources.warc import scan_warc_responses
 
     ids = (
@@ -16674,25 +16161,7 @@ def q_warc_http_decoding(spark: SparkSession, sf_dir: str) -> DataFrame:
             d, 2 + d % 5, gzip_per_record=d % 2 == 1, http_modes=True,
         )
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("file_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "file_id": b["file_id"],
-                    "content": b["file_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, build)
     return scan_warc_responses(blobs)
 
 
@@ -16845,8 +16314,6 @@ def q_robots_url_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Arrow-batched 1->1 mapInPandas pass, blobs never shuffle.",
 )
 def q_pdf_doc_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.pdfmeta import (
         extract_pdf_metadata,
     )
@@ -16864,25 +16331,7 @@ def q_pdf_doc_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return encode_pdf_fixture(d, truncate=7 if d % 6 == 5 else 0)
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("file_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "file_id": b["file_id"],
-                    "content": b["file_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, build)
     return extract_pdf_metadata(blobs)
 
 
@@ -16925,8 +16374,6 @@ def q_pdf_doc_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mapInPandas pass, blobs never shuffle.",
 )
 def q_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.pdfmeta import (
         extract_pdf_text,
     )
@@ -16944,25 +16391,7 @@ def q_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return encode_pdf_fixture(d, truncate=7 if d % 6 == 5 else 0)
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("file_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "file_id": b["file_id"],
-                    "content": b["file_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, build)
     return extract_pdf_text(blobs)
 
 
@@ -17167,8 +16596,6 @@ def q_sitemap_index_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "whole-stage-codegen extraction; blobs never shuffle.",
 )
 def q_docx_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.zipmeta import (
         extract_docx_xml,
     )
@@ -17188,25 +16615,7 @@ def q_docx_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             d, 1 + d % 5, truncate=9 if d % 7 == 3 else 0
         )
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("file_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "file_id": b["file_id"],
-                    "content": b["file_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, build)
     xml = extract_docx_xml(blobs)
     texts = F.transform(
         F.regexp_extract_all(
@@ -17389,8 +16798,6 @@ def _register_warc_corpus_router() -> None:
             "codegen'd extraction; blobs never shuffle.",
     )
     def q_warc_corpus_router(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import types as T
-
         from etl_tiki_webscraping_spark.functions.html import html_to_text
         from etl_tiki_webscraping_spark.functions.text import token_count
         from etl_tiki_webscraping_spark.sources.warc import scan_warc_routed
@@ -17409,25 +16816,7 @@ def _register_warc_corpus_router() -> None:
                 mixed_bodies=True,
             )
 
-        blob_schema = T.StructType(
-            [
-                T.StructField("file_id", T.LongType(), False),
-                T.StructField("content", T.BinaryType(), False),
-            ]
-        )
-
-        def gen(batches):
-            import pandas as pd
-
-            for b in batches:
-                yield pd.DataFrame(
-                    {
-                        "file_id": b["file_id"],
-                        "content": b["file_id"].map(lambda d: build(int(d))),
-                    }
-                )
-
-        routed = scan_warc_routed(ids.mapInPandas(gen, blob_schema))
+        routed = scan_warc_routed(_blobs(ids, build))
         clean = (
             F.when(F.col("kind") == "html", html_to_text(F.col("html")))
             .when(F.col("kind") == "pdf", F.col("pdf_text"))
@@ -17515,8 +16904,6 @@ _register_warc_corpus_router()
         "blobs never shuffle.",
 )
 def q_tar_shard_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.tarmeta import scan_tar_members
 
     ids = (
@@ -17538,25 +16925,7 @@ def q_tar_shard_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             return encode_tar_shard(d, n_samples, dir_prefix="data")
         return encode_tar_shard(d, n_samples, truncate=True)
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("file_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "file_id": b["file_id"],
-                    "content": b["file_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, build)
     return scan_tar_members(blobs)
 
 
@@ -17598,8 +16967,6 @@ def q_tar_shard_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "partitioning.",
 )
 def q_webdataset_sample_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.tarmeta import scan_tar_members
 
     ids = (
@@ -17615,25 +16982,7 @@ def q_webdataset_sample_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return encode_tar_shard(d, 2 + d % 4)
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("file_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "file_id": b["file_id"],
-                    "content": b["file_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    members = scan_tar_members(ids.mapInPandas(gen, blob_schema))
+    members = scan_tar_members(_blobs(ids, build))
     files = members.filter(
         (F.col("member_idx") >= 0) & (~F.col("is_dir"))
     ).select(
@@ -17698,8 +17047,6 @@ def q_webdataset_sample_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Arrow-batched 1->N mapInPandas pass, blobs never shuffle.",
 )
 def q_wet_text_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.functions.text import token_count
     from etl_tiki_webscraping_spark.sources.warc import scan_wet_conversions
 
@@ -17720,25 +17067,7 @@ def q_wet_text_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             return encode_wet(d, n_pages, gzip_per_record=True)
         return encode_wet(d, n_pages, truncate=5)
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("file_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "file_id": b["file_id"],
-                    "content": b["file_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    scanned = scan_wet_conversions(ids.mapInPandas(gen, blob_schema))
+    scanned = scan_wet_conversions(_blobs(ids, build))
     return scanned.select(
         "file_id", "page", "target_uri", "text",
         F.when(
@@ -17836,8 +17165,6 @@ def _jsonl_gz_blob(d: int) -> bytes:
         "The text carries é so the utf-8 decode is hash-observable.",
 )
 def q_jsonl_gz_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.sources.records import gunzip_concat_text
 
     ids = (
@@ -17846,29 +17173,7 @@ def q_jsonl_gz_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("file_id"))
     )
 
-    build = _jsonl_gz_blob
-
-    blob_schema = T.StructType(
-        [
-            T.StructField("file_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "file_id": b["file_id"],
-                    "content": b["file_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    shards = gunzip_concat_text(
-        ids.mapInPandas(gen, blob_schema), text_col="text"
-    )
+    shards = gunzip_concat_text(_blobs(ids, _jsonl_gz_blob), text_col="text")
     # single pass over the kernel output: a quarantined file explodes
     # into one NULL line (-> the line_idx = -1 row) instead of a
     # separate union branch, so the Arrow decompress runs exactly ONCE
@@ -18087,8 +17392,6 @@ def q_subtitle_cue_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "blobs never shuffle.",
 )
 def q_tfrecord_example_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.tfrecord import (
         scan_tfrecord_examples,
     )
@@ -18114,25 +17417,7 @@ def q_tfrecord_example_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             return encode_tfrecord_file(d, n, corrupt_length_crc_at=0)
         return encode_tfrecord_file(d, n, truncate=3)
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("file_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "file_id": b["file_id"],
-                    "content": b["file_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    return scan_tfrecord_examples(ids.mapInPandas(gen, blob_schema))
+    return scan_tfrecord_examples(_blobs(ids, build))
 
 
 @register(
@@ -18181,8 +17466,6 @@ def q_tfrecord_example_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "1->N mapInPandas expansion, blobs never shuffle.",
 )
 def q_avro_record_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.operators.avrometa import (
         scan_avro_records,
     )
@@ -18206,25 +17489,7 @@ def q_avro_record_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             return encode_avro_file(d, n, codec="deflate")
         return encode_avro_file(d, n, truncate=3)
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("file_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "file_id": b["file_id"],
-                    "content": b["file_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    return scan_avro_records(ids.mapInPandas(gen, blob_schema))
+    return scan_avro_records(_blobs(ids, build))
 
 
 @register(
@@ -18425,8 +17690,6 @@ def q_sequence_pack_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "all post-scan extraction is codegen'd JVM work.",
 )
 def q_webdataset_media_router(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.functions.text import token_count
     from etl_tiki_webscraping_spark.operators.tarmeta import scan_tar_routed
 
@@ -18444,25 +17707,7 @@ def q_webdataset_media_router(spark: SparkSession, sf_dir: str) -> DataFrame:
         k = (d // 15) % 2
         return encode_wds_media_shard(d, 2 + d % 3, truncate=k == 1)
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("file_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "file_id": b["file_id"],
-                    "content": b["file_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    routed = scan_tar_routed(ids.mapInPandas(gen, blob_schema))
+    routed = scan_tar_routed(_blobs(ids, build))
     return routed.select(
         "file_id",
         "member_idx",
@@ -18653,8 +17898,6 @@ def q_streaming_shard_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     if out is None:
         import tempfile
 
-        from pyspark.sql import types as T
-
         from etl_tiki_webscraping_spark.sources.records import (
             gunzip_concat_text,
         )
@@ -18668,29 +17911,9 @@ def q_streaming_shard_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         ids.repartition(3).write.parquet(src)
 
-        blob_schema = T.StructType(
-            [
-                T.StructField("file_id", T.LongType(), False),
-                T.StructField("content", T.BinaryType(), False),
-            ]
-        )
-
         def ingest(batch_df, _batch_id: int) -> None:
-            def gen(batches):
-                import pandas as pd
-
-                for b in batches:
-                    yield pd.DataFrame(
-                        {
-                            "file_id": b["file_id"],
-                            "content": b["file_id"].map(
-                                lambda d: _jsonl_gz_blob(int(d))
-                            ),
-                        }
-                    )
-
             shards = gunzip_concat_text(
-                batch_df.mapInPandas(gen, blob_schema), text_col="text"
+                _blobs(batch_df, _jsonl_gz_blob), text_col="text"
             )
             lines = F.when(
                 F.col("text").isNull(),
@@ -18793,8 +18016,6 @@ def q_streaming_shard_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(kernel evaluates once per blob).",
 )
 def q_compressed_shard_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from etl_tiki_webscraping_spark.sources.records import (
         decompress_concat_text,
     )
@@ -18834,25 +18055,7 @@ def q_compressed_shard_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             return lzma.compress(raw, format=lzma.FORMAT_XZ)
         return bz2.compress(raw)[:-4]  # truncated final stream
 
-    blob_schema = T.StructType(
-        [
-            T.StructField("file_id", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "file_id": b["file_id"],
-                    "content": b["file_id"].map(lambda d: build(int(d))),
-                }
-            )
-
-    blobs = ids.mapInPandas(gen, blob_schema)
+    blobs = _blobs(ids, build)
     # codec identification JVM-side from the magic bytes — reported
     # even for blobs the kernel quarantines
     codec = (

@@ -186,3 +186,36 @@ def test_tpch_suite_is_complete_with_oracles():
         name = f"tpch_q{n}"
         assert name in QUERIES, f"{name} missing from the catalog"
         assert QUERIES[name].oracle is not None, f"{name} has no oracle"
+
+
+def test_blobs_fixture_schema_content_and_single_id_column(spark):
+    """The catalog's fixture-blob helper: one ``(id, content)`` row per
+    id over a multi-partition ids frame, the id column keeping the
+    caller's name, ``content == build(id)``, both columns NOT NULL;
+    an ids frame with more than the one id column is refused."""
+    import pytest
+    from pyspark.sql import types as T
+
+    from etl_tiki_webscraping_spark.plans.catalog import _blobs
+
+    def build(d: int) -> bytes:
+        return d.to_bytes(8, "big") * (d % 3 + 1)
+
+    ids = spark.range(0, 40, numPartitions=4).select(F.col("id").alias("media_id"))
+    assert ids.rdd.getNumPartitions() >= 2
+    blobs = _blobs(ids, build)
+    assert blobs.schema == T.StructType(
+        [
+            T.StructField("media_id", T.LongType(), False),
+            T.StructField("content", T.BinaryType(), False),
+        ]
+    )
+    rows = blobs.collect()
+    assert sorted(r.media_id for r in rows) == list(range(40))
+    assert all(bytes(r.content) == build(r.media_id) for r in rows)
+    assert _blobs(ids.withColumnRenamed("media_id", "file_id"), build).columns == [
+        "file_id",
+        "content",
+    ]
+    with pytest.raises(ValueError):
+        _blobs(ids.withColumn("other", F.lit(1)), build)

@@ -303,21 +303,6 @@ def test_zero_norm_vectors_excluded_not_nan_ranked(spark):
     assert all(3 not in (r.id_a, r.id_b) for r in pairs)
 
 
-def test_cosine_udf_zero_norm_is_null(spark):
-    from pyspark.sql import functions as F
-
-    from etl_tiki_webscraping_spark.operators.similarity import cosine_udf
-
-    df = spark.createDataFrame(
-        [([1.0, 0.0], [1.0, 0.0]), ([0.0, 0.0], [1.0, 0.0])],
-        "a array<double>, b array<double>",
-    )
-    rows = df.select(cosine_udf()(F.col("a"), F.col("b")).alias("c")).collect()
-    vals = [r.c for r in rows]
-    assert sorted(v for v in vals if v is not None) == [1.0]
-    assert None in vals
-
-
 def test_pq_encode_carry_order_independent(spark):
     """Regression: the carry schema was declared in corpus-schema
     order while the kernel emitted carries in carry_cols order —

@@ -26,13 +26,14 @@ Usage: python tools/strict_compare.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 from datetime import date, datetime
 from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_tiki_webscraping_spark.schemas import TESTDATA_TABLES
 from etl_tiki_webscraping_spark.session import get_spark

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import traceback
 from datetime import date, datetime
@@ -20,7 +21,7 @@ from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_tiki_webscraping_spark.schemas import TESTDATA_TABLES
 from etl_tiki_webscraping_spark.session import get_spark
