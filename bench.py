@@ -3,10 +3,14 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Timing = full query execution including the action (collect for small
-results, count for large ones) — scan + shuffle + aggregate, not just
-plan construction.  One warm-up of the session (tiny query) so JVM/
-codegen startup isn't billed to the first query.
+Timing = full query execution including the action (``run_action``:
+collect for small results, a hash fold or count for large ones) — scan
++ shuffle + aggregate, not just plan construction.  Every timed run
+goes through ``time_query`` -> ``metrics.measure``, which also splits
+the run into stages and operators; each headliner's pass-2 split is
+kept under ``layers_pass2`` on the detail line and in
+bench_history.jsonl.  ``warm`` pays the session's first-use costs
+(JVM/codegen, Python workers, page cache, streaming engine) untimed.
 
 TWO timed passes: pass 1 pays first-touch costs that aren't the plan's
 fault (parquet footer reads, first broadcast build, shuffle-service
@@ -317,85 +321,132 @@ def _final_line(
 
 
 
-def _warm_datasource_workers(spark) -> None:
-    """Warm the python-DataSource worker pool (plan + read workers are
-    a DIFFERENT pool from the Arrow-UDF workers the kernel warm-up
-    forks): one 1-shard read over a temp dir, untimed — measured ~5 s
-    of first-read startup that would otherwise bill the first
-    datasource headliner's pass-1."""
+def warm(spark, sf_dir: str) -> None:
+    """Untimed warm-up before any timed query, so no query is billed a
+    first-in-session cost that is not its plan's:
+
+    - JVM + codegen (a tiny query);
+    - the per-core Arrow-UDF Python workers, forked with numpy
+      imported (the dedup/similarity kernels use it, and a worker's
+      first numpy import is the slow part);
+    - the python-DataSource worker pool, a DIFFERENT pool (one 1-shard
+      read; ~5 s of first-read startup otherwise);
+    - the OS page cache over ``sf_dir``'s parquet, so a first scan
+      does not find cold disk;
+    - the streaming engine (micro-batch executor, state-store provider,
+      memory-sink plumbing; ~2 s on a session's first stream).
+    """
     import tempfile
+
+    from pyspark.sql import functions as F
 
     from etl_tiki_webscraping_spark.operators.tarmeta import encode_tar_shard
     from etl_tiki_webscraping_spark.sources.wds_datasource import (
         WebDatasetDataSource,
     )
 
-    spark.dataSource.register(WebDatasetDataSource)
-    wdir = tempfile.mkdtemp(prefix="wds-warm-")
-    with open(os.path.join(wdir, "w.tar"), "wb") as fh:
-        fh.write(encode_tar_shard(0, 1))
-    (
-        spark.read.format("webdataset")
-        .schema("shard string, member_idx int, name string, size bigint")
-        .option("path", wdir)
-        .load()
-        .count()
-    )
-
-
-def main() -> None:
-    from etl_tiki_webscraping_spark.plans.catalog import QUERIES
-    from etl_tiki_webscraping_spark.session import get_spark
-
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # warm-up: JVM + codegen, and fork the per-core Python workers so
-    # the first Arrow-UDF query isn't billed worker startup (numpy
-    # imported inside the kernel: the dedup/similarity kernels use it,
-    # and a worker's first numpy import is the slow part)
     spark.range(1000).selectExpr("sum(id)").collect()
-    from pyspark.sql import functions as F
 
-    def _warm_kernel(s):
+    def _numpy_kernel(s):
         import numpy as np  # noqa: F401  (warms the worker's import cache)
 
         return s
 
-    _warm = F.pandas_udf(_warm_kernel, "long")
+    cpus = spark.sparkContext.defaultParallelism
+    spark.range(10_000).repartition(cpus).select(
+        F.pandas_udf(_numpy_kernel, "long")("id")
+    ).count()
+
+    spark.dataSource.register(WebDatasetDataSource)
+    with tempfile.TemporaryDirectory(prefix="wds-warm-") as wdir:
+        with open(os.path.join(wdir, "w.tar"), "wb") as fh:
+            fh.write(encode_tar_shard(0, 1))
+        (
+            spark.read.format("webdataset")
+            .schema("shard string, member_idx int, name string, size bigint")
+            .option("path", wdir)
+            .load()
+            .count()
+        )
+
+    for root, _, files in os.walk(sf_dir, followlinks=True):
+        for fname in sorted(files):
+            if fname.endswith(".parquet"):
+                with open(os.path.join(root, fname), "rb") as fh:
+                    while fh.read(1 << 22):
+                        pass
+
+    with tempfile.TemporaryDirectory(prefix="bench-stream-warm-") as wdir:
+        spark.createDataFrame([("w", 1)], "k string, v int").write.parquet(
+            wdir + "/in"
+        )
+        (
+            spark.readStream.schema("k string, v int")
+            .parquet(wdir + "/in")
+            .groupBy("k")
+            .count()
+            .writeStream.format("memory")
+            .queryName("bench_warm_stream")
+            .outputMode("complete")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination(60)
+        )
+
+
+def run_action(df, action: str):
+    """Execute ``df`` the way its headliner is timed and return the
+    DataFrame whose plan ran: ``collect`` for small outputs; ``hash``
+    forces EVERY output column (count() lets Catalyst prune
+    unreferenced projections/windows — r12 found 11 headliners timing
+    bare scans) with O(1) driver transfer, and bit_xor cannot
+    overflow; ``count`` runs ``groupBy().count()``, the plan
+    ``Dataset.count()`` runs."""
+    from pyspark.sql import functions as F
+
+    if action == "hash":
+        df = df.select(F.xxhash64(*df.columns).alias("h")).agg(F.expr("bit_xor(h)"))
+    elif action != "collect":
+        df = df.groupBy().count()
+    df.collect()
+    return df
+
+
+_ACTIONS = dict(HEADLINE)
+
+
+def time_query(spark, sf_dir: str, name: str) -> "tuple[float, dict]":
+    """One timed run of catalog query ``name`` (fresh lineage, its
+    HEADLINE action, ``count`` when it has none): ``(seconds, totals)``
+    with ``metrics.measure``'s stage/operator totals.
+
+    The Spark cache is cleared afterwards.  Each fn() call builds FRESH
+    lineage, so persisted blocks from a finished query are pure dead
+    weight to every later one — 176 headliners of accumulated
+    MEMORY_AND_DISK blocks turn pass 2 into GC thrash (measured:
+    untouched queries ran 3-5x their pass-1 time LATE in pass 2; the
+    r12 sf10 probe isolated the same mechanism at 345 s vs 29 s).  All
+    cross-query staging is memoized as PATHS/plain lists, so dropping
+    the cache between queries is free and honest."""
+    from etl_tiki_webscraping_spark.metrics import measure
+    from etl_tiki_webscraping_spark.plans.catalog import QUERIES
+
+    fn, action = QUERIES[name].fn, _ACTIONS.get(name, "count")
+    _, totals = measure(spark, name, lambda: run_action(fn(spark, sf_dir), action))
+    spark.catalog.clearCache()
+    return totals["wall_s"], totals
+
+
+def main() -> None:
+    from pyspark.sql import functions as F
+
+    from etl_tiki_webscraping_spark.metrics import _gc_ms
+    from etl_tiki_webscraping_spark.session import get_spark
+
+    spark = get_spark("bench")
+    spark.sparkContext.setLogLevel("ERROR")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark.range(10_000).repartition(cpus).select(_warm("id")).count()
-    _warm_datasource_workers(spark)
-
-    # OS page-cache warm of the input parquet: timings should measure
-    # the engine, not whether this run's first scan found cold disk
-    for fname in sorted(os.listdir(SF_DIR)):
-        if fname.endswith(".parquet"):
-            with open(os.path.join(SF_DIR, fname), "rb") as fh:
-                while fh.read(1 << 22):
-                    pass
-
-    # warm the streaming engine once (micro-batch executor, state-store
-    # provider, memory-sink plumbing): the first streaming query of a
-    # session otherwise pays ~2s of engine init that isn't its plan's
-    import tempfile
-
-    _warm_dir = tempfile.mkdtemp(prefix="bench-stream-warm-")
-    spark.createDataFrame([("w", 1)], "k string, v int").write.parquet(
-        _warm_dir + "/in"
-    )
-    (
-        spark.readStream.schema("k string, v int")
-        .parquet(_warm_dir + "/in")
-        .groupBy("k")
-        .count()
-        .writeStream.format("memory")
-        .queryName("bench_warm_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(60)
-    )
+    warm(spark, SF_DIR)
 
     # one-time per-process fixture staging (snapshot/bucketed/SQLite/
     # stream-input builds) hoisted out of the timed region — a deployed
@@ -407,38 +458,12 @@ def main() -> None:
     # silently billed new queries' staging to pass 1)
     prepare_fixtures(spark, SF_DIR)
 
-    def run_action(df, action: str) -> None:
-        if action == "collect":
-            df.collect()
-        elif action == "hash":
-            # force EVERY output column (count() lets Catalyst prune
-            # unreferenced projections/windows — r12 found 11
-            # headliners timing bare scans) with O(1) driver
-            # transfer; bit_xor cannot overflow
-            df.select(
-                F.xxhash64(*df.columns).alias("h")
-            ).agg(F.expr("bit_xor(h)")).collect()
-        else:
-            df.count()
-
-    def run_pass() -> dict[str, float]:
+    def run_pass() -> "tuple[dict[str, float], dict[str, dict]]":
         timings: dict[str, float] = {}
-        for name, action in HEADLINE:
-            fn = QUERIES[name].fn
-            t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            run_action(df, action)
-            timings[name] = round(time.perf_counter() - t0, 3)
-            # Each fn() call builds FRESH lineage, so persisted blocks
-            # from a finished query are pure dead weight to every later
-            # one — 176 headliners of accumulated MEMORY_AND_DISK blocks
-            # turn pass 2 into GC thrash (measured: untouched queries
-            # ran 3-5x their pass-1 time LATE in pass 2; the r12 sf10
-            # probe isolated the same mechanism at 345 s vs 29 s).  All
-            # cross-query staging is memoized as PATHS/plain lists, so
-            # dropping the cache between queries is free and honest.
-            spark.catalog.clearCache()
-        return timings
+        layers: dict[str, dict] = {}
+        for name, _ in HEADLINE:
+            timings[name], layers[name] = time_query(spark, SF_DIR, name)
+        return timings, layers
 
     # Host-contention sentinel (VERDICT r13 "what's wrong" #1): the
     # same fixed work — a full parquet scan of lineitem folded through
@@ -473,11 +498,7 @@ def main() -> None:
         out = {"gc_ms": -1, "heap_mb": -1, "cleaner_queue": -1}
         try:
             mf = spark._jvm.java.lang.management.ManagementFactory
-            total = 0
-            it = mf.getGarbageCollectorMXBeans().iterator()
-            while it.hasNext():
-                total += it.next().getCollectionTime()
-            out["gc_ms"] = int(total)
+            out["gc_ms"] = _gc_ms(spark)
             out["heap_mb"] = int(
                 mf.getMemoryMXBean().getHeapMemoryUsage().getUsed() >> 20
             )
@@ -500,11 +521,11 @@ def main() -> None:
     # sentinel is the host.  Both are attributable from the record.
     sentinel = {"start": run_sentinel(), "load_start": loadavg(),
                 "jvm_start": jvm_stamp()}
-    pass1 = run_pass()
+    pass1, _ = run_pass()
     sentinel["mid"] = run_sentinel()
     sentinel["load_mid"] = loadavg()
     sentinel["jvm_mid"] = jvm_stamp()
-    pass2 = run_pass()
+    pass2, layers2 = run_pass()
     sentinel["end"] = run_sentinel()
     sentinel["load_end"] = loadavg()
     sentinel["jvm_end"] = jvm_stamp()
@@ -616,7 +637,6 @@ def main() -> None:
     # position/run-to-run noise with the evidence inline; if it does
     # not, it is annotated as a convergent (real) regression — either
     # way no flag ships unexplained.
-    actions = dict(HEADLINE)
     from etl_tiki_webscraping_spark.plans.catalog import (
         _EAGER_STAGING_QUERIES,
     )
@@ -635,12 +655,7 @@ def main() -> None:
             )
             entry["note"] = skip
             continue
-        runs: list[float] = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            run_action(QUERIES[name].fn(spark, SF_DIR), actions.get(name, "count"))
-            runs.append(round(time.perf_counter() - t0, 3))
-            spark.catalog.clearCache()
+        runs = [time_query(spark, SF_DIR, name)[0] for _ in range(3)]
         entry["converged"] = runs
         best = min(runs)
         prior_t = float(entry["prior"])  # type: ignore[arg-type]
@@ -680,6 +695,7 @@ def main() -> None:
         "sentinel": sentinel,
         "queries": pass1,
         "queries_pass2": pass2,
+        "layers_pass2": layers2,
         "regressions": regressions,
         "regressions_vs": prior_file,
     }
@@ -704,6 +720,7 @@ def main() -> None:
         "detail": "bench_per_query",
         "queries": pass1,
         "queries_pass2": pass2,
+        "layers_pass2": layers2,
         "sentinel": sentinel,
         "regressions": regressions,
         "regressions_vs": prior_file,

@@ -53,22 +53,6 @@ def sitemap_to_pairs(spark: SparkSession, sitemap_records: Sequence[dict]) -> Da
     )
 
 
-def jdbc_read(spark: SparkSession, url: str, query: str, properties: dict[str, str] | None = None) -> DataFrame:
-    """Warehouse read-back (S5): the reference's
-    ``pd.read_sql("SELECT shop_id FROM shop_info", conn)``
-    (dags/etl.py:247-249).  Uses the query pushdown form so the
-    database, not Spark, evaluates the projection.
-
-    Requires a JDBC driver jar on the Spark classpath; in environments
-    without one (this sandbox), :func:`dbapi_read` is the executable
-    twin with identical partitioned-read semantics.
-    """
-    reader = spark.read.format("jdbc").option("url", url).option("query", query)
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
 def dbapi_read(
     spark: SparkSession,
     connect: "object",

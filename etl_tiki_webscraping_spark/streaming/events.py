@@ -32,6 +32,7 @@ the harness path.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 from collections.abc import Sequence
 
@@ -200,7 +201,8 @@ def run_available_now_to_memory(
     """Execute a streaming plan over all currently-available input
     (``Trigger.AvailableNow`` — the idiomatic form of the reference's
     daily batch re-run, dags/etl.py:296-297) into an in-memory sink and
-    return the result table.
+    return the result table.  The run's checkpoint is a scratch dir,
+    removed once the query has terminated.
 
     ``shuffle_partitions`` sizes the STATE STORE: a streaming query
     instantiates one state-store partition per shuffle partition per
@@ -233,13 +235,15 @@ def run_available_now_to_memory(
         session.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     if not no_data_batches:
         session.conf.set(_ND_KEY, "false")
+    ckpt = tempfile.mkdtemp(prefix=f"ckpt-{query_name}-")
+    q = None
     try:
         q = (
             stream.writeStream.outputMode(output_mode)
             .format("memory")
             .queryName(query_name)
             .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix=f"ckpt-{query_name}-"))
+            .option("checkpointLocation", ckpt)
             .start()
         )
         q.awaitTermination()
@@ -247,6 +251,10 @@ def run_available_now_to_memory(
         if shuffle_partitions is not None:
             session.conf.set("spark.sql.shuffle.partitions", prev)
         session.conf.set(_ND_KEY, prev_nd)
+        if q is not None:
+            q.stop()  # no-op once terminated
+        # the memory sink never reads its checkpoint back
+        shutil.rmtree(ckpt, ignore_errors=True)
     return session.table(query_name)
 
 

@@ -112,6 +112,7 @@ def test_bpe_local_train_job_count_constant_in_merges(spark, sf_dir):
     not launch per-merge Spark jobs.  The local path runs exactly TWO
     jobs (bounded count probe + vocab collect) — >=5x fewer than the
     old loop's 2-per-merge (513 jobs for 256 merges)."""
+    from etl_tiki_webscraping_spark.metrics import measure
     from etl_tiki_webscraping_spark.operators.bpe import (
         bpe_train,
         build_word_vocab,
@@ -119,13 +120,10 @@ def test_bpe_local_train_job_count_constant_in_merges(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     vocab = build_word_vocab(docs, "text").localCheckpoint()
-    sc = spark.sparkContext
-    sc.setJobGroup("bpe-train-256", "job-count probe", False)
-    try:
-        merges = bpe_train(vocab, num_merges=256, min_pair_count=1)
-    finally:
-        sc.setJobGroup("", "", False)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("bpe-train-256"))
+    merges, totals = measure(
+        spark, "job-count probe", lambda: bpe_train(vocab, num_merges=256, min_pair_count=1)
+    )
+    n_jobs = totals["spark.jobs"]
     assert 1 <= n_jobs <= 4, f"expected O(1) jobs, saw {n_jobs}"
     # the sf0.001 vocab exhausts before 256 (every word fully merged);
     # what matters is the loop ran DEEP with zero per-merge jobs

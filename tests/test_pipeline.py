@@ -11,6 +11,7 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import functions as F
 
+from etl_tiki_webscraping_spark.metrics import measure
 from etl_tiki_webscraping_spark.plans.pipeline import (
     PipelineFetchers,
     PipelineResult,
@@ -221,14 +222,9 @@ def test_pipeline_runs_no_count_actions_within_job_budget(spark, warehouse, monk
         raise AssertionError("run_pipeline called DataFrame.count()")
 
     monkeypatch.setattr(type(spark.range(1)), "count", no_count)
-    sc = spark.sparkContext
-    group = "pipeline-job-budget"
-    sc.setJobGroup(group, "one run_pipeline call")
-    try:
-        res = run_pipeline(spark, fetchers(), warehouse, FAST)
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    res, totals = measure(
+        spark, "one run_pipeline call", lambda: run_pipeline(spark, fetchers(), warehouse, FAST)
+    )
+    n_jobs = totals["spark.jobs"]
     assert res.products == 11 and res.products_dropped_by_fk == 1
     assert 0 < n_jobs <= PIPELINE_JOB_BUDGET

@@ -7,6 +7,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from etl_tiki_webscraping_spark.metrics import measure
+
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -26,18 +28,14 @@ def test_exchange_input_starts_no_job_at_plan_time(spark, op):
         ).alias("text"),
     ).repartition(8)
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    sc = spark.sparkContext
-    group = f"spread-probe-{op}"
-    sc.setJobGroup(group, "plan-time probe")
-    try:
+
+    def plan() -> None:  # build the plan only; nothing executes it
         if op == "minhash_analysis":
             minhash_analysis(docs, "text", "id")
         else:
             jaccard_on_pairs(pairs, docs, "text", "id")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    assert measure(spark, "plan-time probe", plan)[1]["spark.jobs"] == 0
 
 
 def test_small_input_pins_default_parallelism(spark):

@@ -6,11 +6,13 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 
 from pyspark.sql import functions as F
 
 from etl_tiki_webscraping_spark.streaming.events import (
     foreach_batch_upsert,
+    run_available_now_to_memory,
     streaming_dedup,
     windowed_event_counts,
     windowed_event_counts_batch,
@@ -61,6 +63,22 @@ def test_windowed_counts_batch_and_stream_agree(spark, tmp_path):
     }
     assert streamed == batch
     assert batch[("2024-01-01 10:00:00", "view")] == (3, 5.0)
+
+
+def test_memory_run_leaves_no_checkpoint_dir(spark, tmp_path):
+    """The runner's checkpoint is scratch: no ``ckpt-<name>-`` dir
+    outlives the call, and the returned memory table keeps its rows."""
+    src = _write_json_source(tmp_path)
+    prefix = "ckpt-ckpt_cleanup_counts-"
+
+    def ckpt_dirs():
+        return {d for d in os.listdir(tempfile.gettempdir()) if d.startswith(prefix)}
+
+    before = ckpt_dirs()
+    stream = windowed_event_counts(spark.readStream.schema(SCHEMA).json(src))
+    out = run_available_now_to_memory(stream, "ckpt_cleanup_counts", "complete")
+    assert ckpt_dirs() == before
+    assert out.count() == 2
 
 
 def test_streaming_dedup_drops_duplicate_event_ids(spark, tmp_path):

@@ -297,7 +297,7 @@ NEW_R7C = [
 ]
 
 
-def build_scaled(spark) -> str:
+def build_scaled(spark, replicas: int, scaled_dir: str) -> str:
     from pyspark.sql import functions as F
 
     # V4: c_name regenerates from the strided key (V3 kept names
@@ -305,10 +305,10 @@ def build_scaled(spark) -> str:
     # name-matching workload measured the duplication artifact —
     # sum |bucket|^2 grew REPLICAS^2 — instead of real growth; real
     # 10x TPC-H data has 10x DISTINCT names)
-    done_marker = os.path.join(SCALED_DIR, "_SCALED_OK_V4")
+    done_marker = os.path.join(scaled_dir, "_SCALED_OK_V4")
     if os.path.exists(done_marker):
-        return SCALED_DIR
-    os.makedirs(SCALED_DIR, exist_ok=True)
+        return scaled_dir
+    os.makedirs(scaled_dir, exist_ok=True)
 
     orders = spark.read.parquet(os.path.join(SRC_SF, "orders.parquet"))
     ord_parts = [
@@ -320,12 +320,12 @@ def build_scaled(spark) -> str:
             "o_orderdate",
             "o_orderpriority",
         )
-        for i in range(REPLICAS)
+        for i in range(replicas)
     ]
     scaled_orders = ord_parts[0]
     for p in ord_parts[1:]:
         scaled_orders = scaled_orders.unionByName(p)
-    tgt = os.path.join(SCALED_DIR, "orders.parquet")
+    tgt = os.path.join(scaled_dir, "orders.parquet")
     if os.path.islink(tgt):
         os.remove(tgt)  # pre-V2 layout symlinked orders
     scaled_orders.repartition(32).write.mode("overwrite").parquet(tgt)
@@ -341,19 +341,19 @@ def build_scaled(spark) -> str:
             "c_name",
             F.format_string("Customer#%09d", F.col("c_custkey")),
         )
-        for i in range(REPLICAS)
+        for i in range(replicas)
     ]
     scaled_cust = cust_parts[0]
     for p in cust_parts[1:]:
         scaled_cust = scaled_cust.unionByName(p)
-    tgt = os.path.join(SCALED_DIR, "customer.parquet")
+    tgt = os.path.join(scaled_dir, "customer.parquet")
     if os.path.islink(tgt):
         os.remove(tgt)
     scaled_cust.repartition(32).write.mode("overwrite").parquet(tgt)
 
     docs = spark.read.parquet(os.path.join(SRC_SF, "documents.parquet"))
     doc_parts = []
-    for i in range(REPLICAS):
+    for i in range(replicas):
         salted = F.array_join(
             F.transform(
                 F.split(F.col("text"), " "), lambda w: F.concat(w, F.lit(str(i)))
@@ -372,7 +372,7 @@ def build_scaled(spark) -> str:
     for p in doc_parts[1:]:
         scaled_docs = scaled_docs.unionByName(p)
     scaled_docs.repartition(32).write.mode("overwrite").parquet(
-        os.path.join(SCALED_DIR, "documents.parquet")
+        os.path.join(scaled_dir, "documents.parquet")
     )
 
     events = spark.read.parquet(os.path.join(SRC_SF, "events.parquet"))
@@ -385,13 +385,13 @@ def build_scaled(spark) -> str:
             "value",
             "props",
         )
-        for i in range(REPLICAS)
+        for i in range(replicas)
     ]
     scaled_ev = ev_parts[0]
     for p in ev_parts[1:]:
         scaled_ev = scaled_ev.unionByName(p)
     scaled_ev.repartition(32).write.mode("overwrite").parquet(
-        os.path.join(SCALED_DIR, "events.parquet")
+        os.path.join(scaled_dir, "events.parquet")
     )
 
     li = spark.read.parquet(os.path.join(SRC_SF, "lineitem.parquet"))
@@ -400,12 +400,12 @@ def build_scaled(spark) -> str:
             (F.col("l_orderkey") + i * ORDER_STRIDE).alias("l_orderkey"),
             *[c for c in li.columns if c != "l_orderkey"],
         )
-        for i in range(REPLICAS)
+        for i in range(replicas)
     ]
     scaled_li = li_parts[0]
     for p in li_parts[1:]:
         scaled_li = scaled_li.unionByName(p)
-    tgt = os.path.join(SCALED_DIR, "lineitem.parquet")
+    tgt = os.path.join(scaled_dir, "lineitem.parquet")
     if os.path.islink(tgt):
         os.remove(tgt)  # pre-V3 layout symlinked lineitem
     scaled_li.repartition(32).write.mode("overwrite").parquet(tgt)
@@ -418,34 +418,68 @@ def build_scaled(spark) -> str:
             "customer.parquet",
             "lineitem.parquet",
         ):
-            dst = os.path.join(SCALED_DIR, fname)
+            dst = os.path.join(scaled_dir, fname)
             if not os.path.exists(dst):
                 os.symlink(os.path.join(SRC_SF, fname), dst)
 
     with open(done_marker, "w") as fh:
         fh.write("ok")
-    return SCALED_DIR
+    return scaled_dir
+
+
+def run(names: "list[str]", replicas: int, scaled_dir: str, sf: str) -> None:
+    """Build (or reuse) the ``replicas``-x synthesis in ``scaled_dir``,
+    then time ``names`` once each through ``bench.time_query`` after
+    ``bench.warm`` and the untimed fixture staging, and append one
+    ``"sf": sf`` entry to bench_history.jsonl."""
+    from bench import time_query, warm
+    from etl_tiki_webscraping_spark.plans.catalog import (
+        _EAGER_STAGING_QUERIES,
+        QUERIES,
+        prepare_fixtures,
+    )
+    from etl_tiki_webscraping_spark.session import get_spark
+
+    spark = get_spark(f"bench-sf{sf}")
+    spark.sparkContext.setLogLevel("ERROR")
+    t0 = time.perf_counter()
+    sf_dir = build_scaled(spark, replicas, scaled_dir)
+    print(f"sf{sf} input ready in {time.perf_counter() - t0:.1f}s", flush=True)
+
+    warm(spark, sf_dir)
+    # hoist one-time warehouse staging out of the timed region, exactly
+    # as bench.py does (a deployment's snapshot tables already exist) —
+    # without this, whichever query runs FIRST absorbs the staging cost
+    prepare_fixtures(
+        spark, sf_dir,
+        names=[n for n in _EAGER_STAGING_QUERIES if n in names],
+    )
+    for name in names:  # non-eager staged deps (e.g. the shared CDF table)
+        QUERIES[name].fn(spark, sf_dir)
+    timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
+    for name in names:
+        timings[name], layers[name] = time_query(spark, sf_dir, name)
+        print(f"{name}: {timings[name]}s", flush=True)
+
+    entry = {
+        "sf": sf,
+        "staging_hoisted": True,  # entries before r8 timed first-touch staging
+        "cache_policy": "clear_between_queries",  # since r12
+        "synthetic_scale": f"{replicas}x sf0.1, replica-salted (tools/bench_sf1.py)",
+        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "layers": layers,
+    }
+    with open(os.path.join(HERE, "bench_history.jsonl"), "a") as fh:
+        fh.write(json.dumps(entry, separators=(",", ":")) + "\n")
+    print(json.dumps(entry, separators=(",", ":")))
 
 
 def main() -> None:
     from etl_tiki_webscraping_spark.plans.catalog import QUERIES
-    from etl_tiki_webscraping_spark.session import get_spark
-    from etl_tiki_webscraping_spark.streaming.events import (
-        read_events_stream_multibatch,
-    )
-
-    spark = get_spark("bench-sf1")
-    spark.sparkContext.setLogLevel("ERROR")
-    t0 = time.perf_counter()
-    sf_dir = build_scaled(spark)
-    print(f"scaled input ready in {time.perf_counter() - t0:.1f}s", flush=True)
-
-    # untimed warm-up + stream-input staging, mirroring bench.py
-    spark.range(1000).selectExpr("sum(id)").collect()
-    read_events_stream_multibatch(spark, sf_dir, n_batches=3)
-    from bench import _warm_datasource_workers
-
-    _warm_datasource_workers(spark)
 
     names = FIVE
     if len(sys.argv) > 1:
@@ -458,59 +492,7 @@ def main() -> None:
         names = lists.get(sys.argv[1]) or [
             a for a in sys.argv[1:] if a in QUERIES
         ] or FIVE
-    # hoist one-time warehouse staging out of the timed region, exactly
-    # as bench.py does (a deployment's snapshot tables already exist) —
-    # without this, whichever query runs FIRST absorbs the staging cost
-    from etl_tiki_webscraping_spark.plans.catalog import (
-        _EAGER_STAGING_QUERIES,
-        prepare_fixtures,
-    )
-
-    prepare_fixtures(
-        spark, sf_dir,
-        names=[n for n in _EAGER_STAGING_QUERIES if n in names],
-    )
-    for name in names:  # non-eager staged deps (e.g. the shared CDF table)
-        QUERIES[name].fn(spark, sf_dir)
-    # action per query from bench.py's HEADLINE map: count() on a pure
-    # projection lets Catalyst PRUNE the whole computation (caught r12:
-    # html_text_extract's "count" timed a bare scan), so collect-typed
-    # headliners collect here too
-    from bench import HEADLINE as _HL
-
-    actions = dict(_HL)
-    timings: dict[str, float] = {}
-    for name in names:
-        t0 = time.perf_counter()
-        df = QUERIES[name].fn(spark, sf_dir)
-        act = actions.get(name)
-        if act == "collect":
-            df.collect()
-        elif act == "hash":
-            from pyspark.sql import functions as F
-
-            df.select(F.xxhash64(*df.columns).alias("h")).agg(
-                F.expr("bit_xor(h)")
-            ).collect()
-        else:
-            df.count()
-        timings[name] = round(time.perf_counter() - t0, 3)
-        print(f"{name}: {timings[name]}s", flush=True)
-        spark.catalog.clearCache()  # r12 bench policy: no dead-block GC drag
-
-    entry = {
-        "sf": "1",
-        "staging_hoisted": True,  # entries before r8 timed first-touch staging
-        "cache_policy": "clear_between_queries",  # since r12
-        "synthetic_scale": f"{REPLICAS}x sf0.1, replica-salted (tools/bench_sf1.py)",
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-    }
-    with open(os.path.join(HERE, "bench_history.jsonl"), "a") as fh:
-        fh.write(json.dumps(entry, separators=(",", ":")) + "\n")
-    print(json.dumps(entry, separators=(",", ":")))
+    run(names, REPLICAS, SCALED_DIR, "1")
 
 
 if __name__ == "__main__":

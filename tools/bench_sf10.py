@@ -7,11 +7,11 @@ dominates the bench: PageRank, the stream-stream join pair, SCD2 from
 feed, entity resolution, IVF-PQ search, the MinHash-LSH dedup, and
 the corpus capstone.
 
-Input synthesis reuses tools/bench_sf1.py verbatim with REPLICAS=100
-(same replica-salting of document tokens, same key strides — stride *
-100 stays far under int64 and keeps every FK / density invariant
-documented there).  Output appends a ``"sf": "10"`` entry to
-bench_history.jsonl.
+Input synthesis and the timing loop are tools/bench_sf1.py's
+(``bench_sf1.run``) with 100 replicas (same replica-salting of document
+tokens, same key strides — stride * 100 stays far under int64 and keeps
+every FK / density invariant documented there).  Output appends a
+``"sf": "10"`` entry to bench_history.jsonl.
 
 Run ALONE (no concurrent Spark jobs):
 
@@ -20,19 +20,17 @@ Run ALONE (no concurrent Spark jobs):
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 sys.path.insert(0, os.path.join(HERE, "tools"))
 
-import bench_sf1 as b1
+import bench_sf1
 
-b1.REPLICAS = 100
-b1.SCALED_DIR = "/tmp/spark-graft-sf10"
+REPLICAS = 100
+SCALED_DIR = "/tmp/spark-graft-sf10"
 
 # the top-10 heaviest headliners per BENCH_r10 + the verdict's ask
 HEAVY = [
@@ -49,72 +47,5 @@ HEAVY = [
 ]
 
 
-def main() -> None:
-    from etl_tiki_webscraping_spark.plans.catalog import (
-        _EAGER_STAGING_QUERIES,
-        QUERIES,
-        prepare_fixtures,
-    )
-    from etl_tiki_webscraping_spark.session import get_spark
-    from etl_tiki_webscraping_spark.streaming.events import (
-        read_events_stream_multibatch,
-    )
-
-    names = sys.argv[1:] or HEAVY
-
-    spark = get_spark("bench-sf10")
-    spark.sparkContext.setLogLevel("ERROR")
-    t0 = time.perf_counter()
-    sf_dir = b1.build_scaled(spark)
-    print(f"sf10 input ready in {time.perf_counter() - t0:.1f}s", flush=True)
-
-    # untimed warm-up + staging, mirroring bench.py / bench_sf1.py
-    spark.range(1000).selectExpr("sum(id)").collect()
-    read_events_stream_multibatch(spark, sf_dir, n_batches=3)
-    prepare_fixtures(
-        spark, sf_dir, names=[n for n in _EAGER_STAGING_QUERIES if n in names]
-    )
-    for name in names:
-        QUERIES[name].fn(spark, sf_dir)
-
-    # per-query action from bench.py (count() on a pure projection lets
-    # Catalyst prune the whole computation) + the r12 cache policy
-    from bench import HEADLINE as _HL
-
-    actions = dict(_HL)
-    timings: dict[str, float] = {}
-    for name in names:
-        t0 = time.perf_counter()
-        df = QUERIES[name].fn(spark, sf_dir)
-        act = actions.get(name)
-        if act == "collect":
-            df.collect()
-        elif act == "hash":
-            from pyspark.sql import functions as F
-
-            df.select(F.xxhash64(*df.columns).alias("h")).agg(
-                F.expr("bit_xor(h)")
-            ).collect()
-        else:
-            df.count()
-        timings[name] = round(time.perf_counter() - t0, 3)
-        print(f"{name}: {timings[name]}s", flush=True)
-        spark.catalog.clearCache()
-
-    entry = {
-        "sf": "10",
-        "staging_hoisted": True,
-        "cache_policy": "clear_between_queries",  # since r12
-        "synthetic_scale": "100x sf0.1, replica-salted (tools/bench_sf1.py machinery)",
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-    }
-    with open(os.path.join(HERE, "bench_history.jsonl"), "a") as fh:
-        fh.write(json.dumps(entry, separators=(",", ":")) + "\n")
-    print(json.dumps(entry, separators=(",", ":")))
-
-
 if __name__ == "__main__":
-    main()
+    bench_sf1.run(sys.argv[1:] or HEAVY, REPLICAS, SCALED_DIR, "10")

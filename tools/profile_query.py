@@ -1,42 +1,35 @@
 """Per-query isolation profiler for the optimization rounds.
 
-Runs the named catalog queries EXACTLY as bench.py does (same action:
-collect / count / hash-fold), isolated (fresh lineage per run, cache
-cleared between runs), N repeats, and prints per-run wall seconds plus
-the converged (min) time.  Optionally saves .explain("formatted") to
-plans/<tag>/<query>_<suffix>.txt so plan claims are auditable without
-running Spark.
+Runs the named catalog queries EXACTLY as bench.py does
+(``bench.time_query``: same action, fresh lineage per run, cache
+cleared between runs) after the same ``bench.warm``, N repeats, and
+prints each run's wall seconds with its stage split (jobs, stages,
+tasks, executor run/CPU time, shuffle and spill bytes, Python and
+codegen time, GC) plus the converged (min) time.  Only the profiled
+queries' fixtures are staged, as one measured block printed first, so
+an index build or table staging is visible apart from the runs.
+Optionally saves .explain("formatted") to plans/<tag>/<query>_<suffix>.txt
+so plan claims are auditable without running Spark.
 
 Usage:
   python tools/profile_query.py [--sf DIR] [--n N] [--plans TAG:SUFFIX] \
-      [--jobs] query [query ...]
-
---jobs additionally prints the Spark job/stage breakdown (job
-description, duration, #stages) recorded by a status listener, which
-attributes wall time to jobs without the UI.
+      query [query ...]
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pyspark.sql import functions as F
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, HERE)
 
 
-def run_action(df, action: str) -> None:
-    if action == "collect":
-        df.collect()
-    elif action == "hash":
-        df.select(F.xxhash64(*df.columns).alias("h")).agg(
-            F.expr("bit_xor(h)")
-        ).collect()
-    else:
-        df.count()
+def _split(totals: dict) -> str:
+    return " ".join(f"{k}={v}" for k, v in totals.items())
 
 
 def main() -> int:
@@ -46,64 +39,37 @@ def main() -> int:
     ap.add_argument("--n", type=int, default=3)
     ap.add_argument("--plans", default=None,
                     help="TAG:SUFFIX -> save explain to plans/TAG/<q>_SUFFIX.txt")
-    ap.add_argument("--jobs", action="store_true")
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    from bench import HEADLINE
+    from bench import _ACTIONS, time_query, warm
+    from etl_tiki_webscraping_spark.metrics import measure
     from etl_tiki_webscraping_spark.plans.catalog import (
+        _EAGER_STAGING_QUERIES,
         QUERIES,
         prepare_fixtures,
     )
     from etl_tiki_webscraping_spark.session import get_spark
 
-    actions = dict(HEADLINE)
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
-    # same warm-up bench.py does, so run 1 is comparable to a bench slot
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    def _warm_kernel(s):
-        import numpy as np  # noqa: F401
-
-        return s
-
-    _warm = F.pandas_udf(_warm_kernel, "long")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark.range(10_000).repartition(cpus).select(_warm("id")).count()
-    prepare_fixtures(spark, args.sf)
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
+    warm(spark, args.sf)
+    eager = [n for n in _EAGER_STAGING_QUERIES if n in args.queries]
+    _, staging = measure(spark, "staging", lambda: prepare_fixtures(spark, args.sf, names=eager))
+    print(f"staging {eager}: {_split(staging)}", flush=True)
 
     for name in args.queries:
-        action = actions.get(name, "count")
-        fn = QUERIES[name].fn
         times = []
         for i in range(args.n):
-            jobs_before = set(tracker.getJobIdsForGroup(None) or [])
-            sc.setJobDescription(f"profile:{name}#{i}")
-            t0 = time.perf_counter()
-            df = fn(spark, args.sf)
-            run_action(df, action)
-            dt = time.perf_counter() - t0
-            sc.setJobDescription(None)
-            times.append(round(dt, 3))
-            if args.jobs and i == args.n - 1:
-                jobs_after = tracker.getJobIdsForGroup(None) or []
-                new = sorted(set(jobs_after) - jobs_before)
-                print(f"  jobs in last run: {len(new)}")
-            spark.catalog.clearCache()
-        print(f"{name}: action={action} runs={times} min={min(times)}")
+            secs, totals = time_query(spark, args.sf, name)
+            times.append(secs)
+            print(f"  {name} run {i + 1}: {_split(totals)}", flush=True)
+        action = _ACTIONS.get(name, "count")
+        print(f"{name}: action={action} runs={times} min={min(times)}", flush=True)
         if args.plans:
             tag, suffix = args.plans.split(":", 1)
-            outdir = os.path.join(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                "plans", tag)
+            outdir = os.path.join(HERE, "plans", tag)
             os.makedirs(outdir, exist_ok=True)
-            import contextlib
-            import io
-
             df = QUERIES[name].fn(spark, args.sf)
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
