@@ -335,18 +335,9 @@ def bigram_pmi(
             ).otherwise(F.array().cast("array<struct<tok_a:string,tok_b:string>>"))
         ).alias("p")
     ).select("p.tok_a", "p.tok_b")
-    # persisted: vocab-pair-bounded (NOT corpus-bounded), read by the
-    # total/left-marginal/right-marginal aggregates + the output filter.
-    # Cache lifecycle (same contract as ordered_budget_select): the
-    # returned DataFrame is lazy, so the entry cannot be unpersisted
-    # here; repeated calls on the same (input, params) reuse one entry,
-    # entries evict under LRU pressure, and a long-lived session
-    # releases them explicitly via spark.catalog.clearCache().
-    bi = (
-        pairs.groupBy("tok_a", "tok_b")
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .persist()
-    )
+    # vocab-pair-bounded (NOT corpus-bounded), read by the
+    # total/left-marginal/right-marginal aggregates + the output filter
+    bi = pairs.groupBy("tok_a", "tok_b").agg(F.count(F.lit(1)).alias("n_ab"))
     # unigram counts IN BIGRAM POSITIONS (left + right occurrence
     # totals), the standard PMI marginals over the pair distribution —
     # derived from the bigram table, never from a corpus re-scan

@@ -27,7 +27,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from etl_tiki_webscraping_spark.functions.text import tokenize_ws
 from etl_tiki_webscraping_spark.session import spread
@@ -358,15 +357,7 @@ def minhash_candidate_pairs(
     buckets = sig.select("id", F.explode(_band_buckets(F.col("sig"), bands, r)).alias("bb")).select(
         "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
-    # persisted: the capped bucket table feeds BOTH sides of the
-    # self-join (and the cap aggregation consumed it once already);
-    # without pinning, a standalone call re-runs the Arrow signature
-    # kernel per consumer.  (The minhash_dedup path additionally
-    # persists the analysis itself for its other consumers.)  Cache
-    # lifecycle: the returned DataFrame is lazy so the entry outlives
-    # this call — it evicts under LRU pressure, and a long-lived
-    # session releases it via spark.catalog.clearCache().
-    buckets = cap_bucket_membership(buckets, ["band", "bucket"], bucket_cap).persist()
+    buckets = cap_bucket_membership(buckets, ["band", "bucket"], bucket_cap)
     left = buckets.alias("l")
     right = buckets.alias("r")
     return (
@@ -491,16 +482,13 @@ def minhash_duplicate_edges(
     pair sharing k bands is verified once, not k times (a
     near-dup-heavy corpus shares most bands — worst case is exactly
     where redundant verification would hurt most); then the
-    shingle-hash sets join back once for the exact Jaccard check.  The
-    analysis is persisted because it feeds three consumers (banding +
-    both verify legs) and Catalyst would otherwise re-execute the scan
-    + Arrow kernel per consumer.
+    shingle-hash sets join back once for the exact Jaccard check.
     """
     assert num_hashes % bands == 0, "bands must divide num_hashes"
     r = num_hashes // bands
     analysis = minhash_analysis(
         df, text_col, id_col, num_hashes, shingle_n, segment_cjk=segment_cjk
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     buckets = analysis.select(
         "id", F.explode(_band_buckets(F.col("sig"), bands, r)).alias("bb")
     ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
@@ -858,12 +846,12 @@ def setsim_prefix_join(
         raise ValueError("threshold must satisfy 0 < num/den <= 1")
     num, den = int(threshold_num), int(threshold_den)
 
-    # Shingle ARRAYS, one row per doc, persisted (r16 reshape).  The
+    # Shingle ARRAYS, one row per doc (r16 reshape).  The
     # former shape exploded to (id, token) rows first and then rebuilt
     # the per-doc arrays with a collect_list groupBy — paying an extra
     # id-keyed exchange of every token just to recover what the
     # shingle transform already produced.  Keeping the array form as
-    # the persisted root gives sizes (F.size) and both verify legs
+    # the root gives sizes (F.size) and both verify legs
     # with NO exchange at all; only dfreq/ranked explode it.  On a
     # small input the id-keyed raw-text spread up front (a)
     # parallelizes the shingle transform past however few splits the
@@ -883,7 +871,6 @@ def setsim_prefix_join(
         .select(
             "id", shingles_of_tokens(F.col("__tok"), shingle_n).alias("tok")
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     sizes = sh.select("id", F.size("tok").alias("sz"))
     toks = sh.select("id", F.explode("tok").alias("token"))
@@ -925,7 +912,7 @@ def setsim_prefix_join(
     # measured at sf0.1); this shape shuffles each pair with one array
     # per side, so verify cost is O(|cand| * doc_len), never
     # O(|cand| * doc_len) ROWS through an exchange.  Both legs read
-    # the persisted shingle arrays directly (id-partitioned, so only
+    # the shingle arrays directly (id-partitioned, so only
     # the candidate side exchanges — r16).
     aa = sh.select(
         F.col("id").alias("id_a"), F.col("tok").alias("tok_a"),
@@ -1092,15 +1079,7 @@ def substring_dup_pairs(
     Returns (id_a, id_b, shared) with id_a < id_b, ``shared`` =
     distinct verified fingerprint hashes in common.
     """
-    # persisted: BOTH sides of the self-join consume the fingerprint
-    # stream — without pinning it, the gram explode + winnow window
-    # (the dominant cost) runs twice.  Cache lifecycle: the returned
-    # DataFrame is lazy so the entry outlives this call — it evicts
-    # under LRU pressure, and a long-lived session releases it via
-    # spark.catalog.clearCache().
-    fps = winnow_fingerprints(
-        docs, id_col, text_col, k, w, with_grams=True
-    ).persist()
+    fps = winnow_fingerprints(docs, id_col, text_col, k, w, with_grams=True)
     a = fps.select(
         F.col("id").alias("id_a"), "h", F.col("gram").alias("gram_a")
     )

@@ -648,8 +648,10 @@ def _deletion_variant_rows(
     ~10x cheaper.  NULL names yield no rows (the explode of a NULL
     array drops the row, same as the expression form).
 
-    ``keep_cols`` limits which INPUT columns ride the exploded output
-    (default: all).  Everything emitted crosses the Python->JVM Arrow
+    ``keep_cols`` limits which INPUT columns ride the exploded output,
+    in the given order (default: all, in schema order); a name that is
+    not an input column raises ``ValueError``, as does a missing
+    ``name_col``.  Everything emitted crosses the Python->JVM Arrow
     boundary ~170x per input row, so a caller that only needs the id
     and block keys downstream should not ship the name with every
     variant (guide §4: pass only the columns the function needs —
@@ -662,13 +664,15 @@ def _deletion_variant_rows(
             "deletion neighborhoods support max_distance in {1, 2}; "
             f"got {max_distance} (C(L, k) variants per row explodes past 2)"
         )
+    if name_col not in df.columns:
+        raise ValueError(f"name_col {name_col!r} not in the input")
     if keep_cols is None:
         fields = df.schema.fields
     else:
         missing = [c for c in keep_cols if c not in df.columns]
         if missing:
             raise ValueError(f"keep_cols not in the input: {missing}")
-        fields = [f for f in df.schema.fields if f.name in set(keep_cols)]
+        fields = [df.schema[c] for c in dict.fromkeys(keep_cols)]
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in fields
     ) + ", _variant string"
@@ -1048,26 +1052,17 @@ def ordered_budget_select(
     caller picked a constant ranking).  Returns the input columns,
     filtered; no ordering guarantee (order downstream if needed).
 
-    The input is PERSISTED (memory-and-disk): it has three consumers
-    — the range aggregate, the per-bucket totals, and the final
-    filtered join — and without pinning it each consumer would rerun
-    the caller's upstream plan (at 100 TB: three extra full scans of
-    whatever computed the ranking).  Callers pass the narrow
-    projection (id, order, weight[, group]), not the wide table.
-    Cache lifecycle: the selection is lazy, so the operator cannot
-    unpersist before the caller materializes; Spark's CacheManager
-    dedupes identical plans (repeat invocations on the same input
-    reuse one entry, bounded per distinct (input, params)), entries
-    evict under LRU pressure, and a long-lived session can release
-    them explicitly via ``spark.catalog.clearCache()``.
-    The range/prefix sides are broadcast only in the ungrouped form;
-    grouped, they are |groups| x n_buckets rows and the join planner
-    (AQE) picks broadcast vs shuffle from the actual size.
+    The input has three consumers — the range aggregate, the
+    per-bucket totals, and the final filtered join — so callers pass
+    the narrow projection (id, order, weight[, group]), not the wide
+    table.  The range/prefix sides are broadcast only in the ungrouped
+    form; grouped, they are |groups| x n_buckets rows and the join
+    planner (AQE) picks broadcast vs shuffle from the actual size.
     """
     gcols = list(group_cols or [])
     df = df.filter(
         F.col(order_col).isNotNull() & F.col(weight_col).isNotNull()
-    ).persist()
+    )
     lo_hi = df.groupBy(*gcols).agg(
         F.min(order_col).alias("__lo"), F.max(order_col).alias("__hi")
     ) if gcols else df.agg(
@@ -1194,14 +1189,10 @@ def distributed_ntile(
     gracefully: a hot equi-width bucket serializes only ITS rows
     through one window partition (worst case all-equal values -> one
     bucket -> the global-window plan you started with).
-
-    The input is persisted (three consumers: range agg, bucket counts,
-    final rank join) — same lifecycle contract as
-    :func:`ordered_budget_select`.
     """
     if n < 1:
         raise ValueError(f"NTILE needs n >= 1, got {n}")
-    df = df.filter(F.col(order_col).isNotNull()).persist()
+    df = df.filter(F.col(order_col).isNotNull())
     lo_hi = df.agg(
         F.min(order_col).alias("__lo"), F.max(order_col).alias("__hi")
     )

@@ -127,14 +127,10 @@ def bm25_from_index(
     # exchange itself shrinks to searched-term tokens.  df_t then counts
     # over the filtered slice (identical values: postings are unique per
     # (doc, term)), which deletes the r16 full-VOCABULARY groupBy that
-    # aggregated every term to keep a handful (guide §2.3).  Persisted:
-    # the slice feeds BOTH the df_t count and the scoring join — without
-    # the pin each leg re-runs the corpus tokenize+explode+groupBy
-    # (bounded by |query terms| x docs, never corpus size; released via
-    # LRU / spark.catalog.clearCache()).
+    # aggregated every term to keep a handful (guide §2.3).
     p_searched = postings.join(
         F.broadcast(q.select("term").distinct()), on="term", how="left_semi"
-    ).persist()
+    )
     dft_searched = p_searched.groupBy("term").agg(F.count(F.lit(1)).alias("dft"))
     scored_terms = (
         p_searched.join(F.broadcast(q), on="term")

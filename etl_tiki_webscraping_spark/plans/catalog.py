@@ -143,39 +143,40 @@ def _driver_covered() -> "frozenset[str]":
 # automatically stalest-first, so forgetting an entry costs at most
 # ~ceil(catalog/50) rounds of evidence age, never unbounded drift.
 _DRIVER_FRESH = frozenset({
-    # r17 code changes (optimization round — every reshaped query path
-    # re-verifies against the driver's oracle next):
-    #   - bm25_from_index: dft from the semi-filtered postings slice +
-    #     shared persisted slice (operators/retrieval.py)
+    # every query whose plan ran through a session-cache pin that is
+    # now deleted (operators return lazy frames and never pin):
+    #   - bm25_from_index: the searched-postings slice
     "bm25_search",
     "bm25_search_cjk",
     "hybrid_search_rrf",
     "incremental_postings_bm25",
-    #   - ivf_pq_topk: fused assign+encode Arrow kernel, single collects
-    "knn_ivf_pq",
-    #   - jaccard_on_pairs: conditional id-spread of the shingle base
-    "ngram_jaccard_pairs",
-    "dedup_cluster_components",
-    "crosscorpus_neardup_lsh",  # + persisted signature table
-    "golden_record_survivorship",
-    #   - doc_bigram_logprob: persisted token stream (one exchange)
+    #   - minhash_candidate_pairs / minhash_duplicate_edges: the capped
+    #     bucket table and the signature analysis
+    "lsh_pair_quality",
+    "dedup_minhash_lsh",
+    "dedup_minhash_cjk",
+    "dedup_minhash_clusters",
+    "corpus_pipeline_neardup",
+    "crosscorpus_neardup_lsh",  # its own signature-table pin
+    #   - setsim_prefix_join: the shingle arrays
+    "setsim_prefix_join",
+    #   - substring_dup_pairs: the gram-carrying fingerprint stream
+    "substring_dup_spans",
+    #   - bigram_pmi: the bigram count table
+    "token_bigram_pmi",
+    #   - ordered_budget_select / distributed_ntile: the filtered input
+    "token_budget_cutoff",
+    "token_budget_per_lang",
+    "histogram_equi_depth",
+    "perplexity_terciles",  # + its Kneser-Ney bigram/type pins
+    #   - the query-level pins: the bigram LM token/bigram/count
+    #     tables and corpus_pipeline_v3's extraction barrier
     "doc_bigram_logprob",
-    #   - run_available_now_to_memory: trailing no-data micro-batch
-    #     disabled at the five safe call sites
-    "streaming_windowed_counts",
-    "streaming_dedup_ids",
-    "streaming_enriched_counts",
-    "streaming_stream_stream_join",
-    "streaming_stream_stream_left_outer",
-    #   - conditional (under-split-only) media repartition
-    "image_dedup_ahash",
-    #   - scd2_from_change_feed: coalesced checkpoints + lazy last commit
+    "doc_kneser_ney_logprob",
+    "corpus_pipeline_v3",
+    #   - scd2_from_change_feed / scd2_backfill_from_feed: the feed
     "scd2_dim_from_feed",
-    #   - _deletion_variant_rows keep_cols payload trim
-    "entity_match_blocked",
-    "entity_resolution_clusters",
-    #   - pagerank: lazy per-iteration checkpoint
-    "graph_pagerank",
+    "scd2_backfill_from_feed",
 })
 
 
@@ -4175,13 +4176,9 @@ def q_crosscorpus_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.conv(F.substring(F.md5(F.col("id").cast("string")), 1, 8), 16, 10).cast("bigint") % 100
         < 70
     )
-    # persisted (r17): the bucket table splits into a NEW and an OLD
-    # side below, and each side is an independent consumer — unpinned,
-    # the Arrow signature kernel (the dominant cost) re-ran per side.
-    # One kernel pass total now; released via LRU / clearCache.
     sig = minhash_analysis(docs, "text", "doc_id").select(
         "id", "sig", is_old.alias("__is_old")
-    ).persist()
+    )
     buckets = sig.select(
         "id", "__is_old", F.explode(_band_buckets(F.col("sig"), 16, 4)).alias("bb")
     ).select("id", "__is_old", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
@@ -6088,24 +6085,14 @@ def _register_corpus_pipeline_v3() -> None:
             F.lit('</p><!-- crawler --><div class="footer">'
                   "&amp;copy; Example &nbsp;Corp</div></body></html>"),
         )
-        # PERSIST the extraction projection: Catalyst collapses a
-        # projection into the consuming filter, re-inlining the big
-        # regexp chain once per reference — mojibake_hits alone
-        # references `clean` 9 times, so the unpinned plan evaluated
-        # the whole extraction ~9x per row (measured: 4.0 s for the
-        # screen vs 0.4 s for the extraction itself), and the chain
-        # additionally feeds four downstream executions (blocklist
-        # scan + anti-join, dedup election + semi join).  The persist
-        # is the projection barrier; at 100 TB the same role is played
-        # by checkpointing the extracted corpus to parquet once.
         cleaned = docs.select(
             "doc_id", "lang", html_to_text(page).alias("clean")
-        ).persist()
+        )
         screened = cleaned.filter(mojibake_hits(F.col("clean")) == 0)
         kept = blocklist_filter(
             screened, _BLOCKLIST_TERMS, text_col="clean", id_col="doc_id",
             max_hits=1,
-        ).persist()
+        )
         deduped = exact_dedup(kept, "clean", "doc_id")
         scored = deduped.select(
             "doc_id",
@@ -12510,12 +12497,6 @@ def q_doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitioning (no exploded-token exchange), and the tokenizer
     # parallelizes past the single scan split
     docs = spread(docs.select("doc_id", "text"), "doc_id")
-    # persisted (r17): the token stream has TWO independent consumers —
-    # the bigram build and the vocabulary-size count.  Unpinned, the
-    # vsize leg re-scans and re-tokenizes the whole corpus through its
-    # OWN copy of the doc_id exchange (exchange reuse cannot fire
-    # across the bigram cache boundary), i.e. the raw-text exchange was
-    # paid twice (VERDICT r16 #3).  One tokenize pass total now.
     toks = docs.select(
         "doc_id",
         F.posexplode(
@@ -12524,28 +12505,16 @@ def q_doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda t: t != "",
             )
         ).alias("pos", "term"),
-    ).persist()
+    )
     doc_w = Window.partitionBy("doc_id").orderBy("pos")
-    # persisted: the bigram stream has TWO consumers (the count build
-    # and the scoring join) — without pinning it, the explode + lag
-    # window would rerun per consumer (two extra full passes at scale)
-    bigrams = (
-        toks.select(
-            "doc_id",
-            F.lag("term").over(doc_w).alias("prev"),
-            F.col("term").alias("cur"),
-        )
-        .filter(F.col("prev").isNotNull())
-        .persist()
-    )
-    # persisted too: c2 (bigram-TYPE cardinality, tiny) feeds both the
-    # context totals and the scoring lookup — one combined shuffle of
-    # the stream instead of two
-    c2 = (
-        bigrams.groupBy("prev", "cur")
-        .agg(F.count(F.lit(1)).alias("n2"))
-        .persist()
-    )
+    bigrams = toks.select(
+        "doc_id",
+        F.lag("term").over(doc_w).alias("prev"),
+        F.col("term").alias("cur"),
+    ).filter(F.col("prev").isNotNull())
+    # c2 (bigram-TYPE cardinality, tiny) feeds both the context totals
+    # and the scoring lookup
+    c2 = bigrams.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("n2"))
     c1 = c2.groupBy("prev").agg(F.sum("n2").alias("n1"))
     vsize = toks.agg(F.countDistinct("term").alias("vsize"))
     lookup = (
@@ -12924,7 +12893,7 @@ _KN_SCORE_CTES = r"""
         "Self-scored corpus, so every doc bigram has c(vw) >= 1 and "
         "the discounted term never hits ln(0).  Same plan shape as "
         "doc_bigram_logprob: one lag window per doc, all statistics "
-        "cascade from the persisted bigram-TYPE table (context "
+        "cascade from the bigram-TYPE table (context "
         "totals + continuation fan-outs are two aggregates of c2, "
         "never corpus re-scans; the type total is a 1-row broadcast), "
         "one (prev,cur)-keyed scoring join.  Per-bigram ln quantizes "
@@ -12960,23 +12929,12 @@ def _kn_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("pos", "term"),
     )
     doc_w = Window.partitionBy("doc_id").orderBy("pos")
-    # persisted: two consumers (count build + scoring join) — the
-    # doc_bigram_logprob precedent; lifecycle: LRU-evicted, released
-    # via spark.catalog.clearCache()
-    bigrams = (
-        toks.select(
-            "doc_id",
-            F.lag("term").over(doc_w).alias("prev"),
-            F.col("term").alias("cur"),
-        )
-        .filter(F.col("prev").isNotNull())
-        .persist()
-    )
-    c2 = (
-        bigrams.groupBy("prev", "cur")
-        .agg(F.count(F.lit(1)).alias("n2"))
-        .persist()
-    )
+    bigrams = toks.select(
+        "doc_id",
+        F.lag("term").over(doc_w).alias("prev"),
+        F.col("term").alias("cur"),
+    ).filter(F.col("prev").isNotNull())
+    c2 = bigrams.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("n2"))
     c1 = c2.groupBy("prev").agg(
         F.sum("n2").alias("n1"), F.count(F.lit(1)).alias("nv")
     )

