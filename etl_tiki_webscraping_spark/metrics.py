@@ -5,9 +5,9 @@ stages and operators.
 and then reads, from Spark's status store and executed plan, what that
 work cost: jobs, stages and tasks, executor run and CPU time, shuffle
 and spill bytes, the Python Arrow boundary and the codegen pipelines,
-plus JVM GC time.  The keys are the per-layer names of
-``BENCHMARK.json``, so bench records and ``perfbench`` traces read
-alike.
+JVM GC time, and the micro-batch progress of any stream it ran.  The
+keys are the per-layer names of ``BENCHMARK.json``, so bench records
+and ``perfbench`` traces read alike.
 
 The status store is read per job and stage (``job``,
 ``lastStageAttempt``), never as a whole ``stageList``, so the cost
@@ -33,19 +33,45 @@ _GROUP_PROPS = (
 )
 
 
+# micro-batch phases of ``StreamingQueryProgress.durationMs``, summed
+_PHASES = (
+    ("streaming.add_batch_s", "addBatch"),
+    ("streaming.query_planning_s", "queryPlanning"),
+    ("streaming.wal_commit_s", "walCommit"),
+)
+# state-operator fields taken at their peak over the micro-batches
+_PEAKS = (
+    ("streaming.state_rows", "numRowsTotal"),
+    ("streaming.state_memory_bytes", "memoryUsedBytes"),
+)
+_COUNTS = ("streaming.batches", "streaming.state_rows", "streaming.state_memory_bytes")
+
+
 class _StreamRuns(StreamingQueryListener):
-    """Collects the run ids of streams started during a measured call:
+    """Collects the run ids of streams started during a measured call —
     micro-batch jobs run on the stream's own thread under its run id as
-    job group, not under the caller's group."""
+    job group, not under the caller's group — and totals their
+    micro-batch progress: batch count, phase durations and state-store
+    commit time summed, state rows and memory at their peak."""
 
     def __init__(self):
         self.run_ids: list = []
+        self.totals: defaultdict = defaultdict(float)
 
     def onQueryStarted(self, event):
         self.run_ids.append(str(event.runId))
 
     def onQueryProgress(self, event):
-        pass
+        p = event.progress
+        if str(p.runId) not in self.run_ids:
+            return
+        d, ops, t = p.durationMs, p.stateOperators or [], self.totals
+        t["streaming.batches"] += 1
+        for key, phase in _PHASES:
+            t[key] += d.get(phase, 0) / 1e3
+        t["streaming.state_commit_s"] += sum(o.commitTimeMs for o in ops) / 1e3
+        for key, field in _PEAKS:
+            t[key] = max(t[key], sum(getattr(o, field) for o in ops))
 
     def onQueryIdle(self, event):
         pass
@@ -138,7 +164,11 @@ def measure(spark: SparkSession, label: str, fn):
     ``operators.python_total_s``; ``jvm.gc_s``; and
     ``spark.fixed_overhead_share`` = 1 - executor_run_s /
     (defaultParallelism x wall_s), the share of the call's core-seconds
-    no task was running in.  Executor CPU is the JVM's; Python workers'
+    no task was running in.  When ``fn`` ran a stream on ``spark``:
+    ``streaming.batches``, the summed ``streaming.add_batch_s``/
+    ``query_planning_s``/``wal_commit_s``/``state_commit_s`` and the
+    peak ``streaming.state_rows``/``state_memory_bytes`` of its
+    micro-batches.  Executor CPU is the JVM's; Python workers'
     time shows only where a plan node reports ``pythonTotalTime``.
     """
     sc = spark.sparkContext
@@ -155,9 +185,10 @@ def measure(spark: SparkSession, label: str, fn):
     finally:
         for k, v in saved.items():
             sc.setLocalProperty(k, v)
+        # a stream's last progress events may still be queued
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
         spark.streams.removeListener(streams)
     gc_s = (_gc_ms(spark) - gc0) / 1e3
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
 
     out: defaultdict = defaultdict(float)
     jobs = [j for g in [group, *streams.run_ids] for j in sc.statusTracker().getJobIdsForGroup(g)]
@@ -180,4 +211,6 @@ def measure(spark: SparkSession, label: str, fn):
         totals[key] = round(out[key], 3)
     totals["jvm.gc_s"] = round(gc_s, 3)
     totals["spark.fixed_overhead_share"] = round(share, 3)
+    for key, v in streams.totals.items():
+        totals[key] = int(v) if key in _COUNTS else round(v, 3)
     return value, totals

@@ -69,21 +69,24 @@ def cap_bucket_membership(
     bands/tables they hash into.  Exactly-identical texts are caught by
     :func:`exact_dedup` regardless.
 
-    Plan shape: a partial-aggregated count on the bucket key plus a
-    co-partitioned anti join — no extra wide shuffle beyond the one the
-    self-join already pays.  Pass ``cap=None`` to disable.  Use
+    Plan shape: one ``count(*) over (partition by keys)`` window and a
+    filter.  The window's exchange on the bucket key is the one the
+    self-join needs, so both join sides reuse it and the rows upstream
+    (a signature kernel) are computed once.  Rows with a NULL key are
+    never capped: they cannot join.  Pass ``cap=None`` to disable.  Use
     :func:`hot_buckets` to observe what a cap would drop.
     """
     if cap is None:
         return buckets
     keys = list(bucket_keys)
-    hot = (
-        buckets.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__bucket_n"))
-        .filter(F.col("__bucket_n") > cap)
-        .select(*keys)
+    keep = F.col("__bucket_n") <= cap
+    for k in keys:
+        keep = keep | F.col(k).isNull()
+    return (
+        buckets.withColumn("__bucket_n", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+        .filter(keep)
+        .drop("__bucket_n")
     )
-    return buckets.join(hot, on=keys, how="left_anti")
 
 
 def hot_buckets(

@@ -143,6 +143,24 @@ def _driver_covered() -> "frozenset[str]":
 # automatically stalest-first, so forgetting an entry costs at most
 # ~ceil(catalog/50) rounds of evidence age, never unbounded drift.
 _DRIVER_FRESH = frozenset({
+    # the streaming runner sizes its state store from its input (the
+    # state-partition count is frozen into each run's checkpoint)
+    "streaming_windowed_counts",
+    "streaming_dedup_ids",
+    "streaming_enriched_counts",
+    "streaming_stateful_sessions",
+    "streaming_stream_stream_join",
+    "streaming_stream_stream_left_outer",
+    "streaming_dp_noisy_counts",
+    # the LSH bucket cap is one window count instead of an anti join
+    "dedup_minhash_lsh",
+    "dedup_minhash_cjk",
+    "dedup_minhash_clusters",
+    "dedup_simhash",
+    "dedup_embedding_cosine",
+    "corpus_pipeline_neardup",
+    "crosscorpus_neardup_lsh",
+    "lsh_pair_quality",
     # every query whose plan ran through a session-cache pin that is
     # now deleted (operators return lazy frames and never pin):
     #   - bm25_from_index: the searched-postings slice
@@ -152,12 +170,8 @@ _DRIVER_FRESH = frozenset({
     "incremental_postings_bm25",
     #   - minhash_candidate_pairs / minhash_duplicate_edges: the capped
     #     bucket table and the signature analysis
-    "lsh_pair_quality",
-    "dedup_minhash_lsh",
-    "dedup_minhash_cjk",
-    "dedup_minhash_clusters",
-    "corpus_pipeline_neardup",
-    "crosscorpus_neardup_lsh",  # its own signature-table pin
+    #     (lsh_pair_quality, the dedup_minhash family,
+    #     corpus_pipeline_neardup, crosscorpus_neardup_lsh: listed above)
     #   - setsim_prefix_join: the shingle arrays
     "setsim_prefix_join",
     #   - substring_dup_pairs: the gram-carrying fingerprint stream
@@ -3943,18 +3957,12 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type") == "purchase"
     )
     joined = stream_stream_purchase_views(views, purchases)
-    # 4 shuffle partitions, not the streaming default 8: a
-    # stream-stream join keeps FOUR state stores per partition, so
-    # per-micro-batch store overhead dominates at fixture scale —
-    # measured sp=4 ~15% faster than sp=8 at sf0.1 (r11 tuning, the
-    # r3 windowed-counts exercise applied to the join)
     # no_data_batches=False (r17): an INNER stream-stream join emits a
     # pair in the micro-batch where the later side arrives; the trailing
     # watermark-only round only evicts state (no emission) and costs a
-    # full 4-store x 4-partition reload/commit cycle + re-plan (~1 s)
+    # full 4-store reload/commit cycle per state partition + re-plan (~1 s)
     return run_available_now_to_memory(
-        joined, "stream_stream_join", "append", shuffle_partitions=4,
-        no_data_batches=False,
+        joined, "stream_stream_join", "append", no_data_batches=False
     )
 
 
@@ -3998,16 +4006,13 @@ def q_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = stream_stream_purchase_views(
         side("view"), side("purchase"), how="leftOuter"
     )
-    # sp=4: see streaming_stream_stream_join — four state stores per
-    # partition make per-batch store overhead the cost driver here
     # no_data_batches=False (r17): the LOJ's tail is flushed by the TWO
     # trailing heartbeat DATA batches (the 1st advances the watermark
     # past every view's expiry — margin 1h+10min+120s — and the 2nd's
     # processing emits the evicted null-extensions), so the trailing
     # watermark-only round emits nothing; oracle-verified
     res = run_available_now_to_memory(
-        joined, "stream_stream_loj", "append", shuffle_partitions=4,
-        no_data_batches=False,
+        joined, "stream_stream_loj", "append", no_data_batches=False
     )
     return res.filter(F.col("user_id") >= 0)
 

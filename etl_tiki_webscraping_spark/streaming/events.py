@@ -34,8 +34,10 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import threading
 from collections.abc import Sequence
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -191,11 +193,72 @@ def read_events_stream_multibatch(
 _STAGED_STREAM_DIRS: dict[tuple[str, int, str], str] = {}
 
 
+_SP_KEY = "spark.sql.shuffle.partitions"
+_ND_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
+# serializes the set/start/restore of the caller's session conf: two
+# runner threads on one session must not start under each other's values
+_START_LOCK = threading.Lock()
+
+
+def _source_bytes(session: SparkSession, relation) -> int | None:
+    """Bytes under the ``path`` of a file-source streaming leaf, or None
+    for any other source and for a path that cannot be listed."""
+    jvm = session._jvm
+    source = relation.dataSource()
+    file_format = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.execution.datasources.FileFormat"
+    )
+    path = source.options().get("path")
+    if not file_format.isAssignableFrom(source.providingClass()) or path.isEmpty():
+        return None
+    try:
+        root = jvm.org.apache.hadoop.fs.Path(path.get())
+        fs = root.getFileSystem(session._jsparkSession.sessionState().newHadoopConf())
+        return int(fs.getContentSummary(root).getLength())
+    except Py4JJavaError:  # a glob path, a missing dir
+        return None
+
+
+def _state_partitions(stream: DataFrame) -> int:
+    """State-store partitions for ``stream``, sized from its input.
+
+    ``ceil(bytes / spark.sql.files.maxPartitionBytes)``, at least 1 and
+    at most the session's ``spark.sql.shuffle.partitions``, where bytes
+    are everything under the ``path`` of each file-source leaf of the
+    analyzed plan (a ``pathGlobFilter`` can only make that an
+    overestimate).  A plan holding a Python state kernel gets at least
+    ``defaultParallelism`` partitions (:func:`spread`'s small-input
+    rule: one partition would run the kernel serially).  A source that
+    cannot be sized (a rate or Kafka source, a glob path) keeps the
+    session value.  The optimizer's size estimate cannot stand in: a
+    streaming leaf reports ``sizeInBytes`` = 2^63-1.
+    """
+    session = stream.sparkSession
+    n = int(session.conf.get(_SP_KEY))
+    total, sized, python_state = 0, True, False
+    stack = [stream._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        python_state |= name == "FlatMapGroupsInPandasWithState"
+        if name.startswith("StreamingRelation"):  # V2 leaves: never sized
+            size = _source_bytes(session, node) if name == "StreamingRelation" else None
+            sized &= size is not None
+            total += size or 0
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    if sized:
+        split_bytes = session._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        n = min(n, max(1, -(-total // split_bytes)))
+    if python_state:
+        n = max(n, session.sparkContext.defaultParallelism)
+    return n
+
+
 def run_available_now_to_memory(
     stream: DataFrame,
     query_name: str,
     output_mode: str,
-    shuffle_partitions: int | None = 8,
     no_data_batches: bool = True,
 ) -> DataFrame:
     """Execute a streaming plan over all currently-available input
@@ -204,18 +267,18 @@ def run_available_now_to_memory(
     return the result table.  The run's checkpoint is a scratch dir,
     removed once the query has terminated.
 
-    ``shuffle_partitions`` sizes the STATE STORE: a streaming query
-    instantiates one state-store partition per shuffle partition per
-    trigger, so the setting is a real knob, not a tuning nicety —
-    oversized on a small stream it pays empty-task overhead every
-    micro-batch; undersized at scale it bounds parallelism (the value
-    is frozen into the checkpoint).  Default 8 suits the fixture
-    streams; production picks per-stream capacity and keeps it fixed
-    for the checkpoint's lifetime.  Restored after the run.
+    The STATE STORE is sized from the input: a streaming query keeps
+    one state-store partition per shuffle partition and pays each one's
+    load/commit every micro-batch, and the count is frozen into the
+    checkpoint.  The runner picks ``ceil(input bytes /
+    spark.sql.files.maxPartitionBytes)`` partitions, at most the
+    session's ``spark.sql.shuffle.partitions`` and at least
+    ``defaultParallelism`` for a Python state kernel; an input it
+    cannot size keeps the session value (:func:`_state_partitions`).
 
     ``no_data_batches=False`` disables the trailing watermark-only
-    micro-batch (``spark.sql.streaming.noDataMicroBatches.enabled``;
-    restored after the run).  Each no-data round costs a full
+    micro-batch (``spark.sql.streaming.noDataMicroBatches.enabled``).
+    Each no-data round costs a full
     state-store reload/commit cycle across every store partition plus
     an incremental re-plan (~1 s at fixture scale, r16 measurement) and
     exists ONLY to emit results an advancing watermark unlocks after
@@ -226,31 +289,40 @@ def run_available_now_to_memory(
     append sinks whose tail is flushed by trailing DATA batches (the
     left-outer join's heartbeat spacers).  Queries whose tail emission
     NEEDS a watermark-only round must keep the default.
+
+    Both settings reach the stream through the caller's session: a
+    stream clones its session's conf inside ``start()``, so the runner
+    sets them only across ``start()``, under a module lock, and
+    restores them before the run; no other query ever sees them after
+    ``start()`` returns.  The stream stays on the caller's session
+    because streaming listeners are per session: a stream on
+    ``spark.newSession()`` would be invisible to
+    :func:`etl_tiki_webscraping_spark.metrics.measure`.
     """
     session = stream.sparkSession
-    prev = session.conf.get("spark.sql.shuffle.partitions")
-    _ND_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_nd = session.conf.get(_ND_KEY)
-    if shuffle_partitions is not None:
-        session.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    if not no_data_batches:
-        session.conf.set(_ND_KEY, "false")
+    n = _state_partitions(stream)
     ckpt = tempfile.mkdtemp(prefix=f"ckpt-{query_name}-")
+    writer = (
+        stream.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(query_name)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", ckpt)
+    )
     q = None
     try:
-        q = (
-            stream.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(query_name)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
+        with _START_LOCK:
+            prev = {k: session.conf.get(k) for k in (_SP_KEY, _ND_KEY)}
+            session.conf.set(_SP_KEY, str(n))
+            if not no_data_batches:
+                session.conf.set(_ND_KEY, "false")
+            try:
+                q = writer.start()
+            finally:
+                for k, v in prev.items():
+                    session.conf.set(k, v)
         q.awaitTermination()
     finally:
-        if shuffle_partitions is not None:
-            session.conf.set("spark.sql.shuffle.partitions", prev)
-        session.conf.set(_ND_KEY, prev_nd)
         if q is not None:
             q.stop()  # no-op once terminated
         # the memory sink never reads its checkpoint back

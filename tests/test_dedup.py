@@ -597,3 +597,56 @@ def test_minhash_cjk_pair_caught_only_with_segment_cjk(spark):
     )
     survivors = sorted(r["doc_id"] for r in aware.collect())
     assert survivors == [0, 2]  # doc 1 dropped as near-dup of doc 0
+
+
+def test_bucket_cap_keeps_null_keys_uncapped(spark):
+    """A NULL bucket key never joins, so the cap leaves its rows alone
+    however many share it; a non-NULL bucket over the cap goes whole."""
+    from etl_tiki_webscraping_spark.operators.dedup import cap_bucket_membership
+
+    rows = (
+        [(i, 0, None) for i in range(5)]  # 5 NULL buckets, over a cap of 3
+        + [(i, 0, 7) for i in range(10, 14)]  # 4 members: hot
+        + [(i, 0, 8) for i in range(20, 23)]  # 3 members: at the cap
+        + [(30, None, 7)]  # NULL band
+    )
+    buckets = spark.createDataFrame(rows, "id bigint, band int, bucket bigint")
+    kept = sorted(r["id"] for r in cap_bucket_membership(buckets, ["band", "bucket"], 3).collect())
+    assert kept == [0, 1, 2, 3, 4, 20, 21, 22, 30]
+
+
+def _unreused_python_evals(df) -> int:
+    """ArrowEvalPython nodes of ``df``'s final executed plan, not
+    counting those under a reused exchange (they ran once)."""
+    n, stack = 0, [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            stack.append(node.plan())
+            continue
+        if name == "ReusedExchange":
+            continue
+        n += name == "ArrowEvalPython"
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return n
+
+
+def test_capped_minhash_edges_run_the_signature_kernel_twice(spark):
+    """With a bucket over the cap, the signature kernel runs once for
+    the banding (both self-join sides reuse the cap's exchange) and once
+    for the verify leg's shingle-hash sets."""
+    from etl_tiki_webscraping_spark.operators.dedup import minhash_duplicate_edges
+
+    boiler = "accept cookies to continue browsing this site and agree to our terms"
+    docs = DOCS + [(i, boiler) for i in range(10, 15)]  # 5 members > cap 3
+    df = spark.createDataFrame(docs, "doc_id bigint, text string")
+    edges = minhash_duplicate_edges(df, "text", "doc_id", bucket_cap=3)
+    got = {(r["id_a"], r["id_b"]) for r in edges.collect()}
+    assert (1, 2) in got
+    assert not any(a >= 10 for a, _ in got)  # the boilerplate buckets were dropped
+    assert _unreused_python_evals(edges) <= 2

@@ -73,6 +73,36 @@ def test_streaming_micro_batch_jobs_are_counted(spark, tmp_path):
     assert sum(r["count"] for r in out.collect()) == 20
 
 
+def test_streaming_progress_is_totalled(spark, tmp_path):
+    """A stream's micro-batch progress lands under the streaming.*
+    layer names: batches and phase times summed, state rows at their
+    peak; a call that runs no stream reports none of them."""
+    src = str(tmp_path / "in")
+    for i in range(2):
+        spark.range(i * 10, i * 10 + 10).coalesce(1).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema("id long")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+        .groupBy((F.col("id") % 3).alias("k"))
+        .count()
+    )
+    _, totals = measure(
+        spark,
+        "stream progress",
+        lambda: run_available_now_to_memory(
+            stream, "measure_progress", "complete", no_data_batches=False
+        ),
+    )
+    assert totals["streaming.batches"] == 2
+    assert totals["streaming.state_rows"] == 3  # one row per key, at the peak
+    assert totals["streaming.state_memory_bytes"] > 0
+    assert totals["streaming.add_batch_s"] > 0 and totals["streaming.wal_commit_s"] > 0
+    assert totals["streaming.query_planning_s"] > 0 and totals["streaming.state_commit_s"] >= 0
+    _, plain = measure(spark, "no stream", lambda: spark.range(3).collect())
+    assert not any(k.startswith("streaming.") for k in plain)
+
+
 def test_callers_job_group_is_restored_and_errors_propagate(spark):
     sc = spark.sparkContext
 

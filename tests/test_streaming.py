@@ -4,11 +4,14 @@ windowed aggregation (SURVEY.md §2.10)."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import tempfile
+import threading
 
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from etl_tiki_webscraping_spark.streaming.events import (
     foreach_batch_upsert,
@@ -79,6 +82,119 @@ def test_memory_run_leaves_no_checkpoint_dir(spark, tmp_path):
     out = run_available_now_to_memory(stream, "ckpt_cleanup_counts", "complete")
     assert ckpt_dirs() == before
     assert out.count() == 2
+
+
+class _Progress(StreamingQueryListener):
+    """Per query name: each micro-batch's state-partition counts, and
+    the caller's session conf as read while the batch was reported."""
+
+    def __init__(self, spark):
+        self.spark = spark
+        self.parts: dict = {}
+        self.conf: list = []
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        p = event.progress
+        self.parts.setdefault(p.name, []).extend(o.numShufflePartitions for o in p.stateOperators)
+        self.conf.append(tuple(self.spark.conf.get(k) for k in RUNNER_CONF))
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        pass
+
+
+RUNNER_CONF = ("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled")
+
+
+@contextlib.contextmanager
+def _progress(spark):
+    listener = _Progress(spark)
+    spark.streams.addListener(listener)
+    try:
+        yield listener
+    finally:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        spark.streams.removeListener(listener)
+
+
+def _fixture_counts(spark, tmp_path):
+    src = _write_batches(tmp_path, "agg-in", [ROWS[:2], ROWS[2:]])
+    stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").json(src)
+    return stream.groupBy("event_type").count()
+
+
+def _rate_counts(spark):
+    """A source the runner cannot size: one 30-row micro-batch."""
+    stream = spark.readStream.format("rate-micro-batch").option("rowsPerBatch", 30).load()
+    return stream.groupBy((F.col("value") % 3).alias("k")).count()
+
+
+def test_runner_conf_is_never_seen_by_the_callers_session(spark, tmp_path):
+    """The runner sets the state-partition count and the no-data switch
+    only across ``start()``: while the stream runs, the caller's session
+    reads its own values."""
+    own = tuple(spark.conf.get(k) for k in RUNNER_CONF)
+    with _progress(spark) as seen:
+        out = run_available_now_to_memory(
+            _fixture_counts(spark, tmp_path), "conf_probe", "complete", no_data_batches=False
+        )
+    assert len(seen.conf) == 2 and set(seen.conf) == {own}
+    assert tuple(spark.conf.get(k) for k in RUNNER_CONF) == own
+    assert sorted(map(tuple, out.collect())) == [("click", 1), ("view", 3)]
+
+
+def test_state_partitions_are_sized_from_the_input(spark, tmp_path):
+    """A fixture aggregate gets one state partition; a Python state
+    kernel at least one per core; a source that cannot be sized the
+    session's ``spark.sql.shuffle.partitions``."""
+    from etl_tiki_webscraping_spark.streaming.events import sessionize_stream
+
+    src = _write_batches(tmp_path, "sess-in", [[dict(r, user_id=1) for r in ROWS]])
+    schema = SCHEMA + ", user_id long"
+    with _progress(spark) as seen:
+        run_available_now_to_memory(_fixture_counts(spark, tmp_path), "sized_agg", "complete")
+        run_available_now_to_memory(
+            sessionize_stream(spark.readStream.schema(schema).json(src)), "sized_sess", "append"
+        )
+        run_available_now_to_memory(_rate_counts(spark), "sized_rate", "complete")
+    assert set(seen.parts["sized_agg"]) == {1}
+    assert min(seen.parts["sized_sess"]) >= spark.sparkContext.defaultParallelism
+    assert set(seen.parts["sized_rate"]) == {int(spark.conf.get("spark.sql.shuffle.partitions"))}
+
+
+def test_runner_threads_each_get_their_own_partition_count(spark, tmp_path):
+    """Two runs started together from two threads: each stream starts
+    under its own count, and each returns its own rows."""
+    streams = {"thread_agg": _fixture_counts(spark, tmp_path), "thread_rate": _rate_counts(spark)}
+    barrier = threading.Barrier(len(streams))
+    rows, errors = {}, []
+
+    def run(name):
+        try:
+            barrier.wait()
+            out = run_available_now_to_memory(streams[name], name, "complete")
+            rows[name] = sorted(map(tuple, out.collect()))
+        except Exception as e:  # surfaced below; a thread swallows it
+            errors.append(e)
+
+    with _progress(spark) as seen:
+        threads = [threading.Thread(target=run, args=(n,)) for n in streams]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+    assert not errors, errors
+    assert rows == {
+        "thread_agg": [("click", 1), ("view", 3)],
+        "thread_rate": [(0, 10), (1, 10), (2, 10)],
+    }
+    assert set(seen.parts["thread_agg"]) == {1}
+    assert set(seen.parts["thread_rate"]) == {int(spark.conf.get("spark.sql.shuffle.partitions"))}
 
 
 def test_streaming_dedup_drops_duplicate_event_ids(spark, tmp_path):

@@ -9,7 +9,7 @@ Checks, per query family:
 - dimension joins are broadcast, not sort-merge
 - partitioned-table reads prune via PartitionFilters
 - LSH / dedup stages shuffle bare ids (no document payloads in
-  exchange nodes)
+  exchange nodes), and the bucket cap adds no signature-kernel copy
 - top-k plans use TakeOrderedAndProject, not global sorts
 - no CartesianProduct / BroadcastNestedLoopJoin anywhere
 
@@ -72,8 +72,10 @@ def main() -> int:
     # --- LSH shuffles carry bare ids ----------------------------------------
     p = plan_of("dedup_minhash_lsh")
     exchanges = [seg for seg in p.split("\n") if "Exchange hashpartitioning" in seg]
-    check("dedup_minhash_lsh", len(exchanges) > 0 and all("text" not in e for e in exchanges),
-          "band-bucket exchanges shuffle ids/hashes, never document text")
+    check("dedup_minhash_lsh", len(exchanges) > 0 and all("text" not in e for e in exchanges)
+          and p.count("ArrowEvalPython") <= 4,
+          "band-bucket exchanges shuffle ids/hashes, never document text; "
+          "the bucket cap plans no signature kernel of its own (<= 4 ArrowEvalPython)")
 
     # --- partitioned snapshot reads prune -----------------------------------
     import tempfile
