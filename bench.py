@@ -128,7 +128,6 @@ HEADLINE = [
     ("chunk_dedup_rate", "collect"),
     ("knn_pq_adc", "count"),
     # round-8 additions
-    ("scd2_backfill_from_feed", "count"),
     ("cohort_retention", "collect"),
     ("ivm_join_from_feed", "count"),
     ("streaming_stream_stream_left_outer", "count"),
@@ -441,11 +440,11 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from etl_tiki_webscraping_spark.metrics import _gc_ms
-    from etl_tiki_webscraping_spark.session import get_spark
+    from etl_tiki_webscraping_spark.session import DEFAULT_CPUS, get_spark
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(DEFAULT_CPUS)
     warm(spark, SF_DIR)
 
     # one-time per-process fixture staging (snapshot/bucketed/SQLite/

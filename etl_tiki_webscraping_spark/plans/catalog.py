@@ -87,7 +87,8 @@ def _driver_latest_round() -> "dict[str, int]":
     non-SQL-expressible ops) count when the driver recorded a
     non-negative Spark row count.  A failed or errored row does NOT
     count — the query must rotate back in.  Queries absent from the
-    result have no driver evidence at all and lead the window."""
+    result have no driver evidence at all and lead the window; rows
+    of queries no longer registered are skipped."""
     import glob
     import json
     import os
@@ -106,7 +107,9 @@ def _driver_latest_round() -> "dict[str, int]":
         except (OSError, ValueError):
             continue
         for name, rec in recs.items():
-            if not isinstance(rec, dict):
+            spec = QUERIES.get(name)
+            # a deleted query's rows cover nothing it could rotate into
+            if not isinstance(rec, dict) or spec is None:
                 continue
             # a row counts as passing only if the VALUE hash matched
             # too — r9 recorded tpch_q9/q12 with rows_match=True but
@@ -117,7 +120,6 @@ def _driver_latest_round() -> "dict[str, int]":
                 and rec.get("rows_match", False)
                 and rec.get("hash_match") is not False
             )
-            spec = QUERIES.get(name)
             # a rows-only row only covers a query that is STILL
             # rows-only: once it gains an oracle, the oracle itself
             # needs driver evidence (the dedup_embedding_clusters
@@ -125,7 +127,7 @@ def _driver_latest_round() -> "dict[str, int]":
             rows_only_pass = (
                 rec.get("err") == "no_oracle"
                 and rec.get("spark_rows") is not None
-                and (spec is None or spec.oracle is None)
+                and spec.oracle is None
             )
             if oracle_pass or rows_only_pass:
                 latest[name] = max(latest.get(name, 0), rnd)
@@ -143,6 +145,14 @@ def _driver_covered() -> "frozenset[str]":
 # automatically stalest-first, so forgetting an entry costs at most
 # ~ceil(catalog/50) rounds of evidence age, never unbounded drift.
 _DRIVER_FRESH = frozenset({
+    # read_change_feed reads each version under its manifest schema;
+    # scd2_from_change_feed is the window build (scd2_dim_from_feed is
+    # listed below)
+    "snapshot_change_feed",
+    "cdc_replication_from_feed",
+    "ivm_rollup_from_feed",
+    "streaming_cdc_replication",
+    "ivm_join_from_feed",
     # the streaming runner sizes its state store from its input (the
     # state-partition count is frozen into each run's checkpoint)
     "streaming_windowed_counts",
@@ -188,9 +198,8 @@ _DRIVER_FRESH = frozenset({
     "doc_bigram_logprob",
     "doc_kneser_ney_logprob",
     "corpus_pipeline_v3",
-    #   - scd2_from_change_feed / scd2_backfill_from_feed: the feed
+    #   - scd2_from_change_feed: the feed
     "scd2_dim_from_feed",
-    "scd2_backfill_from_feed",
 })
 
 
@@ -7519,43 +7528,22 @@ def q_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Type-2 dimension built PURELY from the change feed (sinks/"
         "upsert.py::scd2_from_change_feed — the history-tracking CDF "
         "consumer; apply_changes is its SCD1 sibling): the shared "
-        "3-commit table's feed folds commit-by-commit — inserts/"
-        "postimages open versions via the single-shuffle scd2_apply "
-        "merge, deletes close the key's current row without a successor "
-        "(soft delete), valid_from/valid_to carry commit versions.  The "
-        "base table is never rescanned: dimension history accrues from "
-        "batch-sized change files, which is how a 100 TB fact's "
-        "dimension stays maintainable.  The oracle derives every "
-        "expected (valid_from, valid_to, is_current) row from first "
-        "principles.",
+        "3-commit table's feed is built in one pass with two key-"
+        "partitioned windows — a per-(key, commit) winner, then lag "
+        "(kind/attrs) drops no-op upserts and deletes of closed keys "
+        "and lead(version) closes each open row at the key's next kept "
+        "event; deletes close the key's current row without a successor "
+        "(soft delete), valid_from/valid_to carry commit versions.  No "
+        "driver loop or checkpoint, and the base table is never "
+        "rescanned: dimension history comes from batch-sized change "
+        "files.  The oracle derives every expected (valid_from, "
+        "valid_to, is_current) row from first principles.",
 )
 def q_scd2_from_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_tiki_webscraping_spark.sinks.upsert import scd2_from_change_feed
 
     path = _change_feed_table(spark, sf_dir)
     return scd2_from_change_feed(spark, path, keys=["o_orderkey"]).select(
-        "o_orderkey", "o_custkey", "price", "prio",
-        "valid_from", "valid_to", "is_current",
-    )
-
-
-@register(
-    "scd2_backfill_from_feed",
-    oracle=QUERIES["scd2_dim_from_feed"].oracle,
-    doc="ONE-SHOT Type-2 dimension backfill from the same change feed "
-        "(sinks/upsert.py::scd2_backfill_from_feed, VERDICT r7 ask #2): "
-        "instead of the fold's O(commits) sequential scd2_apply jobs, "
-        "two key-partitioned windows build the whole history in one "
-        "pass — lag(kind/attrs) suppresses no-op upserts and dead "
-        "deletes, lead(version) closes each open row at the key's next "
-        "kept event.  Shares scd2_dim_from_feed's first-principles "
-        "oracle, so the driver hash-proves fold/backfill parity.",
-)
-def q_scd2_backfill_from_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_tiki_webscraping_spark.sinks.upsert import scd2_backfill_from_feed
-
-    path = _change_feed_table(spark, sf_dir)
-    return scd2_backfill_from_feed(spark, path, keys=["o_orderkey"]).select(
         "o_orderkey", "o_custkey", "price", "prio",
         "valid_from", "valid_to", "is_current",
     )

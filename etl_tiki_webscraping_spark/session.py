@@ -19,7 +19,9 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# local[N] core count: SPARK_GRAFT_CPUS, else the cores this process
+# may run on (what `nproc` prints)
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def get_spark(app_name: str = "etl-tiki-webscraping-spark", shuffle_partitions: int | None = None) -> SparkSession:

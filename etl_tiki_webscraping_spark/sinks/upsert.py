@@ -213,7 +213,16 @@ def read_change_feed(
                 f"no change feed for version {v} of {target_path}: commit ran "
                 "without change_feed=True, or the snapshot was pruned by retention"
             )
-        parts.append(spark.read.parquet(d))
+        # that version's manifest schema plus the two feed columns: an
+        # inferred read runs one footer job per version
+        schema = _manifest_schema(_load_manifest(target_path, f"v{v:08d}"))
+        reader = spark.read
+        if schema is not None:
+            reader = reader.schema(
+                schema.add(CHANGE_TYPE_COL, T.StringType())
+                .add(CHANGE_VERSION_COL, T.IntegerType())
+            )
+        parts.append(reader.parquet(d))
     # additive schema evolution may widen later versions; null-fill older ones
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
@@ -2521,138 +2530,20 @@ def scd2_from_change_feed(
 ) -> DataFrame:
     """Build a Type-2 slowly-changing dimension PURELY from a snapshot
     table's change feed — the history-tracking consumer half of CDF
-    (the SCD1 half is :func:`apply_changes`): each commit's inserts and
-    update postimages fold through :func:`scd2_apply` (close the
-    changed key's current row at that commit version, open a new one),
-    and its deletes close the key's current row without opening a
-    successor (soft delete — the key simply stops being current).
-    ``valid_from`` / ``valid_to`` carry COMMIT VERSIONS, the feed's
-    native clock.
+    (the SCD1 half is :func:`apply_changes`).  Inserts and update
+    postimages open a new version of a key when its attributes change
+    (the :func:`scd2_apply` merge semantics, commit by commit); deletes
+    close the key's current row without opening a successor (soft
+    delete — the key simply stops being current).  ``valid_from`` /
+    ``valid_to`` carry COMMIT VERSIONS, the feed's native clock.  The
+    base table is never rescanned: history is built from batch-sized
+    change files.
 
-    The fold iterates committed versions in order — bounded by the
-    retained commit count, never row volume (each step is the ordinary
-    single-shuffle SCD2 merge over that commit's change rows).  A 100 TB
-    fact table's dimension history therefore accrues per batch from
-    batch-sized change files; the base table is never rescanned.
-
-    The result is lazy over the last commit: every action on the
-    returned dimension re-runs that commit's merge and re-reads its
-    change files.  A caller that runs more than one action on it
-    checkpoints or writes it first.
-    """
-    feed = read_change_feed(spark, target_path, from_version, to_version)
-    keys = list(keys)
-    data_fields = [
-        f for f in feed.schema.fields
-        if f.name not in ("_change_type", "_commit_version")
-    ]
-    attrs = (
-        list(compare_cols)
-        if compare_cols is not None
-        else [f.name for f in data_fields if f.name not in keys]
-    )
-    dim_schema = T.StructType(
-        [f for f in data_fields if f.name in keys + attrs]
-        + [
-            T.StructField("valid_from", T.IntegerType()),
-            T.StructField("valid_to", T.IntegerType()),
-            T.StructField("is_current", T.BooleanType()),
-        ]
-    )
-    dim = spark.createDataFrame([], dim_schema)
-    out_cols = [f.name for f in dim_schema.fields]
-    # one scalar pass gives the version list AND which halves each
-    # commit actually carries (r16): a delete-only commit previously
-    # still paid the full upsert merge (window dedup + join + unions +
-    # their exchanges) over ZERO update rows, and upsert-only commits
-    # paid the two delete-leg joins over zero deletes.  Skipping an
-    # empty half is an identity: scd2_apply with no updates returns
-    # hist ∪ cur unchanged, and the delete fold with no keys closes
-    # nothing.  Bounded by retained commits, not rows.
-    presence = {
-        r["v"]: (bool(r["has_ups"]), bool(r["has_dels"]))
-        for r in feed.groupBy(F.col("_commit_version").alias("v"))
-        .agg(
-            F.max(
-                F.col("_change_type").isin("insert", "update_postimage")
-            ).alias("has_ups"),
-            F.max(F.col("_change_type") == "delete").alias("has_dels"),
-        )
-        .collect()
-    }
-    versions = sorted(presence)
-    for v in versions:
-        has_ups, has_dels = presence[v]
-        batch = feed.filter(F.col("_commit_version") == v)
-        if has_ups:
-            ups = batch.filter(
-                F.col("_change_type").isin("insert", "update_postimage")
-            ).select(*keys, *attrs, F.lit(v).cast("int").alias("__eff_v"))
-            dim = scd2_apply(
-                dim, ups, keys, effective_ts_col="__eff_v", compare_cols=attrs
-            )
-        if has_dels:
-            dels = (
-                batch.filter(F.col("_change_type") == "delete")
-                .select(*keys)
-                .distinct()
-            )
-            cur = dim.filter(F.col("is_current")).select(*out_cols)
-            hist = dim.filter(~F.col("is_current")).select(*out_cols)
-            closed = (
-                cur.join(F.broadcast(dels), on=keys, how="inner")
-                .withColumn("valid_to", F.lit(v).cast("int"))
-                .withColumn("is_current", F.lit(False))
-                .select(*out_cols)
-            )
-            surviving = cur.join(dels, on=keys, how="left_anti").select(*out_cols)
-            dim = hist.unionByName(surviving).unionByName(closed)
-        # materialize the dimension per commit: the fold re-references
-        # `dim` on several join legs each iteration, so an unmaterialized
-        # lineage grows ~5x per commit (plan-analysis blowup by v4, and
-        # every leg would re-execute the whole history).  A production
-        # fold MERGEs into a stored dimension per batch for the same
-        # reason; localCheckpoint is that materialization in-session.
-        # Two r17 refinements (each measured ~1.2x on the 3-commit fold,
-        # 1.38x together):
-        #   - coalesce to defaultParallelism first: the eager checkpoint
-        #     materializes the RDD WITHOUT AQE's final-stage coalescing,
-        #     so the union-of-legs partition count compounds per commit
-        #     (65 -> 132 -> 396 measured at sf0.1) and every later
-        #     commit + the consumer's action pay hundreds of micro-tasks
-        #   - the LAST commit stays LAZY: its merge runs once inside the
-        #     consumer's first action instead of being written to the
-        #     block store and immediately read back (a full extra
-        #     dimension write+read at any scale)
-        if v != versions[-1]:
-            dim = dim.coalesce(
-                spark.sparkContext.defaultParallelism
-            ).localCheckpoint(eager=True)
-    return dim
-
-
-def scd2_backfill_from_feed(
-    spark: SparkSession,
-    target_path: str,
-    keys: Sequence[str],
-    compare_cols: Sequence[str] | None = None,
-    from_version: int = 1,
-    to_version: int | None = None,
-) -> DataFrame:
-    """One-shot Type-2 dimension BACKFILL from a change feed: the same
-    history :func:`scd2_from_change_feed` folds commit-by-commit, built
-    in a single pass with two key-partitioned windows (VERDICT r7 ask
-    #2).  The fold is the right *incremental* consumer (per-batch merge
-    into a stored dimension); replayed over a long-retention feed it is
-    O(commits) sequential driver-side Spark jobs, while this builder is
-    O(1) jobs regardless of commit count — use it to (re)construct a
-    dimension from scratch.
-
-    Construction (event-sequence form of the fold's semantics):
+    Construction, in one pass with two key-partitioned windows:
 
     1. Per (key, commit) the deterministic upsert winner is chosen with
-       the fold's exact tie-break (attrs descending — within one commit
-       ``effective_ts`` is constant).
+       :func:`scd2_apply`'s tie-break (attrs descending — within one
+       commit the effective version is constant).
     2. Events per key order by (version, kind) with upserts before
        deletes.  An upsert is a NO-OP when its predecessor event is an
        upsert with null-safe-equal attributes (dropped rows always
@@ -2669,9 +2560,8 @@ def scd2_backfill_from_feed(
     batch-sized change rows — the per-(key, commit) winner window, the
     delete distinct, and ONE key-partitioned exchange that both the
     lag and lead windows share (same partitioning + ordering) — no
-    driver loop, no checkpoint, never a rescan of the base table.
-    Output schema and values match the fold exactly (shared oracle:
-    plans/catalog.py::scd2_dim_from_feed).
+    driver loop, no checkpoint, and the same job count whatever the
+    number of commits.
 
     The result is lazy: every action on the returned dimension re-runs
     the windows and re-reads the feed's change files.  A caller that
@@ -2699,8 +2589,9 @@ def scd2_backfill_from_feed(
             F.lit(1).alias("__kind"),
         )
     )
-    # fold parity: dedup_deterministic(updates, keys, [eff desc, attrs
-    # desc]) — eff is constant within a commit, so attrs desc decides
+    # scd2_apply's tie-break: dedup_deterministic(updates, keys, [eff
+    # desc, attrs desc]) — eff is constant within a commit, so attrs
+    # desc decides
     wv = Window.partitionBy(*keys, "__v").orderBy(
         *[F.col(c).desc() for c in attrs]
     )

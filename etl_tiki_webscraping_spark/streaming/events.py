@@ -572,76 +572,6 @@ def foreach_batch_upsert(
     )
 
 
-def foreach_batch_hll_union(
-    stream: DataFrame,
-    target_path: str,
-    key_cols: Sequence[str],
-    value_col: str,
-    checkpoint_dir: str,
-) -> "DataStreamWriter":
-    """``foreachBatch`` sink maintaining a MERGEABLE-SKETCH table: each
-    micro-batch aggregates per-key HLL sketches of ``value_col`` and
-    unions them into the stored sketch table (scalar ``hll_union`` on
-    the overlap, pass-through on either side's novel keys), committed
-    through the ordinary snapshot upsert.
-
-    This is the streaming half of the sketch-rollup story: a
-    distinct-users dashboard over a 100 TB event stream never stores
-    raw ids — the state is |keys| compact sketches, every trigger's
-    work is one batch-sized aggregate plus a sketch-table merge, and
-    any coarser rollup (weekly from daily) stays a sketch union away.
-    Estimates are read back with ``hll_sketch_estimate``."""
-    from etl_tiki_webscraping_spark.sinks.upsert import (
-        read_parquet_table,
-        upsert_parquet,
-    )
-
-    keys = list(key_cols)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        fresh = batch_df.groupBy(*keys).agg(
-            F.hll_sketch_agg(value_col).alias("sk")
-        )
-        import os
-
-        # emptiness check, not bare exists(): a pre-created empty sink
-        # dir would otherwise hit a schema-less parquet read and kill
-        # the first micro-batch (same guard the upsert paths use)
-        if os.path.isdir(target_path) and any(
-            not e.startswith((".", "_")) for e in os.listdir(target_path)
-        ):
-            stored = read_parquet_table(spark, target_path).select(
-                *keys, F.col("sk").alias("__old")
-            )
-            # LEFT join: the update set stays batch-sized.  full_outer
-            # would pull every STORED key into `fresh` and rewrite the
-            # whole table each trigger — O(stored), not O(batch);
-            # stored-only keys already survive via the upsert's
-            # anti-join carry-forward.
-            fresh = (
-                fresh.join(stored, on=keys, how="left")
-                .select(
-                    *keys,
-                    F.when(
-                        F.col("__old").isNotNull(),
-                        F.hll_union("sk", "__old"),
-                    )
-                    .otherwise(F.col("sk"))
-                    .alias("sk"),
-                )
-            )
-        upsert_parquet(spark, fresh, target_path, keys)
-
-    return (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(merge)
-    )
-
-
 def foreach_batch_portable_hll(
     stream: DataFrame,
     target_path: str,
@@ -651,11 +581,9 @@ def foreach_batch_portable_hll(
     lg_k: int = 8,
 ) -> "DataStreamWriter":
     """``foreachBatch`` sink maintaining a PORTABLE-HLL register table
-    (operators/sketches.py::hll_build) — the engine-replayable twin of
-    :func:`foreach_batch_hll_union` (r13 VERDICT ask #4: the portable
-    sketches make the maintained state itself bit-strict against a SQL
-    oracle, where the DataSketches binary blobs could only ever be
-    rows-only).
+    (operators/sketches.py::hll_build).  The maintained state is plain
+    integer registers, so it is bit-strict against a SQL oracle, where
+    DataSketches binary blobs could only ever be checked rows-only.
 
     Each micro-batch builds its own ``(keys..., idx, rho)`` register
     rows, folds them into the stored table by per-register MAX (LEFT
@@ -683,8 +611,8 @@ def foreach_batch_portable_hll(
         import os
 
         # emptiness check, not bare exists(): a pre-created empty sink
-        # dir would hit a schema-less parquet read (the
-        # foreach_batch_hll_union guard)
+        # dir would otherwise hit a schema-less parquet read and kill
+        # the first micro-batch (same guard the upsert paths use)
         if os.path.isdir(target_path) and any(
             not e.startswith((".", "_")) for e in os.listdir(target_path)
         ):

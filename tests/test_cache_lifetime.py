@@ -24,8 +24,8 @@ PKG = os.path.join(
 # operator that used to pin: bigram_pmi, bm25_from_index,
 # minhash_candidate_pairs, minhash_duplicate_edges, setsim_prefix_join,
 # substring_dup_pairs, ordered_budget_select, distributed_ntile,
-# scd2_from_change_feed, scd2_backfill_from_feed and, through
-# logreg_quality_train, logreg_train_irls.
+# scd2_from_change_feed and, through logreg_quality_train,
+# logreg_train_irls.
 FORMERLY_PINNED = (
     "bm25_search",
     "bm25_search_cjk",
@@ -41,7 +41,6 @@ FORMERLY_PINNED = (
     "logreg_quality_train",
     "lsh_pair_quality",
     "perplexity_terciles",
-    "scd2_backfill_from_feed",
     "scd2_dim_from_feed",
     "setsim_prefix_join",
     "substring_dup_spans",

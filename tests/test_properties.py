@@ -470,7 +470,7 @@ def test_dv_delete_equals_cow_delete(spark, tmp_path_factory, kv, threshold):
     assert results[0] == results[1] == expected
 
 
-# --- SCD2: one-shot window backfill == commit-by-commit fold ---------------
+# --- SCD2: window build == commit-by-commit interval fold ------------------
 
 
 @given(first=KV.filter(bool), commits=st.lists(COMMIT, min_size=1, max_size=3))
@@ -484,14 +484,13 @@ def test_scd2_backfill_equals_fold_for_any_commit_sequence(
 ):
     """For ANY commit sequence (upserts incl. unchanged-value no-ops
     and repeat keys, predicate deletes incl. re-deletes and deletes of
-    absent keys), the one-shot window backfill reproduces the
-    commit-by-commit fold's dimension EXACTLY, and both agree with a
-    sequential interval model computed in plain Python."""
+    absent keys), the one-pass window build reproduces EXACTLY the
+    dimension of a sequential interval model that folds the commits one
+    by one in plain Python."""
     from pyspark.sql import functions as F
 
     from etl_tiki_webscraping_spark.sinks.upsert import (
         delete_where,
-        scd2_backfill_from_feed,
         scd2_from_change_feed,
         upsert_parquet,
     )
@@ -530,15 +529,11 @@ def test_scd2_backfill_equals_fold_for_any_commit_sequence(
         + [(k, v, f, None, True) for k, (v, f) in open_.items()]
     )
     cols = ("k", "v", "valid_from", "valid_to", "is_current")
-    fold = sorted(
+    got = sorted(
         tuple(r) for r in scd2_from_change_feed(spark, path, ["k"])
         .select(*cols).collect()
     )
-    one_shot = sorted(
-        tuple(r) for r in scd2_backfill_from_feed(spark, path, ["k"])
-        .select(*cols).collect()
-    )
-    assert one_shot == fold == expect
+    assert got == expect
 
 
 @given(

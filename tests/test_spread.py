@@ -1,8 +1,13 @@
 """session.spread — the one partition-spread policy.  It decides from
 the optimizer's size estimate, so it never runs a Spark job while a
-query is being planned (``df.rdd`` on a plan with an exchange does)."""
+query is being planned (``df.rdd`` on a plan with an exchange does).
+Also session.DEFAULT_CPUS, the core count ``get_spark`` runs on."""
 
 from __future__ import annotations
+
+import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -55,3 +60,18 @@ def test_large_input_is_left_unchanged(spark):
     big = spark.range(10**12)  # ~8 TB estimated
     assert spread(big) is big
     assert spread(big, "id") is big
+
+
+@pytest.mark.parametrize("env", [None, "3"])
+def test_default_cpus_is_the_variable_or_the_usable_cores(env):
+    environ = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    if env is not None:
+        environ["SPARK_GRAFT_CPUS"] = env
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "from etl_tiki_webscraping_spark.session import DEFAULT_CPUS; "
+         "print(DEFAULT_CPUS)"],
+        env=environ, capture_output=True, text=True, check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ).stdout.strip()
+    assert out == (env or str(len(os.sched_getaffinity(0))))

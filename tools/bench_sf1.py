@@ -82,11 +82,10 @@ NEW_R7D = [
     "recursive_cte_calendar",
 ]
 
-# round-8: the one-shot SCD2 backfill vs the fold it replaces, the
-# cohort matrix, and fresh re-measurement of the two slowest r7
-# headliners (VERDICT r7 ask #7 asked for their sf1 evidence).
+# round-8: the SCD2 dimension built from a change feed, the cohort
+# matrix, and fresh re-measurement of the two slowest r7 headliners
+# (VERDICT r7 ask #7 asked for their sf1 evidence).
 NEW_R8 = [
-    "scd2_backfill_from_feed",
     "scd2_dim_from_feed",
     "cohort_retention",
     "streaming_stream_stream_join",
@@ -438,7 +437,7 @@ def run(names: "list[str]", replicas: int, scaled_dir: str, sf: str) -> None:
         QUERIES,
         prepare_fixtures,
     )
-    from etl_tiki_webscraping_spark.session import get_spark
+    from etl_tiki_webscraping_spark.session import DEFAULT_CPUS, get_spark
 
     spark = get_spark(f"bench-sf{sf}")
     spark.sparkContext.setLogLevel("ERROR")
@@ -467,7 +466,7 @@ def run(names: "list[str]", replicas: int, scaled_dir: str, sf: str) -> None:
         "staging_hoisted": True,  # entries before r8 timed first-touch staging
         "cache_policy": "clear_between_queries",  # since r12
         "synthetic_scale": f"{replicas}x sf0.1, replica-salted (tools/bench_sf1.py)",
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": int(DEFAULT_CPUS),
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,

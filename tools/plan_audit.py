@@ -248,8 +248,8 @@ def main() -> int:
           "derived from the filtered dimension side")
 
     # --- round-8 additions ---------------------------------------------------
-    p = plan_of("scd2_backfill_from_feed")
-    # contract (upsert.py::scd2_backfill_from_feed docstring): three
+    p = plan_of("scd2_dim_from_feed")
+    # contract (upsert.py::scd2_from_change_feed docstring): three
     # exchanges total — per-(key, commit) winner window + delete
     # distinct, both on (o_orderkey, __v), and ONE bare-key exchange
     # the lag and lead windows SHARE (same partitioning + ordering)
@@ -258,9 +258,9 @@ def main() -> int:
         if "Exchange hashpartitioning(o_orderkey" in seg
     ]
     n_bare = sum(1 for seg in key_ex if "__v" not in seg)
-    check("scd2_backfill_from_feed",
+    check("scd2_dim_from_feed",
           n_bare == 1 and len(key_ex) <= 3
-          and "localCheckpoint" not in p.lower(),
+          and "ExistingRDD" not in p,  # a checkpointed frame's scan
           "lag and lead windows share ONE bare-key exchange (<=3 total "
           "incl. the two (key, commit)-grained ones); no driver-side "
           "commit fold, no checkpoint")
