@@ -449,12 +449,10 @@ def main() -> None:
 
     # one-time per-process fixture staging (snapshot/bucketed/SQLite/
     # stream-input builds) hoisted out of the timed region — a deployed
-    # warehouse already exists when a query runs (VERDICT r6 ask #3)
+    # warehouse already exists when a query runs; the default stages
+    # every fixture any catalog query declares
     from etl_tiki_webscraping_spark.plans.catalog import prepare_fixtures
 
-    # default list = catalog._EAGER_STAGING_QUERIES, which tracks every
-    # staging-at-plan-build query (r7 review: a hard-coded subset here
-    # silently billed new queries' staging to pass 1)
     prepare_fixtures(spark, SF_DIR)
 
     def run_pass() -> "tuple[dict[str, float], dict[str, dict]]":
@@ -636,16 +634,14 @@ def main() -> None:
     # position/run-to-run noise with the evidence inline; if it does
     # not, it is annotated as a convergent (real) regression — either
     # way no flag ships unexplained.
-    from etl_tiki_webscraping_spark.plans.catalog import (
-        _EAGER_STAGING_QUERIES,
-    )
+    from etl_tiki_webscraping_spark.plans.catalog import QUERIES
 
     for name, entry in regressions.items():
-        # A memoized/eagerly-staged query re-executes against its
-        # in-process memo here, so the three "isolated" runs would time
-        # only the final read and trivially converge (ADVICE r13) —
-        # annotate instead of faking convergence evidence.
-        if name in _EAGER_STAGING_QUERIES:
+        # A query that reads a staged fixture re-executes against the
+        # in-process fixture store here, so the three "isolated" runs
+        # would time only the final read and trivially converge
+        # (ADVICE r13) — annotate instead of faking convergence evidence.
+        if QUERIES[name].fixtures:
             skip = (
                 "convergence re-run skipped: this query reads a memoized "
                 "staged fixture, so in-process isolated re-runs time only "

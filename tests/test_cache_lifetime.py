@@ -116,15 +116,9 @@ def test_multiline_csv_reader_leaves_cache_empty(spark, tmp_path):
 
 @pytest.fixture(scope="module")
 def staged(spark, sf_dir):
-    from etl_tiki_webscraping_spark.plans.catalog import (
-        _EAGER_STAGING_QUERIES,
-        prepare_fixtures,
-    )
+    from etl_tiki_webscraping_spark.plans.catalog import prepare_fixtures
 
-    prepare_fixtures(
-        spark, sf_dir,
-        names=[n for n in _EAGER_STAGING_QUERIES if n in FORMERLY_PINNED],
-    )
+    prepare_fixtures(spark, sf_dir, names=FORMERLY_PINNED)
     return sf_dir
 
 

@@ -179,3 +179,51 @@ def test_gates_report_covers_every_rows_only_query():
         f"ungated rows-only queries: {sorted(no_oracle - mod.GATED_QUERIES)}; "
         f"stale gate entries: {sorted(set(mod.GATED_QUERIES) - no_oracle)}"
     )
+
+
+def test_fixture_declarations_match_query_bodies():
+    """Every query declares (``register(fixtures=...)``) exactly the
+    ``@fixture`` builders its body reaches through module-level calls,
+    so ``prepare_fixtures(names=[q])`` stages everything q reads and
+    nothing else.  Read from the catalog's source; starts no Spark."""
+    import ast
+
+    from etl_tiki_webscraping_spark.plans import catalog
+
+    with open(catalog.__file__) as fh:
+        tree = ast.parse(fh.read())
+    funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    builders = {
+        name for name, fn in funcs.items()
+        if any(isinstance(d, ast.Name) and d.id == "fixture" for d in fn.decorator_list)
+    }
+    assert builders, "no @fixture builders found"
+
+    def reached(fn: ast.FunctionDef, seen: "set[str]") -> "set[str]":
+        for stmt in fn.body:
+            for node in ast.walk(stmt):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Name)
+                    and node.func.id in funcs
+                    and node.func.id not in seen
+                ):
+                    seen.add(node.func.id)
+                    reached(funcs[node.func.id], seen)
+        return seen
+
+    checked = set()
+    for fn in ast.walk(tree):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for deco in fn.decorator_list:
+            if (
+                isinstance(deco, ast.Call)
+                and isinstance(deco.func, ast.Name)
+                and deco.func.id == "register"
+            ):
+                name = deco.args[0].value
+                declared = {b.__name__ for b in catalog.QUERIES[name].fixtures}
+                assert reached(fn, set()) & builders == declared, name
+                checked.add(name)
+    assert checked == set(catalog.QUERIES)

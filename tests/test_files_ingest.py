@@ -169,11 +169,11 @@ class TestStreamingQuarantine:
     def test_stream_splits_good_and_quarantine(self, spark, sf_dir):
         from etl_tiki_webscraping_spark.plans.catalog import (
             QUERIES,
-            _STREAM_QUARANTINE,
+            _stream_quarantine_root,
         )
 
         good = QUERIES["streaming_quarantine_ingest"].fn(spark, sf_dir)
-        root = _STREAM_QUARANTINE[sf_dir]
+        root = _stream_quarantine_root(spark, sf_dir)
         bad = spark.read.parquet(root + "/bad")
         assert sorted(r["_raw"] for r in bad.collect()) == [
             "1,2",

@@ -268,7 +268,7 @@ def test_png_strict_sniffing_rejects_near_misses():
     good = _make_png([[1, 2], [3, 4]], color_type=0)
     assert _decode_png(good) is not None
     assert _decode_png(b"\x89PNG\r\n\x1a\n" + b"garbage" * 10) is None
-    assert _decode_png(good[:-20]) is not None or True  # truncation: no crash
+    assert _decode_png(good[:-20]) is None  # truncated: rejected, no crash
     # 16-bit depth / interlace are out of scope -> None, not garbage
     import struct
     import zlib

@@ -3,6 +3,7 @@ must not silently degrade — these properties ARE the 100 TB contract."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -143,12 +144,12 @@ def test_snapshot_compaction_rewrites_to_few_clustered_files(spark, sf_dir):
 
     from etl_tiki_webscraping_spark.plans.catalog import (
         QUERIES,
-        _COMPACT_TABLES,
+        _compact_table,
     )
     from etl_tiki_webscraping_spark.sinks.upsert import _current_snapshot
 
     df = QUERIES["snapshot_compaction"].fn(spark, sf_dir)
-    path = _COMPACT_TABLES[sf_dir]
+    path = _compact_table(spark, sf_dir)
     cur = _current_snapshot(path)
     snap_dir = os.path.join(path, cur)
     files = [
@@ -172,6 +173,20 @@ def test_snapshot_compaction_rewrites_to_few_clustered_files(spark, sf_dir):
         assert hi1 <= lo2
     # and nothing was lost or duplicated across the rewrite
     assert df.count() == df.select("o_orderkey").distinct().count()
+
+
+@pytest.mark.parametrize(
+    "name", ["ivm_join_from_feed", "dynamic_partition_pruning", "scd2_dim_from_feed"]
+)
+def test_targeted_staging_leaves_no_staging_work(spark, sf_dir, name):
+    """``prepare_fixtures(names=[q])`` stages every fixture q reads, so
+    building q's plan afterwards runs no Spark job."""
+    from etl_tiki_webscraping_spark.metrics import measure
+    from etl_tiki_webscraping_spark.plans.catalog import QUERIES, prepare_fixtures
+
+    prepare_fixtures(spark, sf_dir, names=[name])
+    _, totals = measure(spark, name, lambda: QUERIES[name].fn(spark, sf_dir))
+    assert totals["spark.jobs"] == 0
 
 
 def test_tpch_suite_is_complete_with_oracles():

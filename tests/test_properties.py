@@ -758,11 +758,23 @@ def test_twap_equals_python_replay(spark, obs):
         max_size=12,
     )
 )
+@example(xs=[("b", 1, -14), ("b", 3, -5), ("b", 7, 0), ("b", 11, 1), ("b", 19, 0)])
+@example(xs=[("b", 1, 2), ("b", 3, 3), ("b", 7, 6), ("b", 11, 1), ("b", 19, -2)])
 @SETTINGS
 def test_grouped_ols_equals_numpy_polyfit(spark, xs):
+    """The oracle is the exact rational fit rounded HALF_UP (Spark's
+    `round` mode), cross-checked against np.polyfit; rounding polyfit's
+    float result directly flips on exact ties such as 0.2734375."""
+    from decimal import ROUND_HALF_UP, Decimal
+    from fractions import Fraction
+
     import numpy as np
 
     from etl_tiki_webscraping_spark.operators.rollup import grouped_ols_trend
+
+    def half_up6(q: Fraction) -> float:
+        d = Decimal(q.numerator) / Decimal(q.denominator)
+        return float(d.quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
 
     rows = [(g, float(x), float(y)) for g, x, y in xs]
     df = spark.createDataFrame(rows, "g string, x double, y double")
@@ -776,9 +788,17 @@ def test_grouped_ols_equals_numpy_polyfit(spark, xs):
         if len(pts) < 2 or len(set(xs_)) < 2:
             assert got[g] == (None, None)
             continue
-        b, a = np.polyfit(xs_, ys_, 1)
-        assert abs(got[g][0] - round(float(b), 6)) < 1e-6, g
-        assert abs(got[g][1] - round(float(a), 6)) < 1e-6, g
+        n = len(pts)
+        sx, sy = sum(map(Fraction, xs_)), sum(map(Fraction, ys_))
+        sxy = sum(Fraction(x) * Fraction(y) for x, y in pts)
+        sxx = sum(Fraction(x) ** 2 for x in xs_)
+        b = (n * sxy - sx * sy) / (n * sxx - sx * sx)
+        a = (sy - b * sx) / n
+        nb, na = np.polyfit(xs_, ys_, 1)
+        assert abs(float(nb) - float(b)) < 1e-9, g
+        assert abs(float(na) - float(a)) < 1e-9, g
+        assert abs(got[g][0] - half_up6(b)) < 1e-6, g
+        assert abs(got[g][1] - half_up6(a)) < 1e-6, g
 
 
 @given(

@@ -775,16 +775,20 @@ class TestUpdateWhereSchemaPreserved:
 
         path = self._stage(spark, sf_dir, tmp_path)
         before = _rows(read_parquet_table(spark, path), *COLS)
+
+        def on_disk():
+            with open(os.path.join(path, "_LATEST")) as fh:
+                return sorted(os.listdir(path)), fh.read()
+
+        listing = on_disk()
         with pytest.raises(TypeError, match="stored column type"):
             update_where(
                 spark, path, F.col("prio") == "1-URGENT",
                 {"o_custkey": F.col("price") * 2.0},  # double into bigint
                 merge_on_read=True, keep_snapshots=9,
             )
-        # nothing committed, table intact and readable
-        assert os.path.basename(
-            os.path.realpath(os.path.join(path))
-        ) or True
+        # nothing committed: same entries, same pointer; table intact
+        assert on_disk() == listing
         got = read_parquet_table(spark, path)
         assert _rows(got, *COLS) == before
         assert dict(got.dtypes)["o_custkey"] == "bigint"

@@ -432,11 +432,7 @@ def run(names: "list[str]", replicas: int, scaled_dir: str, sf: str) -> None:
     ``bench.warm`` and the untimed fixture staging, and append one
     ``"sf": sf`` entry to bench_history.jsonl."""
     from bench import time_query, warm
-    from etl_tiki_webscraping_spark.plans.catalog import (
-        _EAGER_STAGING_QUERIES,
-        QUERIES,
-        prepare_fixtures,
-    )
+    from etl_tiki_webscraping_spark.plans.catalog import prepare_fixtures
     from etl_tiki_webscraping_spark.session import DEFAULT_CPUS, get_spark
 
     spark = get_spark(f"bench-sf{sf}")
@@ -449,12 +445,7 @@ def run(names: "list[str]", replicas: int, scaled_dir: str, sf: str) -> None:
     # hoist one-time warehouse staging out of the timed region, exactly
     # as bench.py does (a deployment's snapshot tables already exist) —
     # without this, whichever query runs FIRST absorbs the staging cost
-    prepare_fixtures(
-        spark, sf_dir,
-        names=[n for n in _EAGER_STAGING_QUERIES if n in names],
-    )
-    for name in names:  # non-eager staged deps (e.g. the shared CDF table)
-        QUERIES[name].fn(spark, sf_dir)
+    prepare_fixtures(spark, sf_dir, names=names)
     timings: dict[str, float] = {}
     layers: dict[str, dict] = {}
     for name in names:

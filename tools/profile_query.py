@@ -44,19 +44,17 @@ def main() -> int:
 
     from bench import _ACTIONS, time_query, warm
     from etl_tiki_webscraping_spark.metrics import measure
-    from etl_tiki_webscraping_spark.plans.catalog import (
-        _EAGER_STAGING_QUERIES,
-        QUERIES,
-        prepare_fixtures,
-    )
+    from etl_tiki_webscraping_spark.plans.catalog import QUERIES, prepare_fixtures
     from etl_tiki_webscraping_spark.session import get_spark
 
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
     warm(spark, args.sf)
-    eager = [n for n in _EAGER_STAGING_QUERIES if n in args.queries]
-    _, staging = measure(spark, "staging", lambda: prepare_fixtures(spark, args.sf, names=eager))
-    print(f"staging {eager}: {_split(staging)}", flush=True)
+    builders = sorted({b.__name__ for n in args.queries for b in QUERIES[n].fixtures})
+    _, staging = measure(
+        spark, "staging", lambda: prepare_fixtures(spark, args.sf, names=args.queries)
+    )
+    print(f"staging {builders}: {_split(staging)}", flush=True)
 
     for name in args.queries:
         times = []
