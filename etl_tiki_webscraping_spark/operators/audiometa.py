@@ -411,52 +411,38 @@ def extract_audio_stream_metadata(df, id_col="media_id", content_col="content"):
     otherwise, r13 VERDICT ask #5); a stream its strict parser rejects
     emits the NULL-stats quarantine row with the sniffed container —
     per-format observability with NO audio decode."""
-    import pandas as pd
-
     from etl_tiki_webscraping_spark.operators.multimodal import (
+        map_blobs,
         sniff_audio_container,
     )
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for mid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                container = sniff_audio_container(data)
-                rec = {
-                    "media_id": int(mid), "container": container,
-                    "codec": None, "channels": None,
-                    "n_units": None, "sample_rate": None,
-                    "duration_ms": None, "vbr": None, "last_granule": None,
-                }
-                if container == "mp3":
-                    m = parse_mp3_stream(data)
-                    if m is not None:
-                        rec.update(
-                            codec="mp3",
-                            channels=None,
-                            n_units=m["n_frames"],
-                            sample_rate=m["sample_rate"],
-                            duration_ms=m["duration_ms"],
-                            vbr=m["bitrate_kbps_min"] != m["bitrate_kbps_max"],
-                        )
-                elif container == "ogg":
-                    o = parse_ogg_stream(data)
-                    if o is not None:
-                        rec.update(
-                            codec=o["codec"],
-                            channels=o["channels"],
-                            n_units=o["n_pages"],
-                            sample_rate=o["sample_rate"],
-                            duration_ms=o["duration_ms"],
-                            last_granule=o["last_granule"],
-                        )
-                out.append(rec)
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        container = sniff_audio_container(data)
+        rec = {"container": container}
+        if container == "mp3":
+            m = parse_mp3_stream(data)
+            if m is not None:
+                rec.update(
+                    codec="mp3",
+                    n_units=m["n_frames"],
+                    sample_rate=m["sample_rate"],
+                    duration_ms=m["duration_ms"],
+                    vbr=m["bitrate_kbps_min"] != m["bitrate_kbps_max"],
+                )
+        elif container == "ogg":
+            o = parse_ogg_stream(data)
+            if o is not None:
+                rec.update(
+                    codec=o["codec"],
+                    channels=o["channels"],
+                    n_units=o["n_pages"],
+                    sample_rate=o["sample_rate"],
+                    duration_ms=o["duration_ms"],
+                    last_granule=o["last_granule"],
+                )
+        yield rec
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=AUDIO_STREAM_META_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, AUDIO_STREAM_META_SCHEMA, rows)
 
 
 def iter_mp3_frames(content: bytes) -> "list[tuple[int, int, int]] | None":
@@ -628,31 +614,20 @@ def extract_mp3_id3_tags(df, id_col="media_id", content_col="content"):
     mapInPandas pass: tag fields plus the strict MP3 frame count of
     the audio that follows the tag; a blob whose tag OR stream rejects
     emits the NULL quarantine row."""
-    import pandas as pd
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for mid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                rec = {
-                    "media_id": int(mid), "id3_version": None,
-                    "n_frames": None, "title": None, "artist": None,
-                    "album": None, "n_mp3_frames": None,
-                }
-                tag = parse_id3v2_frames(data) if data else None
-                stream = parse_mp3_stream(data) if data else None
-                if tag is not None and stream is not None:
-                    rec.update(
-                        id3_version=tag["version"],
-                        n_frames=tag["n_frames"],
-                        title=tag["title"], artist=tag["artist"],
-                        album=tag["album"],
-                        n_mp3_frames=stream["n_frames"],
-                    )
-                out.append(rec)
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        tag = parse_id3v2_frames(data) if data else None
+        stream = parse_mp3_stream(data) if data else None
+        if tag is None or stream is None:
+            yield {}
+            return
+        yield {
+            "id3_version": tag["version"],
+            "n_frames": tag["n_frames"],
+            "title": tag["title"], "artist": tag["artist"],
+            "album": tag["album"],
+            "n_mp3_frames": stream["n_frames"],
+        }
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=MP3_ID3_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, MP3_ID3_SCHEMA, rows)

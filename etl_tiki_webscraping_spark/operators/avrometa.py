@@ -250,28 +250,14 @@ def scan_avro_records(df, id_col="file_id", content_col="content"):
     """OCF blob -> per-record rows in one Arrow-batched 1->N
     mapInPandas expansion; a blob the strict walk rejects emits the
     single ``rec_idx = -1`` quarantine row.  Blobs never shuffle."""
-    import pandas as pd
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for fid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                meta = parse_avro_records(data)
-                if meta is None:
-                    out.append({
-                        "file_id": int(fid), "rec_idx": -1,
-                        "rec_id": None, "text": None, "codec": None,
-                    })
-                    continue
-                for idx, (rid, text) in enumerate(meta["records"]):
-                    out.append({
-                        "file_id": int(fid), "rec_idx": idx,
-                        "rec_id": rid, "text": text,
-                        "codec": meta["codec"],
-                    })
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        meta = parse_avro_records(data)
+        if meta is None:
+            yield {"rec_idx": -1}
+            return
+        for idx, (rid, text) in enumerate(meta["records"]):
+            yield {"rec_idx": idx, "rec_id": rid, "text": text, "codec": meta["codec"]}
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=AVRO_SCAN_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, AVRO_SCAN_SCHEMA, rows)

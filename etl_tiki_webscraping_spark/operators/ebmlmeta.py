@@ -276,34 +276,21 @@ def extract_webm_metadata(df, id_col="media_id", content_col="content"):
     """Per-blob WebM/Matroska triage in one Arrow-batched mapInPandas
     pass; a blob the strict walk rejects emits the NULL-stats
     quarantine row with the EBML-magic sniff."""
-    import pandas as pd
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for mid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                meta = parse_webm(data)
-                rec = {
-                    "media_id": int(mid), "is_ebml": sniff_ebml(data),
-                    "doc_type": None, "duration_ms": None,
-                    "n_tracks": None, "codecs": None,
-                    "video_w": None, "video_h": None,
-                    "audio_channels": None,
-                }
-                if meta is not None:
-                    rec.update(
-                        doc_type=meta["doc_type"],
-                        duration_ms=meta["duration_ms"],
-                        n_tracks=meta["n_tracks"],
-                        codecs=meta["codecs"],
-                        video_w=meta["video_w"],
-                        video_h=meta["video_h"],
-                        audio_channels=meta["audio_channels"],
-                    )
-                out.append(rec)
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        meta = parse_webm(data)
+        rec = {"is_ebml": sniff_ebml(data)}
+        if meta is not None:
+            rec.update(
+                doc_type=meta["doc_type"],
+                duration_ms=meta["duration_ms"],
+                n_tracks=meta["n_tracks"],
+                codecs=meta["codecs"],
+                video_w=meta["video_w"],
+                video_h=meta["video_h"],
+                audio_channels=meta["audio_channels"],
+            )
+        yield rec
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=WEBM_META_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, WEBM_META_SCHEMA, rows)

@@ -1435,28 +1435,10 @@ def extract_jpeg_meta(df, id_col="media_id", content_col="content"):
     presence, JFIF density, ZERO pixel decode; a blob the strict
     header walk rejects (including a lying EXIF IFD) emits the
     NULL-stats quarantine row.  Blobs never shuffle."""
-    import pandas as pd
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for mid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                meta = parse_jpeg_meta(data)
-                rec = {"media_id": int(mid)}
-                if meta is None:
-                    rec.update({
-                        "width": None, "height": None, "progressive": None,
-                        "orientation": None, "has_exif": None,
-                        "has_icc": None, "density_unit": None,
-                        "x_density": None, "y_density": None,
-                    })
-                else:
-                    rec.update(meta)
-                    rec.pop("n_components", None)
-                out.append(rec)
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        # n_components is not a schema field, so map_blobs drops it
+        yield parse_jpeg_meta(data) or {}
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=JPEG_META_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, JPEG_META_SCHEMA, rows)

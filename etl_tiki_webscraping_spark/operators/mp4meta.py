@@ -299,34 +299,22 @@ def extract_mp4_metadata(df, id_col="media_id", content_col="content"):
     quarantine row with ``is_mp4`` from the cheap ftyp sniff — a
     truncated or lying container is observable per-container, never
     silently dropped.  Blobs never shuffle."""
-    import pandas as pd
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for mid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                meta = parse_mp4(data)
-                rec = {
-                    "media_id": int(mid),
-                    "is_mp4": sniff_mp4(data),
-                    "brand": None, "duration_ms": None, "n_tracks": None,
-                    "codecs": None, "total_samples": None,
-                }
-                if meta is not None:
-                    rec.update(
-                        brand=meta["brand"],
-                        duration_ms=meta["duration_ms"],
-                        n_tracks=meta["n_tracks"],
-                        codecs=meta["codecs"],
-                        total_samples=meta["total_samples"],
-                    )
-                out.append(rec)
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        meta = parse_mp4(data)
+        rec = {"is_mp4": sniff_mp4(data)}
+        if meta is not None:
+            rec.update(
+                brand=meta["brand"],
+                duration_ms=meta["duration_ms"],
+                n_tracks=meta["n_tracks"],
+                codecs=meta["codecs"],
+                total_samples=meta["total_samples"],
+            )
+        yield rec
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=MP4_META_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, MP4_META_SCHEMA, rows)
 
 
 # --------------------------------------------------------------------------
@@ -470,28 +458,17 @@ def extract_avif_metadata(df, id_col="media_id", content_col="content"):
     """Per-blob AVIF/HEIC triage in one Arrow-batched mapInPandas
     pass; a blob the strict walk rejects emits the ftyp-sniffed
     quarantine row (the parse_mp4 contract)."""
-    import pandas as pd
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for mid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                meta = parse_avif(data)
-                rec = {
-                    "media_id": int(mid), "is_bmff": sniff_mp4(data),
-                    "family": None, "brand": None,
-                    "width": None, "height": None, "n_items": None,
-                }
-                if meta is not None:
-                    rec.update(
-                        family=meta["family"], brand=meta["brand"],
-                        width=meta["width"], height=meta["height"],
-                        n_items=meta["n_items"],
-                    )
-                out.append(rec)
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        meta = parse_avif(data)
+        rec = {"is_bmff": sniff_mp4(data)}
+        if meta is not None:
+            rec.update(
+                family=meta["family"], brand=meta["brand"],
+                width=meta["width"], height=meta["height"],
+                n_items=meta["n_items"],
+            )
+        yield rec
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=AVIF_META_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, AVIF_META_SCHEMA, rows)

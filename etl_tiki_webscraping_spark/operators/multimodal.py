@@ -2,8 +2,9 @@
 
 Pattern: media travels as an opaque ``binary`` column plus a typed
 metadata struct; decode / feature-extract / resize / frame-sample run
-as Arrow-batched pandas iterators over ``mapInPandas`` so each task
-streams batches without materializing a partition of blobs in memory.
+as per-blob ``rows`` functions on :func:`map_blobs`, one Arrow-batched
+``mapInPandas`` loop, so each task streams batches without
+materializing a partition of blobs in memory.
 
 No codec LIBRARY ships in this container, but the dominant formats
 decode for real with the stdlib alone: baseline + progressive JPEG
@@ -27,7 +28,7 @@ query doesn't touch bytes (columnar parquet makes that free).
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable
 
 import numpy as np
 import pandas as pd
@@ -63,6 +64,40 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
         T.StructField("feature", T.ArrayType(T.FloatType())),
     ]
 )
+
+
+def map_blobs(
+    df: DataFrame,
+    id_col: str,
+    content_col: str,
+    schema: "T.StructType | str",
+    rows: "Callable[[bytes | None], Iterable[dict]]",
+) -> DataFrame:
+    """The one per-blob kernel of the media, container and WARC
+    scanners: one Arrow-batched mapInPandas pass over
+    ``df.select(id_col, content_col)`` that calls ``rows(data)`` once
+    per blob, ``data`` being the blob as ``bytes`` (``None`` for a NULL
+    blob).  ``rows`` returns the blob's output rows as dicts: one for a
+    1->1 triage, any number for a 1->N expansion, the single quarantine
+    row for a rejected blob.  Each row gets the blob's id as ``int``
+    under the schema's first field; a field the dict leaves out is
+    NULL, and a key outside the schema is dropped.  An empty batch
+    still carries the schema's columns.  Blobs never shuffle."""
+    struct = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
+    names = struct.fieldNames()
+    blank = dict.fromkeys(names)
+    id_field = names[0]
+
+    def run(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+        for batch in batches:
+            out = [
+                {**blank, **row, id_field: int(i)}
+                for i, content in zip(batch[id_col], batch[content_col])
+                for row in rows(bytes(content) if content is not None else None)
+            ]
+            yield pd.DataFrame.from_records(out, columns=names)
+
+    return df.select(id_col, content_col).mapInPandas(run, schema=schema)
 
 
 def _decode_bmp(content: bytes) -> "np.ndarray | None":
@@ -715,37 +750,20 @@ def sniff_audio_formats(
     decodable=false is an observable per-format quarantine row (e.g. a
     stereo or corrupt FLAC), and MP3/Ogg blobs are counted per
     container instead of vanishing into a generic bucket."""
+    from etl_tiki_webscraping_spark.operators.flac import decode_flac_pcm
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from etl_tiki_webscraping_spark.operators.flac import (
-            decode_flac_pcm,
-        )
+    def rows(data):
+        container = sniff_audio_container(data)
+        n = None
+        if container == "wav":
+            wav = _decode_wav(data)
+            n = int(wav.shape[0]) if wav is not None else None
+        elif container == "flac":
+            pcm = decode_flac_pcm(data)
+            n = int(pcm.shape[0]) if pcm is not None else None
+        yield {"container": container, "decodable": n is not None, "n_samples": n}
 
-        for batch in batches:
-            out = []
-            for mid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                container = sniff_audio_container(data)
-                n = None
-                if container == "wav":
-                    wav = _decode_wav(data)
-                    n = int(wav.shape[0]) if wav is not None else None
-                elif container == "flac":
-                    pcm = decode_flac_pcm(data)
-                    n = int(pcm.shape[0]) if pcm is not None else None
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "container": container,
-                        "decodable": n is not None,
-                        "n_samples": n,
-                    }
-                )
-            yield pd.DataFrame.from_records(out)
-
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=AUDIO_SNIFF_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, AUDIO_SNIFF_SCHEMA, rows)
 
 
 AUDIO_PCM_FEATURES_SCHEMA = T.StructType(
@@ -769,58 +787,40 @@ def extract_audio_pcm_features(
     external engine bit-for-bit (no float RMS in the oracle path).
     Undecodable content emits the NULL-stats quarantine row (the
     sample_gif_frames convention)."""
+    import io
+    import wave as _wave
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave as _wave
+    from etl_tiki_webscraping_spark.operators.flac import decode_flac_pcm
 
-        from etl_tiki_webscraping_spark.operators.flac import (
-            decode_flac_pcm,
-        )
+    def wav_pcm(data: bytes) -> "np.ndarray | None":
+        if sniff_audio_container(data) != "wav":
+            return None
+        try:
+            with _wave.open(io.BytesIO(data), "rb") as wf:
+                if wf.getsampwidth() != 2 or wf.getnchannels() != 1:
+                    return None
+                return np.frombuffer(
+                    wf.readframes(wf.getnframes()), dtype="<i2"
+                ).astype(np.int64)
+        except Exception:
+            return None
 
-        def wav_pcm(data: bytes) -> "np.ndarray | None":
-            if sniff_audio_container(data) != "wav":
-                return None
-            try:
-                with _wave.open(io.BytesIO(data), "rb") as wf:
-                    if wf.getsampwidth() != 2 or wf.getnchannels() != 1:
-                        return None
-                    return np.frombuffer(
-                        wf.readframes(wf.getnframes()), dtype="<i2"
-                    ).astype(np.int64)
-            except Exception:
-                return None
+    def rows(data):
+        pcm = wav_pcm(data) if data else None
+        if pcm is None and data and data[:4] == b"fLaC":
+            dec = decode_flac_pcm(data)
+            pcm = dec.astype(np.int64) if dec is not None else None
+        if pcm is None:
+            yield {}
+            return
+        yield {
+            "n_samples": int(pcm.shape[0]),
+            "peak_units": int(np.abs(pcm).max(initial=0)),
+            "zero_crossings": int(np.sum(pcm[:-1] * pcm[1:] < 0)),
+            "sum_abs_units": int(np.abs(pcm).sum()),
+        }
 
-        for batch in batches:
-            out = []
-            for mid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                pcm = wav_pcm(data) if data else None
-                if pcm is None and data and data[:4] == b"fLaC":
-                    dec = decode_flac_pcm(data)
-                    pcm = dec.astype(np.int64) if dec is not None else None
-                if pcm is None:
-                    out.append(
-                        {"media_id": int(mid), "n_samples": None,
-                         "peak_units": None, "zero_crossings": None,
-                         "sum_abs_units": None}
-                    )
-                    continue
-                zc = int(np.sum(pcm[:-1] * pcm[1:] < 0))
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "n_samples": int(pcm.shape[0]),
-                        "peak_units": int(np.abs(pcm).max(initial=0)),
-                        "zero_crossings": zc,
-                        "sum_abs_units": int(np.abs(pcm).sum()),
-                    }
-                )
-            yield pd.DataFrame.from_records(out)
-
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=AUDIO_PCM_FEATURES_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, AUDIO_PCM_FEATURES_SCHEMA, rows)
 
 
 def attach_meta(df: DataFrame, content_col: str = "content", media_type: str = "image", fmt: str = "raw") -> DataFrame:
@@ -847,23 +847,16 @@ def extract_image_features(df: DataFrame, id_col: str = "media_id", content_col:
     governed by spark.sql.execution.arrow.maxRecordsPerBatch.
     """
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for mid, content in zip(batch[id_col], batch[content_col]):
-                img = _decode_image_impl(bytes(content) if content is not None else None)
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "width": int(img.shape[1]),
-                        "height": int(img.shape[0]),
-                        "mean_luma": float(img.mean()),
-                        "feature": img.flatten().tolist(),
-                    }
-                )
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        img = _decode_image_impl(data)
+        yield {
+            "width": int(img.shape[1]),
+            "height": int(img.shape[0]),
+            "mean_luma": float(img.mean()),
+            "feature": img.flatten().tolist(),
+        }
 
-    return df.select(id_col, content_col).mapInPandas(run, schema=IMAGE_FEATURES_SCHEMA)
+    return map_blobs(df, id_col, content_col, IMAGE_FEATURES_SCHEMA, rows)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -899,33 +892,24 @@ def resize_images(
     interpolating.  The decode is shared with the feature extractor
     (real PNG/BMP, deterministic fake otherwise)."""
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for mid, content in zip(batch[id_col], batch[content_col]):
-                img = _decode_image_impl(bytes(content) if content is not None else None)
-                h, w = img.shape
-                if h % out_h or w % out_w:
-                    raise ValueError(
-                        f"box resize needs src dims divisible by target: "
-                        f"({h}x{w}) -> ({out_h}x{out_w})"
-                    )
-                small = img.reshape(
-                    out_h, h // out_h, out_w, w // out_w
-                ).mean(axis=(1, 3))
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "src_width": int(w),
-                        "src_height": int(h),
-                        "width": int(out_w),
-                        "height": int(out_h),
-                        "pixels": small.astype(np.float32).flatten().tolist(),
-                    }
-                )
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        img = _decode_image_impl(data)
+        h, w = img.shape
+        if h % out_h or w % out_w:
+            raise ValueError(
+                f"box resize needs src dims divisible by target: "
+                f"({h}x{w}) -> ({out_h}x{out_w})"
+            )
+        small = img.reshape(out_h, h // out_h, out_w, w // out_w).mean(axis=(1, 3))
+        yield {
+            "src_width": int(w),
+            "src_height": int(h),
+            "width": int(out_w),
+            "height": int(out_h),
+            "pixels": small.astype(np.float32).flatten().tolist(),
+        }
 
-    return df.select(id_col, content_col).mapInPandas(run, schema=RESIZED_SCHEMA)
+    return map_blobs(df, id_col, content_col, RESIZED_SCHEMA, rows)
 
 
 AUDIO_FEATURES_SCHEMA = T.StructType(
@@ -954,28 +938,18 @@ def extract_audio_features(
     soundfile/librosa there and nothing else changes.
     """
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for mid, content in zip(batch[id_col], batch[content_col]):
-                wave = _decode_audio_impl(
-                    bytes(content) if content is not None else None
-                ).astype(np.float64)
-                n = wave.shape[0]
-                zc = int(np.sum(wave[:-1] * wave[1:] < 0))
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "n_samples": n,
-                        "duration_ms": int(n * 1000 // sample_rate),
-                        "rms": float(np.sqrt(np.mean(wave**2))),
-                        "peak": float(np.max(np.abs(wave))),
-                        "zero_crossings": zc,
-                    }
-                )
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        wave = _decode_audio_impl(data).astype(np.float64)
+        n = wave.shape[0]
+        yield {
+            "n_samples": n,
+            "duration_ms": int(n * 1000 // sample_rate),
+            "rms": float(np.sqrt(np.mean(wave**2))),
+            "peak": float(np.max(np.abs(wave))),
+            "zero_crossings": int(np.sum(wave[:-1] * wave[1:] < 0)),
+        }
 
-    return df.select(id_col, content_col).mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
+    return map_blobs(df, id_col, content_col, AUDIO_FEATURES_SCHEMA, rows)
 
 
 def extract_audio_spectral_features(
@@ -1011,40 +985,27 @@ def extract_audio_spectral_features(
         ]
     )
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for mid, content in zip(batch[id_col], batch[content_col]):
-                wave = _decode_audio_impl(
-                    bytes(content) if content is not None else None
-                ).astype(np.float64)
-                n = wave.shape[0]
-                rec = {"media_id": int(mid), "n_samples": n,
-                       "spectral_centroid_hz": None,
-                       "spectral_rolloff_hz": None,
-                       "spectral_bandwidth_hz": None}
-                if n >= 2:
-                    mag = np.abs(np.fft.rfft(wave * np.hanning(n)))
-                    freqs = np.fft.rfftfreq(n, d=1.0 / sample_rate)
-                    total = float(mag.sum())
-                    if total > 0:
-                        c = float((freqs * mag).sum() / total)
-                        cum = np.cumsum(mag)
-                        roll_idx = int(np.searchsorted(cum, 0.85 * total))
-                        bw = float(
-                            np.sqrt(((freqs - c) ** 2 * mag).sum() / total)
-                        )
-                        rec.update(
-                            spectral_centroid_hz=c,
-                            spectral_rolloff_hz=float(
-                                freqs[min(roll_idx, len(freqs) - 1)]
-                            ),
-                            spectral_bandwidth_hz=bw,
-                        )
-                out.append(rec)
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        wave = _decode_audio_impl(data).astype(np.float64)
+        n = wave.shape[0]
+        rec = {"n_samples": n}
+        if n >= 2:
+            mag = np.abs(np.fft.rfft(wave * np.hanning(n)))
+            freqs = np.fft.rfftfreq(n, d=1.0 / sample_rate)
+            total = float(mag.sum())
+            if total > 0:
+                c = float((freqs * mag).sum() / total)
+                cum = np.cumsum(mag)
+                roll_idx = int(np.searchsorted(cum, 0.85 * total))
+                bw = float(np.sqrt(((freqs - c) ** 2 * mag).sum() / total))
+                rec.update(
+                    spectral_centroid_hz=c,
+                    spectral_rolloff_hz=float(freqs[min(roll_idx, len(freqs) - 1)]),
+                    spectral_bandwidth_hz=bw,
+                )
+        yield rec
 
-    return df.select(id_col, content_col).mapInPandas(run, schema=schema)
+    return map_blobs(df, id_col, content_col, schema, rows)
 
 
 def encode_wav_tone(
@@ -1242,17 +1203,12 @@ def sample_frames(df: DataFrame, every_n_bytes: int = 16, id_col: str = "media_i
         ]
     )
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for mid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else b""
-                for i in range(0, len(data), every_n_bytes):
-                    out.append({"media_id": int(mid), "frame_index": i // every_n_bytes, "frame": data[i : i + every_n_bytes]})
-            if out:
-                yield pd.DataFrame.from_records(out)
+    def rows(data):
+        data = data or b""
+        for i in range(0, len(data), every_n_bytes):
+            yield {"frame_index": i // every_n_bytes, "frame": data[i : i + every_n_bytes]}
 
-    return df.select(id_col, content_col).mapInPandas(run, schema=schema)
+    return map_blobs(df, id_col, content_col, schema, rows)
 
 
 
@@ -1339,6 +1295,45 @@ def encode_gif(
     return bytes(out)
 
 
+FRAME_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("frame_index", T.IntegerType(), False),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("mean_luma", T.DoubleType()),
+        # exact integer 1e-6-unit luma sum (floor recipe over the
+        # float32 plane) — the order-free, oracle-replayable digest
+        T.StructField("luma_units", T.LongType()),
+    ]
+)
+
+
+def _frame_stats_rows(
+    decode: "Callable[[bytes | None], list[np.ndarray] | None]", every_n: int
+) -> "Callable[[bytes | None], Iterable[dict]]":
+    """``rows`` of the real frame samplers: a stats row for every
+    ``every_n``-th frame ``decode`` returns, or the frame_index = -1
+    quarantine row when it returns none."""
+
+    def rows(data):
+        frames = decode(data)
+        if not frames:
+            yield {"frame_index": -1}
+            return
+        for i in range(0, len(frames), every_n):
+            f = frames[i]
+            yield {
+                "frame_index": i,
+                "height": int(f.shape[0]),
+                "width": int(f.shape[1]),
+                "mean_luma": float(f.mean()),
+                "luma_units": int(np.floor(f.astype(np.float64) * 1e6 + 0.5).sum()),
+            }
+
+    return rows
+
+
 def sample_gif_frames(
     df: DataFrame,
     every_n: int = 2,
@@ -1356,48 +1351,10 @@ def sample_gif_frames(
     silent).  mean_luma is float64 of a float32-mean — deterministic
     for a given blob, replayed exactly by the unit suite's own
     encoder."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("frame_index", T.IntegerType(), False),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("mean_luma", T.DoubleType()),
-            # exact integer 1e-6-unit luma sum (floor recipe over the
-            # float32 plane) — the order-free, oracle-replayable digest
-            T.StructField("luma_units", T.LongType()),
-        ]
+    return map_blobs(
+        df, id_col, content_col, FRAME_STATS_SCHEMA,
+        _frame_stats_rows(_decode_gif_frames, every_n),
     )
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for mid, content in zip(batch[id_col], batch[content_col]):
-                frames = _decode_gif_frames(
-                    bytes(content) if content is not None else None
-                )
-                if not frames:
-                    out.append(
-                        {"media_id": int(mid), "frame_index": -1,
-                         "height": None, "width": None, "mean_luma": None,
-                         "luma_units": None}
-                    )
-                    continue
-                for i in range(0, len(frames), every_n):
-                    f = frames[i]
-                    units = int(
-                        np.floor(f.astype(np.float64) * 1e6 + 0.5).sum()
-                    )
-                    out.append(
-                        {"media_id": int(mid), "frame_index": i,
-                         "height": int(f.shape[0]), "width": int(f.shape[1]),
-                         "mean_luma": float(f.mean()),
-                         "luma_units": units}
-                    )
-            if out:
-                yield pd.DataFrame.from_records(out)
-
-    return df.select(id_col, content_col).mapInPandas(run, schema=schema)
 
 
 def encode_mjpeg_avi(frames: "list[np.ndarray]", fps: int = 10) -> bytes:
@@ -1518,46 +1475,10 @@ def sample_video_frames(
     quarantine convention: undecodable content emits frame_index = -1
     with NULL stats), with every demuxed frame going through the REAL
     JPEG decoder."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("frame_index", T.IntegerType(), False),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("mean_luma", T.DoubleType()),
-            T.StructField("luma_units", T.LongType()),
-        ]
+    return map_blobs(
+        df, id_col, content_col, FRAME_STATS_SCHEMA,
+        _frame_stats_rows(_decode_avi_frames, every_n),
     )
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for mid, content in zip(batch[id_col], batch[content_col]):
-                frames = _decode_avi_frames(
-                    bytes(content) if content is not None else None
-                )
-                if not frames:
-                    out.append(
-                        {"media_id": int(mid), "frame_index": -1,
-                         "height": None, "width": None, "mean_luma": None,
-                         "luma_units": None}
-                    )
-                    continue
-                for i in range(0, len(frames), every_n):
-                    f = frames[i]
-                    units = int(
-                        np.floor(f.astype(np.float64) * 1e6 + 0.5).sum()
-                    )
-                    out.append(
-                        {"media_id": int(mid), "frame_index": i,
-                         "height": int(f.shape[0]), "width": int(f.shape[1]),
-                         "mean_luma": float(f.mean()),
-                         "luma_units": units}
-                    )
-            if out:
-                yield pd.DataFrame.from_records(out)
-
-    return df.select(id_col, content_col).mapInPandas(run, schema=schema)
 
 
 def image_ahash(features: DataFrame) -> DataFrame:

@@ -461,35 +461,23 @@ def extract_pdf_metadata(df, id_col="file_id", content_col="content"):
     blob the strict walk rejects emits the magic-sniffed quarantine
     row; an ENCRYPTED file keeps its structural fields (page/object
     counts are plaintext) with NULL strings."""
-    import pandas as pd
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for fid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                meta = parse_pdf(data)
-                rec = {
-                    "file_id": int(fid), "is_pdf": sniff_pdf(data),
-                    "version_minor": None, "n_pages": None,
-                    "n_objects": None, "encrypted": None,
-                    "producer": None, "title": None,
-                }
-                if meta is not None:
-                    rec.update(
-                        version_minor=meta["version_minor"],
-                        n_pages=meta["n_pages"],
-                        n_objects=meta["n_objects"],
-                        encrypted=meta["encrypted"],
-                        producer=meta["producer"],
-                        title=meta["title"],
-                    )
-                out.append(rec)
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        meta = parse_pdf(data)
+        rec = {"is_pdf": sniff_pdf(data)}
+        if meta is not None:
+            rec.update(
+                version_minor=meta["version_minor"],
+                n_pages=meta["n_pages"],
+                n_objects=meta["n_objects"],
+                encrypted=meta["encrypted"],
+                producer=meta["producer"],
+                title=meta["title"],
+            )
+        yield rec
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=PDF_META_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, PDF_META_SCHEMA, rows)
 
 
 PDF_TEXT_SCHEMA = "file_id bigint, page int, text string, n_chars int"
@@ -498,27 +486,14 @@ PDF_TEXT_SCHEMA = "file_id bigint, page int, text string, n_chars int"
 def extract_pdf_text(df, id_col="file_id", content_col="content"):
     """1->N per-page text expansion; a file that quarantines (strict
     reject OR encrypted) emits the single page = -1 row."""
-    import pandas as pd
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for fid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                pages = parse_pdf_text(data)
-                if pages is None:
-                    out.append({
-                        "file_id": int(fid), "page": -1,
-                        "text": None, "n_chars": None,
-                    })
-                    continue
-                for p, text in enumerate(pages):
-                    out.append({
-                        "file_id": int(fid), "page": p,
-                        "text": text, "n_chars": len(text),
-                    })
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        pages = parse_pdf_text(data)
+        if pages is None:
+            yield {"page": -1}
+            return
+        for p, text in enumerate(pages):
+            yield {"page": p, "text": text, "n_chars": len(text)}
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=PDF_TEXT_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, PDF_TEXT_SCHEMA, rows)

@@ -210,32 +210,20 @@ def scan_tar_members(df, id_col="file_id", content_col="content"):
     archive order; a blob the strict walk rejects yields the single
     ``member_idx = -1`` quarantine row (NULL fields) — the shard
     stays observable, never half-ingested.  Blobs never shuffle."""
-    import pandas as pd
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for fid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                entries = parse_tar(data)
-                if entries is None:
-                    out.append({
-                        "file_id": int(fid), "member_idx": -1,
-                        "name": None, "size": None, "mtime": None,
-                        "is_dir": None,
-                    })
-                    continue
-                for idx, e in enumerate(entries):
-                    out.append({
-                        "file_id": int(fid), "member_idx": idx,
-                        "name": e["name"], "size": e["size"],
-                        "mtime": e["mtime"], "is_dir": e["is_dir"],
-                    })
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        entries = parse_tar(data)
+        if entries is None:
+            yield {"member_idx": -1}
+            return
+        for idx, e in enumerate(entries):
+            yield {
+                "member_idx": idx, "name": e["name"], "size": e["size"],
+                "mtime": e["mtime"], "is_dir": e["is_dir"],
+            }
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=TAR_SCAN_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, TAR_SCAN_SCHEMA, rows)
 
 
 def wds_media_text(file_id: int, sample: int) -> str:
@@ -300,55 +288,35 @@ def scan_tar_routed(df, id_col="file_id", content_col="content"):
     counting.  Directories route nowhere; a shard the strict walk
     rejects emits the single ``member_idx = -1`` quarantine row.
     One Arrow-batched 1->N mapInPandas pass, blobs never shuffle."""
-    import pandas as pd
-
-    def run(batches):
-        from etl_tiki_webscraping_spark.operators.multimodal import (
-            _decode_image_impl,
-        )
-
-        for batch in batches:
-            out = []
-            for fid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                entries = parse_tar(data, include_payload=True)
-                if entries is None:
-                    out.append({
-                        "file_id": int(fid), "member_idx": -1,
-                        "name": None, "kind": None, "luma_sum": None,
-                        "img_w": None, "img_h": None,
-                        "payload_text": None,
-                    })
-                    continue
-                for idx, e in enumerate(entries):
-                    if e["is_dir"]:
-                        continue
-                    payload = e["payload"]
-                    row = {
-                        "file_id": int(fid), "member_idx": idx,
-                        "name": e["name"], "kind": "text",
-                        "luma_sum": None, "img_w": None, "img_h": None,
-                        "payload_text": None,
-                    }
-                    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-                        arr = _decode_image_impl(payload)
-                        row.update(
-                            kind="image",
-                            luma_sum=int(arr.sum()),
-                            img_h=arr.shape[0], img_w=arr.shape[1],
-                        )
-                    elif payload[:1] == b"{":
-                        row.update(
-                            kind="json",
-                            payload_text=payload.decode("utf-8", "replace"),
-                        )
-                    else:
-                        row.update(
-                            payload_text=payload.decode("utf-8", "replace"),
-                        )
-                    out.append(row)
-            yield pd.DataFrame.from_records(out)
-
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=TAR_ROUTED_SCHEMA
+    from etl_tiki_webscraping_spark.operators.multimodal import (
+        _decode_image_impl,
+        map_blobs,
     )
+
+    def rows(data):
+        entries = parse_tar(data, include_payload=True)
+        if entries is None:
+            yield {"member_idx": -1}
+            return
+        for idx, e in enumerate(entries):
+            if e["is_dir"]:
+                continue
+            payload = e["payload"]
+            row = {"member_idx": idx, "name": e["name"], "kind": "text"}
+            if payload[:8] == b"\x89PNG\r\n\x1a\n":
+                arr = _decode_image_impl(payload)
+                row.update(
+                    kind="image",
+                    luma_sum=int(arr.sum()),
+                    img_h=arr.shape[0], img_w=arr.shape[1],
+                )
+            elif payload[:1] == b"{":
+                row.update(
+                    kind="json",
+                    payload_text=payload.decode("utf-8", "replace"),
+                )
+            else:
+                row.update(payload_text=payload.decode("utf-8", "replace"))
+            yield row
+
+    return map_blobs(df, id_col, content_col, TAR_ROUTED_SCHEMA, rows)

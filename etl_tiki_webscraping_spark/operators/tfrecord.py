@@ -369,50 +369,30 @@ def scan_tfrecord_examples(df, id_col="file_id", content_col="content"):
     """TFRecord shard -> per-record feature rows in one Arrow-batched
     1->N mapInPandas expansion (see module docstring for the two
     quarantine granularities).  Blobs never shuffle."""
-    import pandas as pd
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for fid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                recs = parse_tfrecord_file(data)
-                if recs is None:
-                    out.append({
-                        "file_id": int(fid), "record_idx": -1,
-                        "valid": False, "n_features": None,
-                        "feature_names": None, "label": None,
-                        "weight": None, "tokens_sum": None,
-                        "n_tokens": None, "image_len": None,
-                    })
-                    continue
-                for idx, rec in enumerate(recs):
-                    ex = rec["example"]
-                    row = {
-                        "file_id": int(fid), "record_idx": idx,
-                        "valid": bool(rec["valid"]) and ex is not None,
-                        "n_features": None, "feature_names": None,
-                        "label": None, "weight": None,
-                        "tokens_sum": None, "n_tokens": None,
-                        "image_len": None,
-                    }
-                    if ex is not None:
-                        toks = ex.get("tokens", {}).get("values", [])
-                        lab = ex.get("label", {}).get("values", [])
-                        wt = ex.get("weight", {}).get("values", [])
-                        img = ex.get("image", {}).get("values", [])
-                        row.update(
-                            n_features=len(ex),
-                            feature_names=",".join(sorted(ex)),
-                            label=int(lab[0]) if lab else None,
-                            weight=float(wt[0]) if wt else None,
-                            tokens_sum=int(sum(toks)) if toks else None,
-                            n_tokens=len(toks) if toks else None,
-                            image_len=len(img[0]) if img else None,
-                        )
-                    out.append(row)
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        recs = parse_tfrecord_file(data)
+        if recs is None:
+            yield {"record_idx": -1, "valid": False}
+            return
+        for idx, rec in enumerate(recs):
+            ex = rec["example"]
+            row = {"record_idx": idx, "valid": bool(rec["valid"]) and ex is not None}
+            if ex is not None:
+                toks = ex.get("tokens", {}).get("values", [])
+                lab = ex.get("label", {}).get("values", [])
+                wt = ex.get("weight", {}).get("values", [])
+                img = ex.get("image", {}).get("values", [])
+                row.update(
+                    n_features=len(ex),
+                    feature_names=",".join(sorted(ex)),
+                    label=int(lab[0]) if lab else None,
+                    weight=float(wt[0]) if wt else None,
+                    tokens_sum=int(sum(toks)) if toks else None,
+                    n_tokens=len(toks) if toks else None,
+                    image_len=len(img[0]) if img else None,
+                )
+            yield row
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=TFRECORD_SCAN_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, TFRECORD_SCAN_SCHEMA, rows)

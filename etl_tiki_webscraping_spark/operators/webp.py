@@ -1461,35 +1461,22 @@ def extract_webp_meta(df, id_col="media_id", content_col="content"):
     stats — so lossy/lossless/extended coverage loss is measurable
     separately (the sniff_audio_formats contract).  Blobs never
     shuffle."""
-    import pandas as pd
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for mid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                hdr = parse_webp_header(data) if data else None
-                if hdr is None:
-                    out.append({
-                        "media_id": int(mid),
-                        "variant": sniff_webp_variant(data),
-                        "width": None, "height": None, "has_alpha": None,
-                        "has_exif": None, "has_xmp": None,
-                        "has_animation": None, "n_chunks": None,
-                        "size_bytes": len(data) if data is not None else None,
-                    })
-                    continue
-                out.append({
-                    "media_id": int(mid), "variant": hdr["variant"],
-                    "width": hdr["width"], "height": hdr["height"],
-                    "has_alpha": hdr["has_alpha"],
-                    "has_exif": hdr["has_exif"], "has_xmp": hdr["has_xmp"],
-                    "has_animation": hdr["has_animation"],
-                    "n_chunks": hdr["n_chunks"],
-                    "size_bytes": len(data),
-                })
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        hdr = parse_webp_header(data) if data else None
+        size = len(data) if data is not None else None
+        if hdr is None:
+            yield {"variant": sniff_webp_variant(data), "size_bytes": size}
+            return
+        yield {
+            "variant": hdr["variant"],
+            "width": hdr["width"], "height": hdr["height"],
+            "has_alpha": hdr["has_alpha"],
+            "has_exif": hdr["has_exif"], "has_xmp": hdr["has_xmp"],
+            "has_animation": hdr["has_animation"],
+            "n_chunks": hdr["n_chunks"],
+            "size_bytes": size,
+        }
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=WEBP_META_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, WEBP_META_SCHEMA, rows)

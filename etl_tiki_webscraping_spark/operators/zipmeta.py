@@ -183,32 +183,21 @@ def extract_zip_metadata(df, id_col="file_id", content_col="content"):
     """Per-blob ZIP triage in one Arrow-batched mapInPandas pass; a
     blob the strict directory walk rejects emits the magic-sniffed
     quarantine row."""
-    import pandas as pd
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for fid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                meta = parse_zip(data)
-                rec = {
-                    "file_id": int(fid), "is_zip": sniff_zip(data),
-                    "kind": None, "n_entries": None,
-                    "total_uncompressed": None, "has_encrypted": None,
-                }
-                if meta is not None:
-                    rec.update(
-                        kind=meta["kind"],
-                        n_entries=meta["n_entries"],
-                        total_uncompressed=meta["total_uncompressed"],
-                        has_encrypted=meta["has_encrypted"],
-                    )
-                out.append(rec)
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        meta = parse_zip(data)
+        rec = {"is_zip": sniff_zip(data)}
+        if meta is not None:
+            rec.update(
+                kind=meta["kind"],
+                n_entries=meta["n_entries"],
+                total_uncompressed=meta["total_uncompressed"],
+                has_encrypted=meta["has_encrypted"],
+            )
+        yield rec
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=ZIP_META_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, ZIP_META_SCHEMA, rows)
 
 
 _LFH_SIG = 0x04034B50
@@ -304,22 +293,15 @@ def extract_docx_xml(df, id_col="file_id", content_col="content"):
     else the row quarantines (NULL xml).  Downstream paragraph/run
     extraction stays JVM-side (regexp over the xml column) — Python
     touches each blob exactly once."""
-    import pandas as pd
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for fid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                meta = parse_zip(data)
-                xml = None
-                if meta is not None and meta["kind"] == "docx":
-                    raw = zip_member_bytes(data, "word/document.xml")
-                    if raw is not None:
-                        xml = raw.decode("utf-8", "replace")
-                out.append({"file_id": int(fid), "document_xml": xml})
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        meta = parse_zip(data)
+        xml = None
+        if meta is not None and meta["kind"] == "docx":
+            raw = zip_member_bytes(data, "word/document.xml")
+            if raw is not None:
+                xml = raw.decode("utf-8", "replace")
+        yield {"document_xml": xml}
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=DOCX_XML_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, DOCX_XML_SCHEMA, rows)

@@ -243,6 +243,47 @@ _DRIVER_FRESH = frozenset({
     "dynamic_partition_pruning",
     "knn_pq_adc",
     "knn_ivf_pq",
+    # every query reading a per-blob scanner now built on map_blobs
+    "audio_format_quarantine",
+    "audio_spectral_features",
+    "audio_stream_metadata",
+    "avif_image_meta",
+    "avro_record_scan",
+    "docx_text_extract",
+    "flac_audio_features",
+    "gif_frame_sampling",
+    "image_dedup_ahash",
+    "image_exif_meta",
+    "jpeg_image_stats",
+    "jpeg_progressive_stats",
+    "mjpeg_video_stats",
+    "mp3_id3_tags",
+    "mp4_stream_metadata",
+    "multimodal_audio_features",
+    "multimodal_frame_sample",
+    "multimodal_image_features",
+    "multimodal_image_resize",
+    "pdf_doc_meta",
+    "pdf_text_extract",
+    "png_image_stats",
+    "png_interlaced_stats",
+    "png_palette_stats",
+    "streaming_media_triage",
+    "tar_shard_scan",
+    "tfrecord_example_scan",
+    "warc_html_extract",
+    "warc_http_decoding",
+    "warc_record_scan",
+    "webdataset_media_router",
+    "webdataset_sample_group",
+    "webm_stream_metadata",
+    "webp_image_stats",
+    "webp_lossy_meta",
+    "webp_variants_stats",
+    "wet_text_scan",
+    "zip_container_meta",
+    # apply_changes checks the change feed for column type drift
+    "cdc_apply_changes",
 })
 
 

@@ -55,6 +55,24 @@ def _dedup_updates(updates: DataFrame, keys: Sequence[str], order_by: Sequence[C
     return dedup_deterministic(updates, keys, descending)
 
 
+def _check_type_drift(target: DataFrame, batch: DataFrame, who: str) -> None:
+    """Type drift on a SHARED column is a loud error, not a silent
+    coercion: unionByName would widen int->string (etc.) for the whole
+    merged result, flipping the table's stored type — and on a
+    partitioned table the manifest would record the widened type while
+    carried-forward untouched partitions stay physically narrow, making
+    the committed table unreadable at scan time."""
+    t_types = {f.name: f.dataType.simpleString() for f in target.schema.fields}
+    for f in batch.schema.fields:
+        want = t_types.get(f.name)
+        got = f.dataType.simpleString()  # simpleString: nullability-blind
+        if want is not None and got != want:
+            raise ValueError(
+                f"{who}: column '{f.name}' type drift — table has "
+                f"{want}, batch has {got}; cast the batch explicitly"
+            )
+
+
 def upsert_dataframes(
     target: DataFrame,
     updates: DataFrame,
@@ -82,21 +100,7 @@ def upsert_dataframes(
         for f in target.schema.fields:
             if f.name not in updates.columns:
                 updates = updates.withColumn(f.name, F.lit(None).cast(f.dataType))
-    # type drift on a SHARED column is a loud error, not a silent
-    # coercion: unionByName would widen int->string (etc.) for the
-    # whole merged result, flipping the table's stored type — and on a
-    # partitioned table the manifest would record the widened type
-    # while carried-forward untouched partitions stay physically
-    # narrow, making the committed table unreadable at scan time
-    t_types = {f.name: f.dataType.simpleString() for f in target.schema.fields}
-    for f in updates.schema.fields:
-        want = t_types.get(f.name)
-        got = f.dataType.simpleString()  # simpleString: nullability-blind
-        if want is not None and got != want:
-            raise ValueError(
-                f"upsert: column '{f.name}' type drift — table has "
-                f"{want}, batch has {got}; cast the batch explicitly"
-            )
+    _check_type_drift(target, updates, "upsert")
     updates = _dedup_updates(updates.select(*target.columns), keys, order_by)
     survivors = (
         target.join(updates.select(*keys).distinct(), on=keys, how="left_anti")
@@ -2661,13 +2665,15 @@ def apply_changes(
     sequence numbers — resolves to the smallest value tuple, so the
     result never depends on partition order): 'D' removes the row,
     'I'/'U' replace-or-insert it.  Replaying the same feed is
-    idempotent.
+    idempotent.  A data column whose type differs from the target's
+    raises, as in :func:`upsert_dataframes`.
 
     Plan shape: one dedup-by-key over the (small) change feed + one
     anti join on the target — identical cost to a plain upsert; the
     target is never scanned twice.
     """
     keys = list(keys)
+    _check_type_drift(target, changes.drop(op_col, seq_col), "apply_changes")
     out_cols = [c for c in target.columns]
     # survivor = FIRST under the ordering: highest seq; on a same-seq
     # tie 'D' < 'I' < 'U' ascending puts the delete first, so the

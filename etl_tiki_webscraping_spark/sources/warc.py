@@ -545,36 +545,24 @@ def scan_warc_records(df, id_col="file_id", content_col="content"):
     Files never shuffle; downstream joins over the exploded records
     must size themselves explicitly (Catalyst cannot see the fan-out).
     """
-    import pandas as pd
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for fid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                recs = parse_warc_file(data)
-                if recs is None:
-                    out.append({
-                        "file_id": int(fid), "record_idx": -1,
-                        "warc_type": None, "target_uri": None,
-                        "content_length": None, "http_status": None,
-                        "http_content_type": None,
-                    })
-                    continue
-                for i, r in enumerate(recs):
-                    out.append({
-                        "file_id": int(fid), "record_idx": i,
-                        "warc_type": r["warc_type"],
-                        "target_uri": r["target_uri"],
-                        "content_length": r["content_length"],
-                        "http_status": r["http_status"],
-                        "http_content_type": r["http_content_type"],
-                    })
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        recs = parse_warc_file(data)
+        if recs is None:
+            yield {"record_idx": -1}
+            return
+        for i, r in enumerate(recs):
+            yield {
+                "record_idx": i,
+                "warc_type": r["warc_type"],
+                "target_uri": r["target_uri"],
+                "content_length": r["content_length"],
+                "http_status": r["http_status"],
+                "http_content_type": r["http_content_type"],
+            }
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=WARC_SCAN_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, WARC_SCAN_SCHEMA, rows)
 
 
 WARC_RESPONSE_SCHEMA = (
@@ -599,45 +587,30 @@ def scan_warc_responses(df, id_col="file_id", content_col="content"):
     payload capture share ``parse_warc_file(include_payload=True)``.
     Page numbering follows the fixture convention: response record
     2p+2 is page p."""
-    import pandas as pd
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for fid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                recs = (
-                    parse_warc_file(data, include_payload=True)
-                    if data is not None else None
-                )
-                if recs is None:
-                    out.append({
-                        "file_id": int(fid), "page": -1,
-                        "target_uri": None, "http_status": None,
-                        "http_content_type": None, "body": None,
-                        "http_encoding": None, "charset": None,
-                    })
-                    continue
-                page = 0
-                for r in recs:
-                    if r["warc_type"] != "response":
-                        continue
-                    dec = decode_http_response(r["payload"])
-                    out.append({
-                        "file_id": int(fid), "page": page,
-                        "target_uri": r["target_uri"],
-                        "http_status": dec["http_status"],
-                        "http_content_type": dec["http_content_type"],
-                        "body": dec["body"],
-                        "http_encoding": dec["http_encoding"],
-                        "charset": dec["charset"],
-                    })
-                    page += 1
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        recs = (
+            parse_warc_file(data, include_payload=True)
+            if data is not None else None
+        )
+        if recs is None:
+            yield {"page": -1}
+            return
+        responses = (r for r in recs if r["warc_type"] == "response")
+        for page, r in enumerate(responses):
+            dec = decode_http_response(r["payload"])
+            yield {
+                "page": page,
+                "target_uri": r["target_uri"],
+                "http_status": dec["http_status"],
+                "http_content_type": dec["http_content_type"],
+                "body": dec["body"],
+                "http_encoding": dec["http_encoding"],
+                "charset": dec["charset"],
+            }
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=WARC_RESPONSE_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, WARC_RESPONSE_SCHEMA, rows)
 
 
 WARC_ROUTED_SCHEMA = (
@@ -658,56 +631,36 @@ def scan_warc_routed(df, id_col="file_id", content_col="content"):
     keeps kind='pdf' with NULL pdf_text (quarantine observable per
     row); a rejected archive emits the single page = -1 row.  One
     Arrow-batched 1->N mapInPandas pass; blobs never shuffle."""
-    import pandas as pd
-
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
     from etl_tiki_webscraping_spark.operators.pdfmeta import parse_pdf_text
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for fid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                recs = (
-                    parse_warc_file(data, include_payload=True)
-                    if data is not None else None
+    def rows(data):
+        recs = (
+            parse_warc_file(data, include_payload=True)
+            if data is not None else None
+        )
+        if recs is None:
+            yield {"page": -1}
+            return
+        responses = (r for r in recs if r["warc_type"] == "response")
+        for page, r in enumerate(responses):
+            dec = decode_http_response(r["payload"])
+            mime = (dec["http_content_type"] or "").split(";")[0].strip().lower()
+            rec = {"page": page, "kind": "other"}
+            if mime == "text/html":
+                rec["kind"] = "html"
+                rec["html"] = dec["body"]
+            elif mime == "application/pdf":
+                rec["kind"] = "pdf"
+                pages = (
+                    parse_pdf_text(dec["body_bytes"])
+                    if dec["body_bytes"] is not None else None
                 )
-                if recs is None:
-                    out.append({
-                        "file_id": int(fid), "page": -1, "kind": None,
-                        "html": None, "pdf_text": None,
-                    })
-                    continue
-                page = 0
-                for r in recs:
-                    if r["warc_type"] != "response":
-                        continue
-                    dec = decode_http_response(r["payload"])
-                    mime = (
-                        (dec["http_content_type"] or "")
-                        .split(";")[0].strip().lower()
-                    )
-                    rec = {
-                        "file_id": int(fid), "page": page,
-                        "kind": "other", "html": None, "pdf_text": None,
-                    }
-                    if mime == "text/html":
-                        rec["kind"] = "html"
-                        rec["html"] = dec["body"]
-                    elif mime == "application/pdf":
-                        rec["kind"] = "pdf"
-                        pages = (
-                            parse_pdf_text(dec["body_bytes"])
-                            if dec["body_bytes"] is not None else None
-                        )
-                        if pages is not None:
-                            rec["pdf_text"] = " ".join(pages)
-                    out.append(rec)
-                    page += 1
-            yield pd.DataFrame.from_records(out)
+                if pages is not None:
+                    rec["pdf_text"] = " ".join(pages)
+            yield rec
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=WARC_ROUTED_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, WARC_ROUTED_SCHEMA, rows)
 
 
 # --------------------------------------------------------------------------
@@ -775,32 +728,19 @@ def scan_wet_conversions(df, id_col="file_id", content_col="content"):
     row — a truncated shard is never half-ingested.  Token counting
     and all downstream text operators stay JVM-side; blobs never
     shuffle."""
-    import pandas as pd
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
 
-    def run(batches):
-        for batch in batches:
-            out = []
-            for fid, content in zip(batch[id_col], batch[content_col]):
-                data = bytes(content) if content is not None else None
-                recs = parse_warc_file(data, include_payload=True)
-                if recs is None:
-                    out.append({
-                        "file_id": int(fid), "page": -1,
-                        "target_uri": None, "text": None,
-                    })
-                    continue
-                page = 0
-                for rec in recs:
-                    if rec["warc_type"] != "conversion":
-                        continue
-                    out.append({
-                        "file_id": int(fid), "page": page,
-                        "target_uri": rec["target_uri"],
-                        "text": rec["payload"].decode("utf-8", "replace"),
-                    })
-                    page += 1
-            yield pd.DataFrame.from_records(out)
+    def rows(data):
+        recs = parse_warc_file(data, include_payload=True)
+        if recs is None:
+            yield {"page": -1}
+            return
+        conversions = (r for r in recs if r["warc_type"] == "conversion")
+        for page, r in enumerate(conversions):
+            yield {
+                "page": page,
+                "target_uri": r["target_uri"],
+                "text": r["payload"].decode("utf-8", "replace"),
+            }
 
-    return df.select(id_col, content_col).mapInPandas(
-        run, schema=WET_SCAN_SCHEMA
-    )
+    return map_blobs(df, id_col, content_col, WET_SCAN_SCHEMA, rows)

@@ -227,3 +227,45 @@ def test_fixture_declarations_match_query_bodies():
                 assert reached(fn, set()) & builders == declared, name
                 checked.add(name)
     assert checked == set(catalog.QUERIES)
+
+
+def test_per_blob_kernels_go_through_map_blobs():
+    """The package has one per-blob Arrow batch loop: a ``mapInPandas``
+    over ``select(id_col, content_col)`` and a ``from_records(out ...)``
+    batch build occur only inside ``operators.multimodal.map_blobs``.
+    The catalog's two id-only kernels synthesize their blobs from ids
+    and are the named exceptions.  Read from source; starts no Spark."""
+    import ast
+    import pathlib
+
+    import etl_tiki_webscraping_spark
+
+    allowed = {
+        ("operators/multimodal.py", "map_blobs"),
+        ("plans/catalog.py", "q_webp_native_parity"),
+        ("plans/catalog.py", "q_webp_lossy_decode_meta"),
+    }
+
+    def is_blob_loop(node: ast.AST) -> bool:
+        if not isinstance(node, ast.Call) or not isinstance(node.func, ast.Attribute):
+            return False
+        if node.func.attr == "from_records":
+            return bool(node.args) and isinstance(node.args[0], ast.Name) and node.args[0].id == "out"
+        recv = node.func.value
+        return (
+            node.func.attr == "mapInPandas"
+            and isinstance(recv, ast.Call)
+            and isinstance(recv.func, ast.Attribute)
+            and recv.func.attr == "select"
+            and [getattr(a, "id", None) for a in recv.args] == ["id_col", "content_col"]
+        )
+
+    root = pathlib.Path(etl_tiki_webscraping_spark.__file__).parent
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for top in ast.parse(path.read_text()).body:
+            if any(is_blob_loop(n) for n in ast.walk(top)):
+                found.add((rel, getattr(top, "name", None)))
+    assert found - allowed == set()
+    assert ("operators/multimodal.py", "map_blobs") in found

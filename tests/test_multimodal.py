@@ -944,6 +944,81 @@ def test_sample_video_frames_through_mapinpandas(spark):
     assert got[(2, -1)] is None  # quarantine row
 
 
+
+def test_map_blobs_contract(spark):
+    """The one per-blob kernel: a NULL blob reaches ``rows`` as None,
+    the id lands under the schema's first field whatever ``id_col`` is
+    called, fields a row leaves out are NULL, and a batch whose blobs
+    expand to zero rows still yields a correctly typed empty result
+    (DDL-string and StructType schemas alike)."""
+    from pyspark.sql import types as T
+
+    from etl_tiki_webscraping_spark.operators.multimodal import map_blobs
+
+    schema = "item_id bigint, part int, byte int, note string"
+
+    def rows(data):
+        if data is None:
+            yield {"part": -1, "note": "null blob"}
+            return
+        if data == b"reject":
+            yield {"part": -1}
+            return
+        for i, b in enumerate(data[:2]):
+            yield {"part": i, "byte": b}
+
+    df = spark.createDataFrame(
+        [(7, bytearray(b"ab")), (8, None), (9, bytearray(b"reject")), (10, bytearray(b""))],
+        "blob_key bigint, payload binary",
+    )
+    out = map_blobs(df, "blob_key", "payload", schema, rows)
+    assert out.columns == ["item_id", "part", "byte", "note"]
+    assert sorted(map(tuple, out.collect())) == [
+        (7, 0, 97, None), (7, 1, 98, None),
+        (8, -1, None, "null blob"),
+        (9, -1, None, None),
+    ]
+
+    struct = T.StructType.fromDDL(schema)
+    empty = map_blobs(df.coalesce(1), "blob_key", "payload", struct, lambda data: ())
+    assert empty.schema == struct
+    assert empty.collect() == []
+
+
+def test_sniff_audio_formats_per_container(spark):
+    """Per-format audio triage: container from the magic sniff,
+    ``decodable``/``n_samples`` from the real WAV and FLAC decoders."""
+    import numpy as np
+
+    from etl_tiki_webscraping_spark.operators.audiometa import encode_mp3_frames
+    from etl_tiki_webscraping_spark.operators.flac import encode_flac
+    from etl_tiki_webscraping_spark.operators.multimodal import (
+        encode_wav_tone,
+        sniff_audio_formats,
+    )
+
+    pcm = (np.arange(300) % 50 - 25) * 100
+    blobs = [
+        (1, encode_wav_tone(440.0, n_samples=512)),
+        (2, encode_flac(pcm)),
+        (3, encode_mp3_frames([9] * 3)),
+        (4, b"not audio at all"),
+        (5, None),
+    ]
+    df = spark.createDataFrame(
+        [(i, bytearray(b) if b is not None else None) for i, b in blobs],
+        "media_id bigint, content binary",
+    )
+    got = {r.media_id: (r.container, r.decodable, r.n_samples)
+           for r in sniff_audio_formats(df).collect()}
+    assert got == {
+        1: ("wav", True, 512),
+        2: ("flac", True, 300),
+        3: ("mp3", False, None),
+        4: ("unknown", False, None),
+        5: ("unknown", False, None),
+    }
+
 class TestPalettePngAndGifInterlace:
     """Round-13 format completions: paletted PNG (color type 3, all
     sub-byte depths, both layouts) and interlaced GIF."""

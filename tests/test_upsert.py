@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_tiki_webscraping_spark.sinks.staging import (
@@ -1195,6 +1196,41 @@ def test_apply_changes_parquet_partitioned_prunes_and_migrates(spark, tmp_parque
     )
     again = {(r.k, r.v, r.pt) for r in read_parquet_table(spark, tmp_parquet_dir).collect()}
     assert again == got
+
+
+@pytest.mark.parametrize("partition_by", [None, ["pt"]])
+def test_apply_changes_type_drift_raises_and_commits_nothing(
+    spark, tmp_parquet_dir, partition_by
+):
+    """A change feed whose data column type differs from the table's
+    raises the upsert drift error instead of committing the widened
+    (bigint, double) or union-coerced (string "30" -> bigint) type."""
+    from etl_tiki_webscraping_spark.sinks.upsert import apply_changes_parquet
+
+    seed = spark.createDataFrame(
+        [(1, 10, "p1", "I", 1), (2, 20, "p2", "I", 1)],
+        "k int, v int, pt string, op string, seq int",
+    )
+    apply_changes_parquet(spark, seed, tmp_parquet_dir, ["k"], partition_by=partition_by)
+    pointer = os.path.join(tmp_parquet_dir, SNAPSHOT_POINTER)
+    with open(pointer) as fh:
+        latest = fh.read()
+    before = sorted(map(tuple, read_parquet_table(spark, tmp_parquet_dir).collect()))
+
+    for v_type, v in (("bigint", 30), ("double", 30.0), ("string", "30")):
+        feed = spark.createDataFrame(
+            [(3, v, "p1", "I", 2)],
+            f"k int, v {v_type}, pt string, op string, seq int",
+        )
+        with pytest.raises(ValueError, match=f"column 'v' type drift .* {v_type}"):
+            apply_changes_parquet(
+                spark, feed, tmp_parquet_dir, ["k"], partition_by=partition_by
+            )
+        with open(pointer) as fh:
+            assert fh.read() == latest
+        table = read_parquet_table(spark, tmp_parquet_dir)
+        assert dict(table.dtypes)["v"] == "int"
+        assert sorted(map(tuple, table.collect())) == before
 
 
 class TestReviewHardening:
