@@ -14,20 +14,25 @@ match across engines):
 
 from __future__ import annotations
 
+import atexit
 import functools
 import os
+import shutil
+import tempfile
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from etl_tiki_webscraping_spark.io import load_table
 from etl_tiki_webscraping_spark.session import spread
 from etl_tiki_webscraping_spark.streaming.events import (
     PURCHASE_VIEW_HORIZON_SECONDS,
     WATERMARK_DELAY_SECONDS,
-    read_events_stream_multibatch,
+    land_in_order,
+    stage_event_batches,
 )
 from etl_tiki_webscraping_spark.operators.relational import (
     anti_join,
@@ -70,6 +75,28 @@ def register(
 
 # The one fixture store: (builder, Spark application id, sf_dir) -> value.
 _FIXTURE_STORE = {}
+# (pid, path) of the dir every staged byte lives under; made on first use
+_SCRATCH_ROOT: "tuple[int, str] | None" = None
+
+
+def _scratch(prefix: str) -> str:
+    """A new empty dir for staged bytes under this process's scratch
+    root, which is made under ``$TMPDIR`` on first use and removed at
+    exit (importing the catalog makes nothing)."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None or _SCRATCH_ROOT[0] != os.getpid():
+        _SCRATCH_ROOT = (os.getpid(), tempfile.mkdtemp(prefix="graft-fixtures-"))
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT[1])
+
+
+@atexit.register
+def _remove_scratch_root() -> None:
+    """Remove the scratch root; a stored path under it is then rebuilt
+    on its next use.  A forked child leaves its parent's root alone."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is not None and _SCRATCH_ROOT[0] == os.getpid():
+        shutil.rmtree(_SCRATCH_ROOT[1], ignore_errors=True)
+        _SCRATCH_ROOT = None
 
 
 def fixture(build: Fixture) -> Fixture:
@@ -284,6 +311,19 @@ _DRIVER_FRESH = frozenset({
     "zip_container_meta",
     # apply_changes checks the change feed for column type drift
     "cdc_apply_changes",
+    # staging moved under the fixture store's scratch root: stream inputs
+    # are landed by the builders (the event-batch readers and
+    # streaming_stream_stream_left_outer above, the restatement stream),
+    # the pipeline warehouse is a builder, and the _stream_through
+    # inputs arrive in partition order (streaming_media_triage above)
+    "streaming_sketch_maintenance",
+    "streaming_sink_upsert_e2e",
+    "snapshot_time_travel",
+    "pipeline_e2e",
+    "pipeline_e2e_shops",
+    "pipeline_e2e_ratings",
+    "streaming_shard_ingest",
+    "streaming_corpus_screen",
 })
 
 
@@ -1799,17 +1839,37 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # §2.10 Real Structured Streaming (readStream -> AvailableNow -> memory sink)
 # ===========================================================================
 
+# The schema the event-batch builders land with and their streams read
+# under (load_table's events; the restatement wave drops ``props``)
+_RESTATE_SCHEMA = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
+_EVENT_SCHEMA = _RESTATE_SCHEMA + ", props string"
+
+
+def _land_events(events: DataFrame, schema: str, prefix: str, **batches) -> str:
+    """Land ``events``, held to ``schema``, as time-ordered micro-batch
+    files in a new scratch dir (see ``stage_event_batches``)."""
+    path = _scratch(prefix)
+    stage_event_batches(events.to(T.StructType.fromDDL(schema)), path, **batches)
+    return path
+
+
+def _open_stream(spark: SparkSession, path: str, schema: "T.StructType | str") -> DataFrame:
+    """A new file stream over a landed batch dir, one micro-batch per
+    file; the schema is given, so opening it runs no job."""
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
+
+
 @fixture
-def _event_batches(spark: SparkSession, sf_dir: str) -> None:
-    """Stage the events fixture as 3 time-ordered micro-batch files
-    (the streaming helper keeps the dir; :func:`_event_stream` reads it)."""
-    read_events_stream_multibatch(spark, sf_dir, n_batches=3)
+def _event_batches(spark: SparkSession, sf_dir: str) -> str:
+    """The events fixture landed as 3 time-ordered micro-batch files."""
+    return _land_events(
+        load_table(spark, sf_dir, "events"), _EVENT_SCHEMA, "stream-batches-", n_batches=3
+    )
 
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A new file stream over the staged 3-micro-batch events dir."""
-    _event_batches(spark, sf_dir)
-    return read_events_stream_multibatch(spark, sf_dir, n_batches=3)
+    """A new file stream over the 3-micro-batch events dir."""
+    return _open_stream(spark, _event_batches(spark, sf_dir), _EVENT_SCHEMA)
 
 
 @register(
@@ -1916,18 +1976,14 @@ def q_keyed_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("n_nationkey", "detail_name", "detail_code")
 
 
-_PIPELINE_WAREHOUSE: list[str] = []  # memoized per process (content is sf-independent)
-
-
-def _pipeline_warehouse(spark: SparkSession) -> str:
-    """Build the e2e warehouse: TWO pipeline runs over injected
+@fixture
+def _pipeline_warehouse(spark: SparkSession, sf_dir: str) -> str:
+    """The e2e warehouse: TWO pipeline runs over injected
     deterministic fetchers, so the PK upserts actually resolve
     conflicts (run 2 overwrites a subset and inserts new rows) and the
     FK gate actually drops a row (run 2 scrapes an orphan product whose
-    shop lookup fails).  Memoized — the three pipeline_e2e* queries
-    share one build."""
-    import os
-    import tempfile
+    shop lookup fails).  The three pipeline_e2e* queries share one
+    build; its content does not depend on ``sf_dir``."""
     from decimal import Decimal
 
     from etl_tiki_webscraping_spark.plans.pipeline import (
@@ -1935,9 +1991,6 @@ def _pipeline_warehouse(spark: SparkSession) -> str:
         run_pipeline,
     )
     from etl_tiki_webscraping_spark.sources.http import FetchConfig
-
-    if _PIPELINE_WAREHOUSE and os.path.isdir(_PIPELINE_WAREHOUSE[0]):
-        return _PIPELINE_WAREHOUSE[0]
 
     sitemap = [
         {"url_key": "electronics", "child": [{"url_key": "phones"}, {"url_key": "laptops"}]},
@@ -2071,7 +2124,7 @@ def _pipeline_warehouse(spark: SparkSession) -> str:
             for i in (1, 3)
         ]
 
-    warehouse = tempfile.mkdtemp(prefix="pipeline-e2e-") + "/wh"
+    warehouse = _scratch("pipeline-e2e-") + "/wh"
     cfg = FetchConfig(max_retries=0, backoff_seconds=0.0)
     run_pipeline(
         spark,
@@ -2095,12 +2148,12 @@ def _pipeline_warehouse(spark: SparkSession) -> str:
         warehouse,
         cfg,
     )
-    _PIPELINE_WAREHOUSE[:] = [warehouse]
     return warehouse
 
 
 @register(
     "pipeline_e2e",
+    fixtures=(_pipeline_warehouse,),
     oracle="""
     WITH sc(category, sub_category, shop_id) AS (
       VALUES ('electronics','phones','shop-0'),
@@ -2149,7 +2202,7 @@ def _pipeline_warehouse(spark: SparkSession) -> str:
 def q_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_tiki_webscraping_spark.plans.pipeline import warehouse_table
 
-    t = warehouse_table(spark, _pipeline_warehouse(spark), "product_detail")
+    t = warehouse_table(spark, _pipeline_warehouse(spark, sf_dir), "product_detail")
     return t.select(
         "product_id",
         "name",
@@ -2166,6 +2219,7 @@ def q_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pipeline_e2e_shops",
+    fixtures=(_pipeline_warehouse,),
     oracle="""
     WITH shops(shop_id) AS (VALUES ('shop-0'), ('shop-1'))
     SELECT shop_id,
@@ -2188,7 +2242,7 @@ def q_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pipeline_shops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_tiki_webscraping_spark.plans.pipeline import warehouse_table
 
-    t = warehouse_table(spark, _pipeline_warehouse(spark), "shop_info")
+    t = warehouse_table(spark, _pipeline_warehouse(spark, sf_dir), "shop_info")
     return t.select(
         "shop_id",
         "shop_name",
@@ -2208,6 +2262,7 @@ def q_pipeline_shops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pipeline_e2e_ratings",
+    fixtures=(_pipeline_warehouse,),
     oracle="""
     WITH shops(shop_id) AS (VALUES ('shop-0'), ('shop-1')),
     b1 AS (
@@ -2244,7 +2299,7 @@ def q_pipeline_shops(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pipeline_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_tiki_webscraping_spark.plans.pipeline import warehouse_table
 
-    t = warehouse_table(spark, _pipeline_warehouse(spark), "rating")
+    t = warehouse_table(spark, _pipeline_warehouse(spark, sf_dir), "rating")
     return t.select(
         "rating_id",
         "shop_id",
@@ -3265,8 +3320,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "from sinks/upsert.py: versioned snapshot dirs + atomic pointer swap)",
 )
 def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from etl_tiki_webscraping_spark.sinks.upsert import (
         read_parquet_table,
         upsert_parquet,
@@ -3275,7 +3328,7 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", F.col("c_acctbal").cast("double").alias("acctbal")
     )
-    path = tempfile.mkdtemp(prefix="time-travel-") + "/tbl"
+    path = _scratch("time-travel-") + "/tbl"
     upsert_parquet(spark, base, path, ["c_custkey"], keep_snapshots=4)
     updates = base.filter(F.col("c_custkey") % 10 == 0).withColumn(
         "acctbal", F.col("acctbal") * 2
@@ -3339,9 +3392,8 @@ def q_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dbapi_db(spark: SparkSession, sf_dir: str) -> str:
     """The customer table loaded into a SQLite file."""
     import sqlite3
-    import tempfile
 
-    db = os.path.join(tempfile.mkdtemp(prefix="dbapi-wh-"), "wh.db")
+    db = os.path.join(_scratch("dbapi-wh-"), "wh.db")
     rows = (
         load_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_name", "c_nationkey")
@@ -3416,15 +3468,13 @@ def q_dbapi_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "v2 must equal base-with-click-updates applied.",
 )
 def q_snapshot_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from etl_tiki_webscraping_spark.sinks.upsert import (
         read_parquet_table,
         upsert_parquet,
     )
 
     base = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    path = tempfile.mkdtemp(prefix="snap-part-") + "/tbl"
+    path = _scratch("snap-part-") + "/tbl"
     upsert_parquet(spark, base, path, ["event_id"], partition_by=["event_type"])
     updates = base.filter(
         (F.col("event_type") == "click") & (F.col("event_id") % 10 == 0)
@@ -4045,16 +4095,18 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # spacer batches past every view's expiry (margin = horizon + delay + slack)
 _LOJ_MULTIBATCH_KW = dict(
     n_batches=3,
-    cache_tag="outer-spacer",
     spacer_batches=2,
     spacer_margin_seconds=PURCHASE_VIEW_HORIZON_SECONDS + WATERMARK_DELAY_SECONDS + 120,
 )
 
 
 @fixture
-def _loj_event_batches(spark: SparkSession, sf_dir: str) -> None:
-    """Stage the left-outer join's spacer-batch events dir."""
-    read_events_stream_multibatch(spark, sf_dir, **_LOJ_MULTIBATCH_KW)
+def _loj_event_batches(spark: SparkSession, sf_dir: str) -> str:
+    """The left-outer join's events dir: 3 batches plus 2 spacers."""
+    return _land_events(
+        load_table(spark, sf_dir, "events"), _EVENT_SCHEMA, "stream-loj-",
+        **_LOJ_MULTIBATCH_KW,
+    )
 
 
 @register(
@@ -4089,12 +4141,12 @@ def q_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_stream_purchase_views,
     )
 
-    _loj_event_batches(spark, sf_dir)
+    batches = _loj_event_batches(spark, sf_dir)
 
     def side(kind: str) -> DataFrame:
-        return read_events_stream_multibatch(
-            spark, sf_dir, **_LOJ_MULTIBATCH_KW
-        ).filter(F.col("event_type") == kind)
+        return _open_stream(spark, batches, _EVENT_SCHEMA).filter(
+            F.col("event_type") == kind
+        )
 
     joined = stream_stream_purchase_views(
         side("view"), side("purchase"), how="leftOuter"
@@ -4113,14 +4165,12 @@ def q_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 @fixture
 def _file_skip_table(spark: SparkSession, sf_dir: str) -> str:
     """customer committed, then compacted by c_custkey into small files."""
-    import tempfile
-
     from etl_tiki_webscraping_spark.sinks.upsert import compact_table, upsert_parquet
 
     base = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", F.col("c_acctbal").cast("double").alias("acctbal")
     )
-    path = tempfile.mkdtemp(prefix="file-skip-") + "/tbl"
+    path = _scratch("file-skip-") + "/tbl"
     upsert_parquet(spark, base, path, ["c_custkey"])
     compact_table(spark, path, target_file_bytes=16 * 1024, sort_by=["c_custkey"])
     return path
@@ -4300,8 +4350,6 @@ def q_crosscorpus_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @fixture
 def _zorder_table(spark: SparkSession, sf_dir: str) -> str:
     """lineitem committed, then compacted z-ordered on (l_partkey, l_suppkey)."""
-    import tempfile
-
     from etl_tiki_webscraping_spark.sinks.upsert import compact_table, upsert_parquet
 
     base = load_table(spark, sf_dir, "lineitem").select(
@@ -4311,7 +4359,7 @@ def _zorder_table(spark: SparkSession, sf_dir: str) -> str:
         "l_suppkey",
         F.col("l_quantity").cast("double").alias("qty"),
     )
-    path = tempfile.mkdtemp(prefix="zorder-") + "/tbl"
+    path = _scratch("zorder-") + "/tbl"
     # key = the full tuple: the fixture's (orderkey, linenumber) is
     # not unique, so the upsert is a plain DISTINCT (oracle mirrors)
     upsert_parquet(spark, base, path, list(base.columns))
@@ -4677,8 +4725,29 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@fixture
+def _restate_event_batches(spark: SparkSession, sf_dir: str) -> str:
+    """The events fixture plus a restatement wave (value doubled for
+    event_id%37=0, shifted +60 days), landed as 4 time-ordered
+    micro-batch files."""
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    restated = events.filter(F.col("event_id") % 37 == 0).select(
+        "event_id",
+        (F.col("ts") + F.expr("INTERVAL 60 DAYS")).alias("ts"),
+        "user_id",
+        F.lit("restate").alias("event_type"),
+        (F.col("value") * 2).alias("value"),
+    )
+    return _land_events(
+        events.unionByName(restated), _RESTATE_SCHEMA, "stream-restate-", n_batches=4
+    )
+
+
 @register(
     "streaming_sink_upsert_e2e",
+    fixtures=(_restate_event_batches,),
     oracle="""
     WITH src AS (
       SELECT event_id, ts, user_id, event_type, value FROM events
@@ -4707,33 +4776,20 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "its new event_date), exactly-once sink semantics",
 )
 def q_streaming_sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from etl_tiki_webscraping_spark.sinks.upsert import read_parquet_table
     from etl_tiki_webscraping_spark.streaming.events import foreach_batch_upsert
 
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    restated = events.filter(F.col("event_id") % 37 == 0).select(
-        "event_id",
-        (F.col("ts") + F.expr("INTERVAL 60 DAYS")).alias("ts"),
-        "user_id",
-        F.lit("restate").alias("event_type"),
-        (F.col("value") * 2).alias("value"),
-    )
-    stream = read_events_stream_multibatch(
-        spark, sf_dir, n_batches=4,
-        events_df=events.unionByName(restated), cache_tag="restate-v1",
+    stream = _open_stream(
+        spark, _restate_event_batches(spark, sf_dir), _RESTATE_SCHEMA
     ).withColumn("event_date", F.to_date("ts"))
 
-    target = tempfile.mkdtemp(prefix="stream-sink-") + "/tbl"
-    ckpt = tempfile.mkdtemp(prefix="stream-sink-ckpt-")
+    root = _scratch("stream-sink-")
+    target = root + "/tbl"
     writer = foreach_batch_upsert(
         stream,
         target,
         keys=["event_id"],
-        checkpoint_dir=ckpt,
+        checkpoint_dir=root + "/ckpt",
         # original + restatement of one key can share a micro-batch at
         # the range boundary; last-wins under ts keeps the batch-level
         # merge identical to the global last-writer-wins replay
@@ -4743,8 +4799,7 @@ def q_streaming_sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         # whole-table key scan must remove the stale version
         stable_partitions=False,
     )
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
+    _await_stream(writer.trigger(availableNow=True).start(), "streaming sink upsert")
     return read_parquet_table(spark, target).select(
         "event_id", "user_id", "event_type", "value", "event_date"
     )
@@ -4826,14 +4881,12 @@ def q_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _delete_table(spark: SparkSession, sf_dir: str) -> str:
     """events committed partitioned by event_type, then its 'error'
     partition deleted."""
-    import tempfile
-
     from etl_tiki_webscraping_spark.sinks.upsert import delete_where, upsert_parquet
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", F.col("value").cast("double").alias("value")
     )
-    path = tempfile.mkdtemp(prefix="delete-where-") + "/tbl"
+    path = _scratch("delete-where-") + "/tbl"
     upsert_parquet(spark, ev, path, ["event_id"], partition_by=["event_type"])
     delete_where(spark, path, F.col("event_type") == "error", partition_by=["event_type"])
     return path
@@ -4867,8 +4920,6 @@ def q_snapshot_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _rf_table(spark: SparkSession, sf_dir: str) -> str:
     """orders committed, then the RF1 new-order upsert and the RF2
     %37 delete."""
-    import tempfile
-
     from etl_tiki_webscraping_spark.sinks.upsert import delete_where, upsert_parquet
 
     base = load_table(spark, sf_dir, "orders").select(
@@ -4876,7 +4927,7 @@ def _rf_table(spark: SparkSession, sf_dir: str) -> str:
         "o_orderstatus",
         F.col("o_totalprice").cast("double").alias("price"),
     )
-    path = tempfile.mkdtemp(prefix="tpch-rf-") + "/orders"
+    path = _scratch("tpch-rf-") + "/orders"
     upsert_parquet(spark, base, path, ["o_orderkey"])
     rf1 = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 10 == 1
@@ -4948,8 +4999,6 @@ def q_tpch_refresh_rf1_rf2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _change_feed_table(spark: SparkSession, sf_dir: str) -> str:
     """The three-commit CDF fixture table: v1 = orders keys %3, v2 =
     overlapping %5 batch at price+1000, v3 = delete of 1-URGENT rows."""
-    import tempfile
-
     from etl_tiki_webscraping_spark.sinks.upsert import delete_where, upsert_parquet
 
     orders = load_table(spark, sf_dir, "orders")
@@ -4965,7 +5014,7 @@ def _change_feed_table(spark: SparkSession, sf_dir: str) -> str:
         (F.col("o_totalprice").cast("double") + F.lit(1000.0)).alias("price"),
         F.col("o_orderpriority").alias("prio"),
     )
-    path = tempfile.mkdtemp(prefix="change-feed-") + "/tbl"
+    path = _scratch("change-feed-") + "/tbl"
     upsert_parquet(spark, base, path, ["o_orderkey"], keep_snapshots=5, change_feed=True)
     upsert_parquet(spark, batch, path, ["o_orderkey"], keep_snapshots=5, change_feed=True)
     delete_where(spark, path, F.col("prio") == "1-URGENT", change_feed=True, keep_snapshots=5)
@@ -4977,8 +5026,6 @@ def _customer_feed_table(spark: SparkSession, sf_dir: str) -> str:
     """The customer-side three-commit CDF fixture: v1 = customers with
     even keys, v2 = overlapping %7 batch at acctbal+500, v3 = delete of
     the BUILDING segment."""
-    import tempfile
-
     from etl_tiki_webscraping_spark.sinks.upsert import delete_where, upsert_parquet
 
     cust = load_table(spark, sf_dir, "customer")
@@ -4994,7 +5041,7 @@ def _customer_feed_table(spark: SparkSession, sf_dir: str) -> str:
         (F.col("c_acctbal").cast("double") + F.lit(500.0)).alias("acctbal"),
         F.col("c_mktsegment").alias("seg"),
     )
-    path = tempfile.mkdtemp(prefix="cust-feed-") + "/tbl"
+    path = _scratch("cust-feed-") + "/tbl"
     upsert_parquet(spark, base, path, ["c_custkey"], keep_snapshots=5, change_feed=True)
     upsert_parquet(spark, batch, path, ["c_custkey"], keep_snapshots=5, change_feed=True)
     delete_where(spark, path, F.col("seg") == "BUILDING", change_feed=True, keep_snapshots=5)
@@ -6532,22 +6579,18 @@ def _await_stream(q, what: str) -> None:
 
 
 def _stream_through(frame: DataFrame, prefix: str, process) -> str:
-    """Stage ``frame`` as 3 parquet files, stream them one micro-batch
-    per file (availableNow) through ``process``, and append each
-    batch's result to a parquet sink; returns the sink dir."""
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix=prefix)
+    """Land ``frame`` as 3 time-ordered parquet files, stream them one
+    micro-batch per file (availableNow) through ``process``, and append
+    each batch's result to a parquet sink; returns the sink dir."""
+    root = _scratch(prefix)
     src, sink_dir = root + "/src", root + "/sink"
-    frame.repartition(3).write.parquet(src)
+    land_in_order(frame.repartition(3), src)
 
     def sink(batch_df, _batch_id: int) -> None:
         process(batch_df).write.mode("append").parquet(sink_dir)
 
     q = (
-        frame.sparkSession.readStream.schema(frame.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        _open_stream(frame.sparkSession, src, frame.schema)
         .writeStream.foreachBatch(sink)
         .option("checkpointLocation", root + "/ckpt")
         .trigger(availableNow=True)
@@ -6561,19 +6604,14 @@ def _stream_through(frame: DataFrame, prefix: str, process) -> str:
 def _stream_cdc_replica(spark: SparkSession, sf_dir: str) -> str:
     """The change-feed table's three commits streamed as micro-batches
     into a snapshot replica through the apply-changes sink."""
-    import glob
-    import shutil
-    import tempfile
-
     from etl_tiki_webscraping_spark.sinks.upsert import read_change_feed
     from etl_tiki_webscraping_spark.streaming.events import (
         foreach_batch_apply_changes,
     )
 
     src = _change_feed_table(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="stream-cdc-")
+    root = _scratch("stream-cdc-")
     in_dir = os.path.join(root, "in")
-    os.makedirs(in_dir)
     for v in (1, 2, 3):
         mapped = (
             read_change_feed(spark, src, v, v)
@@ -6589,20 +6627,12 @@ def _stream_cdc_replica(spark: SparkSession, sf_dir: str) -> str:
                 F.col("_commit_version").alias("seq"),
             )
         )
-        tmp = os.path.join(root, f"stage{v}")
-        mapped.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(in_dir, f"{v:04d}.parquet")
-        shutil.move(part, dst)
-        os.utime(dst, (v * 1000, v * 1000))  # strictly increasing mtimes
+        land_in_order(mapped.coalesce(1), in_dir)
     replica = os.path.join(root, "replica")
-    stream = (
-        spark.readStream.schema(
-            "o_orderkey bigint, o_custkey bigint, price double, "
-            "prio string, op string, seq int"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+    stream = _open_stream(
+        spark,
+        in_dir,
+        "o_orderkey bigint, o_custkey bigint, price double, prio string, op string, seq int",
     )
     q = (
         foreach_batch_apply_changes(
@@ -6846,8 +6876,6 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bloom_index_table(spark: SparkSession, sf_dir: str) -> str:
     """orders committed, compacted by o_custkey, with a bloom index on
     o_orderkey."""
-    import tempfile
-
     from etl_tiki_webscraping_spark.sinks.upsert import (
         build_bloom_index,
         compact_table,
@@ -6859,7 +6887,7 @@ def _bloom_index_table(spark: SparkSession, sf_dir: str) -> str:
         "o_custkey",
         F.col("o_totalprice").cast("double").alias("price"),
     )
-    path = tempfile.mkdtemp(prefix="bloom-index-") + "/tbl"
+    path = _scratch("bloom-index-") + "/tbl"
     upsert_parquet(spark, orders, path, ["o_orderkey"])
     # cluster by the OTHER key: o_orderkey scatters across every file
     compact_table(spark, path, target_file_bytes=48 * 1024, sort_by=["o_custkey"])
@@ -6902,8 +6930,6 @@ def q_bloom_index_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _restore_table(spark: SparkSession, sf_dir: str) -> str:
     """A prio-partitioned orders table (keys %3) that takes a bad
     overlapping batch as v2, then restores to v1 as v3."""
-    import tempfile
-
     from etl_tiki_webscraping_spark.sinks.upsert import restore_table, upsert_parquet
 
     orders = load_table(spark, sf_dir, "orders")
@@ -6919,7 +6945,7 @@ def _restore_table(spark: SparkSession, sf_dir: str) -> str:
         (F.col("o_totalprice").cast("double") + F.lit(1000.0)).alias("price"),
         F.col("o_orderpriority").alias("prio"),
     )
-    path = tempfile.mkdtemp(prefix="restore-") + "/tbl"
+    path = _scratch("restore-") + "/tbl"
     upsert_parquet(
         spark, base, path, ["o_orderkey"], partition_by=["prio"], keep_snapshots=5
     )
@@ -7229,8 +7255,6 @@ def _stage_ingest(spark: SparkSession, sf_dir: str, fmt: str) -> str:
     """Stage a headerless CSV / JSONL dir derived from orders, plus an
     extra file of deliberately corrupt lines that quarantine must absorb
     without disturbing the good rows."""
-    import tempfile
-
     mod = 7 if fmt == "csv" else 11
     rows = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % mod == 0
@@ -7240,7 +7264,7 @@ def _stage_ingest(spark: SparkSession, sf_dir: str, fmt: str) -> str:
         F.col("o_totalprice").cast("double").alias("price"),
         F.col("o_orderpriority").alias("prio"),
     )
-    path = tempfile.mkdtemp(prefix=f"ingest-{fmt}-")
+    path = _scratch(f"ingest-{fmt}-")
     if fmt == "csv":
         rows.write.mode("overwrite").option("header", "false").csv(path)
     else:
@@ -7331,8 +7355,6 @@ def q_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _evolved_table(spark: SparkSession, sf_dir: str) -> str:
     """An unpartitioned orders table (keys %3) rewritten under a
     prio-partitioned layout."""
-    import tempfile
-
     from etl_tiki_webscraping_spark.sinks.upsert import repartition_table, upsert_parquet
 
     base = load_table(spark, sf_dir, "orders").filter(
@@ -7343,7 +7365,7 @@ def _evolved_table(spark: SparkSession, sf_dir: str) -> str:
         F.col("o_totalprice").cast("double").alias("price"),
         F.col("o_orderpriority").alias("prio"),
     )
-    path = tempfile.mkdtemp(prefix="evolve-") + "/tbl"
+    path = _scratch("evolve-") + "/tbl"
     upsert_parquet(spark, base, path, ["o_orderkey"], keep_snapshots=5)
     repartition_table(spark, path, partition_by=["prio"], keep_snapshots=5)
     return path
@@ -7849,12 +7871,10 @@ def _stream_quarantine_root(spark: SparkSession, sf_dir: str) -> str:
     """The CSV ingest dir streamed as micro-batches through the
     quarantine split into ``good``/``bad`` parquet sinks; returns their
     root."""
-    import tempfile
-
     from etl_tiki_webscraping_spark.sources.files import parse_lines_quarantine
 
     src = _csv_ingest_dir(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="stream-quarantine-")
+    root = _scratch("stream-quarantine-")
     good_dir, bad_dir = root + "/good", root + "/bad"
 
     def sink(batch_df, _batch_id: int) -> None:
@@ -8344,11 +8364,9 @@ def _sketch_maintenance_oracle() -> str:
 def _sketch_table(spark: SparkSession, sf_dir: str) -> str:
     """The per-day HLL register table maintained by a 3-micro-batch
     event stream."""
-    import tempfile
-
     from etl_tiki_webscraping_spark.streaming.events import foreach_batch_portable_hll
 
-    root = tempfile.mkdtemp(prefix="sketch-table-")
+    root = _scratch("sketch-table-")
     path = root + "/tbl"
     stream = _event_stream(spark, sf_dir).withColumn("day", F.to_date("ts"))
     q = (
@@ -8398,8 +8416,6 @@ def q_streaming_sketch_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
 def _dv_table(spark: SparkSession, sf_dir: str) -> str:
     """A prio-partitioned orders table (keys %3) whose odd-customer
     urgent rows are deleted through deletion vectors."""
-    import tempfile
-
     from etl_tiki_webscraping_spark.sinks.upsert import delete_where, upsert_parquet
 
     base = load_table(spark, sf_dir, "orders").filter(
@@ -8410,7 +8426,7 @@ def _dv_table(spark: SparkSession, sf_dir: str) -> str:
         F.col("o_totalprice").cast("double").alias("price"),
         F.col("o_orderpriority").alias("prio"),
     )
-    path = tempfile.mkdtemp(prefix="dv-") + "/tbl"
+    path = _scratch("dv-") + "/tbl"
     upsert_parquet(
         spark, base, path, ["o_orderkey"], partition_by=["prio"], keep_snapshots=5
     )
@@ -8458,8 +8474,6 @@ def q_snapshot_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _update_table(spark: SparkSession, sf_dir: str) -> str:
     """A prio-partitioned orders table (keys %3) whose 2-HIGH prices are
     raised 10% by a predicate update."""
-    import tempfile
-
     from etl_tiki_webscraping_spark.sinks.upsert import update_where, upsert_parquet
 
     base = load_table(spark, sf_dir, "orders").filter(
@@ -8470,7 +8484,7 @@ def _update_table(spark: SparkSession, sf_dir: str) -> str:
         F.col("o_totalprice").cast("double").alias("price"),
         F.col("o_orderpriority").alias("prio"),
     )
-    path = tempfile.mkdtemp(prefix="update-") + "/tbl"
+    path = _scratch("update-") + "/tbl"
     upsert_parquet(
         spark, base, path, ["o_orderkey"], partition_by=["prio"], keep_snapshots=5
     )
@@ -9346,8 +9360,6 @@ def q_histogram_equi_width(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _compact_table(spark: SparkSession, sf_dir: str) -> str:
     """An orders table (keys %3) built by five micro-batch commits,
     then compacted clustered on the order key."""
-    import tempfile
-
     from etl_tiki_webscraping_spark.sinks.upsert import compact_table, upsert_parquet
 
     base = load_table(spark, sf_dir, "orders").filter(
@@ -9358,7 +9370,7 @@ def _compact_table(spark: SparkSession, sf_dir: str) -> str:
         F.col("o_totalprice").cast("double").alias("price"),
         F.col("o_orderpriority").alias("prio"),
     )
-    path = tempfile.mkdtemp(prefix="compact-") + "/tbl"
+    path = _scratch("compact-") + "/tbl"
     # five micro-batch commits: disjoint key slices, one file set
     # each — the accretion pattern a streaming sink produces
     for i in range(5):
@@ -10519,12 +10531,10 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _winnow_base_store(spark: SparkSession, sf_dir: str) -> str:
     """The base corpus's (doc_id % 10 != 0) gram-carrying winnowing
     fingerprints, written to parquet."""
-    import tempfile
-
     from etl_tiki_webscraping_spark.operators.dedup import winnow_fingerprints
 
     base = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 != 0)
-    path = tempfile.mkdtemp(prefix="winnow-store-") + "/fps"
+    path = _scratch("winnow-store-") + "/fps"
     winnow_fingerprints(base, "doc_id", "text", with_grams=True).write.parquet(path)
     return path
 
@@ -17726,8 +17736,6 @@ def _wds_shard_dir(spark: SparkSession, sf_dir: str) -> str:
     shared storage.  The staging .collect() is the fixture WRITER,
     bounded at |docs|/17 shard ids (~300 rows at sf0.1); the READ path
     never collects."""
-    import tempfile
-
     from etl_tiki_webscraping_spark.operators.tarmeta import encode_tar_shard
 
     ids = [
@@ -17737,7 +17745,7 @@ def _wds_shard_dir(spark: SparkSession, sf_dir: str) -> str:
         .select("doc_id")
         .collect()
     ]
-    d_dir = tempfile.mkdtemp(prefix="wds-shards-")
+    d_dir = _scratch("wds-shards-")
     for d in sorted(ids):
         k = (d // 17) % 3
         blob = encode_tar_shard(d, 2 + d % 3, truncate=k == 2)

@@ -31,6 +31,7 @@ the harness path.
 
 from __future__ import annotations
 
+import datetime
 import os
 import shutil
 import tempfile
@@ -42,6 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
+
+from etl_tiki_webscraping_spark.io import normalize_event_ts
 
 # stream_stream_purchase_views defaults.  A left-outer flush needs the
 # watermark past view_ts + horizon, and the watermark trails the data
@@ -57,40 +60,55 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Streams the parquet directory with a glob pinned to the events
     file (a real deployment would point at an arriving-files dir).
-    Normalizes the fixture's ts encoding the same way the batch loader
-    does (nanos-as-long + floor to micros; micros-NTZ cast to session-tz
-    timestamp) so the streaming and batch plans see identical schemas.
+    ``ts`` goes through the batch loader's normalizer
+    (:func:`etl_tiki_webscraping_spark.io.normalize_event_ts`), so the
+    streaming and batch plans see identical schemas.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    stream = (
+    return normalize_event_ts(
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if isinstance(schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
 
 
-def read_events_stream_multibatch(
-    spark: SparkSession,
-    sf_dir: str,
+def land_in_order(frame: DataFrame, out_dir: str) -> None:
+    """Append each partition of ``frame`` to ``out_dir`` as one parquet
+    file, in partition order, after the files already landed there.
+
+    A file stream source takes files oldest first, so the ``i``-th file
+    landed gets mtime ``i`` minutes past a fixed epoch: under
+    ``maxFilesPerTrigger=1`` each partition is one micro-batch, in
+    landing order, whatever order the write tasks finished in.  An
+    empty partition lands no file."""
+    landing = os.path.join(out_dir, "_landing")
+    frame.write.parquet(landing)
+    start = sum(f.startswith("batch-") for f in os.listdir(out_dir))
+    parts = sorted(
+        f for f in os.listdir(landing)
+        if f.startswith("part-") and f.endswith(".parquet")
+    )  # part-00000 is partition 0
+    for i, f in enumerate(parts, start):
+        dst = os.path.join(out_dir, f"batch-{i:05d}.parquet")
+        shutil.move(os.path.join(landing, f), dst)
+        os.utime(dst, (1_700_000_000 + 60 * i, 1_700_000_000 + 60 * i))
+    shutil.rmtree(landing)
+
+
+def stage_event_batches(
+    events: DataFrame,
+    out_dir: str,
     n_batches: int = 3,
-    events_df: "DataFrame | None" = None,
-    cache_tag: str = "",
     spacer_batches: int = 0,
     spacer_margin_seconds: int = 0,
-) -> DataFrame:
-    """Stream the ``events`` fixture as ``n_batches`` REAL micro-batches.
+) -> None:
+    """Land ``events`` in ``out_dir`` (the caller's) as ``n_batches``
+    REAL micro-batches for a ``maxFilesPerTrigger=1`` stream.
 
-    The fixture is one parquet file, which AvailableNow would consume in
-    a single batch — exercising none of the cross-batch machinery.  This
-    helper re-stages it as ``n_batches`` disjoint time-range files
-    (ascending mtimes; the file source processes oldest-first) and
-    limits each trigger to one file, so windows and dedup keys spanning
+    One parquet file would be consumed by AvailableNow in a single
+    batch — exercising none of the cross-batch machinery.  This lands
+    ``n_batches`` disjoint ``ts`` ranges as time-ordered files
+    (:func:`land_in_order`), so windows and dedup keys spanning
     adjacent ranges carry state ACROSS batches and the watermark
     advances batch-by-batch exactly as in production.  Because arrival
     order follows event time, no row is ever late — results stay equal
@@ -100,97 +118,31 @@ def read_events_stream_multibatch(
     ``spacer_batches`` appends that many trailing single-file
     micro-batches of sentinel heartbeat rows (one 'view' + one
     'purchase', ``user_id`` -1/-2, ``event_id`` < 0) whose timestamps
-    start ``spacer_margin_seconds`` past the data's max ``ts``.
-    Outer-join null emissions and state evictions only materialize
-    once the watermark PASSES a row's expiry — and a result-emitting
-    micro-batch uses the watermark computed at the END of the previous
-    one — so a stream that just ends never flushes its tail.  In
-    production a heartbeat/punctuation topic plays this role; two
-    spacer batches (advance, then flush) are the availableNow
-    equivalent.  Callers filter ``user_id < 0`` out of results.
-    Requires a non-empty ``cache_tag`` (distinct staging layout).
+    start ``spacer_margin_seconds`` past the data's max ``ts``; they
+    take the events fixture's six columns.  Outer-join null emissions
+    and state evictions only materialize once the watermark PASSES a
+    row's expiry — and a result-emitting micro-batch uses the watermark
+    computed at the END of the previous one — so a stream that just
+    ends never flushes its tail.  In production a heartbeat/punctuation
+    topic plays this role; two spacer batches (advance, then flush) are
+    the availableNow equivalent.  Callers filter ``user_id < 0`` out of
+    results.
     """
-    from etl_tiki_webscraping_spark.io import load_table
-
-    # ``events_df`` substitutes a derived event set (must keep a ``ts``
-    # column); ``cache_tag`` discriminates its staging cache entry — the
-    # cache key cannot see the DataFrame's contents, so a custom
-    # events_df with the default tag would silently reuse a previously
-    # staged dir for DIFFERENT rows (r6 ADVICE)
-    if events_df is not None and not cache_tag:
-        raise ValueError(
-            "read_events_stream_multibatch: a custom events_df needs a "
-            "non-empty cache_tag to key its staging cache entry"
-        )
-    if spacer_batches and not cache_tag:
-        raise ValueError(
-            "read_events_stream_multibatch: spacer_batches changes the "
-            "staged layout — pass a non-empty cache_tag"
-        )
-    events = events_df if events_df is not None else load_table(spark, sf_dir, "events")
-    # staging is one-time setup (a deployment streams an already-arriving
-    # dir); memoize per (fixture, split) so repeated runs in one session
-    # — the bench's steady-state pass — don't re-shuffle and re-write it
-    # spacer params are part of the staged LAYOUT: same tag with a
-    # different spacer count/margin must stage fresh, not silently
-    # reuse a dir whose sentinel batches differ (the same hazard the
-    # events_df/cache_tag guard exists for)
-    key = (
-        os.path.abspath(sf_dir), n_batches, cache_tag,
-        spacer_batches, spacer_margin_seconds,
+    land_in_order(
+        events.repartitionByRange(n_batches, "ts").sortWithinPartitions("ts"), out_dir
     )
-    staged = _STAGED_STREAM_DIRS.get(key)
-    if staged is None or not os.path.isdir(staged):
-        staged = tempfile.mkdtemp(prefix="stream-batches-") + "/in"
-        (
-            events.repartitionByRange(n_batches, "ts")
-            .sortWithinPartitions("ts")
-            .write.mode("overwrite")
-            .parquet(staged)
-        )
-        files = sorted(
-            f
-            for f in os.listdir(staged)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-        for i, f in enumerate(files):  # part-00000 holds the lowest ts range
-            os.utime(os.path.join(staged, f), (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
-        if spacer_batches:
-            import datetime as _dt
-            import shutil
-
-            # one bounded scalar read: the sentinel ts must clear every
-            # real row's state expiry (caller adds horizon+delay margin)
-            mx = events.agg(F.max("ts").alias("m")).collect()[0]["m"]
-            for b in range(spacer_batches):
-                ts = mx + _dt.timedelta(seconds=spacer_margin_seconds + 60 * b)
-                rows = [
-                    (-(2 * b + 1), ts, -1, "view", 0.0, None),
-                    (-(2 * b + 2), ts, -2, "purchase", 0.0, None),
-                ]
-                tmp = staged + f".spacer{b}"
-                events.sparkSession.createDataFrame(
-                    rows, schema=events.schema
-                ).coalesce(1).write.mode("overwrite").parquet(tmp)
-                part = next(
-                    f for f in os.listdir(tmp)
-                    if f.endswith(".parquet") and not f.startswith((".", "_"))
-                )
-                dst = os.path.join(staged, f"spacer-{b:02d}.parquet")
-                shutil.move(os.path.join(tmp, part), dst)
-                shutil.rmtree(tmp, ignore_errors=True)
-                t = 1_700_000_000 + (len(files) + b) * 60
-                os.utime(dst, (t, t))
-        _STAGED_STREAM_DIRS[key] = staged
-    schema = events.schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-
-
-_STAGED_STREAM_DIRS: dict[tuple[str, int, str], str] = {}
+    if spacer_batches:
+        # one bounded scalar read: the sentinel ts must clear every
+        # real row's state expiry (caller adds horizon+delay margin)
+        mx = events.agg(F.max("ts").alias("m")).collect()[0]["m"]
+        for b in range(spacer_batches):
+            ts = mx + datetime.timedelta(seconds=spacer_margin_seconds + 60 * b)
+            rows = [
+                (-(2 * b + 1), ts, -1, "view", 0.0, None),
+                (-(2 * b + 2), ts, -2, "purchase", 0.0, None),
+            ]
+            spacer = events.sparkSession.createDataFrame(rows, schema=events.schema)
+            land_in_order(spacer.coalesce(1), out_dir)
 
 
 _SP_KEY = "spark.sql.shuffle.partitions"
@@ -666,7 +618,7 @@ def stream_stream_purchase_views(
     null row for a view can be emitted ONLY once the watermark proves
     no matching purchase can still arrive (watermark past ``view_ts +
     horizon``), so a finite input needs trailing watermark-advancing
-    rows to flush its tail (see read_events_stream_multibatch's
+    rows to flush its tail (see stage_event_batches's
     ``spacer_batches``).
     """
     if how not in ("inner", "leftOuter"):

@@ -229,6 +229,59 @@ def test_fixture_declarations_match_query_bodies():
     assert checked == set(catalog.QUERIES)
 
 
+def test_one_store_owns_staged_bytes():
+    """The fixture store is the package's one module-level memo, and
+    the catalog makes staging dirs only under its scratch root: no
+    other private module-level name is bound to an empty ``{}``,
+    ``[]``, ``dict()``, ``list()`` or ``set()``, and every
+    ``tempfile.mkdtemp`` call in ``plans/catalog.py`` sits in
+    ``_scratch``.  Read from source; starts no Spark."""
+    import ast
+    import pathlib
+
+    import etl_tiki_webscraping_spark
+
+    def empty(v: "ast.expr | None") -> bool:
+        if isinstance(v, ast.Dict):
+            return not v.keys
+        if isinstance(v, ast.List):
+            return not v.elts
+        return (
+            isinstance(v, ast.Call)
+            and isinstance(v.func, ast.Name)
+            and v.func.id in ("dict", "list", "set")
+            and not v.args
+            and not v.keywords
+        )
+
+    pkg = pathlib.Path(etl_tiki_webscraping_spark.__file__).parent
+    memos = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.Assign) and empty(node.value):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign) and empty(node.value):
+                targets = [node.target]
+            else:
+                continue
+            memos += [
+                f"{path.relative_to(pkg)}:{t.id}"
+                for t in targets
+                if isinstance(t, ast.Name) and t.id.startswith("_")
+            ]
+    assert memos == ["plans/catalog.py:_FIXTURE_STORE"]
+
+    owners = {
+        top.name if isinstance(top, ast.FunctionDef) else "<module>"
+        for top in ast.parse((pkg / "plans" / "catalog.py").read_text()).body
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "mkdtemp"
+    }
+    assert owners == {"_scratch"}
+
+
 def test_per_blob_kernels_go_through_map_blobs():
     """The package has one per-blob Arrow batch loop: a ``mapInPandas``
     over ``select(id_col, content_col)`` and a ``from_records(out ...)``

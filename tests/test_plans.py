@@ -234,3 +234,45 @@ def test_blobs_fixture_schema_content_and_single_id_column(spark):
     ]
     with pytest.raises(ValueError):
         _blobs(ids.withColumn("other", F.lit(1)), build)
+
+
+def test_scratch_root_cleanup_removes_staging_and_builders_rebuild(spark, sf_dir):
+    """Every staged byte lives under the one scratch root: the store's
+    exit cleanup removes it, and a builder called afterwards stages
+    afresh under a new root."""
+    import os
+
+    from etl_tiki_webscraping_spark.plans import catalog
+
+    builders = (catalog._file_skip_table, catalog._event_batches, catalog._pipeline_warehouse)
+    staged = [build(spark, sf_dir) for build in builders]
+    root = catalog._SCRATCH_ROOT[1]
+    assert all(path.startswith(root + os.sep) for path in staged)
+    catalog._remove_scratch_root()
+    assert not os.path.exists(root)
+    again = [build(spark, sf_dir) for build in builders]
+    assert all(os.path.exists(path) for path in again)
+    assert not any(path.startswith(root + os.sep) for path in again)
+
+
+def test_scratch_cleanup_leaves_another_process_root(tmp_path, monkeypatch):
+    """A forked child inherits the exit handler; the pid check keeps
+    it from removing its parent's root."""
+    import os
+
+    from etl_tiki_webscraping_spark.plans import catalog
+
+    monkeypatch.setattr(catalog, "_SCRATCH_ROOT", (os.getpid() + 1, str(tmp_path)))
+    catalog._remove_scratch_root()
+    assert tmp_path.exists()
+
+
+def test_opening_the_staged_event_stream_runs_no_job(spark, sf_dir):
+    """The stream reads its landed batches under the schema they were
+    written with, so opening it infers nothing."""
+    from etl_tiki_webscraping_spark.metrics import measure
+    from etl_tiki_webscraping_spark.plans import catalog
+
+    catalog._event_batches(spark, sf_dir)
+    _, totals = measure(spark, "open", lambda: catalog._event_stream(spark, sf_dir).schema)
+    assert totals["spark.jobs"] == 0

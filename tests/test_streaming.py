@@ -361,22 +361,51 @@ def _write_batches(tmp_path, name, batches, schema_cols=None):
     return str(src)
 
 
-def test_multibatch_custom_events_df_requires_cache_tag(spark):
-    """ADVICE r6: the staging cache key cannot see a custom events_df's
-    contents, so passing one with the default cache_tag would silently
-    stream a previously staged dir's rows — it must raise instead."""
-    import pytest
+def test_stage_event_batches_lands_time_ordered_files(spark, tmp_path):
+    """The stager lands ``n_batches`` ascending ``ts`` ranges and then
+    the heartbeat spacers as one file each, with strictly increasing
+    mtimes in that order, and leaves nothing else in the caller's dir."""
+    from etl_tiki_webscraping_spark.plans.catalog import _LOJ_MULTIBATCH_KW
+    from etl_tiki_webscraping_spark.streaming.events import stage_event_batches
 
-    from etl_tiki_webscraping_spark.streaming.events import (
-        read_events_stream_multibatch,
+    events = spark.range(60).select(
+        F.col("id").alias("event_id"),
+        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id") * 60).alias("ts"),
+        (F.col("id") % 7).alias("user_id"),
+        F.when(F.col("id") % 2 == 0, "view").otherwise("purchase").alias("event_type"),
+        F.col("id").cast("double").alias("value"),
+        F.lit(None).cast("string").alias("props"),
     )
+    out = str(tmp_path / "in")
+    stage_event_batches(events, out, **_LOJ_MULTIBATCH_KW)
+    files = sorted(os.listdir(out))
+    assert files == [f"batch-{i:05d}.parquet" for i in range(5)]
+    mtimes = [os.path.getmtime(os.path.join(out, f)) for f in files]
+    assert mtimes == sorted(set(mtimes))
+    batches = [spark.read.parquet(os.path.join(out, f)).collect() for f in files]
+    ranges = [(min(r["ts"] for r in b), max(r["ts"] for r in b)) for b in batches]
+    assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:]))
+    assert sum(len(b) for b in batches[:3]) == 60
+    margin = _LOJ_MULTIBATCH_KW["spacer_margin_seconds"]
+    for b, spacer in enumerate(batches[3:]):
+        assert sorted(r["user_id"] for r in spacer) == [-2, -1]
+        assert {(r["ts"] - ranges[2][1]).total_seconds() for r in spacer} == {margin + 60 * b}
 
-    df = spark.createDataFrame(
-        [("e1", "2024-01-01 10:00:00", "view", 1.0)],
-        "event_id string, ts string, event_type string, value double",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    with pytest.raises(ValueError, match="cache_tag"):
-        read_events_stream_multibatch(spark, "/root/testdata/sf0.001", events_df=df)
+
+def test_readers_leave_the_session_conf_alone(spark, sf_dir):
+    """The batch and streaming events readers give ``ts`` as a
+    timestamp without touching the caller's session conf."""
+    from pyspark.sql import types as T
+
+    from etl_tiki_webscraping_spark.io import load_table
+    from etl_tiki_webscraping_spark.streaming.events import read_events_stream
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    session = spark.newSession()
+    session.conf.set(key, "false")
+    for df in (load_table(session, sf_dir, "events"), read_events_stream(session, sf_dir)):
+        assert isinstance(df.schema["ts"].dataType, T.TimestampType)
+    assert session.conf.get(key) == "false"
 
 
 def test_windowed_counts_multibatch_watermark_evicts_late_rows(spark, tmp_path):
