@@ -324,6 +324,24 @@ _DRIVER_FRESH = frozenset({
     "pipeline_e2e_ratings",
     "streaming_shard_ingest",
     "streaming_corpus_screen",
+    # the snapshot writers read a table's layout from its manifest and
+    # share one copy-on-write rewrite, and the file-skipping reads share
+    # one tail (the change-feed, pipeline, streaming-sink, time-travel,
+    # files-metadata and dynamic_partition_pruning queries that stage
+    # through them are listed above)
+    "snapshot_partitioned_upsert",
+    "snapshot_file_skipping",
+    "zorder_multidim_skipping",
+    "snapshot_delete_where",
+    "tpch_refresh_rf1_rf2",
+    "snapshot_history",
+    "bloom_index_point_lookup",
+    "snapshot_restore",
+    "snapshot_table_diff",
+    "partition_evolution",
+    "snapshot_dv_delete",
+    "snapshot_update_where",
+    "snapshot_compaction",
 })
 
 
@@ -3479,7 +3497,7 @@ def q_snapshot_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates = base.filter(
         (F.col("event_type") == "click") & (F.col("event_id") % 10 == 0)
     ).withColumn("value", F.col("value") * 2)
-    upsert_parquet(spark, updates, path, ["event_id"], partition_by=["event_type"])
+    upsert_parquet(spark, updates, path, ["event_id"])
     return read_parquet_table(spark, path).select("event_id", "event_type", "value")
 
 
@@ -4888,7 +4906,7 @@ def _delete_table(spark: SparkSession, sf_dir: str) -> str:
     )
     path = _scratch("delete-where-") + "/tbl"
     upsert_parquet(spark, ev, path, ["event_id"], partition_by=["event_type"])
-    delete_where(spark, path, F.col("event_type") == "error", partition_by=["event_type"])
+    delete_where(spark, path, F.col("event_type") == "error")
     return path
 
 
@@ -6949,9 +6967,7 @@ def _restore_table(spark: SparkSession, sf_dir: str) -> str:
     upsert_parquet(
         spark, base, path, ["o_orderkey"], partition_by=["prio"], keep_snapshots=5
     )
-    upsert_parquet(
-        spark, bad, path, ["o_orderkey"], partition_by=["prio"], keep_snapshots=5
-    )
+    upsert_parquet(spark, bad, path, ["o_orderkey"], keep_snapshots=5)
     restore_table(spark, path, version=1, keep_snapshots=5)
     return path
 
@@ -8044,7 +8060,7 @@ def q_snapshot_files_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the restore fixture: partitioned by prio, current == v1 (%3)
     return (
-        table_files(spark, _restore_table(spark, sf_dir), partition_cols=["prio"])
+        table_files(spark, _restore_table(spark, sf_dir))
         .groupBy("prio")
         .agg(F.sum("n_rows").alias("n_rows"))
     )
@@ -8490,8 +8506,7 @@ def _update_table(spark: SparkSession, sf_dir: str) -> str:
     )
     update_where(
         spark, path, F.col("prio") == "2-HIGH",
-        {"price": F.col("price") * 1.1}, partition_by=["prio"],
-        keep_snapshots=5,
+        {"price": F.col("price") * 1.1}, keep_snapshots=5,
     )
     return path
 

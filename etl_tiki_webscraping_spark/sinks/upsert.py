@@ -399,7 +399,7 @@ def table_history(spark: SparkSession, target_path: str) -> DataFrame:
             continue
         files = _parquet_files(snap_dir)
         n_rows = sum(pq.read_metadata(f).num_rows for f in files)
-        partition_by = _load_manifest(target_path, entry).get("partition_by") or []
+        partition_by, _ = _layout(target_path, entry)
         rows.append(
             (
                 int(entry.lstrip("v")),
@@ -421,7 +421,6 @@ def table_files(
     spark: SparkSession,
     target_path: str,
     version: int | None = None,
-    partition_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Files metadata table (Iceberg ``.files`` / Delta ``DESCRIBE
     DETAIL`` analog): one row per data file of a snapshot with its
@@ -432,7 +431,9 @@ def table_files(
     and metadata-vs-data consistency audits (the catalog query
     aggregates this against a first-principles recount).  Row counts
     are PHYSICAL — under deletion vectors they include
-    merge-on-read-deleted rows until the next rewriting commit."""
+    merge-on-read-deleted rows until the next rewriting commit.  A
+    partitioned snapshot adds one string column per partition column of
+    its recorded layout."""
     import os
 
     import pyarrow.parquet as pq
@@ -445,7 +446,7 @@ def table_files(
     if name is None:
         raise FileNotFoundError(f"no committed snapshot table at {target_path}")
     snap_dir = os.path.join(target_path, name)
-    pcols = list(partition_cols or [])
+    pcols, _ = _layout(target_path, name)
     rows = []
     for full in _parquet_files(snap_dir):
         rel = os.path.relpath(full, snap_dir)
@@ -812,9 +813,7 @@ def _bloom_pruned_read(
 
     from etl_tiki_webscraping_spark.operators.bloom import _positions
 
-    col, values = eq_filter[0], eq_filter[1]
-    if not isinstance(values, (list, tuple)):
-        values = [values]
+    col, values, pred = _eq_terms(eq_filter)
     ipath = os.path.join(target_path, snap_name, "_bloom", f"{col}.json")
     if not os.path.exists(ipath):
         return None
@@ -836,23 +835,47 @@ def _bloom_pruned_read(
     def may_contain(words: list, positions: list) -> bool:
         return all(words[p // 64] & (1 << (p % 64)) != 0 for p in positions)
 
-    snap_dir = os.path.join(target_path, snap_name)
-    all_files = _parquet_files(snap_dir)
     findex = index["files"]
     kept = []
-    for path in all_files:
+    for path in _parquet_files(os.path.join(target_path, snap_name)):
         words = findex.get(os.path.basename(path))
         if words is None or any(may_contain(words, ps) for ps in value_positions):
             kept.append(path)
-    pred = F.col(col).isin(*[F.lit(v) for v in values])
-    manifest = _load_manifest(target_path, snap_name)
+    return _read_kept_files(
+        spark, target_path, snap_name, _load_manifest(target_path, snap_name), kept, pred
+    )
+
+
+def _read_kept_files(
+    spark: SparkSession,
+    target_path: str,
+    snap_name: str,
+    manifest: dict,
+    kept: "list[str]",
+    pred: Column,
+) -> "DataFrame | None":
+    """The tail of a file-skipping read: the ``kept`` files of one
+    snapshot read under its manifest schema, deletion vectors applied,
+    then filtered by ``pred``.  With no file kept, an empty frame under
+    the manifest schema — or None when the manifest records none (the
+    caller falls back to read + filter)."""
+    import os
+
     if not kept:
         schema = _manifest_schema(manifest)
-        if schema is None:
-            return None
-        return spark.createDataFrame([], schema).filter(pred)
+        return None if schema is None else spark.createDataFrame([], schema).filter(pred)
+    snap_dir = os.path.join(target_path, snap_name)
     df = _snapshot_reader(spark, manifest).option("basePath", snap_dir).parquet(*kept)
     return _maybe_apply_dv(spark, snap_dir, df).filter(pred)
+
+
+def _eq_terms(eq_filter: tuple) -> "tuple[str, list, Column]":
+    """``(col, value)`` or ``(col, [values...])`` -> the column, the
+    value list and the point-lookup predicate."""
+    col, values = eq_filter[0], eq_filter[1]
+    if not isinstance(values, (list, tuple)):
+        values = [values]
+    return col, list(values), F.col(col).isin(*[F.lit(v) for v in values])
 
 
 def _resolve_snapshot_name(
@@ -961,7 +984,7 @@ def read_parquet_table(
             if range_filter:
                 return _apply_range(df, range_filter)
             if eq_filter:
-                return df.filter(F.col(eq_filter[0]).isin(eq_filter[1]))
+                return df.filter(_eq_terms(eq_filter)[2])
             return df
     if range_filter is not None:
         pruned = _stats_pruned_read(spark, target_path, name, range_filter)
@@ -972,10 +995,7 @@ def read_parquet_table(
         pruned = _bloom_pruned_read(spark, target_path, name, eq_filter)
         if pruned is not None:
             return pruned
-        values = eq_filter[1] if isinstance(eq_filter[1], (list, tuple)) else [eq_filter[1]]
-        return _read_snapshot(spark, target_path, name).filter(
-            F.col(eq_filter[0]).isin(*[F.lit(v) for v in values])
-        )
+        return _read_snapshot(spark, target_path, name).filter(_eq_terms(eq_filter)[2])
     return _read_snapshot(spark, target_path, name)
 
 
@@ -986,14 +1006,18 @@ def _range_conjuncts(range_filter) -> "list[tuple]":
     return [tuple(range_filter)]
 
 
-def _apply_range(df: DataFrame, range_filter) -> DataFrame:
+def _range_pred(range_filter) -> Column:
     pred = F.lit(True)
     for col, lo, hi in _range_conjuncts(range_filter):
         if lo is not None:
             pred = pred & (F.col(col) >= F.lit(lo))
         if hi is not None:
             pred = pred & (F.col(col) <= F.lit(hi))
-    return df.filter(pred)
+    return pred
+
+
+def _apply_range(df: DataFrame, range_filter) -> DataFrame:
+    return df.filter(_range_pred(range_filter))
 
 
 def _stats_pruned_read(
@@ -1034,15 +1058,14 @@ def _stats_pruned_read(
     kept = [f for f in all_files if survives(f)]
     if len(kept) == len(all_files):
         return None  # nothing skippable; use the standard read path
-    if not kept:
-        schema = _manifest_schema(manifest)
-        if schema is None:
-            return None
-        return _apply_range(spark.createDataFrame([], schema), range_filter)
-    df = _snapshot_reader(spark, manifest).option("basePath", snap_dir).parquet(
-        *[os.path.join(snap_dir, f) for f in kept]
+    return _read_kept_files(
+        spark,
+        target_path,
+        snap_name,
+        manifest,
+        [os.path.join(snap_dir, f) for f in kept],
+        _range_pred(range_filter),
     )
-    return _apply_range(_maybe_apply_dv(spark, snap_dir, df), range_filter)
 
 
 def _leaf_partition_dirs(root: str, depth: int) -> list[str]:
@@ -1068,26 +1091,20 @@ def _leaf_partition_dirs(root: str, depth: int) -> list[str]:
     return out
 
 
-def _farm_entries(snap_dir: str, pcols: Sequence[str]) -> dict[str, str] | None:
-    """If ``snap_dir`` is a hive layout matching ``pcols`` (one
-    ``col=value`` path level per partition column), return
-    {leaf relpath -> fully-resolved data dir}; else None (legacy plain
-    snapshot, or the table was re-partitioned on different columns)."""
+def _layout(target_path: str, cur: "str | None") -> "tuple[list[str], dict[str, str]]":
+    """The committed layout of snapshot ``cur``, read from its manifest:
+    the partition columns and {leaf relpath -> fully-resolved pool dir}.
+    Entries are relative to the table dir, except a clone's, which are
+    absolute; ``join`` keeps those as they are.  A snapshot whose
+    manifest records no ``partition_by`` (unpartitioned or legacy), or
+    no table at all, has the layout ``([], {})``."""
     import os
 
-    leaves = _leaf_partition_dirs(snap_dir, len(pcols))
-    if not leaves:
-        return None
-    for rel in leaves:
-        segs = rel.split(os.sep)
-        if any(not seg.startswith(f"{pc}=") for pc, seg in zip(pcols, segs)):
-            return None
-        # farm leaves are always symlinks into the data/ pool; a real dir
-        # here means a legacy snapshot or a different partitioning depth —
-        # carrying it forward would dangle once the old snapshot is pruned
-        if not os.path.islink(os.path.join(snap_dir, rel)):
-            return None
-    return {rel: os.path.realpath(os.path.join(snap_dir, rel)) for rel in leaves}
+    manifest = _load_manifest(target_path, cur) if cur is not None else {}
+    entries = manifest.get("partitions") or {}
+    return list(manifest.get("partition_by") or []), {
+        rel: os.path.realpath(os.path.join(target_path, d)) for rel, d in entries.items()
+    }
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -1756,29 +1773,6 @@ def _rows_in_partitions(
     return snapshot.join(F.broadcast(t), on=cond, how="left_semi")
 
 
-def _touched_rows(
-    snapshot: DataFrame,
-    touched_vals: DataFrame,
-    pcols: Sequence[str],
-    cast_to: "T.StructType | None" = None,
-) -> "tuple[DataFrame, set[tuple]]":
-    """Collect the partition values a commit touches — bounded by the
-    number of touched partitions, the same cardinality a Delta/Iceberg
-    commit carries as metadata — and return the snapshot's rows in
-    those partitions plus the normalized value set whose prior farm
-    entries the commit supersedes (``drop_values`` of :func:`_commit`).
-    ``cast_to`` realigns the partition columns to a batch's schema:
-    hive reads append partition columns last and may re-infer their
-    type."""
-    touched_rows = touched_vals.collect()
-    drop_values = {tuple(_normalize_value(r[pc]) for pc in pcols) for r in touched_rows}
-    touched = _rows_in_partitions(snapshot, touched_rows, touched_vals.schema, pcols)
-    if cast_to is not None:
-        for pc in pcols:
-            touched = touched.withColumn(pc, F.col(pc).cast(cast_to[pc].dataType))
-    return touched, drop_values
-
-
 def _touched_partitions(
     snapshot: DataFrame,
     updates: DataFrame,
@@ -1880,9 +1874,13 @@ def upsert_parquet(
     single-object PUT (atomic on S3/GCS) or a conditional put for
     multi-writer safety; the prune maps to a batch delete.
 
-    Partitioned tables (``partition_by=...``) avoid the full-table
-    write amplification: only the partitions the update batch touches
-    are read (via a partition-pruned scan of the current snapshot),
+    Partitioned tables avoid the full-table write amplification.  The
+    layout is table state: ``partition_by`` on the call that creates the
+    table records it in the manifest, and every later writer reads it
+    from there — omit it on an existing table; a different value raises
+    (:func:`repartition_table` is the one way to change a layout).  Only
+    the partitions the update batch touches are read (via a
+    partition-pruned scan of the current snapshot),
     merged, and rewritten into an append-only ``data/`` pool; the new
     snapshot is a hive-layout dir of per-partition REFERENCES —
     symlinks locally, ``vN.json`` manifest entries authoritatively —
@@ -1902,21 +1900,30 @@ def upsert_parquet(
     standard date-partitioned-facts layout — to skip that scan and
     touch strictly the batch's own partitions.
     """
+    keys = list(keys)
+
+    def merge(target: "DataFrame | None") -> DataFrame:
+        if target is None:
+            return _dedup_updates(updates, keys, order_by)
+        return upsert_dataframes(target, updates, keys, order_by, evolve_schema)
+
     attempt = 0
     while True:
         try:
-            _upsert_parquet_attempt(
+            _copy_on_write(
                 spark,
-                updates,
                 target_path,
-                list(keys),
-                order_by,
-                partition_by,
                 keep_snapshots,
-                stable_partitions,
-                evolve_schema,
-                audit,
-                change_feed,
+                lambda snap, pcols: _touched_partitions(
+                    snap, updates, keys, pcols, stable_partitions
+                ),
+                merge,
+                (lambda prior, staged, v: _change_rows(prior, staged, updates, keys, v))
+                if change_feed
+                else None,
+                partition_by=partition_by,
+                cast_to=updates.schema,
+                audit=audit,
             )
             return
         except ConcurrentWriteError:
@@ -1927,102 +1934,92 @@ def upsert_parquet(
             # version and re-merges this batch onto it
 
 
-def _upsert_parquet_attempt(
+def _copy_on_write(
     spark: SparkSession,
-    updates: DataFrame,
     target_path: str,
-    keys: list[str],
-    order_by: Sequence[Column | str] | None,
-    partition_by: Sequence[str] | None,
     keep_snapshots: int,
-    stable_partitions: bool,
-    evolve_schema: bool,
-    audit: "object | None",
-    change_feed: bool = False,
+    touched,
+    rewrite,
+    feed=None,
+    partition_by: Sequence[str] | None = None,
+    cast_to: "T.StructType | None" = None,
+    audit: "object | None" = None,
 ) -> None:
-    """One read-merge-commit attempt of :func:`upsert_parquet`.  When
-    the current snapshot is a farm on ``partition_by``, the batch merges
-    against ONLY the partitions it touches and every other partition
-    carries forward by reference; otherwise (unpartitioned, a legacy
-    plain-parquet dir, or a snapshot laid out on other columns) the
-    whole table is merged and rewritten once."""
+    """Commit the next version of ``target_path`` as a copy-on-write
+    rewrite — the one read-rewrite-commit sequence of
+    :func:`upsert_parquet`, :func:`delete_where`, :func:`update_where`
+    and :func:`apply_changes_parquet`.  Each writer passes three things:
+
+    - ``touched(snapshot, pcols)``: the partition values its batch
+      touches (asked only of a partitioned table);
+    - ``rewrite(prior)``: the new rows from the prior ones — the rows
+      of the touched partitions, the whole table when it is
+      unpartitioned (or a legacy plain-parquet dir), None when the
+      table is new;
+    - ``feed(prior, staged, next_version)``: the commit's change rows
+      (see ``changes_builder`` of :func:`_commit`), or None.
+
+    The layout is the committed manifest's (:func:`_layout`): only the
+    touched partitions are read and rewritten, every other partition
+    carries forward by reference.  ``partition_by`` lays out a table
+    this call creates; on an existing table it must be omitted or equal
+    the recorded layout.  ``cast_to`` realigns the touched rows'
+    partition columns to a batch's schema: hive reads append partition
+    columns last and may re-infer their type."""
     import os
 
     cur = _current_snapshot(target_path)
-    prior_entries: dict[str, str] | None = None
-    drop_values: set[tuple] | None = None
-    if cur is not None and partition_by:
-        prior_entries = _farm_entries(os.path.join(target_path, cur), partition_by)
-    # pre-merge rows the batch can touch: the merge input and the
-    # change feed's preimages
-    target: "DataFrame | None" = None
-    if prior_entries is not None:
-        pcols = list(partition_by)
+    pcols, entries = _layout(target_path, cur)
+    prior: "DataFrame | None" = None
+    drop_values: "set[tuple] | None" = None
+    if cur is None:
+        pcols = list(partition_by or [])
+        if os.path.isdir(target_path) and any(
+            not e.startswith((".", "_")) for e in os.listdir(target_path)
+        ):
+            # legacy plain-parquet dir: upgrade in place to the snapshot layout
+            prior = spark.read.parquet(target_path)
+    else:
+        if partition_by is not None and list(partition_by) != pcols:
+            raise ValueError(
+                f"{target_path} is laid out by {pcols}, not {list(partition_by)}; "
+                "a write keeps the table's layout — change it with repartition_table"
+            )
         # manifest-schema read: pool files written before an additive
         # evolution lack the newer columns and must null-fill them
-        snap = _read_snapshot(spark, target_path, cur)
-        target, drop_values = _touched_rows(
-            snap,
-            _touched_partitions(snap, updates, keys, pcols, stable_partitions),
-            pcols,
-            updates.schema,
-        )
-        if not evolve_schema:
-            # align the BATCH to the table, never the table to the
-            # batch: a narrower batch raises here (missing column)
-            # exactly like the full merge's updates.select(*target.columns)
-            # — silently narrowing `target` instead would commit the
-            # touched partitions without the column AND record the
-            # narrowed schema as the manifest's authoritative one,
-            # losing the column for the whole table on every later read
-            updates = updates.select(*target.columns)
-    elif cur is not None:
-        target = _read_snapshot(spark, target_path, cur)
-    elif os.path.exists(target_path) and any(
-        not e.startswith((".", "_")) for e in os.listdir(target_path)
-    ):
-        # legacy plain-parquet dir: upgrade in place to the snapshot layout
-        target = spark.read.parquet(target_path)
+        prior = _read_snapshot(spark, target_path, cur)
+        if pcols:
+            # the touched partition values are collected — bounded by the
+            # number of touched partitions, the same cardinality a
+            # Delta/Iceberg commit carries as metadata; their prior farm
+            # entries are the ones this commit supersedes
+            touched_vals = touched(prior, pcols)
+            touched_rows = touched_vals.collect()
+            drop_values = {tuple(_normalize_value(r[pc]) for pc in pcols) for r in touched_rows}
+            prior = _rows_in_partitions(prior, touched_rows, touched_vals.schema, pcols)
+            if cast_to is not None:
+                for pc in pcols:
+                    prior = prior.withColumn(pc, F.col(pc).cast(cast_to[pc].dataType))
     next_version = int(cur.lstrip("v")) + 1 if cur is not None else 1
-    if target is None:
-        merged = _dedup_updates(updates, keys, order_by)
-    else:
-        merged = upsert_dataframes(target, updates, keys, order_by, evolve_schema)
-
-    builder = (
-        (lambda staged: _change_rows(target, staged, updates, keys, next_version))
-        if change_feed
-        else None
-    )
     _commit(
         target_path,
         next_version,
         keep_snapshots,
-        merged,
-        partition_by,
-        prior_entries,
+        rewrite(prior),
+        pcols,
+        entries,
         drop_values,
         audit=audit,
-        changes_builder=builder,
+        changes_builder=(lambda staged: feed(prior, staged, next_version))
+        if feed is not None
+        else None,
     )
-
-
-def _require_farm(target_path: str, cur: str, pcols: Sequence[str]) -> dict[str, str]:
-    """Farm entries of snapshot ``cur`` for a writer that requires the
-    table to be partitioned on ``pcols``."""
-    import os
-
-    entries = _farm_entries(os.path.join(target_path, cur), pcols)
-    if entries is None:
-        raise ValueError(f"{target_path} is not a {list(pcols)}-partitioned snapshot table")
-    return entries
 
 
 def delete_where(
     spark: SparkSession,
     target_path: str,
     condition: Column,
-    partition_by: Sequence[str] | None = None,
     keep_snapshots: int = 2,
     change_feed: bool = False,
     deletion_vectors: bool = False,
@@ -2049,38 +2046,27 @@ def delete_where(
     costs the matching scan plus KB of vector rows — deferred to reads
     until the next rewriting commit (upsert of the file's partition, or
     ``compact_table``) purges the vectors by rewriting.  Works on both
-    layouts; ``partition_by`` is ignored (nothing is rewritten).
+    layouts (nothing is rewritten).
     """
     cur = _current_snapshot(target_path)
     if cur is None:
         raise FileNotFoundError(f"no committed table at {target_path}")
-    next_version = int(cur.lstrip("v")) + 1
     cond = F.coalesce(condition, F.lit(False))
 
     if deletion_vectors:
-        _commit_dv(spark, target_path, cur, next_version, cond, keep_snapshots, change_feed)
+        _commit_dv(spark, target_path, cur, cond, keep_snapshots, change_feed)
         return
-    rows = _read_snapshot(spark, target_path, cur)
-    entries: dict[str, str] = {}
-    drop_values: set[tuple] | None = None
-    if partition_by:
-        pcols = list(partition_by)
-        entries = _require_farm(target_path, cur, pcols)
-        rows, drop_values = _touched_rows(
-            rows, rows.filter(cond).select(*pcols).distinct(), pcols
-        )
-    # delete feed rows are by definition NOT in the staged result;
-    # deriving them is one more filtered scan of the prior snapshot
-    deletes = _tag_changes(rows.filter(cond), "delete", next_version)
-    _commit(
+    _copy_on_write(
+        spark,
         target_path,
-        next_version,
         keep_snapshots,
-        rows.filter(~cond),
-        partition_by,
-        entries,
-        drop_values,
-        changes_builder=(lambda staged: deletes) if change_feed else None,
+        lambda snap, pcols: snap.filter(cond).select(*pcols).distinct(),
+        lambda rows: rows.filter(~cond),
+        # delete feed rows are by definition NOT in the staged result;
+        # deriving them is one more filtered scan of the prior snapshot
+        (lambda prior, staged, v: _tag_changes(prior.filter(cond), "delete", v))
+        if change_feed
+        else None,
     )
 
 
@@ -2089,7 +2075,6 @@ def update_where(
     target_path: str,
     condition: Column,
     assignments: "dict[str, Column]",
-    partition_by: Sequence[str] | None = None,
     keep_snapshots: int = 2,
     change_feed: bool = False,
     merge_on_read: bool = False,
@@ -2125,57 +2110,43 @@ def update_where(
     cur = _current_snapshot(target_path)
     if cur is None:
         raise FileNotFoundError(f"no committed table at {target_path}")
-    next_version = int(cur.lstrip("v")) + 1
     cond = F.coalesce(condition, F.lit(False))
+    pcols, _ = _layout(target_path, cur)
 
     if merge_on_read:
-        # decided by the COMMITTED layout, not only the caller's
-        # argument: a post-image appended at the root of a hive farm is
-        # invisible to partition discovery, so the update would commit
-        # and silently drop every matched row
-        if partition_by or _load_manifest(target_path, cur).get("partition_by"):
+        # a post-image appended at the root of a hive farm is invisible
+        # to partition discovery, so the update would commit and
+        # silently drop every matched row
+        if pcols:
             raise ValueError(
                 "merge_on_read updates support the unpartitioned layout "
                 "(a partition leaf is one reference; appending into a "
                 "carried partition needs per-file references)"
             )
-        _commit_dv(
-            spark, target_path, cur, next_version, cond, keep_snapshots,
-            change_feed, assignments,
-        )
+        _commit_dv(spark, target_path, cur, cond, keep_snapshots, change_feed, assignments)
         return
-
-    rows = _read_snapshot(spark, target_path, cur)
-    assigned = _schema_preserving_assigned(assignments, cond, rows.schema)
-    entries: dict[str, str] = {}
-    drop_values: set[tuple] | None = None
-    if partition_by:
-        pcols = list(partition_by)
-        hit = [c for c in assignments if c in pcols]
-        if hit:
-            raise ValueError(
-                f"update_where cannot assign partition columns {hit}; rows would "
-                "migrate partitions — use upsert_parquet for keyed moves"
-            )
-        entries = _require_farm(target_path, cur, pcols)
-        rows, drop_values = _touched_rows(
-            rows, rows.filter(cond).select(*pcols).distinct(), pcols
+    hit = [c for c in assignments if c in pcols]
+    if hit:
+        raise ValueError(
+            f"update_where cannot assign partition columns {hit}; rows would "
+            "migrate partitions — use upsert_parquet for keyed moves"
         )
 
-    def feed(_staged) -> DataFrame:
-        pre = _tag_changes(rows.filter(cond), "update_preimage", next_version)
-        post = _tag_changes(assigned(rows.filter(cond)), "update_postimage", next_version)
+    def assigned(rows: DataFrame) -> DataFrame:
+        return _schema_preserving_assigned(assignments, cond, rows.schema)(rows)
+
+    def feed(prior: DataFrame, _staged, v: int) -> DataFrame:
+        pre = _tag_changes(prior.filter(cond), "update_preimage", v)
+        post = _tag_changes(assigned(prior.filter(cond)), "update_postimage", v)
         return pre.unionByName(post)
 
-    _commit(
+    _copy_on_write(
+        spark,
         target_path,
-        next_version,
         keep_snapshots,
-        assigned(rows),
-        partition_by,
-        entries,
-        drop_values,
-        changes_builder=feed if change_feed else None,
+        lambda snap, pcols: snap.filter(cond).select(*pcols).distinct(),
+        assigned,
+        feed if change_feed else None,
     )
 
 
@@ -2261,7 +2232,6 @@ def _commit_dv(
     spark: SparkSession,
     target_path: str,
     cur: str,
-    next_version: int,
     cond: Column,
     keep_snapshots: int,
     change_feed: bool,
@@ -2280,6 +2250,7 @@ def _commit_dv(
     flip atomic."""
     import os
 
+    next_version = int(cur.lstrip("v")) + 1
     snap_dir = os.path.join(target_path, cur)
     manifest = _load_manifest(target_path, cur)
     df = _snapshot_reader(spark, manifest).parquet(snap_dir)
@@ -2377,7 +2348,6 @@ def compact_table(
     spark: SparkSession,
     target_path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    partition_by: Sequence[str] | None = None,
     keep_snapshots: int = 2,
     sort_by: Sequence[str] | None = None,
     zorder_by: Sequence[str] | None = None,
@@ -2433,9 +2403,9 @@ def compact_table(
     else:
         df = df.repartition(n_files)
 
-    # a partitioned rewrite stays in the referenced-partition layout:
-    # every partition is freshly written, nothing carries forward
-    _commit(target_path, next_version, keep_snapshots, df, partition_by)
+    # the rewrite keeps the recorded layout: a partitioned table stays a
+    # farm, every partition freshly written, nothing carried forward
+    _commit(target_path, next_version, keep_snapshots, df, _layout(target_path, cur)[0])
     return n_files
 
 
@@ -2727,7 +2697,8 @@ def apply_changes_parquet(
     """``APPLY CHANGES INTO`` for the snapshot table layout: fold one
     CDC batch (:func:`apply_changes` semantics — 'I'/'U' upsert, 'D'
     delete, highest ``seq`` per key wins) into the committed table and
-    publish a new version.  Creates the table on first batch.
+    publish a new version.  Creates the table on first batch, laid out
+    by ``partition_by``; later batches keep the recorded layout.
 
     This is the sink half of a replication pipeline: point a streaming
     ``foreachBatch`` at it and a downstream replica follows an upstream
@@ -2740,40 +2711,31 @@ def apply_changes_parquet(
     """
     keys = list(keys)
     data_cols = [c for c in changes.columns if c not in (op_col, seq_col)]
-    cur = _current_snapshot(target_path)
+    batch_rows = changes.select(*data_cols)
 
-    entries: dict[str, str] = {}
-    drop_values: set[tuple] | None = None
-    if cur is None:
-        rows, next_version = changes.select(*data_cols).limit(0), 1
-    else:
-        next_version = int(cur.lstrip("v")) + 1
-        snap = _read_snapshot(spark, target_path, cur)
-        # a feed narrower than the table would make snap.select(
+    def fold(rows: "DataFrame | None") -> DataFrame:
+        if rows is None:
+            rows = batch_rows.limit(0)
+        # a feed narrower than the table would make rows.select(
         # *data_cols) silently drop the missing columns from the
         # committed result — column loss, not replication
-        missing = [c for c in snap.columns if c not in data_cols]
+        missing = [c for c in rows.columns if c not in data_cols]
         if missing:
             raise ValueError(
                 "apply_changes_parquet: change feed lacks table "
                 f"column(s) {missing}; a replication feed must carry "
                 "every target column"
             )
-        rows = snap.select(*data_cols)
-        if partition_by:
-            pcols = list(partition_by)
-            entries = _require_farm(target_path, cur, pcols)
-            batch_rows = changes.select(*data_cols)
-            touched, drop_values = _touched_rows(
-                snap,
-                _touched_partitions(snap, batch_rows, keys, pcols, False),
-                pcols,
-                batch_rows.schema,
-            )
-            rows = touched.select(*data_cols)
-    merged = apply_changes(rows, changes, keys, op_col, seq_col)
-    _commit(
-        target_path, next_version, keep_snapshots, merged, partition_by, entries, drop_values
+        return apply_changes(rows.select(*data_cols), changes, keys, op_col, seq_col)
+
+    _copy_on_write(
+        spark,
+        target_path,
+        keep_snapshots,
+        lambda snap, pcols: _touched_partitions(snap, batch_rows, keys, pcols, False),
+        fold,
+        partition_by=partition_by,
+        cast_to=batch_rows.schema,
     )
 
 

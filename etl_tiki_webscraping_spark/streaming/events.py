@@ -485,10 +485,12 @@ def foreach_batch_upsert(
     (dags/etl.py:173-202) as a streaming sink.  Idempotent per batch:
     re-processing a batch after failure converges to the same table.
 
-    Pass ``partition_by`` (typically the event date) so each
-    micro-batch rewrites ONLY the partitions it touches — at streaming
-    cadence the partition-pruned upsert is what makes a 100 TB sink
-    table sustainable (a full-table rewrite per trigger is not).
+    Lay the table out with ``partition_by`` (typically the event date)
+    so each micro-batch rewrites ONLY the partitions it touches — at
+    streaming cadence the partition-pruned upsert is what makes a 100 TB
+    sink table sustainable (a full-table rewrite per trigger is not).
+    It sets the layout of a table the first batch creates; an existing
+    table keeps its recorded layout, so omit it or pass that layout.
     Streaming event keys don't migrate partitions when partitioned by
     their own event date, hence ``stable_partitions=True`` here by
     default (see sinks/upsert.py).

@@ -276,7 +276,7 @@ def test_compact_table_partitioned_stays_in_referenced_layout(spark, tmp_path):
         "id long, part string, v double",
     )
     upsert_parquet(spark, base, target, keys=["id"], partition_by=["part"])
-    compact_table(spark, target, partition_by=["part"])
+    compact_table(spark, target)
 
     with open(os.path.join(target, "v00000002.json")) as fh:
         manifest = json.load(fh)
@@ -332,9 +332,7 @@ def test_delete_where_partitioned_rewrites_only_matching_partitions(spark, tmp_p
         "id long, part string, v double",
     )
     upsert_parquet(spark, base, target, keys=["id"], partition_by=["part"])
-    delete_where(
-        spark, target, (F.col("part") == "a") & (F.col("id") < 30), partition_by=["part"]
-    )
+    delete_where(spark, target, (F.col("part") == "a") & (F.col("id") < 30))
     out = read_parquet_table(spark, target)
     assert out.count() == 90 - 10  # ids 0,3,...,27 in partition a
     assert out.filter("part = 'a' and id < 30").count() == 0
@@ -355,7 +353,7 @@ def test_delete_where_unpartitioned_and_full_partition_drop(spark, tmp_path):
         [(1, "a", 1.0), (2, "b", 2.0)], "id long, part string, v double"
     )
     upsert_parquet(spark, base, target, keys=["id"], partition_by=["part"])
-    delete_where(spark, target, F.col("part") == "b", partition_by=["part"])
+    delete_where(spark, target, F.col("part") == "b")
     out = read_parquet_table(spark, target)
     assert {r["id"] for r in out.collect()} == {1}
     assert not os.path.exists(os.path.join(target, "v00000002", "part=b"))  # emptied partition gone
@@ -515,13 +513,14 @@ def test_write_audit_publish_gate_partitioned(spark, tmp_path):
 
 def test_partition_evolution_via_compaction(spark, tmp_path):
     """Repartitioning an existing table's LAYOUT (Iceberg partition
-    evolution, done eagerly): compact_table(partition_by=<new cols>)
+    evolution, done eagerly): repartition_table(partition_by=<new cols>)
     rewrites the current snapshot into the new hive layout under the
-    same commit protocol — subsequent reads prune on the NEW partition
-    column and the rows survive bit-exact."""
+    same commit protocol, and a later compaction keeps that layout —
+    subsequent reads prune on the NEW partition column and the rows
+    survive bit-exact."""
     from pyspark.sql import functions as F
 
-    from etl_tiki_webscraping_spark.sinks.upsert import compact_table
+    from etl_tiki_webscraping_spark.sinks.upsert import compact_table, repartition_table
 
     target = str(tmp_path / "evolving")
     df = spark.createDataFrame(
@@ -532,7 +531,8 @@ def test_partition_evolution_via_compaction(spark, tmp_path):
     cols = ["event_id", "event_type", "day", "value"]  # hive layout reorders
     before = sorted(map(tuple, read_parquet_table(spark, target).select(*cols).collect()))
 
-    compact_table(spark, target, partition_by=["day"])
+    repartition_table(spark, target, partition_by=["day"])
+    compact_table(spark, target)
 
     after = sorted(map(tuple, read_parquet_table(spark, target).select(*cols).collect()))
     assert after == before

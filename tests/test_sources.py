@@ -57,7 +57,7 @@ def test_keyed_lookup_skips_none(spark):
     assert sorted(r["shop_id"] for r in out) == ["A", "C"]
 
 
-def test_retries_then_success(spark):
+def test_retries_then_success(spark, tmp_path):
     """Fetcher failing < max_retries times per key still yields rows
     (the reference's retries=2, dags/etl.py:288-289)."""
     keys = spark.createDataFrame([("k0",)], "shop_id string")
@@ -65,9 +65,9 @@ def test_retries_then_success(spark):
     # won't survive serialization; instead fail deterministically on the
     # first call only via page-scoped logic: page 1 raises once by using
     # a sentinel file.
-    import tempfile, os
+    import os
 
-    marker = os.path.join(tempfile.mkdtemp(), "failed-once")
+    marker = str(tmp_path / "failed-once")
 
     def fetch(row, page, cfg):
         if page == 1 and not os.path.exists(marker):

@@ -16,6 +16,7 @@ from etl_tiki_webscraping_spark.sinks.upsert import (
     clone_table,
     read_change_feed,
     read_parquet_table,
+    repartition_table,
     restore_table,
     table_history,
     upsert_parquet,
@@ -357,7 +358,7 @@ class TestTableFiles:
             spark, _orders(spark, sf_dir, 3), path, ["o_orderkey"],
             partition_by=["prio"], keep_snapshots=9,
         )
-        tf = table_files(spark, path, partition_cols=["prio"])
+        tf = table_files(spark, path)
         meta = {
             r["prio"]: r["total"]
             for r in tf.groupBy("prio").agg(F.sum("n_rows").alias("total")).collect()
@@ -377,7 +378,7 @@ class TestTableFiles:
             spark, _orders(spark, sf_dir, 5, 1000.0), path, ["o_orderkey"],
             partition_by=["prio"], keep_snapshots=9,
         )
-        tf1 = table_files(spark, path, version=1, partition_cols=["prio"])
+        tf1 = table_files(spark, path, version=1)
         assert {
             r["prio"]: r["total"]
             for r in tf1.groupBy("prio").agg(F.sum("n_rows").alias("total")).collect()
@@ -490,7 +491,7 @@ class TestDeletionVectors:
         assert not any(r[3] == "1-URGENT" and r[1] % 2 == 1 for r in got)
         assert os.path.isdir(os.path.join(path, "v00000003", "_dv"))
         # compaction rewrites everything -> vectors purge, content holds
-        compact_table(spark, path, partition_by=["prio"], keep_snapshots=9)
+        compact_table(spark, path, keep_snapshots=9)
         assert not os.path.isdir(os.path.join(path, "v00000004", "_dv"))
         assert sorted(
             (r[0], r[3]) for r in _rows(read_parquet_table(spark, path), *COLS)
@@ -559,8 +560,7 @@ class TestUpdateWhere:
         v1 = _rows(read_parquet_table(spark, path), *COLS)
         update_where(
             spark, path, F.col("prio") == "2-HIGH",
-            {"price": F.col("price") + 5.0}, partition_by=["prio"],
-            keep_snapshots=9, change_feed=False,
+            {"price": F.col("price") + 5.0}, keep_snapshots=9, change_feed=False,
         )
         got = _rows(read_parquet_table(spark, path), *COLS)
         assert got == sorted(
@@ -579,7 +579,6 @@ class TestUpdateWhere:
         with pytest.raises(ValueError):
             update_where(
                 spark, path, F.lit(True), {"prio": F.lit("x")},
-                partition_by=["prio"],
             )
 
     def test_mor_update_zero_rewrite_and_feed(self, spark, sf_dir, tmp_path):
@@ -622,10 +621,12 @@ class TestUpdateWhere:
         # a later full-rewrite commit folds everything down
         upsert_parquet(spark, _orders(spark, sf_dir, 7), path, ["o_orderkey"], keep_snapshots=9)
         assert not os.path.isdir(os.path.join(path, "v00000003", "_dv"))
+        # the layout comes from the committed table: once partitioned,
+        # a merge-on-read update is refused
+        repartition_table(spark, path, partition_by=["prio"], keep_snapshots=9)
         with pytest.raises(ValueError):
             update_where(
-                spark, path, F.lit(True), {"price": F.lit(0.0)},
-                partition_by=["prio"], merge_on_read=True,
+                spark, path, F.lit(True), {"price": F.lit(0.0)}, merge_on_read=True,
             )
 
 
@@ -804,8 +805,7 @@ class TestUpdateWhereSchemaPreserved:
         with pytest.raises(TypeError, match="stored column type"):
             update_where(
                 spark, path, F.col("prio") == "2-HIGH",
-                {"o_custkey": F.col("price")}, partition_by=["prio"],
-                keep_snapshots=9,
+                {"o_custkey": F.col("price")}, keep_snapshots=9,
             )
 
     def test_safe_numeric_widening_is_cast_to_stored_type(

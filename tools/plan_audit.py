@@ -27,8 +27,16 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 
 def main() -> int:
+    import atexit
+    import shutil
+    import tempfile
+
     from etl_tiki_webscraping_spark.plans.catalog import QUERIES
     from etl_tiki_webscraping_spark.session import get_spark
+
+    # the tables the audit stages live under one root removed at exit
+    scratch = tempfile.mkdtemp(prefix="plan-audit-")
+    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
 
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
@@ -78,14 +86,12 @@ def main() -> int:
           "the bucket cap plans no signature kernel of its own (<= 4 ArrowEvalPython)")
 
     # --- partitioned snapshot reads prune -----------------------------------
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from etl_tiki_webscraping_spark.io import load_table
     from etl_tiki_webscraping_spark.sinks.upsert import read_parquet_table, upsert_parquet
 
-    tbl = tempfile.mkdtemp(prefix="plan-audit-") + "/events"
+    tbl = os.path.join(scratch, "events")
     ev = load_table(spark, SF_DIR, "events").select("event_id", "event_type", "value")
     upsert_parquet(spark, ev, tbl, ["event_id"], partition_by=["event_type"])
     p = (
@@ -129,7 +135,7 @@ def main() -> int:
     # --- file-level min/max skipping scans fewer files ----------------------
     from etl_tiki_webscraping_spark.sinks.upsert import compact_table
 
-    tbl2 = tempfile.mkdtemp(prefix="plan-audit-skip-") + "/cust"
+    tbl2 = os.path.join(scratch, "cust")
     cust = load_table(spark, SF_DIR, "customer").select("c_custkey", "c_name")
     upsert_parquet(spark, cust, tbl2, ["c_custkey"])
     compact_table(spark, tbl2, target_file_bytes=2 * 1024, sort_by=["c_custkey"])
@@ -141,7 +147,7 @@ def main() -> int:
           "(manifest min/max skipping)")
 
     # --- z-order clustering: multi-dimension file skipping ------------------
-    tbl3 = tempfile.mkdtemp(prefix="plan-audit-zorder-") + "/li"
+    tbl3 = os.path.join(scratch, "li")
     li = load_table(spark, SF_DIR, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"
     )
